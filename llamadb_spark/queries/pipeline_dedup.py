@@ -238,7 +238,10 @@ def d08_semantic_dedup_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Pipeline shape: pairs → connected components → keep each
     cluster's min-vec_id representative → surviving corpus per label
-    (the embedding-space twin of d07's lexical dedup-apply).
+    (the embedding-space twin of d07's lexical dedup-apply). The pair
+    graph is pair-sized, so the components take one staging job and
+    finish on the driver (operators/dedup._LOCAL_MAX_EDGES); the
+    checkpointed star rounds run only above that gate.
 
     Scale: identical join discipline to d07 — the drop list's size
     is duplicate-DEPENDENT (can approach corpus scale on a

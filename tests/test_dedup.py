@@ -4,6 +4,7 @@ minhash-vs-exact-jaccard recall, simhash locality."""
 from __future__ import annotations
 
 import pyspark.sql.functions as F
+import pytest
 
 from llamadb_spark.operators import dedup
 
@@ -180,19 +181,21 @@ def test_lsh_bucket_cap_drops_megabucket(spark):
     )
 
 
-def test_star_cc_matches_minlabel_and_log_rounds(spark):
+def test_star_cc_matches_minlabel_and_log_rounds(spark, monkeypatch):
     import math
     import random
 
-    from llamadb_spark.operators.dedup import _star_rounds
-
+    # the distributed rounds of both algorithms, not the local finish
+    monkeypatch.setattr(dedup, "_LOCAL_MAX_EDGES", -1)
     # chain 0-1-2-...-63: min-label needs O(n) rounds; the star
     # alternation must settle in ~log2(n) rounds.
     n = 64
     chain = spark.createDataFrame(
         [(i, i + 1) for i in range(n - 1)], ["a_id", "b_id"]
     )
-    edges, rounds = _star_rounds(chain, "a_id", "b_id", max_iter=30)
+    edges, rounds = dedup._star_rounds(
+        dedup._star_edges(chain, "a_id", "b_id"), max_iter=30
+    )
     assert rounds <= int(math.log2(n)) + 2
     got = {
         (r.node, r.cluster_id)
@@ -214,6 +217,54 @@ def test_star_cc_matches_minlabel_and_log_rounds(spark):
         for r in dedup.connected_components(df).collect()
     }
     assert star == label
+
+
+@pytest.mark.parametrize(
+    "cc",
+    [dedup.connected_components, dedup.connected_components_star],
+    ids=["minlabel", "star"],
+)
+@pytest.mark.parametrize(
+    "local_max", [dedup._LOCAL_MAX_EDGES, -1], ids=["local", "distributed"]
+)
+def test_cc_schema_same_on_local_and_distributed_paths(
+    spark, monkeypatch, cc, local_max
+):
+    """The driver-side finish and the distributed rounds return the
+    same schema: int ids stay int (not widened to long), also for an
+    empty pair list."""
+    from pyspark.sql.types import IntegerType, StructField, StructType
+
+    monkeypatch.setattr(dedup, "_LOCAL_MAX_EDGES", local_max)
+    expect = StructType(
+        [
+            StructField("node", IntegerType(), True),
+            StructField("cluster_id", IntegerType(), True),
+        ]
+    )
+    pairs = spark.createDataFrame([(1, 2), (3, 2), (7, 8)], "a_id int, b_id int")
+    out = cc(pairs)
+    assert out.schema == expect
+    assert sorted(out.collect()) == [(1, 1), (2, 1), (3, 1), (7, 7), (8, 7)]
+    empty = cc(spark.createDataFrame([], "a_id int, b_id int"))
+    assert empty.schema == expect
+    assert empty.collect() == []
+
+
+def test_small_graph_apply_keys_skip_star_rounds(spark, sf_dir, monkeypatch):
+    """d08's and d12's pair graphs are far below _LOCAL_MAX_EDGES, so
+    their components finish on the driver: no star round runs."""
+    from llamadb_spark.queries.pipeline import (
+        d08_semantic_dedup_apply,
+        d12_semantic_dedup_lsh,
+    )
+
+    def no_rounds(*args, **kwargs):
+        raise AssertionError("star rounds ran on a pair-sized graph")
+
+    monkeypatch.setattr(dedup, "_star_rounds", no_rounds)
+    for key in (d08_semantic_dedup_apply, d12_semantic_dedup_lsh):
+        assert key(spark, sf_dir).collect()
 
 
 def test_d12_lsh_pair_recall_vs_exact(spark):

@@ -4,9 +4,11 @@ layer on top of the fixed DuckDB-oracle suite."""
 
 from __future__ import annotations
 
+import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
+from llamadb_spark.operators import dedup
 from llamadb_spark.operators.asof import asof_join
 from llamadb_spark.operators.dedup import jaccard_ngram_pairs
 from llamadb_spark.sql.dialect import LlamaError, translate_type
@@ -133,13 +135,23 @@ def test_range_join_matches_bruteforce(spark, points, intervals, width):
     ).map(lambda es: [(a, b) for a, b in es if a != b])
 )
 @_SPARK_SETTINGS
-def test_connected_components_matches_union_find(spark, edges):
-    from llamadb_spark.operators.dedup import connected_components
-
+@pytest.mark.parametrize(
+    "local_max", [dedup._LOCAL_MAX_EDGES, -1], ids=["local", "distributed"]
+)
+@pytest.mark.parametrize(
+    "cc",
+    [dedup.connected_components, dedup.connected_components_star],
+    ids=["minlabel", "star"],
+)
+def test_connected_components_matches_union_find(
+    spark, monkeypatch, cc, local_max, edges
+):
+    # -1 forces the distributed rounds; the default finishes locally
+    monkeypatch.setattr(dedup, "_LOCAL_MAX_EDGES", local_max)
     if not edges:
         return
     df = spark.createDataFrame(edges, "a_id long, b_id long")
-    got = {r.node: r.cluster_id for r in connected_components(df).collect()}
+    got = {r.node: r.cluster_id for r in cc(df).collect()}
 
     parent = {}
 

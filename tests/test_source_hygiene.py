@@ -26,7 +26,9 @@ ROOT = os.path.join(os.path.dirname(__file__), "..", "llamadb_spark")
 #: file (repo-relative) -> max allowed comment-stripped .collect()
 #: occurrences, each justified:
 #:   dialect.py:  constraint-violation check — one agg row of scalars
-#:   dedup.py:    CC fixpoint round check — exactly 2 scalars/round
+#:   dedup.py:    connected components' driver-side finish — the
+#:     staged edge list, collected only when its observed row count
+#:     is at most _LOCAL_MAX_EDGES (the gate in _stage_edges)
 #:   similarity.py: (1) capped broadcast collect with explicit raise
 #:     beyond max_broadcast_rows, (2) n_cells centroid seeds,
 #:     (3) K·d per-cell means, (4) MMR pool collect ≤ pool rows,
