@@ -19,6 +19,8 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 TABLES = (
     "region",
@@ -101,3 +103,18 @@ def register_views(
     for name, df in tables.items():
         df.createOrReplaceTempView(name)
     return tables
+
+
+def empty_frame(spark: SparkSession, schema: StructType) -> DataFrame:
+    """An empty DataFrame of ``schema`` that Catalyst folds to an empty
+    ``LocalRelation``, so reading it runs no task.
+
+    ``spark.createDataFrame([], schema)`` is a Python-RDD scan instead:
+    every read of it schedules one empty task per default partition.
+    Every column here is nullable.
+    """
+    return (
+        spark.range(1)
+        .where(F.lit(False))
+        .select(*[F.lit(None).cast(f.dataType).alias(f.name) for f in schema.fields])
+    )

@@ -24,6 +24,8 @@ from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from llamadb_spark.session import empty_frame
+
 
 class LlamaError(Exception):
     """Dialect-level error (parse, type, constraint)."""
@@ -206,6 +208,11 @@ def _unquote(ident: str) -> str:
     if len(ident) >= 2 and ident[0] == ident[-1] and ident[0] in ('"', "`"):
         return ident[1:-1]
     return ident.lower()
+
+
+def _quote(name: str) -> str:
+    """A column name as a backtick-quoted SQL identifier."""
+    return "`" + name.replace("`", "``") + "`"
 
 
 def _strip_comments(sql: str) -> str:
@@ -880,7 +887,8 @@ class LlamaSession:
             if c.name in pk_cols:
                 c.nullable = False
         self.tables[name] = spec
-        empty = self.spark.createDataFrame([], spec.schema)
+        # no segment count yet: the first INSERT's rows become the table
+        empty = empty_frame(self.spark, spec.schema)
         self._data[name] = empty
         empty.createOrReplaceTempView(name)
 
@@ -892,9 +900,10 @@ class LlamaSession:
     # only on FALSE (NULL passes); UNIQUE ignores rows with NULL in
     # the key; FOREIGN KEY is MATCH SIMPLE (NULL FK passes) and is
     # validated against the referenced table's CURRENT contents at
-    # every commit. At cluster scale each validation is one
-    # short-circuiting aggregation/anti-join over the table — the
-    # standard post-write data-quality gate shape.
+    # every commit. CHECK is a row check and rides the staging job
+    # (_stage); UNIQUE and FOREIGN KEY each cost one short-circuiting
+    # aggregation/anti-join over the table — the standard post-write
+    # data-quality gate shape.
 
     def _check_fk_target(self, ref_table: str, ref_col: str) -> None:
         if ref_table not in self.tables:
@@ -928,17 +937,6 @@ class LlamaSession:
         raise LlamaError(f"cannot parse table constraint: {src!r}")
 
     def _validate_constraints(self, df: DataFrame, spec: TableSpec) -> None:
-        for cname, expr_src in spec.checks:
-            viol = (
-                df.filter(
-                    F.coalesce(F.expr(_requote_idents(expr_src)), F.lit(True))
-                    == F.lit(False)
-                )
-                .limit(1)
-                .count()
-            )
-            if viol:
-                raise LlamaError(f"CHECK constraint violated: {cname}")
         for cname, cols in spec.uniques:
             dup = (
                 df.dropna(subset=list(cols))
@@ -1041,21 +1039,22 @@ class LlamaSession:
             src = src.toDF(*cols)
 
         aligned = self._align(src, spec, cols)
-        # DELTA commit (r11, ADVICE r10): materialize ONLY the new
-        # rows, column-validate them alone (equivalent to validating
-        # OLD+NEW: existing rows passed these same checks at their
-        # own commit, and specs are immutable after CREATE — there is
-        # no ALTER TABLE in this dialect), then union with the
-        # already-materialized table. Table-level constraints must
-        # see OLD+NEW together (a new row can collide with an
-        # existing key), so they run on the union. Reject BEFORE
-        # swapping so a failed INSERT leaves the table untouched.
-        # Total I/O per insert is delta-sized; every _MAX_SEGMENTS
-        # inserts the union chain is compacted to one materialization
-        # so reader plans stay shallow.
-        new_rows = self._checkpoint_translating_overflow(aligned)
-        self._validate(new_rows, spec)
-        candidate = self._data[name].unionAll(new_rows)
+        # DELTA commit: stage ONLY the new rows, in the one job that
+        # also observes their row checks (_stage). Checking the new
+        # rows alone equals checking OLD+NEW: existing rows passed the
+        # same checks at their own commit, and specs are immutable
+        # after CREATE (there is no ALTER TABLE in this dialect).
+        # UNIQUE and FOREIGN KEY must see OLD+NEW together (a new row
+        # can collide with an existing key), so they run on the union.
+        # Every check raises BEFORE the swap, so a failed INSERT leaves
+        # the table untouched. A table fresh from CREATE has no segment
+        # count: its empty relation is replaced, not unioned, and
+        # counts as the first segment. Total I/O per insert is
+        # delta-sized; past _MAX_SEGMENTS segments the union chain
+        # compacts to one materialization so reader plans stay shallow.
+        new_rows = self._stage(aligned, spec)
+        fresh = name not in self._segments
+        candidate = new_rows if fresh else self._data[name].unionAll(new_rows)
         n_seg = self._segments.get(name, 1) + 1
         if n_seg > self._MAX_SEGMENTS or self.durable:
             self._commit(name, candidate)
@@ -1133,7 +1132,9 @@ class LlamaSession:
         pred = F.coalesce(F.expr(_requote_idents(m.group(2))), F.lit(False))
         return name, self._data[name].filter(~pred)
 
-    def _merge_df(self, sql: str) -> tuple[str, DataFrame]:
+    def _merge_df(
+        self, sql: str
+    ) -> tuple[str, DataFrame, tuple[Observation, Observation] | None]:
         """``MERGE INTO target USING source ON cond [WHEN MATCHED
         THEN UPDATE SET …|DELETE] [WHEN NOT MATCHED THEN INSERT
         [(cols)] VALUES (…)]`` — the upsert verb that completes the
@@ -1158,6 +1159,12 @@ class LlamaSession:
         Rewrite shape: one LEFT join (target survivors/updates) + one
         LEFT ANTI join (inserts), unioned and committed through the
         same validation/constraint/rollback path as every write.
+
+        Returns ``(name, rows, matches)``. With a WHEN MATCHED clause,
+        ``matches`` holds two Observations that the commit's staging
+        job fills: target rows entering the LEFT join and LEFT-join
+        output rows. They differ exactly when some target row matches
+        more than one source row. It is None for an insert-only MERGE.
         """
         m = _MERGE_RE.match(sql)
         if not m:
@@ -1182,34 +1189,20 @@ class LlamaSession:
                 "MERGE needs at least one WHEN [NOT] MATCHED clause"
             )
 
-        t = self._data[name].alias("t")
         s = src.withColumn("_s_matched", F.lit(True)).alias("s")
         on = F.expr(cond)
 
         # cardinality check: >1 source match for one target row is
         # nondeterministic — standard MERGE raises, so do we. Only a
         # WHEN MATCHED clause can act on a match, so insert-only
-        # MERGE is exempt (standard/Delta semantics) and skips the
-        # extra join+count job entirely.
+        # MERGE is exempt (standard/Delta semantics) and observes
+        # nothing.
+        matches = None
         if matched_action is not None:
-            tid = self._data[name].withColumn(
-                "_tid", F.monotonically_increasing_id()
-            ).alias("t")
-            dup = (
-                tid.join(src.alias("s"), on, "inner")
-                .groupBy("_tid")
-                .agg(F.count(F.lit(1)).alias("_nm"))
-                .filter(F.col("_nm") > 1)
-                .limit(1)
-                .count()
-            )
-            if dup:
-                raise LlamaError(
-                    "MERGE cardinality violation: a target row matches "
-                    "more than one source row"
-                )
-
-        joined = t.join(s, on, "left")
+            matches = (Observation(), Observation())
+            n_rows = F.count(F.lit(1)).alias("n")
+            target = self._data[name].observe(matches[0], n_rows)
+            joined = target.alias("t").join(s, on, "left").observe(matches[1], n_rows)
         matched = F.col("_s_matched").isNotNull()
         if matched_action and matched_action.upper().startswith("UPDATE"):
             set_src = re.sub(
@@ -1278,21 +1271,25 @@ class LlamaSession:
                 cols,
             )
             out = out.unionByName(inserts)
-        return name, out
+        return name, out, matches
 
-    def _commit(self, name: str, df: DataFrame) -> None:
-        # ONE materialization per DML statement (r10): the new table
-        # contents are localCheckpointed FIRST, then the validation
-        # aggregates read the materialized blocks, then the swap.
-        # Previously the un-truncated plan executed once per
-        # validation AND re-executed for every later reader — the
-        # table DataFrame carried its full statement lineage, so an
-        # INSERT→MERGE→SELECT session re-ran the whole history each
-        # statement (guide §3.3: materialize to truncate the plan).
-        # Failed validation still leaves the table untouched: the
-        # swap happens after, and orphaned checkpoint blocks are GC'd.
-        df = self._checkpoint_translating_overflow(df)
-        self._validate(df, self.tables[name])
+    def _commit(
+        self,
+        name: str,
+        df: DataFrame,
+        matches: tuple[Observation, Observation] | None = None,
+    ) -> None:
+        # ONE materialization per DML statement: the new table
+        # contents are localCheckpointed, and that same job observes
+        # the row checks and MERGE's match counts (_stage). Only
+        # UNIQUE / FOREIGN KEY then read the materialized blocks, and
+        # only on tables that declare them. Materializing truncates
+        # the plan: a table DataFrame carrying its full statement
+        # lineage would re-run the whole INSERT→MERGE→SELECT history
+        # for every later reader (guide §3.3). A failed check leaves
+        # the table untouched: the swap happens after, and orphaned
+        # checkpoint blocks are GC'd.
+        df = self._stage(df, self.tables[name], matches)
         self._validate_constraints(df, self.tables[name])
         if self.durable and not self.tables[name].indexes:
             # opt-in durable spill (r11): parquet write-back + re-read
@@ -1310,63 +1307,52 @@ class LlamaSession:
         df.createOrReplaceTempView(name)
         self._materialize(name)
 
-    def _checkpoint_translating_overflow(self, df: DataFrame) -> DataFrame:
-        """localCheckpoint, translating ANSI cast overflow (which now
-        fires here, at the first action, instead of inside
-        _validate's aggregate) into the dialect's own insert-time
-        error exactly as _validate does."""
-        try:
-            return df.localCheckpoint()
-        except Exception as exc:  # noqa: BLE001
-            msg = str(exc)
-            if "CAST_OVERFLOW" in msg or "ArithmeticException" in type(exc).__name__:
-                raise LlamaError(
-                    "value out of range for declared column type"
-                ) from None
-            raise
+    def _stage(
+        self,
+        df: DataFrame,
+        spec: TableSpec,
+        matches: tuple[Observation, Observation] | None = None,
+    ) -> DataFrame:
+        """localCheckpoint the rows and check them in the same job.
 
-    def _align(self, src: DataFrame, spec: TableSpec, cols: list[str]) -> DataFrame:
-        missing = [c.name for c in spec.columns if c.name not in cols]
-        for mcol in missing:
-            src = src.withColumn(mcol, F.lit(None))
-        return src.select(
-            *[F.col(c.name).cast(c.spark_type).alias(c.name) for c in spec.columns]
+        The row checks are llamadb semantics the Spark schema can't
+        hold: implicit NOT NULL, exact integer widths, byte[N] fixed
+        lengths (types/mod.rs:96-105 is_valid_length rejects a value
+        whose byte count differs from the declared N), plus CHECK
+        constraints. They are observed as ONE metric on the staging
+        job: the least index of a failed check over all rows, so the
+        error raised is the first failed check in declaration order.
+        ``matches`` are MERGE's two observed counts (see _merge_df).
+        Raises before the caller swaps anything in.
+
+        The columns cross the observe node under temporary names: two
+        renames that the optimizer can neither collapse nor strip, so
+        the checkpoint outputs fresh, unqualified attributes. A plain
+        pass-through of a view column (``g.v``) would carry the source
+        relation's unqualified constraints under a qualified attribute;
+        Spark's checkpoint keeps such constraints on an attribute id it
+        no longer outputs, and the next union over the table fails
+        analysis ("key not found"). The projections are SQL text: one
+        py4j call each instead of several per Column operation."""
+        names = [c.name for c in spec.columns]
+        checks = self._row_checks(spec)
+        first_failed = (
+            "CASE "
+            + " ".join(f"WHEN {pred} THEN {i}" for i, (pred, _) in enumerate(checks))
+            + " END"
+            if checks
+            else "CAST(NULL AS INT)"
         )
-
-    def _validate(self, df: DataFrame, spec: TableSpec) -> None:
-        """Enforce llamadb semantics the Spark schema can't: implicit
-        NOT NULL, exact integer widths, and byte[N] fixed lengths
-        (types/mod.rs:96-105 is_valid_length rejects a value whose
-        byte count differs from the declared N)."""
-        checks = []
-        for c in spec.columns:
-            if not c.nullable:
-                checks.append(
-                    F.sum(F.col(c.name).isNull().cast("int")).alias(f"null__{c.name}")
-                )
-            if c.fixed_len is not None:
-                checks.append(
-                    F.sum(
-                        (F.octet_length(F.col(c.name)) != F.lit(c.fixed_len)).cast(
-                            "int"
-                        )
-                    ).alias(f"len__{c.name}")
-                )
-            if c.bounds is not None:
-                lo, hi = c.bounds
-                # bounds can exceed a Java long (U64 hi = 2^64-1):
-                # build them as decimal literals, not F.lit ints
-                lo_c = F.expr(f"CAST('{lo}' AS DECIMAL(20,0))")
-                hi_c = F.expr(f"CAST('{hi}' AS DECIMAL(20,0))")
-                checks.append(
-                    F.sum(
-                        ((F.col(c.name) < lo_c) | (F.col(c.name) > hi_c)).cast("int")
-                    ).alias(f"range__{c.name}")
-                )
-        if not checks:
-            return
+        obs = Observation()
+        df = (
+            df.selectExpr("*", first_failed)
+            .toDF(*[f"_c{i}" for i in range(len(names))], "_failed")
+            .observe(obs, F.min("_failed").alias("failed"))
+            .drop("_failed")
+            .toDF(*names)
+        )
         try:
-            bad = df.agg(*checks).collect()[0].asDict()
+            staged = df.localCheckpoint()
         except Exception as exc:  # noqa: BLE001
             # ANSI-mode cast overflow fires during the scan, before
             # the decimal range comparison can run (e.g. -129 into an
@@ -1379,23 +1365,68 @@ class LlamaSession:
                     "value out of range for declared column type"
                 ) from None
             raise
-        for key, cnt in bad.items():
-            kind, cname = key.split("__", 1)
-            if cnt and cnt > 0:
-                if kind == "null":
-                    raise LlamaError(
-                        f"column '{cname}' is NOT NULL (llamadb default; "
-                        "add a NULL constraint to allow nulls)"
+        if matches is not None and matches[0].get["n"] != matches[1].get["n"]:
+            raise LlamaError(
+                "MERGE cardinality violation: a target row matches "
+                "more than one source row"
+            )
+        failed = obs.get["failed"]
+        if failed is not None:
+            raise LlamaError(checks[failed][1])
+        return staged
+
+    def _align(self, src: DataFrame, spec: TableSpec, cols: list[str]) -> DataFrame:
+        return src.selectExpr(
+            *[
+                f"CAST({_quote(c.name) if c.name in cols else 'NULL'} "
+                f"AS {c.spark_type.simpleString()}) AS {_quote(c.name)}"
+                for c in spec.columns
+            ]
+        )
+
+    @staticmethod
+    def _row_checks(spec: TableSpec) -> list[tuple[str, str]]:
+        """(SQL violation predicate, error message) per row check, in
+        the order they are reported."""
+        checks = []
+        for c in spec.columns:
+            col = _quote(c.name)
+            if not c.nullable:
+                checks.append(
+                    (
+                        f"{col} IS NULL",
+                        f"column '{c.name}' is NOT NULL (llamadb default; "
+                        "add a NULL constraint to allow nulls)",
                     )
-                if kind == "len":
-                    fl = next(
-                        c.fixed_len for c in spec.columns if c.name == cname
+                )
+            if c.fixed_len is not None:
+                checks.append(
+                    (
+                        f"octet_length({col}) != {c.fixed_len}",
+                        f"value length differs from byte[{c.fixed_len}] "
+                        f"for column '{c.name}'",
                     )
-                    raise LlamaError(
-                        f"value length differs from byte[{fl}] for column "
-                        f"'{cname}'"
+                )
+            if c.bounds is not None:
+                # bounds can exceed a Java long (U64 hi = 2^64-1):
+                # compare as decimal literals, not integer ones
+                lo, hi = c.bounds
+                checks.append(
+                    (
+                        f"{col} < CAST('{lo}' AS DECIMAL(20,0)) "
+                        f"OR {col} > CAST('{hi}' AS DECIMAL(20,0))",
+                        f"value out of range for column '{c.name}'",
                     )
-                raise LlamaError(f"value out of range for column '{cname}'")
+                )
+        for cname, expr_src in spec.checks:
+            # three-valued: only FALSE violates, NULL passes
+            checks.append(
+                (
+                    f"coalesce(({_requote_idents(expr_src)}), true) = false",
+                    f"CHECK constraint violated: {cname}",
+                )
+            )
+        return checks
 
     # -- helpers -----------------------------------------------------------
     def table(self, name: str) -> DataFrame:

@@ -33,11 +33,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.functions import col
+from pyspark.sql.types import LongType, StructField, StructType
 
+from llamadb_spark.session import empty_frame
 from llamadb_spark.sources import versioned
 from llamadb_spark.streaming.ivm import _commit_version, committed_batches
 
-_INDEX_SCHEMA = "line_hash long"
+_INDEX_SCHEMA = StructType([StructField("line_hash", LongType())])
 
 
 def ingest_line_dedup_stream(
@@ -76,14 +78,14 @@ def ingest_line_dedup_stream(
             # lines would gate themselves on replay
             base_v = index_ledger[batch_id] - 1
             index = (
-                spark.createDataFrame([], _INDEX_SCHEMA)
+                empty_frame(spark, _INDEX_SCHEMA)
                 if base_v < 0
                 else versioned.read_version(spark, index_path, base_v)
             )
         else:
             lv = versioned.latest_version(index_path)
             index = (
-                spark.createDataFrame([], _INDEX_SCHEMA)
+                empty_frame(spark, _INDEX_SCHEMA)
                 if lv is None
                 else versioned.read_version(spark, index_path, lv)
             )

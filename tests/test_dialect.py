@@ -818,19 +818,37 @@ def test_merge_insert_only(db):
     assert got == {1: 10, 2: 5, 3: 7, 4: 18}
 
 
-def test_merge_cardinality_violation_raises(db):
-    import pytest
-
+@pytest.mark.parametrize(
+    "matched", ["UPDATE SET qty = s.qty", "DELETE"], ids=["update", "delete"]
+)
+def test_merge_cardinality_violation_raises(db, matched):
     _merge_db(db)
     db.execute("INSERT INTO delta VALUES (2, 100, 9.9)")  # second match
     with pytest.raises(LlamaError, match="cardinality"):
         db.execute(
-            "MERGE INTO inv USING delta ON t.id = s.id "
-            "WHEN MATCHED THEN UPDATE SET qty = s.qty"
+            f"MERGE INTO inv USING delta ON t.id = s.id WHEN MATCHED THEN {matched}"
         )
     # failed MERGE left the target untouched (rollback contract)
     got = {r.id: r.qty for r in db.execute("SELECT id, qty FROM inv").collect()}
     assert got == {1: 10, 2: 5, 3: 7}
+
+
+def test_merge_duplicate_source_key_without_match_inserts_both(db):
+    """Cardinality counts target rows: a source key that appears twice
+    but matches no target row is no violation, and WHEN NOT MATCHED
+    inserts both source rows."""
+    _merge_db(db)
+    db.execute("INSERT INTO delta VALUES (4, 1, 0.5)")  # id 4 twice, no target
+    db.execute(
+        "MERGE INTO inv USING delta ON t.id = s.id "
+        "WHEN MATCHED THEN UPDATE SET qty = t.qty + s.qty "
+        "WHEN NOT MATCHED THEN INSERT (id, qty, price) "
+        "VALUES (s.id, s.qty, s.price)"
+    )
+    got = sorted(
+        (r.id, r.qty) for r in db.execute("SELECT id, qty FROM inv").collect()
+    )
+    assert got == [(1, 10), (2, 8), (3, 7), (4, 1), (4, 9)]
 
 
 def test_merge_validation_rolls_back(db):
@@ -961,3 +979,141 @@ def test_durable_commit_parquet_backed(spark):
         "WHEN NOT MATCHED THEN INSERT (k, v) VALUES (s.k, s.v)"
     )
     assert db.execute("SELECT count(*) AS n FROM dur_t").collect()[0].n == 3
+
+
+# -- one Spark job per write -------------------------------------------
+
+
+def _spark_jobs(spark, fn) -> int:
+    """Number of Spark jobs ``fn`` runs, counted through a job group."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"dialect-jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_writes_run_one_spark_job(db, spark):
+    """The staging job of a write also observes its row checks (NOT
+    NULL, integer width, byte[N], CHECK): without UNIQUE or FOREIGN
+    KEY, an INSERT...VALUES, an UPDATE and a DELETE each run one job."""
+    db.execute(
+        "CREATE TABLE one_job (id U32, tag byte[2] NULL, note STRING NULL, "
+        "CHECK (id < 1000))"
+    )
+    db.execute("INSERT INTO one_job VALUES (1, X'0102', 'a')")
+    for sql in (
+        "INSERT INTO one_job VALUES (2, X'0304', NULL), (3, NULL, 'c')",
+        "UPDATE one_job SET note = 'u' WHERE id >= 2",
+        "DELETE FROM one_job WHERE id = 1",
+    ):
+        assert _spark_jobs(spark, lambda: db.execute(sql)) == 1, sql
+    rows = sorted(tuple(r) for r in db.execute("SELECT id, note FROM one_job").collect())
+    assert rows == [(2, "u"), (3, "u")]
+
+
+#: Spark jobs of an upsert MERGE into a 3-row table: the commit job's
+#: query stages under AQE (the pre-pass it replaced ran 10 more).
+MERGE_JOBS = 3
+
+
+def test_merge_job_count_pinned(db, spark):
+    """MERGE's cardinality check is two observed counts in the commit
+    job, not a join+groupBy pre-pass of its own."""
+    _merge_db(db)
+    n = _spark_jobs(
+        spark,
+        lambda: db.execute(
+            "MERGE INTO inv USING delta ON t.id = s.id "
+            "WHEN MATCHED THEN UPDATE SET qty = t.qty + s.qty "
+            "WHEN NOT MATCHED THEN INSERT (id, qty, price) "
+            "VALUES (s.id, s.qty, s.price)"
+        ),
+    )
+    assert n == MERGE_JOBS
+
+
+def _plan(db, name: str) -> str:
+    return db.table(name)._jdf.queryExecution().optimizedPlan().toString()
+
+
+def test_fresh_table_is_an_empty_local_relation(db):
+    """CREATE TABLE's empty contents fold to an empty LocalRelation: no
+    Python-RDD scan (LogicalRDD) for readers to run tasks over."""
+    db.execute("CREATE TABLE fresh_t (id U32, name STRING NULL)")
+    plan = _plan(db, "fresh_t")
+    assert plan.startswith("LocalRelation <empty>"), plan
+    assert "LogicalRDD" not in plan
+    assert db.execute("SELECT count(*) AS n FROM fresh_t").collect()[0].n == 0
+
+
+def test_first_insert_becomes_the_table(db):
+    """The first INSERT's rows replace CREATE's empty relation, which
+    still counts as a segment: the 8th INSERT compacts."""
+    db.execute("CREATE TABLE first_t (id U32)")
+    db.execute("INSERT INTO first_t VALUES (0)")
+    assert "Union" not in _plan(db, "first_t")
+    for i in range(1, 7):
+        db.execute(f"INSERT INTO first_t VALUES ({i})")
+    assert "Union" in _plan(db, "first_t")  # later INSERTs append segments
+    assert db._segments["first_t"] == db._MAX_SEGMENTS
+    db.execute("INSERT INTO first_t VALUES (7)")
+    assert db._segments["first_t"] == 1
+    assert "Union" not in _plan(db, "first_t")
+    got = sorted(r.id for r in db.execute("SELECT id FROM first_t").collect())
+    assert got == list(range(8))
+
+
+@pytest.fixture()
+def vanilla_conf(spark):
+    """Spark's own defaults instead of the session's: AQE off and 200
+    shuffle partitions. Restores both afterwards."""
+    keys = {
+        "spark.sql.adaptive.enabled": "false",
+        "spark.sql.shuffle.partitions": "200",
+    }
+    saved = {k: spark.conf.get(k) for k in keys}
+    for k, v in keys.items():
+        spark.conf.set(k, v)
+    yield
+    for k, v in saved.items():
+        spark.conf.set(k, v)
+
+
+def test_checks_raise_without_aqe_and_at_200_partitions(db, vanilla_conf):
+    """The observed row checks and MERGE counts reach the driver the
+    same way whatever the shuffle layout."""
+    test_implicit_not_null_rejected(db)
+    db.execute("CREATE TABLE wide_t (id I8)")
+    with pytest.raises(LlamaError, match="out of range"):
+        db.execute("INSERT INTO wide_t VALUES (-129)")
+    test_unsigned_range_enforced(LlamaSession(db.spark))
+    for matched in ("UPDATE SET qty = s.qty", "DELETE"):
+        test_merge_cardinality_violation_raises(LlamaSession(db.spark), matched)
+    test_merge_duplicate_source_key_without_match_inserts_both(LlamaSession(db.spark))
+
+
+def test_merge_after_insert_select_from_constrained_table(db):
+    """INSERT...SELECT from a table whose checkpoint carries constraints
+    (`v <=> 1` after the UPDATE), then a MERGE over the segmented table.
+    The staged rows must come out under fresh attributes: a checkpoint
+    that keeps constraints on ids it no longer outputs makes Spark's
+    union analysis fail with `key not found`."""
+    db.execute("CREATE TABLE src_g (id U8, v I32)")
+    db.execute("INSERT INTO src_g VALUES (1, 1), (2, 2), (3, 3)")
+    db.execute("UPDATE src_g SET v = 1")
+    db.execute("CREATE TABLE dst_f (id U32, v I32)")
+    db.execute("INSERT INTO dst_f VALUES (9, 9)")
+    db.execute("INSERT INTO dst_f (id, v) SELECT id, v FROM src_g WHERE id > 1")
+    db.execute("INSERT INTO dst_f VALUES (10, 10)")
+    db.execute(
+        "MERGE INTO dst_f USING src_g ON t.id = s.id "
+        "WHEN MATCHED THEN UPDATE SET v = t.v + s.v"
+    )
+    got = sorted(tuple(r) for r in db.execute("SELECT id, v FROM dst_f").collect())
+    assert got == [(2, 2), (3, 2), (9, 9), (10, 10)]

@@ -116,8 +116,6 @@ _ALLOWED_HINTS = {
     "e23_weekly_churn": 1,  # 1-row max-week scalar
     # partition-count-bounded offsets table + two 1-row scalars
     "e20_user_concentration": 3,
-    # partition-count-bounded offsets table (distributed_cumsum)
-    "p15_token_budget_select": 1,
     # caller-bounded cross-modal query set (|M07_QUERY_DOCS| rows)
     "m07_crossmodal_knn": 1,
     # n_langs-row count/weight/threshold tables (the third hint's
@@ -132,10 +130,6 @@ _ALLOWED_HINTS = {
     # (|queries|·m rows) + rerank query-vector broadcast — all
     # caller-bounded by KNN_QUERY_IDS
     "s17_ivfpq_ann": 3,
-    # distributed_cumsum's partition-count-bounded offsets table;
-    # the sel subtree is referenced twice post-checkpoint (packing
-    # semi-join + logit join) so the analyzed plan counts it twice
-    "p19_pipeline_manifest": 2,
     # persisted-index query: probe set + ADC tables + rerank query
     # vectors — all caller-bounded by KNN_QUERY_IDS (s17's shapes)
     "s18_index_query": 3,
@@ -178,9 +172,6 @@ _ALLOWED_GLOBAL_WINDOWS = {
     "t17_zipf_slope": 1,
     "q60_rows_frame": 1,
     "e20_user_concentration": 1,
-    # offsets running-sum inside distributed_cumsum — one row per
-    # shuffle partition, cluster-config-bounded
-    "p15_token_budget_select": 1,
     # mean-recall band over the per-query recall table —
     # |KNN_QUERY_IDS| (8) rows max
     "s03_ivf_ann": 1,
@@ -194,10 +185,6 @@ _ALLOWED_GLOBAL_WINDOWS = {
     "s17_ivfpq_ann": 1,
     # same banded shape over the persisted-index query path
     "s18_index_query": 1,
-    # distributed_cumsum's offsets running-sum (one row per shuffle
-    # partition, cluster-config-bounded — p15's shape); the sel
-    # subtree is referenced twice post-checkpoint so it counts twice
-    "p19_pipeline_manifest": 2,
 }
 
 

@@ -25,7 +25,6 @@ ROOT = os.path.join(os.path.dirname(__file__), "..", "llamadb_spark")
 
 #: file (repo-relative) -> max allowed comment-stripped .collect()
 #: occurrences, each justified:
-#:   dialect.py:  constraint-violation check — one agg row of scalars
 #:   dedup.py:    connected components' driver-side finish — the
 #:     staged edge list, collected only when its observed row count
 #:     is at most _LOCAL_MAX_EDGES (the gate in _stage_edges)
@@ -46,7 +45,6 @@ ROOT = os.path.join(os.path.dirname(__file__), "..", "llamadb_spark")
 #:     observe node rides along); boundedness is the caller's query,
 #:     not a loop this helper introduces
 _COLLECT_ALLOW = {
-    "sql/dialect.py": 1,
     "operators/dedup.py": 1,
     "operators/similarity.py": 10,
     "queries/pipeline.py": 2,
