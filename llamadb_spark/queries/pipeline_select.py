@@ -1122,7 +1122,7 @@ reach(u, v) AS (
   UNION
   SELECT r.u, e.v FROM reach r JOIN edges e ON r.v = e.u
 ),
-losers AS (
+losers AS MATERIALIZED (
   SELECT u AS doc_id FROM reach GROUP BY u HAVING min(v) < u
 ),
 surv2 AS (

@@ -5,10 +5,9 @@ near-duplicate matches via operators/dedup.incremental_jaccard_
 matches, and accepted non-duplicate docs are appended to the corpus
 so the NEXT batch dedups against them too. This is the streaming
 composition of #177 (one-sided batch→corpus probe, never
-batch×batch) with the foreachBatch sink discipline of the IVM sink
-(streaming/ivm.py): the corpus lives as a versioned table, one
-version per micro-batch, batch-id stamped inside the version
-directory for exactly-once replay skipping.
+batch×batch) with the foreachBatch sink discipline of the IVM sink:
+the corpus lives as a versioned table, one version per micro-batch,
+committed exactly once through streaming/ivm.gated_drain.
 
 Per-batch cost: O(batch · avg-postings) probe + corpus append —
 independent of corpus-pair count, the property that makes continuous
@@ -19,10 +18,10 @@ committed corpus version).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 
 from llamadb_spark.sources import versioned
-from llamadb_spark.streaming.ivm import committed_batches, _commit_version
+from llamadb_spark.streaming.ivm import gated_drain, read_log
 
 
 def ingest_dedup_stream(
@@ -40,76 +39,28 @@ def ingest_dedup_stream(
        version (duplicates are dropped at the gate — the ingest
        filter), recording match rows as the next matches version.
 
-    Returns (final corpus DataFrame, all match rows). Batch ids are
-    stamped in both version directories, so a replayed micro-batch
-    (foreachBatch's at-least-once window) skips instead of
-    double-appending.
+    Returns (final corpus DataFrame, all match rows).
     """
     from llamadb_spark.operators.dedup import incremental_jaccard_matches
 
-    spark = doc_stream.sparkSession
-
-    def _apply(batch_df: DataFrame, batch_id: int) -> None:
-        # Each table is gated on its OWN committed-batch ledger: a
-        # crash between the two commits leaves one table a batch
-        # ahead, and the replay must re-commit only the missing
-        # piece instead of skipping the whole batch (which would
-        # permanently lose that batch's rows in the lagging table).
-        corpus_ledger = committed_batches(corpus_path)
-        corpus_done = batch_id in corpus_ledger
-        matches_done = batch_id in committed_batches(matches_path)
-        if corpus_done and matches_done:
-            return
-        if corpus_done:
-            # replaying the half-committed window: probe the corpus
-            # as it was BEFORE this batch's append, or the batch's
-            # own docs would match themselves and all be flagged dup
-            base_v = corpus_ledger[batch_id] - 1
-            corpus = (
-                batch_df.limit(0)
-                if base_v < 0
-                else versioned.read_version(spark, corpus_path, base_v)
-            )
-        else:
-            lv = versioned.latest_version(corpus_path)
-            corpus = (
-                batch_df.limit(0)
-                if lv is None
-                else versioned.read_version(spark, corpus_path, lv)
-            )
+    def step(batch_df: DataFrame, base) -> list[DataFrame]:
+        corpus = base(corpus_path)
+        if corpus is None:
+            corpus = batch_df.limit(0)
         matches = incremental_jaccard_matches(
             batch_df, corpus, threshold=threshold
         ).localCheckpoint()
-        # matches first: if we crash between the commits, the replay
-        # recomputes identical matches against the unchanged corpus,
-        # skips the matches commit, and lands the corpus append.
-        if not matches_done:
-            _commit_version(matches, matches_path, batch_id)
-        if not corpus_done:
-            dup_ids = matches.select("doc_id")
-            accepted = batch_df.join(dup_ids, "doc_id", "left_anti")
-            _commit_version(
-                corpus.unionByName(accepted), corpus_path, batch_id
-            )
-
-    q = (
-        doc_stream.writeStream.foreachBatch(_apply)
-        .queryName(name)
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        # no stateful timers — availableNow terminates on its own
-        q.awaitTermination(timeout_s)
-    finally:
-        if q.isActive:
-            q.stop()
-    corpus = versioned.read_version(spark, corpus_path)
-    vs = versioned.versions(matches_path)
-    assert vs, "document stream produced no committed batches"
-    all_matches = versioned.read_version(spark, matches_path, vs[0])
-    for v in vs[1:]:
-        all_matches = all_matches.unionByName(
-            versioned.read_version(spark, matches_path, v)
+        accepted = batch_df.join(
+            matches.select("doc_id"), "doc_id", "left_anti"
         )
-    return corpus, all_matches
+        return [matches, corpus.unionByName(accepted)]
+
+    gated_drain(
+        doc_stream, [matches_path, corpus_path], step,
+        name=name, timeout_s=timeout_s,
+    )
+    spark = doc_stream.sparkSession
+    return (
+        versioned.read_version(spark, corpus_path),
+        read_log(spark, matches_path),
+    )

@@ -15,72 +15,21 @@ version, so a micro-batch's probe cost is
     cosine verify on the candidates
 
 — one-sided, bucket-bounded, independent of corpus pair count, with
-the usual occupancy cap on hot corpus buckets. Exactly-once follows
-ingest_dedup's discipline: per-table batch-id ledgers (vacuum-proof
-via versioned's `_batches` file), matches committed before the
-corpus append, and a replay after the half-committed crash window
-probes the corpus as it was BEFORE the batch.
+the usual occupancy cap on hot corpus buckets.
+
+Exactly-once: streaming/ivm.gated_drain, matches then corpus; the LSH
+parameters (and plane-seed family) are stamped with the corpus, so
+probing persisted signatures under other parameters fails loudly.
 """
 
 from __future__ import annotations
-
-import json
-import os
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.functions import col
 
 from llamadb_spark.sources import versioned
-from llamadb_spark.streaming.ivm import committed_batches, _commit_version
-
-#: LSH-parameter stamp at the corpus root: persisted signatures are
-#: only valid under the (num_planes, num_tables, seed family) that
-#: wrote them — probing them with different parameters would silently
-#: produce wrong candidates, so a mismatch must fail loudly instead.
-_LSH_PARAMS_FILE = "_lsh_params"
-
-
-def _check_lsh_params(
-    corpus_path: str, num_planes: int, num_tables: int
-) -> None:
-    """Stamp or validate the LSH parameters the persisted corpus
-    signatures were computed with. The stamp includes the plane-seed
-    family (signatures from a different seed would collide-compare
-    meaninglessly even at equal plane counts). While the corpus has
-    NO committed versions the stamp is freely rewritten (ADVICE r07:
-    a first run that failed before committing anything must not pin
-    a still-empty corpus to its parameters); once a version exists
-    the stamp is immutable and a mismatch fails loudly."""
-    from llamadb_spark.operators.similarity import LSH_PLANE_SEED
-    from llamadb_spark.sources.versioned import versions
-
-    stamp = os.path.join(corpus_path, _LSH_PARAMS_FILE)
-    want = {
-        "num_planes": num_planes,
-        "num_tables": num_tables,
-        "plane_seed": LSH_PLANE_SEED,
-    }
-    if os.path.exists(stamp):
-        with open(stamp) as fh:
-            have = json.load(fh)
-        if have != want:
-            if not versions(corpus_path):
-                # nothing committed yet — the stamp pins nothing
-                with open(stamp, "w") as fh:
-                    json.dump(want, fh)
-                return
-            raise ValueError(
-                f"ingest_embed_dedup: corpus at {corpus_path} was "
-                f"indexed with LSH params {have}, but this run uses "
-                f"{want}; persisted bucket signatures are not "
-                "comparable across parameterizations — reingest the "
-                "corpus or match the stored parameters"
-            )
-    else:
-        os.makedirs(corpus_path, exist_ok=True)
-        with open(stamp, "w") as fh:
-            json.dump(want, fh)
+from llamadb_spark.streaming.ivm import gated_drain, read_log, stamp_params
 
 
 def _banded(vecs: DataFrame, num_planes: int, num_tables: int) -> DataFrame:
@@ -121,46 +70,25 @@ def ingest_embed_dedup_stream(
     all match rows (vec_id, match_id, cos))."""
     from llamadb_spark.functions.blocking import drop_hot_keys
     from llamadb_spark.functions.vector import as_double, cosine
+    from llamadb_spark.operators.similarity import LSH_PLANE_SEED
 
-    spark = vec_stream.sparkSession
-    _check_lsh_params(corpus_path, num_planes, num_tables)
+    stamp_params(
+        corpus_path,
+        "lsh",
+        {
+            "num_planes": num_planes,
+            "num_tables": num_tables,
+            "plane_seed": LSH_PLANE_SEED,
+        },
+    )
 
-    def _apply(batch_df: DataFrame, batch_id: int) -> None:
-        corpus_ledger = committed_batches(corpus_path)
-        corpus_done = batch_id in corpus_ledger
-        matches_done = batch_id in committed_batches(matches_path)
-        if corpus_done and matches_done:
-            return
+    def step(batch_df: DataFrame, base) -> list[DataFrame]:
         batch = _with_buckets(
             batch_df, num_planes, num_tables
         ).localCheckpoint()
-        if corpus_done:
-            base_v = corpus_ledger[batch_id] - 1
-            if base_v >= 0 and base_v not in versioned.versions(corpus_path):
-                # replay-after-vacuum: the pre-batch snapshot this
-                # half-committed batch must probe has been retention-
-                # deleted — recomputing its matches is impossible, so
-                # fail with the remedy instead of crashing in the
-                # parquet reader
-                raise RuntimeError(
-                    f"ingest_embed_dedup: replay of batch {batch_id} "
-                    f"needs corpus version {base_v} of {corpus_path}, "
-                    "which has been vacuumed; raise vacuum keep_last "
-                    "above the replay horizon, or bootstrap a fresh "
-                    "corpus/matches path"
-                )
-            corpus = (
-                batch.limit(0)
-                if base_v < 0
-                else versioned.read_version(spark, corpus_path, base_v)
-            )
-        else:
-            lv = versioned.latest_version(corpus_path)
-            corpus = (
-                batch.limit(0)
-                if lv is None
-                else versioned.read_version(spark, corpus_path, lv)
-            )
+        corpus = base(corpus_path)
+        if corpus is None:
+            corpus = batch.limit(0)
         c_banded = drop_hot_keys(
             _banded(corpus, num_planes, num_tables),
             ["tbl", "bucket"],
@@ -196,35 +124,16 @@ def ingest_embed_dedup_stream(
             .select("vec_id", "match_id", "cos")
             .localCheckpoint()
         )
-        # matches first (see ingest_dedup): a crash between the two
-        # commits replays into identical matches (skip) + the
-        # missing corpus append
-        if not matches_done:
-            _commit_version(matches, matches_path, batch_id)
-        if not corpus_done:
-            dup_ids = matches.select("vec_id").distinct()
-            accepted = batch.join(dup_ids, "vec_id", "left_anti")
-            _commit_version(
-                corpus.unionByName(accepted), corpus_path, batch_id
-            )
+        dup_ids = matches.select("vec_id").distinct()
+        accepted = batch.join(dup_ids, "vec_id", "left_anti")
+        return [matches, corpus.unionByName(accepted)]
 
-    q = (
-        vec_stream.writeStream.foreachBatch(_apply)
-        .queryName(name)
-        .trigger(availableNow=True)
-        .start()
+    gated_drain(
+        vec_stream, [matches_path, corpus_path], step,
+        name=name, timeout_s=timeout_s,
     )
-    try:
-        q.awaitTermination(timeout_s)
-    finally:
-        if q.isActive:
-            q.stop()
-    corpus = versioned.read_version(spark, corpus_path)
-    vs = versioned.versions(matches_path)
-    assert vs, "embedding stream produced no committed batches"
-    all_matches = versioned.read_version(spark, matches_path, vs[0])
-    for v in vs[1:]:
-        all_matches = all_matches.unionByName(
-            versioned.read_version(spark, matches_path, v)
-        )
-    return corpus, all_matches
+    spark = vec_stream.sparkSession
+    return (
+        versioned.read_version(spark, corpus_path),
+        read_log(spark, matches_path),
+    )

@@ -21,11 +21,7 @@ combinable ``groupBy(hash).min(struct(doc_id, line_no))`` + join-back
 collisions ≈ distinct-lines²/2⁶⁴ — negligible below ~10⁹ distinct
 lines and documented here rather than hidden.
 
-Exactly-once follows the family discipline: per-table batch-id
-ledgers; the corpus (cleaned docs) commits BEFORE the index, and a
-replay probes the index as it was before the batch, so the
-half-committed window recomputes the identical cleaned docs and
-lands only the missing commit.
+Exactly-once: streaming/ivm.gated_drain, corpus then index.
 """
 
 from __future__ import annotations
@@ -37,7 +33,7 @@ from pyspark.sql.types import LongType, StructField, StructType
 
 from llamadb_spark.session import empty_frame
 from llamadb_spark.sources import versioned
-from llamadb_spark.streaming.ivm import _commit_version, committed_batches
+from llamadb_spark.streaming.ivm import gated_drain
 
 _INDEX_SCHEMA = StructType([StructField("line_hash", LongType())])
 
@@ -66,30 +62,10 @@ def ingest_line_dedup_stream(
     """
     spark = doc_stream.sparkSession
 
-    def _apply(batch_df: DataFrame, batch_id: int) -> None:
-        index_ledger = committed_batches(index_path)
-        index_done = batch_id in index_ledger
-        corpus_done = batch_id in committed_batches(corpus_path)
-        if index_done and corpus_done:
-            return
-        if index_done:
-            # replaying the half-committed window: probe the index as
-            # it was BEFORE this batch's append, or the batch's own
-            # lines would gate themselves on replay
-            base_v = index_ledger[batch_id] - 1
-            index = (
-                empty_frame(spark, _INDEX_SCHEMA)
-                if base_v < 0
-                else versioned.read_version(spark, index_path, base_v)
-            )
-        else:
-            lv = versioned.latest_version(index_path)
-            index = (
-                empty_frame(spark, _INDEX_SCHEMA)
-                if lv is None
-                else versioned.read_version(spark, index_path, lv)
-            )
-
+    def step(batch_df: DataFrame, base) -> list[DataFrame]:
+        index = base(index_path)
+        if index is None:
+            index = empty_frame(spark, _INDEX_SCHEMA)
         lines = batch_df.select(
             "doc_id",
             F.posexplode(F.split(col("text"), "\n", -1)).alias(
@@ -145,38 +121,14 @@ def ingest_line_dedup_stream(
             )
             .localCheckpoint()
         )
-        # corpus first: a crash between the commits replays against
-        # the UNCHANGED index, recomputes identical cleaned docs,
-        # skips the corpus commit, and lands the index append.
-        if not corpus_done:
-            lv = versioned.latest_version(corpus_path)
-            prev = (
-                cleaned.limit(0)
-                if lv is None
-                else versioned.read_version(spark, corpus_path, lv)
-            )
-            _commit_version(
-                prev.unionByName(cleaned), corpus_path, batch_id
-            )
-        if not index_done:
-            _commit_version(
-                index.unionByName(new_first.select("line_hash")),
-                index_path,
-                batch_id,
-            )
+        prev = base(corpus_path)
+        corpus = cleaned if prev is None else prev.unionByName(cleaned)
+        return [corpus, index.unionByName(new_first.select("line_hash"))]
 
-    q = (
-        doc_stream.writeStream.foreachBatch(_apply)
-        .queryName(name)
-        .trigger(availableNow=True)
-        .start()
+    gated_drain(
+        doc_stream, [corpus_path, index_path], step,
+        name=name, timeout_s=timeout_s,
     )
-    try:
-        # no stateful timers — availableNow terminates on its own
-        q.awaitTermination(timeout_s)
-    finally:
-        if q.isActive:
-            q.stop()
     corpus = versioned.read_version(spark, corpus_path)
     index = versioned.read_version(spark, index_path)
     return corpus, index

@@ -21,17 +21,12 @@ near-exact: a hash collision can fabricate one false seed (a spurious
 length-L span); expected false spans ≈ positions²/2⁶⁴ — negligible
 below ~10⁹ corpus positions and documented here rather than hidden.
 
-Exactly-once follows the family discipline: per-table batch-id
-ledgers (vacuum-proof), matches committed before the corpus append,
-replay probes the corpus as it was BEFORE the batch, and the span
-parameters are stamped with the corpus so a mismatched ``min_len``
-fails loudly instead of mis-chaining stored postings.
+Exactly-once: streaming/ivm.gated_drain, matches then corpus; the
+span parameters are stamped with the corpus, so a mismatched
+``min_len`` fails loudly instead of mis-chaining stored postings.
 """
 
 from __future__ import annotations
-
-import json
-import os
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -39,38 +34,7 @@ from pyspark.sql.functions import col, lit
 from pyspark.sql.window import Window
 
 from llamadb_spark.sources import versioned
-from llamadb_spark.streaming.ivm import committed_batches, _commit_version
-
-_SPAN_PARAMS_FILE = "_span_params"
-
-
-def _check_span_params(corpus_path: str, min_len: int) -> None:
-    """Stamp or validate the gram length + hash family the persisted
-    postings were computed with — islands chained across mixed gram
-    lengths would produce silently-wrong extents. While the corpus
-    has NO committed versions the stamp is freely rewritten (ADVICE
-    r07: a failed first run must not pin an empty corpus); once a
-    version exists it is immutable."""
-    stamp = os.path.join(corpus_path, _SPAN_PARAMS_FILE)
-    want = {"min_len": min_len, "gram_hash": "xxhash64"}
-    if os.path.exists(stamp):
-        with open(stamp) as fh:
-            have = json.load(fh)
-        if have != want:
-            if not versioned.versions(corpus_path):
-                with open(stamp, "w") as fh:
-                    json.dump(want, fh)
-                return
-            raise ValueError(
-                f"ingest_span_dedup: corpus at {corpus_path} was "
-                f"indexed with {have}, this run uses {want}; stored "
-                "gram postings are not comparable — reingest or match "
-                "the stored parameters"
-            )
-    else:
-        os.makedirs(corpus_path, exist_ok=True)
-        with open(stamp, "w") as fh:
-            json.dump(want, fh)
+from llamadb_spark.streaming.ivm import gated_drain, read_log, stamp_params
 
 
 def _with_gram_hashes(docs: DataFrame, min_len: int) -> DataFrame:
@@ -118,39 +82,17 @@ def ingest_span_dedup_stream(
     gated doc per matching corpus doc)."""
     from llamadb_spark.functions.blocking import drop_hot_keys
 
-    spark = doc_stream.sparkSession
-    _check_span_params(corpus_path, min_len)
+    stamp_params(
+        corpus_path, "span", {"min_len": min_len, "gram_hash": "xxhash64"}
+    )
 
-    def _apply(batch_df: DataFrame, batch_id: int) -> None:
-        corpus_ledger = committed_batches(corpus_path)
-        corpus_done = batch_id in corpus_ledger
-        matches_done = batch_id in committed_batches(matches_path)
-        if corpus_done and matches_done:
-            return
+    def step(batch_df: DataFrame, base) -> list[DataFrame]:
         batch = _with_gram_hashes(
             batch_df.select("doc_id", "text"), min_len
         ).localCheckpoint()
-        if corpus_done:
-            base_v = corpus_ledger[batch_id] - 1
-            if base_v >= 0 and base_v not in versioned.versions(corpus_path):
-                raise RuntimeError(
-                    f"ingest_span_dedup: replay of batch {batch_id} "
-                    f"needs corpus version {base_v} of {corpus_path}, "
-                    "which has been vacuumed; raise vacuum keep_last "
-                    "or bootstrap fresh paths"
-                )
-            corpus = (
-                batch.limit(0)
-                if base_v < 0
-                else versioned.read_version(spark, corpus_path, base_v)
-            )
-        else:
-            lv = versioned.latest_version(corpus_path)
-            corpus = (
-                batch.limit(0)
-                if lv is None
-                else versioned.read_version(spark, corpus_path, lv)
-            )
+        corpus = base(corpus_path)
+        if corpus is None:
+            corpus = batch.limit(0)
         c_post = drop_hot_keys(
             _postings(corpus, "match_id", "c_pos"), ["h"], max_gram_occ
         )
@@ -220,32 +162,16 @@ def ingest_span_dedup_stream(
             )
             .localCheckpoint()
         )
-        if not matches_done:
-            _commit_version(matches, matches_path, batch_id)
-        if not corpus_done:
-            dup_ids = matches.select("doc_id").distinct()
-            accepted = batch.join(dup_ids, "doc_id", "left_anti")
-            _commit_version(
-                corpus.unionByName(accepted), corpus_path, batch_id
-            )
+        dup_ids = matches.select("doc_id").distinct()
+        accepted = batch.join(dup_ids, "doc_id", "left_anti")
+        return [matches, corpus.unionByName(accepted)]
 
-    q = (
-        doc_stream.writeStream.foreachBatch(_apply)
-        .queryName(name)
-        .trigger(availableNow=True)
-        .start()
+    gated_drain(
+        doc_stream, [matches_path, corpus_path], step,
+        name=name, timeout_s=timeout_s,
     )
-    try:
-        q.awaitTermination(timeout_s)
-    finally:
-        if q.isActive:
-            q.stop()
-    corpus = versioned.read_version(spark, corpus_path)
-    vs = versioned.versions(matches_path)
-    assert vs, "document stream produced no committed batches"
-    all_matches = versioned.read_version(spark, matches_path, vs[0])
-    for v in vs[1:]:
-        all_matches = all_matches.unionByName(
-            versioned.read_version(spark, matches_path, v)
-        )
-    return corpus, all_matches
+    spark = doc_stream.sparkSession
+    return (
+        versioned.read_version(spark, corpus_path),
+        read_log(spark, matches_path),
+    )

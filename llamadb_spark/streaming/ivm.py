@@ -21,6 +21,8 @@ replayed batch finds its id among committed versions and skips
 (the standard idempotent-foreachBatch ledger, here with zero extra
 commit phases). An orphaned v=N directory from a crash before the
 flip is invisible to readers and cleared on the next commit attempt.
+``gated_drain`` is the one place that rule lives: this MV and the
+four ingest-dedup streams all drain through it.
 
 Scale: per-batch cost is |changes| + |MV| (the MV is group-
 cardinality-sized — at 100 TB of facts a per-group rollup is
@@ -34,13 +36,16 @@ analytics surface, same rationale as versioned tables.
 
 from __future__ import annotations
 
+import json
 import os
 import shutil
 import warnings
+from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import DoubleType, LongType, StructField, StructType
 
+from llamadb_spark.session import empty_frame
 from llamadb_spark.sources import versioned
 
 #: name of the batch-id marker inside a version directory; the
@@ -119,6 +124,144 @@ def _commit_version(df: DataFrame, mv_path: str, batch_id: int) -> int:
     return nxt
 
 
+def _gate(
+    spark: SparkSession, tables: list[str], step: Callable, name: str
+) -> Callable[[DataFrame, int], None]:
+    """The foreachBatch body of ``gated_drain`` (see there)."""
+
+    def run_batch(batch_df: DataFrame, batch_id: int) -> None:
+        ledgers = {t: committed_batches(t) for t in tables}
+        todo = [t for t in tables if batch_id not in ledgers[t]]
+        if not todo:
+            return
+
+        def base(path: str) -> DataFrame | None:
+            ledger = ledgers[path]
+            if batch_id in ledger:
+                # replaying a half-committed batch: probe the table as
+                # it was BEFORE this batch, or the batch's own rows
+                # would match themselves
+                v = ledger[batch_id] - 1
+            else:
+                v = versioned.latest_version(path)
+            if v is None or v < 0:
+                return None
+            if not os.path.isdir(os.path.join(path, f"v={v}")):
+                raise RuntimeError(
+                    f"{name}: replay of batch {batch_id} needs version "
+                    f"{v} of {path}, which has been vacuumed; raise "
+                    "vacuum keep_last above the replay horizon, or "
+                    "bootstrap fresh table paths"
+                )
+            return versioned.read_version(spark, path, v)
+
+        frames = dict(zip(tables, step(batch_df, base), strict=True))
+        for t in todo:
+            _commit_version(frames[t], t, batch_id)
+
+    return run_batch
+
+
+def gated_drain(
+    stream: DataFrame,
+    tables: list[str],
+    step: Callable,
+    *,
+    name: str,
+    timeout_s: int,
+    checkpoint_dir: str | None = None,
+) -> None:
+    """Drain a finite stream (availableNow), committing each
+    micro-batch exactly once into the versioned ``tables``.
+
+    ``step(batch_df, base)`` returns one DataFrame per table, in
+    ``tables`` order: the table's next version. ``base(path)`` reads
+    one table's pre-batch version (``None`` while the table is empty)
+    and is read only when ``step`` asks for it.
+
+    foreachBatch is at-least-once: a crash between a commit and the
+    stream checkpoint, or a lost checkpoint, replays the batch. Each
+    table is therefore gated on its OWN ``committed_batches`` ledger:
+    a batch every table has is skipped, and a half-committed batch
+    recomputes against the pre-batch bases and commits only the
+    tables still missing it, in ``tables`` order. The table the next
+    batch probes must come last, so its commit is the one that
+    publishes the batch. Raises ``TimeoutError`` if the stream is not
+    drained within ``timeout_s``."""
+    run_batch = _gate(stream.sparkSession, tables, step, name)
+    w = stream.writeStream.foreachBatch(run_batch)
+    if checkpoint_dir is not None:
+        w = w.option("checkpointLocation", checkpoint_dir)
+    q = w.queryName(name).trigger(availableNow=True).start()
+    try:
+        # no stateful timers — availableNow terminates on its own
+        if not q.awaitTermination(timeout_s):
+            raise TimeoutError(
+                f"{name}: stream not drained within {timeout_s} s"
+            )
+    finally:
+        if q.isActive:
+            q.stop()
+
+
+def read_log(spark: SparkSession, path: str) -> DataFrame:
+    """Every committed version of a table that stores one batch's rows
+    per version (a matches log), as one parquet read."""
+    vs = versioned.versions(path)
+    if not vs:
+        raise RuntimeError(f"no committed batches at {path}")
+    return spark.read.parquet(*[os.path.join(path, f"v={v}") for v in vs])
+
+
+def stamp_params(corpus_path: str, kind: str, params: dict) -> None:
+    """Stamp or validate, in ``<corpus>/_<kind>_params``, the
+    parameters a corpus's persisted index columns were computed with:
+    probing them under other parameters would silently produce wrong
+    candidates. While the corpus has NO committed versions the stamp
+    is freely rewritten (a first run that failed before committing
+    anything must not pin a still-empty corpus); once a version
+    exists a mismatch fails loudly."""
+    stamp = os.path.join(corpus_path, f"_{kind}_params")
+    if os.path.exists(stamp):
+        with open(stamp) as fh:
+            have = json.load(fh)
+        if have == params:
+            return
+        if versioned.versions(corpus_path):
+            raise ValueError(
+                f"corpus at {corpus_path} was indexed with "
+                f"{kind.upper()} params {have}, but this run uses "
+                f"{params}; its persisted index columns are not "
+                "comparable — reingest the corpus or match the stored "
+                "parameters"
+            )
+    os.makedirs(corpus_path, exist_ok=True)
+    with open(stamp, "w") as fh:
+        json.dump(params, fh)
+
+
+def _group_agg_step(mv_path: str, group_col: str, value_col: str):
+    def step(batch_df: DataFrame, base) -> list[DataFrame]:
+        prev = base(mv_path)
+        if prev is None:
+            gtype = batch_df.schema["_new"].dataType[group_col].dataType
+            prev = empty_frame(
+                batch_df.sparkSession,
+                StructType(
+                    [
+                        StructField(group_col, gtype),
+                        StructField("n_rows", LongType()),
+                        StructField("total", DoubleType()),
+                    ]
+                ),
+            )
+        return [
+            versioned.maintain_group_agg(prev, batch_df, group_col, value_col)
+        ]
+
+    return step
+
+
 def apply_changelog_batch(
     spark: SparkSession,
     batch_df: DataFrame,
@@ -127,33 +270,11 @@ def apply_changelog_batch(
     group_col: str,
     value_col: str,
 ) -> None:
-    """One IVM step: skip if this batch already committed (replay),
-    else delta-apply it to the latest MV version and commit."""
-    if batch_id in committed_batches(mv_path):
-        return
-    lv = versioned.latest_version(mv_path)
-    if lv is None:
-        gtype = next(
-            f.dataType
-            for f in batch_df.schema["_new"].dataType.fields
-            if f.name == group_col
-        )
-        prev = spark.createDataFrame(
-            [],
-            StructType(
-                [
-                    StructField(group_col, gtype),
-                    StructField("n_rows", LongType()),
-                    StructField("total", DoubleType()),
-                ]
-            ),
-        )
-    else:
-        prev = versioned.read_version(spark, mv_path, lv)
-    new_agg = versioned.maintain_group_agg(
-        prev, batch_df, group_col, value_col
-    )
-    _commit_version(new_agg, mv_path, batch_id)
+    """One IVM step through the gate: skip if this batch already
+    committed (replay), else delta-apply it to the latest MV version
+    and commit."""
+    step = _group_agg_step(mv_path, group_col, value_col)
+    _gate(spark, [mv_path], step, "ivm_group_agg")(batch_df, batch_id)
 
 
 def ivm_group_agg_stream(
@@ -175,24 +296,12 @@ def ivm_group_agg_stream(
     arrived since, and a LOST checkpoint (full source replay) is
     harmless — every replayed batch finds its id in the version
     ledger and skips (tested in tests/test_streaming.py)."""
-    spark = changelog_stream.sparkSession
-
-    def _apply(batch_df: DataFrame, batch_id: int) -> None:
-        apply_changelog_batch(
-            spark, batch_df, batch_id, mv_path, group_col, value_col
-        )
-
-    w = changelog_stream.writeStream.foreachBatch(_apply)
-    if checkpoint_dir is not None:
-        w = w.option("checkpointLocation", checkpoint_dir)
-    q = w.queryName(name).trigger(availableNow=True).start()
-    try:
-        # no stateful timers in this query — availableNow terminates
-        # on its own once the source is drained
-        q.awaitTermination(timeout_s)
-    finally:
-        if q.isActive:
-            q.stop()
-    lv = versioned.latest_version(mv_path)
-    assert lv is not None, "changelog stream produced no MV version"
-    return versioned.read_version(spark, mv_path, lv)
+    gated_drain(
+        changelog_stream,
+        [mv_path],
+        _group_agg_step(mv_path, group_col, value_col),
+        name=name,
+        timeout_s=timeout_s,
+        checkpoint_dir=checkpoint_dir,
+    )
+    return versioned.read_version(changelog_stream.sparkSession, mv_path)

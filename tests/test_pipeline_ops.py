@@ -361,6 +361,28 @@ def test_p19_bpe_budget_variant_nested_prefix(spark, sf_dir):
     )
 
 
+def test_p19_oracle_twin_runs_under_a_duckdb_memory_cap():
+    """p19's DuckDB twin stays checkable on a 4-core, 15 GB box: at
+    sf0.01, capped at 2 GB and 4 threads, it returns p19's 48 rows.
+    With ``losers`` not materialized, its ``NOT IN`` over the
+    recursive closure ``reach`` ran out of memory under this cap."""
+    import duckdb
+
+    from llamadb_spark.queries.pipeline_select import ORACLE_P19
+
+    sf = "/root/testdata/sf0.01"
+    con = duckdb.connect()
+    try:
+        con.execute("SET memory_limit='2GB'")
+        con.execute("SET threads=4")
+        con.execute(
+            f"CREATE VIEW documents AS SELECT * FROM '{sf}/documents.parquet'"
+        )
+        assert len(con.execute(ORACLE_P19).fetchall()) == 48
+    finally:
+        con.close()
+
+
 def test_p15_bpe_budget_variant(spark, sf_dir):
     """p15 budgeted in BPE tokens: runs green with the same schema;
     the selected token mass stays within the (currency-reinterpreted)

@@ -115,3 +115,18 @@ def test_no_rdd_anywhere_in_package():
         if n:
             hits[rel] = n
     assert not hits, f"RDD usage in the DataFrame-first package: {hits}"
+
+
+def test_one_exactly_once_gate():
+    """Every versioned foreachBatch sink commits through
+    streaming/ivm.py's gate (``gated_drain``): the batch-id ledger read
+    and the stamped commit are called nowhere else, so no second
+    replay rule can drift from the first."""
+    pat = re.compile(r"\bcommitted_batches\(|\b_commit_version\(")
+    hits = sorted(
+        rel
+        for rel, f in _sources()
+        if rel != "streaming/ivm.py"
+        and any(pat.search(c) for c in _code_lines(f))
+    )
+    assert not hits, f"exactly-once ledger used outside the gate: {hits}"

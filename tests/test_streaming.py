@@ -4,6 +4,8 @@ the events files must reproduce the batch operator exactly
 
 from __future__ import annotations
 
+import pytest
+
 from llamadb_spark.operators.events import windowed_counts
 from llamadb_spark.queries.events import _events
 from llamadb_spark.streaming import (
@@ -679,6 +681,33 @@ def test_ivm_stream_matches_recompute(spark, tmp_path):
     assert after == got
 
 
+def _jobs_between_markers(spark, fn):
+    """(fn(), Spark jobs fn ran), counted as the job-id gap between
+    two one-job markers: micro-batches run on the stream's own thread
+    and do not inherit the caller's job group."""
+    import uuid
+
+    sc = spark.sparkContext
+
+    def marker():
+        group = f"marker-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, group)
+        try:
+            spark.range(1).collect()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        (job,) = sc.statusTracker().getJobIdsForGroup(group)
+        return job
+
+    before = marker()
+    out = fn()
+    return out, marker() - before - 1
+
+
+#: Spark jobs of the two-batch ingest_dedup drain below
+INGEST_DEDUP_DRAIN_JOBS = 18
+
+
 def test_ingest_dedup_stream_gates_cross_batch_duplicates(spark, tmp_path):
     """Streaming ingest dedup: batch 2's near-duplicate of a batch-1
     document must be matched against the ALREADY-ACCEPTED corpus and
@@ -716,12 +745,17 @@ def test_ingest_dedup_stream_gates_cross_batch_duplicates(spark, tmp_path):
         .option("maxFilesPerTrigger", 1)
         .parquet(str(drop))
     )
-    corpus, matches = ingest_dedup_stream(
-        stream,
-        str(tmp_path / "corpus"),
-        str(tmp_path / "matches"),
-        threshold=0.5,
+    (corpus, matches), jobs = _jobs_between_markers(
+        spark,
+        lambda: ingest_dedup_stream(
+            stream,
+            str(tmp_path / "corpus"),
+            str(tmp_path / "matches"),
+            threshold=0.5,
+        ),
     )
+    # the drain plus its final reads (one parquet read per table)
+    assert jobs == INGEST_DEDUP_DRAIN_JOBS
     kept = sorted(r.doc_id for r in corpus.collect())
     assert kept == [1, 2, 4]  # doc 3 gated as a near-dup of doc 1
     m = {(r.doc_id, r.match_id) for r in matches.collect()}
@@ -729,6 +763,38 @@ def test_ingest_dedup_stream_gates_cross_batch_duplicates(spark, tmp_path):
     # one corpus version per micro-batch, stamped with its batch id
     assert versions(str(tmp_path / "corpus")) == [0, 1]
     assert committed_batches(str(tmp_path / "corpus")) == {0: 0, 1: 1}
+
+
+def test_ivm_first_base_is_an_empty_local_relation(
+    spark, tmp_path, monkeypatch
+):
+    """The first MV version is built over an empty LocalRelation, not
+    a Python-RDD scan (``createDataFrame([])``), which schedules one
+    empty task per default partition on every read."""
+    from llamadb_spark.streaming import ivm
+
+    log_path = str(tmp_path / "log")
+    spark.createDataFrame(
+        [(1, "insert", None, ("a", 1.0))], _CHANGELOG_SCHEMA
+    ).write.parquet(log_path)
+    committed = []
+    real_commit = ivm._commit_version
+
+    def capture(df, path, batch_id):
+        committed.append(df)
+        return real_commit(df, path, batch_id)
+
+    monkeypatch.setattr(ivm, "_commit_version", capture)
+    ivm.apply_changelog_batch(
+        spark, spark.read.parquet(log_path), 0, str(tmp_path / "mv"),
+        "grp", "val",
+    )
+    (mv,) = committed
+    plans = mv._jdf.queryExecution().toString()
+    assert "LogicalRDD" not in plans and "ExistingRDD" not in plans
+    assert [(r.grp, r.n_rows, r.total) for r in mv.collect()] == [
+        ("a", 1, 1.0)
+    ]
 
 
 def test_ivm_stream_checkpoint_resume_and_ledger_replay(spark, tmp_path):
@@ -909,67 +975,291 @@ def test_ivm_ledger_survives_vacuum(spark, tmp_path):
     assert {r.grp: (r.n_rows, r.total) for r in mv.collect()} == want
 
 
-def test_ingest_dedup_per_table_replay_gating(spark, tmp_path):
-    """Crash between the matches commit and the corpus commit: the
-    replayed batch must re-commit ONLY the missing table (per-table
-    ledger gating), probing the corpus as it was before the batch.
-    Before the fix the replay skipped entirely when the corpus ledger
-    had the batch, permanently losing the matches version (or, with
-    matches-first ordering, never landing the corpus append)."""
+def _stage_drop(spark, tmp_path, tag, schema, batches):
+    """Stage each batch as one parquet file, oldest first by mtime, and
+    return a factory of the file stream that reads them one file per
+    micro-batch (the pinned batch boundaries a replay relies on)."""
     import os
     import shutil
 
-    from llamadb_spark.sources.versioned import latest_version, versions
-    from llamadb_spark.streaming.ingest_dedup import ingest_dedup_stream
-    from llamadb_spark.streaming.ivm import committed_batches
-
-    base = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
-    docs1 = [(1, base), (2, "one two three four five six seven eight")]
-    docs2 = [(3, base + " extra"), (4, "unrelated fresh tokens only here")]
-    schema = "doc_id long, text string"
-    drop = tmp_path / "pt_drop"
+    drop = tmp_path / f"{tag}_drop"
     drop.mkdir()
-    for i, rows in enumerate((docs1, docs2)):
-        staged = str(tmp_path / f"pt_stage{i}")
+    for i, rows in enumerate(batches):
+        staged = str(tmp_path / f"{tag}_stage{i}")
         spark.createDataFrame(rows, schema).coalesce(1).write.parquet(staged)
         part = next(f for f in os.listdir(staged) if f.endswith(".parquet"))
-        dst = str(drop / f"{i:02d}-docs.parquet")
+        dst = str(drop / f"{i:02d}-batch.parquet")
         shutil.copyfile(os.path.join(staged, part), dst)
         os.utime(dst, (1_000_000 + i, 1_000_000 + i))
 
-    corpus_path = str(tmp_path / "pt_corpus")
-    matches_path = str(tmp_path / "pt_matches")
-
-    def run():
-        stream = (
+    def stream():
+        return (
             spark.readStream.schema(schema)
             .option("maxFilesPerTrigger", 1)
             .parquet(str(drop))
         )
-        return ingest_dedup_stream(
-            stream, corpus_path, matches_path, threshold=0.5
+
+    return stream
+
+
+def _emb(seed, flip=0.0):
+    """Deterministic 16-d vector; ``flip`` adds a small perturbation
+    that keeps the cosine to the unflipped vector near 1."""
+    import math
+
+    v = [math.sin(seed * 37 + i) for i in range(16)]
+    if flip:
+        v = [x + flip * math.cos(seed + j) for j, x in enumerate(v)]
+    return v
+
+
+_DOC = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
+_SPAN1 = "alpha bravo charlie delta echo foxtrot golf hotel india"
+_SPAN4 = "one two three UNIQUE tail content here totally new"
+_CHROME = "CHROME LINE"
+_DOCS_SCHEMA = "doc_id long, text string"
+_CHANGELOG_SCHEMA = (
+    "id long, change string, _old struct<grp:string,val:double>, "
+    "_new struct<grp:string,val:double>"
+)
+
+
+def _ids_and_matches(id_col):
+    def check(result):
+        corpus, matches = result
+        assert sorted(r[id_col] for r in corpus.collect()) == [1, 2, 4]
+        assert {(r[id_col], r.match_id) for r in matches.collect()} == {
+            (3, 1)
+        }
+
+    return check
+
+
+def _check_lines(result):
+    corpus, index = result
+    assert {r.doc_id: r.clean_text for r in corpus.collect()} == {
+        1: _CHROME + "\nbody-a",
+        2: "body-b",
+    }
+    assert index.count() == 3  # chrome, body-a, body-b
+
+
+def _check_mv(mv):
+    assert {r.grp: (r.n_rows, r.total) for r in mv.collect()} == {
+        "a": (1, 11.0),
+        "c": (1, 2.0),
+    }
+
+
+def _gated_case(kind):
+    """One gated stream: (schema, three batches, drain(stream, root),
+    its table paths under ``root`` in the gate's commit order, and the
+    check of a drain of the first two batches)."""
+    from llamadb_spark.streaming.ingest_dedup import ingest_dedup_stream
+    from llamadb_spark.streaming.ingest_embed_dedup import (
+        ingest_embed_dedup_stream,
+    )
+    from llamadb_spark.streaming.ingest_line_dedup import (
+        ingest_line_dedup_stream,
+    )
+    from llamadb_spark.streaming.ingest_span_dedup import (
+        ingest_span_dedup_stream,
+    )
+    from llamadb_spark.streaming.ivm import ivm_group_agg_stream
+
+    def at(root, *names):
+        return [str(root / n) for n in names]
+
+    return {
+        "ingest_dedup": (
+            _DOCS_SCHEMA,
+            [
+                [(1, _DOC), (2, "one two three four five six seven eight")],
+                [(3, _DOC + " extra"), (4, "unrelated fresh tokens only here")],
+                [(5, "a third drop of entirely new words")],
+            ],
+            lambda s, root: ingest_dedup_stream(
+                s, *at(root, "corpus", "matches"), threshold=0.5
+            ),
+            lambda root: at(root, "matches", "corpus"),
+            _ids_and_matches("doc_id"),
+        ),
+        "ingest_line_dedup": (
+            _DOCS_SCHEMA,
+            [
+                [(1, _CHROME + "\nbody-a")],
+                [(2, _CHROME + "\nbody-b")],
+                [(3, "body-c")],
+            ],
+            lambda s, root: ingest_line_dedup_stream(
+                s, *at(root, "corpus", "index")
+            ),
+            lambda root: at(root, "corpus", "index"),
+            _check_lines,
+        ),
+        "ingest_span_dedup": (
+            _DOCS_SCHEMA,
+            [
+                [(1, _SPAN1), (2, "one two three four five six seven")],
+                # 3: excerpt of doc 1; 4 shares only a short run
+                [(3, "X-" + _SPAN1[5:50] + "-Y"), (4, _SPAN4)],
+                [(5, "Z~" + _SPAN4[4:46] + "~Q")],
+            ],
+            lambda s, root: ingest_span_dedup_stream(
+                s, *at(root, "corpus", "matches"), min_len=30
+            ),
+            lambda root: at(root, "matches", "corpus"),
+            _ids_and_matches("doc_id"),
+        ),
+        "ingest_embed_dedup": (
+            "vec_id long, embedding array<double>, label string",
+            [
+                [(1, _emb(1), "a"), (2, _emb(2), "a")],
+                [(3, _emb(1, flip=0.01), "b"), (4, _emb(9), "b")],
+                [(5, _emb(5), "c")],
+            ],
+            lambda s, root: ingest_embed_dedup_stream(
+                s, *at(root, "corpus", "matches"), threshold=0.95
+            ),
+            lambda root: at(root, "matches", "corpus"),
+            _ids_and_matches("vec_id"),
+        ),
+        "ivm": (
+            _CHANGELOG_SCHEMA,
+            [
+                [
+                    (1, "insert", None, ("a", 10.0)),
+                    (2, "insert", None, ("b", 5.0)),
+                ],
+                [
+                    (1, "update", ("a", 10.0), ("a", 11.0)),
+                    (2, "delete", ("b", 5.0), None),
+                    (3, "insert", None, ("c", 2.0)),
+                ],
+                [(3, "update", ("c", 2.0), ("a", 1.0))],
+            ],
+            lambda s, root: ivm_group_agg_stream(
+                s, *at(root, "mv"), "grp", "val"
+            ),
+            lambda root: at(root, "mv"),
+            _check_mv,
+        ),
+    }[kind]
+
+
+_INGEST_KINDS = [
+    "ingest_dedup",
+    "ingest_line_dedup",
+    "ingest_span_dedup",
+    "ingest_embed_dedup",
+]
+
+
+@pytest.mark.parametrize("kind", _INGEST_KINDS + ["ivm"])
+def test_gate_crash_after_first_commit_replays_exactly_once(
+    spark, tmp_path, monkeypatch, kind
+):
+    """A real crash inside the exactly-once gate: batch 1 raises right
+    after its FIRST table commit, so the first table holds the batch
+    and every later table does not. A full replay with no checkpoint
+    must skip batch 0, recompute batch 1 against the pre-batch bases,
+    commit only the missing tables, and leave every table equal to an
+    uncrashed run's with exactly one version per batch."""
+    from llamadb_spark.sources.versioned import read_version, versions
+    from llamadb_spark.streaming import ivm
+
+    schema, batches, drain, tables_at, check = _gated_case(kind)
+    stream = _stage_drop(spark, tmp_path, "crash", schema, batches[:2])
+
+    def snapshot(tables):
+        return [
+            {
+                v: sorted(map(str, read_version(spark, t, v).collect()))
+                for v in versions(t)
+            }
+            for t in tables
+        ]
+
+    clean = tables_at(tmp_path / "clean")
+    check(drain(stream(), tmp_path / "clean"))
+    want = snapshot(clean)
+
+    real_commit = ivm._commit_version
+
+    def crash_after_commit(df, path, batch_id):
+        v = real_commit(df, path, batch_id)
+        if batch_id == 1:
+            raise RuntimeError("injected crash after a commit")
+        return v
+
+    tables = tables_at(tmp_path / "crashed")
+    monkeypatch.setattr(ivm, "_commit_version", crash_after_commit)
+    with pytest.raises(Exception, match="injected crash"):
+        drain(stream(), tmp_path / "crashed")
+    monkeypatch.undo()
+    first, *rest = tables
+    assert ivm.committed_batches(first) == {0: 0, 1: 1}
+    for t in rest:
+        assert ivm.committed_batches(t) == {0: 0}
+
+    check(drain(stream(), tmp_path / "crashed"))
+    for t in tables:
+        assert versions(t) == [0, 1]
+        assert ivm.committed_batches(t) == {0: 0, 1: 1}
+    assert snapshot(tables) == want
+
+
+@pytest.mark.parametrize("kind", _INGEST_KINDS)
+def test_ingest_vacuumed_base_replay_fails_clearly(spark, tmp_path, kind):
+    """A half-committed replay that needs a version of the probed
+    table older than the vacuum horizon must fail with the remedy,
+    not crash inside the parquet reader."""
+    import os
+    import shutil
+
+    from llamadb_spark.sources.versioned import vacuum
+    from llamadb_spark.streaming.ivm import committed_batches
+
+    schema, batches, drain, tables_at, _ = _gated_case(kind)
+    stream = _stage_drop(spark, tmp_path, "vb", schema, batches)
+    first, probed = tables_at(tmp_path)
+    drain(stream(), tmp_path)
+    assert committed_batches(probed) == {0: 0, 1: 1, 2: 2}
+
+    # batch 2's probed-table commit SURVIVED but the first table's
+    # commit was lost, and the probed table's pre-batch snapshot v=1
+    # has since been vacuumed (its batch marker kept in the root
+    # _batches ledger). Recomputing batch 2 needs v=1.
+    shutil.rmtree(os.path.join(first, "v=2"))
+    with open(os.path.join(first, "_latest"), "w") as fh:
+        fh.write("1")
+    assert vacuum(probed, keep_last=1) == [0, 1]
+    with pytest.raises(Exception, match="which has been vacuumed"):
+        drain(stream(), tmp_path)
+
+
+def test_gated_drain_fails_loudly(spark, tmp_path):
+    """A drain that outlives ``timeout_s`` raises instead of handing
+    back partly ingested tables, and reading a log with no committed
+    batch raises (not an ``assert``, which ``python -O`` strips)."""
+    import time
+
+    from llamadb_spark.streaming.ivm import gated_drain, read_log
+
+    stream = _stage_drop(spark, tmp_path, "slow", _DOCS_SCHEMA, [[(1, "x")]])
+
+    def slow_step(batch_df, base):
+        time.sleep(4)
+        return [batch_df]
+
+    with pytest.raises(TimeoutError):
+        gated_drain(
+            stream(), [str(tmp_path / "t")], slow_step,
+            name="gate_timeout", timeout_s=1,
         )
-
-    corpus, matches = run()
-    assert sorted(r.doc_id for r in corpus.collect()) == [1, 2, 4]
-    assert {(r.doc_id, r.match_id) for r in matches.collect()} == {(3, 1)}
-
-    # simulate the crash window: roll the CORPUS back one version
-    # (batch 1's append lost) while the matches commit survived
-    shutil.rmtree(os.path.join(corpus_path, "v=1"))
-    with open(os.path.join(corpus_path, "_latest"), "w") as fh:
-        fh.write("0")
-    assert latest_version(corpus_path) == 0
-    assert committed_batches(corpus_path) == {0: 0}
-    assert committed_batches(matches_path) == {0: 0, 1: 1}
-
-    # full replay (no checkpoint retained): batch 0 skips both
-    # tables, batch 1 re-commits the corpus only
-    corpus2, matches2 = run()
-    assert sorted(r.doc_id for r in corpus2.collect()) == [1, 2, 4]
-    assert {(r.doc_id, r.match_id) for r in matches2.collect()} == {(3, 1)}
-    assert versions(corpus_path) == [0, 1]
-    assert versions(matches_path) == [0, 1]  # no duplicate commit
+    assert not [q for q in spark.streams.active if q.name == "gate_timeout"]
+    with pytest.raises(RuntimeError, match="no committed batches"):
+        read_log(spark, str(tmp_path / "never_written"))
 
 
 def _stage_shuffled_events(
@@ -1145,10 +1435,12 @@ def test_ingest_embed_dedup_stream_gates_and_persists_signatures(
     via the PERSISTED bucket signatures (the corpus is never
     re-hashed at probe time) and gated out; per-table exactly-once
     ledger stamped like ingest_dedup."""
+    import json
     import math
     import os
     import shutil
 
+    from llamadb_spark.operators.similarity import LSH_PLANE_SEED
     from llamadb_spark.sources.versioned import versions
     from llamadb_spark.streaming.ingest_embed_dedup import (
         ingest_embed_dedup_stream,
@@ -1194,8 +1486,15 @@ def test_ingest_embed_dedup_stream_gates_and_persists_signatures(
     m = {(r.vec_id, r.match_id) for r in matches.collect()}
     assert m == {(3, 1)}
     assert all(r.cos >= 0.95 for r in matches.collect())
-    # signatures persisted with the corpus (probe never re-hashes)
+    # signatures persisted with the corpus (probe never re-hashes),
+    # stamped with the LSH parameters and plane-seed family
     assert "buckets" in corpus.columns
+    with open(os.path.join(corpus_path, "_lsh_params")) as fh:
+        assert json.load(fh) == {
+            "num_planes": 6,
+            "num_tables": 40,
+            "plane_seed": LSH_PLANE_SEED,
+        }
     assert versions(corpus_path) == [0, 1]
     assert committed_batches(corpus_path) == {0: 0, 1: 1}
     assert committed_batches(matches_path) == {0: 0, 1: 1}
@@ -1412,92 +1711,29 @@ def test_ingest_embed_dedup_lsh_param_stamp_guard(spark, tmp_path):
 
     from llamadb_spark.operators.similarity import LSH_PLANE_SEED
     from llamadb_spark.sources.versioned import write_version
-    from llamadb_spark.streaming.ingest_embed_dedup import (
-        _LSH_PARAMS_FILE,
-        _check_lsh_params,
-    )
+    from llamadb_spark.streaming.ivm import stamp_params
+
+    def lsh(num_planes, num_tables):
+        return {
+            "num_planes": num_planes,
+            "num_tables": num_tables,
+            "plane_seed": LSH_PLANE_SEED,
+        }
 
     corpus_path = str(tmp_path / "stamp_corpus")
-    _check_lsh_params(corpus_path, num_planes=6, num_tables=40)
-    with open(os.path.join(corpus_path, _LSH_PARAMS_FILE)) as fh:
+    stamp_params(corpus_path, "lsh", lsh(6, 40))
+    with open(os.path.join(corpus_path, "_lsh_params")) as fh:
         assert json.load(fh) == {
             "num_planes": 6,
             "num_tables": 40,
             "plane_seed": LSH_PLANE_SEED,
         }
     # same params: fine (idempotent)
-    _check_lsh_params(corpus_path, num_planes=6, num_tables=40)
+    stamp_params(corpus_path, "lsh", lsh(6, 40))
     write_version(spark.range(1), corpus_path)
     # different params on a committed corpus: refused with the remedy
     with pytest.raises(ValueError, match="LSH params"):
-        _check_lsh_params(corpus_path, num_planes=8, num_tables=40)
-
-
-def test_ingest_embed_dedup_vacuumed_base_replay_fails_clearly(
-    spark, tmp_path
-):
-    """ADVICE r06: a half-committed replay that needs a corpus
-    version older than the vacuum horizon must fail with the remedy,
-    not crash inside the parquet reader."""
-    import math
-    import os
-    import shutil
-
-    import pytest
-
-    from llamadb_spark.streaming.ingest_embed_dedup import (
-        ingest_embed_dedup_stream,
-    )
-    from llamadb_spark.streaming.ivm import committed_batches
-
-    d = 16
-
-    def vec(seed):
-        return [math.sin(seed * 37 + i) for i in range(d)]
-
-    schema = "vec_id long, embedding array<double>, label string"
-    drop = tmp_path / "vb_drop"
-    drop.mkdir()
-    for i, rows in enumerate(
-        ([(1, vec(1), "a")], [(2, vec(2), "a")], [(3, vec(3), "a")])
-    ):
-        staged = str(tmp_path / f"vb_stage{i}")
-        spark.createDataFrame(rows, schema).coalesce(1).write.parquet(staged)
-        part = next(f for f in os.listdir(staged) if f.endswith(".parquet"))
-        dst = str(drop / f"{i:02d}-emb.parquet")
-        shutil.copyfile(os.path.join(staged, part), dst)
-        os.utime(dst, (1_000_000 + i, 1_000_000 + i))
-
-    def run():
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(str(drop))
-        )
-        return ingest_embed_dedup_stream(
-            stream, corpus_path, matches_path, threshold=0.95
-        )
-
-    corpus_path = str(tmp_path / "vb_corpus")
-    matches_path = str(tmp_path / "vb_matches")
-    run()
-    assert committed_batches(corpus_path) == {0: 0, 1: 1, 2: 2}
-
-    # simulate the impossible replay: batch 2's corpus commit
-    # SURVIVED but its matches commit was lost (the half-committed
-    # window), and the pre-batch corpus snapshot v=1 has since been
-    # vacuumed (directory gone, batch marker preserved in the root
-    # _batches ledger, exactly as versioned.vacuum does). Recomputing
-    # batch 2's matches needs v=1 — the replay must fail with the
-    # remedy, not crash inside the parquet reader.
-    shutil.rmtree(os.path.join(matches_path, "v=2"))
-    with open(os.path.join(matches_path, "_latest"), "w") as fh:
-        fh.write("1")
-    with open(os.path.join(corpus_path, "_batches"), "a") as fh:
-        fh.write("1 1\n")
-    shutil.rmtree(os.path.join(corpus_path, "v=1"))
-    with pytest.raises(Exception, match="vacuumed"):
-        run()
+        stamp_params(corpus_path, "lsh", lsh(8, 40))
 
 
 def test_ingest_span_dedup_gates_on_duplicated_mass(spark, tmp_path):
@@ -1506,6 +1742,7 @@ def test_ingest_span_dedup_gates_on_duplicated_mass(spark, tmp_path):
     mass over the per-mille gate); a doc sharing only a sub-L run is
     accepted; batch 3 dedups against batch 2's accepted docs via the
     PERSISTED gram postings; exactly-once ledgers stamped."""
+    import json
     import os
     import shutil
 
@@ -1555,8 +1792,11 @@ def test_ingest_span_dedup_gates_on_duplicated_mass(spark, tmp_path):
     for r in matches.collect():
         assert r.dup_permille >= 500
         assert 0 < r.dup_chars <= r.doc_len
-    # postings persisted with the corpus (probe never re-hashes text)
+    # postings persisted with the corpus (probe never re-hashes text),
+    # stamped with the gram length and hash family
     assert "gram_hashes" in corpus.columns
+    with open(os.path.join(corpus_path, "_span_params")) as fh:
+        assert json.load(fh) == {"min_len": 30, "gram_hash": "xxhash64"}
     assert versions(corpus_path) == [0, 1, 2]
     assert committed_batches(corpus_path) == {0: 0, 1: 1, 2: 2}
     assert committed_batches(matches_path) == {0: 0, 1: 1, 2: 2}
@@ -1682,33 +1922,43 @@ def test_param_stamp_restampable_until_first_commit(spark, tmp_path):
 
     import pytest
 
+    from llamadb_spark.operators.similarity import LSH_PLANE_SEED
     from llamadb_spark.sources.versioned import write_version
-    from llamadb_spark.streaming.ingest_embed_dedup import _check_lsh_params
-    from llamadb_spark.streaming.ingest_span_dedup import _check_span_params
+    from llamadb_spark.streaming.ivm import stamp_params
+
+    def lsh(num_planes, num_tables):
+        return {
+            "num_planes": num_planes,
+            "num_tables": num_tables,
+            "plane_seed": LSH_PLANE_SEED,
+        }
+
+    def span(min_len):
+        return {"min_len": min_len, "gram_hash": "xxhash64"}
 
     emb_corpus = str(tmp_path / "emb_corpus")
-    _check_lsh_params(emb_corpus, num_planes=6, num_tables=40)
+    stamp_params(emb_corpus, "lsh", lsh(6, 40))
     # no committed versions yet: different params restamp, no error
-    _check_lsh_params(emb_corpus, num_planes=8, num_tables=16)
+    stamp_params(emb_corpus, "lsh", lsh(8, 16))
     with open(os.path.join(emb_corpus, "_lsh_params")) as fh:
         stamped = json.load(fh)
     assert stamped["num_planes"] == 8
     assert "plane_seed" in stamped  # seed family is part of validity
     # first commit pins the stamp
     write_version(spark.range(1), emb_corpus)
-    _check_lsh_params(emb_corpus, num_planes=8, num_tables=16)  # match ok
+    stamp_params(emb_corpus, "lsh", lsh(8, 16))  # match ok
     with pytest.raises(ValueError, match="not comparable"):
-        _check_lsh_params(emb_corpus, num_planes=6, num_tables=40)
+        stamp_params(emb_corpus, "lsh", lsh(6, 40))
 
     span_corpus = str(tmp_path / "span_corpus")
-    _check_span_params(span_corpus, min_len=30)
-    _check_span_params(span_corpus, min_len=40)  # restamp while empty
+    stamp_params(span_corpus, "span", span(30))
+    stamp_params(span_corpus, "span", span(40))  # restamp while empty
     with open(os.path.join(span_corpus, "_span_params")) as fh:
         stamped = json.load(fh)
     assert stamped == {"min_len": 40, "gram_hash": "xxhash64"}
     write_version(spark.range(1), span_corpus)
     with pytest.raises(ValueError, match="not comparable"):
-        _check_span_params(span_corpus, min_len=30)
+        stamp_params(span_corpus, "span", span(30))
 
 
 def test_ingest_line_dedup_stream_three_batch_gating(spark, tmp_path):
@@ -1787,76 +2037,6 @@ def test_ingest_line_dedup_stream_three_batch_gating(spark, tmp_path):
         (r.doc_id, r.clean_text) for r in corpus.collect()
     }
     assert index2.count() == 6
-
-
-def test_ingest_line_dedup_per_table_replay_gating(spark, tmp_path):
-    """Crash between the corpus commit and the index commit (the
-    line family commits corpus first): the replayed batch must
-    re-commit ONLY the index, probing it as it stood BEFORE the
-    batch so the recomputed first-occurrences are identical — no
-    duplicate corpus version, no lost index rows. And the inverse
-    window (index committed, corpus lost) probes the PRE-batch index
-    via the ledgered base version so the batch's own lines don't
-    gate themselves on replay."""
-    import os
-    import shutil
-
-    from llamadb_spark.sources.versioned import latest_version, versions
-    from llamadb_spark.streaming.ingest_line_dedup import (
-        ingest_line_dedup_stream,
-    )
-    from llamadb_spark.streaming.ivm import committed_batches
-
-    hdr = "CHROME LINE"
-    batches = [
-        [(1, hdr + "\nbody-a")],
-        [(2, hdr + "\nbody-b")],
-    ]
-    schema = "doc_id long, text string"
-    drop = tmp_path / "ld_drop"
-    drop.mkdir()
-    for i, rows in enumerate(batches):
-        staged = str(tmp_path / f"ld_stage{i}")
-        spark.createDataFrame(rows, schema).coalesce(1).write.parquet(
-            staged
-        )
-        part = next(
-            f for f in os.listdir(staged) if f.endswith(".parquet")
-        )
-        dst = str(drop / f"{i:02d}-docs.parquet")
-        shutil.copyfile(os.path.join(staged, part), dst)
-        os.utime(dst, (1_000_000 + i, 1_000_000 + i))
-
-    corpus_path = str(tmp_path / "ld_corpus")
-    index_path = str(tmp_path / "ld_index")
-
-    def run():
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(str(drop))
-        )
-        return ingest_line_dedup_stream(stream, corpus_path, index_path)
-
-    corpus, index = run()
-    rows = {r.doc_id: r.clean_text for r in corpus.collect()}
-    assert rows == {1: hdr + "\nbody-a", 2: "body-b"}
-    assert index.count() == 3  # hdr, body-a, body-b
-
-    # crash window: index commit for batch 1 lost, corpus survived
-    shutil.rmtree(os.path.join(index_path, "v=1"))
-    with open(os.path.join(index_path, "_latest"), "w") as fh:
-        fh.write("0")
-    assert latest_version(index_path) == 0
-    assert committed_batches(corpus_path) == {0: 0, 1: 1}
-    assert committed_batches(index_path) == {0: 0}
-
-    corpus2, index2 = run()
-    rows2 = {r.doc_id: r.clean_text for r in corpus2.collect()}
-    assert rows2 == rows
-    assert versions(corpus_path) == [0, 1]  # no duplicate commit
-    assert versions(index_path) == [0, 1]   # re-committed only here
-    assert index2.count() == 3
 
 
 def test_unordered_drain_is_two_microbatches(spark, sf_dir):
