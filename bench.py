@@ -1,24 +1,27 @@
-"""Benchmark harness: runs the headline queries at
+"""Benchmark harness: times every registered key at
 $SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1) on
 local[$SPARK_GRAFT_CPUS] and prints ONE JSON line.
 
 Execution is measured with the noop sink (full plan runs, nothing
 collected to the driver) — the number is engine time, not
-toPandas() serialization time.
+toPandas() serialization time. The timing loop is
+``tools/timing.py``; the drift probes are perfbench's.
 """
 
 from __future__ import annotations
 
 import json
 import os
+import statistics
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from llamadb_spark.queries import all_queries  # noqa: E402
 from llamadb_spark.queries import ATTESTATION_KEYS  # noqa: E402
 from llamadb_spark.session import get_spark  # noqa: E402
+from perfbench.worker import cpu_probe, spark_probe  # noqa: E402
+from tools.timing import median_min, time_keys  # noqa: E402
 
 #: Representative slice of SURVEY §2: core SQL (scan/join/agg/topk/
 #: window), dedup, similarity, text, events.
@@ -126,835 +129,35 @@ HEADLINE = [
 ]
 
 
-def rank_demo(spark, sf_dir: str) -> dict:
-    """Global-rank strategies over lineitem rows (~600k at sf0.1):
-    the naive `row_number() OVER (ORDER BY ...)` funnels EVERY row
-    through one task (Spark's "No Partition Defined for Window"
-    hazard — the audit forbids it in query plans), vs the two-pass
-    distributed_row_number (range repartition + local ranks +
-    offset join). Reported: wall time of each, result equality on a
-    checksum, and the single-task proof (the naive plan's window
-    stage runs with 1 partition). At local[32]/sf0.1 the naive form
-    may still win on raw seconds — one in-memory sort of 600k rows
-    is cheap and the distributed form pays an extra shuffle +
-    broadcast; the point is the SHAPE: the naive sort is one task
-    no matter the cluster, the distributed one scales with it."""
-    from pyspark.sql import functions as F
-    from pyspark.sql.window import Window
-
-    from llamadb_spark.operators.ranking import distributed_row_number
-
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet").select(
-        "l_orderkey", "l_linenumber", "l_extendedprice"
-    )
-    order = ["l_extendedprice", "l_orderkey", "l_linenumber"]
-
-    t0 = time.time()
-    naive = li.withColumn(
-        "i", F.row_number().over(Window.orderBy(*order))
-    )
-    naive_sum = naive.agg(
-        F.sum(F.col("i") * F.col("l_orderkey")).alias("s")
-    ).collect()[0]["s"]
-    naive_sec = round(time.time() - t0, 3)
-
-    t0 = time.time()
-    dist = distributed_row_number(li, order, "i")
-    dist_sum = dist.agg(
-        F.sum(F.col("i") * F.col("l_orderkey")).alias("s")
-    ).collect()[0]["s"]
-    dist_sec = round(time.time() - t0, 3)
-
-    return {
-        "naive_sec": naive_sec,
-        "distributed_sec": dist_sec,
-        "checksums_equal": bool(naive_sum == dist_sum),
-        "n_rows": li.count(),
-    }
-
-
-def skew_demo(spark, sf_dir: str) -> dict:
-    """Synthetic hot-key join: half of lineitem lands on ONE key, the
-    dim side has 1000 keys. Both variants force a shuffle join (a
-    broadcast would hide the skew); the salted variant spreads the
-    hot key over 8 shards. Reported: wall time of each and the max
-    per-task row share of the join key distribution."""
-    from pyspark.sql import functions as F
-
-    from llamadb_spark.operators.skew import salted_join
-
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet").select(
-        F.when(F.col("l_orderkey") % 2 == 0, 0)
-        .otherwise(F.col("l_orderkey") % 1000)
-        .alias("k"),
-        "l_quantity",
-        "l_orderkey",
-    )
-    dim = spark.range(1000).select(
-        F.col("id").alias("dk"), (F.col("id") * 7).alias("payload")
-    )
-
-    t0 = time.time()
-    naive = li.join(
-        dim.hint("shuffle_hash"), li["k"] == dim["dk"]
-    ).agg(F.sum(F.col("l_quantity") * F.col("payload")).alias("s"))
-    naive.write.format("noop").mode("overwrite").save()
-    naive_sec = round(time.time() - t0, 3)
-
-    t0 = time.time()
-    salted = salted_join(
-        li, dim.hint("shuffle_hash"), "k", "dk", num_salts=8,
-        salt_source="l_orderkey",
-    ).agg(F.sum(F.col("l_quantity") * F.col("payload")).alias("s"))
-    salted.write.format("noop").mode("overwrite").save()
-    salted_sec = round(time.time() - t0, 3)
-    return {"naive_sec": naive_sec, "salted_sec": salted_sec}
-
-
-def index_deploy_demo(spark, sf_dir: str) -> dict:
-    """The train-once/query-many deployment shape (s18 / SURVEY
-    #286/#290/#291), measured end to end: one index BUILD (IVF +
-    PQ trainers, one Arrow corpus-encode pass, versioned-store
-    write) against the cost of a PERSISTED query — which does zero
-    training work (no k-means, no corpus encode, no Arrow stage;
-    audit-enforced) — and of the in-memory path that retrains per
-    call (s17's evidence shape). The deployment claim is the ratio:
-    at production scale the build is a scheduled job and every
-    online query pays only query_min_sec; retrain-per-query pays
-    inmemory_retrain_sec EVERY time.
-    """
-    import tempfile
-
-    from llamadb_spark.operators import ann_index
-    from llamadb_spark.operators.similarity import ivfpq_topk
-    from llamadb_spark.queries.pipeline import KNN_K, KNN_QUERY_IDS, _emb
-
-    emb = _emb(spark, sf_dir).localCheckpoint()
-    kw = dict(n_cells=16, n_subspaces=16, n_codes=32, iters=1)
-    path = tempfile.mkdtemp(prefix="llamadb_idx_demo_")
-
-    t0 = time.time()
-    ann_index.build_ivfpq_index(emb, path, **kw)
-    build_sec = round(time.time() - t0, 3)
-
-    q_secs = []
-    for _ in range(3):
-        t0 = time.time()
-        ann_index.ivfpq_query_index(
-            spark, path, emb, KNN_QUERY_IDS, k=KNN_K,
-            shortlist=200, nprobe=8,
-        ).write.format("noop").mode("overwrite").save()
-        q_secs.append(round(time.time() - t0, 3))
-
-    t0 = time.time()
-    ivfpq_topk(
-        emb, KNN_QUERY_IDS, k=KNN_K, shortlist=200, nprobe=8, **kw
-    ).write.format("noop").mode("overwrite").save()
-    inmem_sec = round(time.time() - t0, 3)
-    return {
-        "build_sec": build_sec,
-        "query_secs": q_secs,
-        "query_min_sec": min(q_secs),
-        "inmemory_retrain_sec": inmem_sec,
-    }
-
-
-def line_dedup_hot_demo(spark, sf_dir: str) -> dict:
-    """The d25 r08 weak-item, measured at bench scale (VERDICT r08
-    #1's stress): 600k lines of which ONE is present in every third
-    row (the C4 site-chrome shape). Keep-first via the OLD plan —
-    row_number() over (partition by line) — funnels every occurrence
-    of the hot line into ONE window task; the NEW plan —
-    groupBy(line).min(struct) + join-back — map-side-combines it and
-    the join is AQE-splittable. Both must agree on every keep
-    decision; the wall-time gap is the single-task sort tax, and it
-    GROWS with the hot line's multiplicity while the agg plan's cost
-    stays flat — at 100 TB the window plan simply never finishes.
-    """
-    from pyspark.sql import functions as F
-    from pyspark.sql.window import Window
-
-    n = 600_000
-    lines = spark.range(n).select(
-        (F.col("id") % 10_000).alias("doc_id"),
-        (F.col("id") / 10_000).cast("int").alias("line_no"),
-        F.when(F.col("id") % 3 == 0, F.lit("hot-boilerplate-line"))
-        .otherwise(F.concat(F.lit("u-"), F.col("id")))
-        .alias("line"),
-    ).localCheckpoint()  # freeze the input so both variants scan equally
-
-    t0 = time.time()
-    w = Window.partitionBy("line").orderBy("doc_id", "line_no")
-    old = (
-        lines.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .agg(
-            F.count(F.lit(1)).alias("kept"),
-            F.expr("bit_xor(xxhash64(doc_id, line_no))").alias("chk"),
-        )
-    )
-    old_row = old.collect()[0]
-    window_sec = round(time.time() - t0, 3)
-
-    t0 = time.time()
-    keep = (
-        lines.groupBy("line")
-        .agg(F.min(F.struct("doc_id", "line_no")).alias("k"))
-        .select(
-            F.col("k.doc_id").alias("doc_id"),
-            F.col("k.line_no").alias("line_no"),
-        )
-        .agg(
-            F.count(F.lit(1)).alias("kept"),
-            F.expr("bit_xor(xxhash64(doc_id, line_no))").alias("chk"),
-        )
-    )
-    agg_row = keep.collect()[0]
-    agg_sec = round(time.time() - t0, 3)
-    assert (old_row.kept, old_row.chk) == (agg_row.kept, agg_row.chk)
-    return {
-        "n_lines": n,
-        "hot_multiplicity": n // 3,
-        "window_sec": window_sec,
-        "agg_join_sec": agg_sec,
-        "keep_decisions_equal": True,
-    }
-
-
-def aqe_skew_demo(spark, sf_dir: str) -> dict:
-    """AQE skew-join on REAL tables (VERDICT r05 #7 — the salted
-    skew_demo uses a synthetic dim): lineitem joined to orders with
-    an induced hot key (every even orderkey maps to one key → ~50%
-    of the fact lands in one shuffle partition, 23x the median), and
-    Spark's OptimizeSkewedJoin must split that partition — asserted
-    on the EXECUTED plan (SortMergeJoin(skew=true)), not claimed.
-
-    Two real findings this demo encodes, measured while building it:
-    - skew detection is BYTE-based: a hot partition whose rows
-      compress better than the median's (constant key + low-entropy
-      payload) can hide row-count skew, so the payload here is the
-      high-entropy l_extendedprice;
-    - the split granularity is MAP OUTPUT chunks: the 11 MB bench
-      file scans as 3 splits, and 3 map chunks cannot be re-split
-      into advisory-sized pieces, so AQE silently declines (observed:
-      "number of skewed partitions: 0" despite 23x skew). The fact
-      side is therefore repartitioned to 32 map outputs — the
-      granularity any real multi-executor scan of a 100 TB table has
-      natively (thousands of mappers), which is exactly why this
-      works at scale while needing help at bench scale.
-
-    Thresholds are scaled to bench data (256k vs the 256 MB
-    production default); all touched confs are restored.
-    """
-    from pyspark.sql import functions as F
-
-    keys = [
-        "spark.sql.adaptive.coalescePartitions.enabled",
-        "spark.sql.adaptive.skewJoin.enabled",
-        "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes",
-        "spark.sql.adaptive.advisoryPartitionSizeInBytes",
-        "spark.sql.adaptive.skewJoin.skewedPartitionFactor",
-        "spark.sql.autoBroadcastJoinThreshold",
-    ]
-    saved = {}
-    for k in keys:
-        try:
-            saved[k] = spark.conf.get(k)
-        except Exception:
-            saved[k] = None
-    out: dict = {}
-    try:
-        spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
-        spark.conf.set(
-            "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes",
-            "256k",
-        )
-        spark.conf.set(
-            "spark.sql.adaptive.advisoryPartitionSizeInBytes", "256k"
-        )
-        spark.conf.set("spark.sql.adaptive.skewJoin.skewedPartitionFactor", "2")
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-
-        li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-        orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
-        fact = li.repartition(32, F.col("l_orderkey")).select(
-            F.when(F.col("l_orderkey") % 2 == 0, F.lit(1))
-            .otherwise(F.col("l_orderkey"))
-            .alias("k"),
-            "l_extendedprice",
-        )
-        dim = orders.select(
-            F.col("o_orderkey").alias("dk"), "o_totalprice"
-        )
-
-        def run() -> tuple[float, bool]:
-            j = fact.join(dim, fact["k"] == dim["dk"]).agg(
-                F.round(
-                    F.sum(F.col("l_extendedprice") * F.col("o_totalprice")), 2
-                ).alias("s")
-            )
-            t0 = time.time()
-            j.collect()
-            sec = round(time.time() - t0, 3)
-            plan = j._jdf.queryExecution().executedPlan().toString()
-            return sec, "skew=true" in plan
-
-        spark.conf.set("spark.sql.adaptive.skewJoin.enabled", "false")
-        out["no_skew_handling_sec"], _ = run()
-        spark.conf.set("spark.sql.adaptive.skewJoin.enabled", "true")
-        out["aqe_sec"], out["skew_split_applied"] = run()
-        out["hot_key_share"] = 0.5
-    finally:
-        for k, v in saved.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
-    return out
-
-
-def bucket_demo(spark, sf_dir: str) -> dict:
-    """Co-located join: lineitem and orders bucketed (16, orderkey,
-    sorted) join with ZERO Exchange on either side; the plain parquet
-    join shuffles both. Reported: wall time of each join (bucketed
-    excludes the one-time table write — that cost amortizes over
-    every subsequent join, which is the point of bucketing) and
-    whether the bucketed plan really is exchange-free. The shuffle
-    saving grows linearly with SF; at bench SF the join is small, so
-    read this as a plan-shape demo with honest numbers, not a race.
-    """
-    from pyspark.sql import functions as F
-
-    from llamadb_spark.sources.catalog import write_bucketed_table
-
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet").select(
-        "l_orderkey", "l_quantity", "l_extendedprice"
-    )
-    od = spark.read.parquet(f"{sf_dir}/orders.parquet").select(
-        "o_orderkey", "o_custkey", "o_totalprice"
-    )
-
-    def run_join(left, right):
-        join = left.hint("merge").join(
-            right, left["l_orderkey"] == right["o_orderkey"]
-        )
-        agg = join.groupBy("o_custkey").agg(
-            F.sum(F.col("l_quantity") * F.col("l_extendedprice")).alias("v")
-        )
-        t0 = time.time()
-        agg.write.format("noop").mode("overwrite").save()
-        return join, round(time.time() - t0, 3)
-
-    _, plain_sec = run_join(li, od)
-
-    write_bucketed_table(li, "bench_li_b", ["l_orderkey"], 16, ["l_orderkey"])
-    write_bucketed_table(od, "bench_od_b", ["o_orderkey"], 16, ["o_orderkey"])
-    lib = spark.table("bench_li_b")
-    odb = spark.table("bench_od_b")
-    join, bucketed_sec = run_join(lib, odb)
-    # exchange-freedom is a property of the JOIN (the downstream agg
-    # re-keys on o_custkey, which legitimately shuffles either way)
-    plan = join._jdf.queryExecution().executedPlan().toString()
-    return {
-        "plain_sec": plain_sec,
-        "bucketed_sec": bucketed_sec,
-        "bucketed_join_no_exchange": "Exchange" not in plan,
-    }
-
-
-def layout_demo(spark, sf_dir: str) -> dict:
-    """File-layout pruning: the same 1M-row (x, y) grid written (a)
-    lexicographically sorted by (x, y) and (b) Z-ordered, 16 files
-    each. A narrow range on the PRIMARY sort key prunes both layouts;
-    the interesting case is a range on the SECOND dimension alone —
-    every lex file spans the full y domain (x stripes), while each
-    Z-order file covers a compact rectangle, so stats-pruning still
-    works. Reported per layout and per dimension: files whose parquet
-    footer min/max intersect the range — the fraction a pruning
-    reader must open.
-    """
-    import glob
-    import shutil
-    import tempfile
-
-    import pyarrow.parquet as pq
-    from pyspark.sql import functions as F
-
-    from llamadb_spark.sources.catalog import write_zorder_layout
-
-    base = tempfile.mkdtemp(prefix="llamadb_layout_demo_")
-    grid = spark.range(1 << 20).select(
-        (F.col("id") % 1024).alias("x"),
-        (F.col("id") / 1024).cast("long").alias("y"),
-    )
-    lex_dst, z_dst = f"{base}/lex", f"{base}/zorder"
-    (
-        grid.repartitionByRange(16, "x", "y")
-        .sortWithinPartitions("x", "y")
-        .write.mode("overwrite")
-        .parquet(lex_dst)
-    )
-    write_zorder_layout(grid, z_dst, "x", "y", num_files=16, bits=10)
-
-    lo, hi = 100, 140  # ~4% of one dimension's domain
-
-    def files_touched(path: str, dim: str) -> int:
-        touched = 0
-        for f in glob.glob(f"{path}/*.parquet"):
-            md = pq.ParquetFile(f).metadata
-            cols = {
-                md.row_group(0).column(i).path_in_schema: i
-                for i in range(md.row_group(0).num_columns)
-            }
-            mn, mx = None, None
-            for g in range(md.num_row_groups):
-                st = md.row_group(g).column(cols[dim]).statistics
-                mn = st.min if mn is None else min(mn, st.min)
-                mx = st.max if mx is None else max(mx, st.max)
-            if mn <= hi and mx >= lo:
-                touched += 1
-        return touched
-
-    out = {
-        "lex_x_files": files_touched(lex_dst, "x"),
-        "lex_y_files": files_touched(lex_dst, "y"),
-        "zorder_x_files": files_touched(z_dst, "x"),
-        "zorder_y_files": files_touched(z_dst, "y"),
-        "total_files": 16,
-    }
-    shutil.rmtree(base, ignore_errors=True)
-    return out
-
-
-def bloom_demo(spark, sf_dir: str) -> dict:
-    """Runtime bloom-filter join pruning: a selective filter on the
-    orders side injects a bloom filter onto the lineitem scan side of
-    the shuffle join (Catalyst's InjectRuntimeFilter), so fact rows
-    that can't match are dropped BEFORE the shuffle — at 100 TB this
-    is the difference between shuffling the whole fact table and
-    shuffling the ~2% that survives the dim filter. The application-
-    side threshold (default 10 GB — sized for real clusters) is
-    lowered for the demo so injection triggers at bench SF, and
-    auto-broadcast is disabled (Spark only injects bloom filters for
-    probable SHUFFLE joins — at 100 TB the dim side genuinely
-    exceeds the broadcast threshold; at bench SF it must be forced,
-    the skew_demo rationale). The bloom build costs one extra pass
-    over the filtered dim, so at bench SF the timing is roughly a
-    wash — read this as a plan-shape demo: the win scales with the
-    fact-side rows the filter drops pre-shuffle. Reported: wall time
-    off/on + whether the ON plan contains the runtime filter."""
-    from pyspark.sql import functions as F
-
-    conf = spark.conf
-    saved = {
-        k: conf.get(k)
-        for k in (
-            "spark.sql.optimizer.runtime.bloomFilter.enabled",
-            "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold",
-            "spark.sql.autoBroadcastJoinThreshold",
-        )
-    }
-
-    def run(enabled: bool):
-        conf.set(
-            "spark.sql.optimizer.runtime.bloomFilter.enabled",
-            "true" if enabled else "false",
-        )
-        conf.set(
-            "spark.sql.optimizer.runtime.bloomFilter."
-            "applicationSideScanSizeThreshold",
-            "0",
-        )
-        conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        li = spark.read.parquet(f"{sf_dir}/lineitem.parquet").select(
-            "l_orderkey", "l_quantity"
-        )
-        od = (
-            spark.read.parquet(f"{sf_dir}/orders.parquet")
-            .filter(F.col("o_orderpriority") == "1-URGENT")
-            .filter(F.col("o_totalprice") > 400000)  # ~2% of orders
-            .select("o_orderkey")
-        )
-        joined = li.join(od, li["l_orderkey"] == od["o_orderkey"])
-        agg = joined.agg(F.sum("l_quantity").alias("q"))
-        t0 = time.time()
-        agg.write.format("noop").mode("overwrite").save()
-        sec = round(time.time() - t0, 3)
-        plan = joined._jdf.queryExecution().executedPlan().toString()
-        return sec, "might_contain" in plan
-
-    try:
-        off_sec, _ = run(False)
-        on_sec, injected = run(True)
-    finally:
-        for k, v in saved.items():
-            conf.set(k, v)
-    return {
-        "off_sec": off_sec,
-        "on_sec": on_sec,
-        "bloom_filter_injected": injected,
-    }
-
-
-def stream_demo(spark, sf_dir: str) -> dict:
-    """Structured Streaming throughput: drain the events table
-    through the watermarked tumbling-window aggregation (the e01
-    streaming twin) with an availableNow trigger and report
-    end-to-end rows/sec including source listing, watermark tracking
-    and state-store updates — the number a capacity plan for the
-    streaming path starts from."""
-    from llamadb_spark.streaming.streams import (
-        read_events_stream,
-        run_to_memory,
-        windowed_counts_stream,
-    )
-
-    n_rows = spark.read.parquet(f"{sf_dir}/events.parquet").count()
-    t0 = time.time()
-    stream = windowed_counts_stream(read_events_stream(spark, sf_dir))
-    out = run_to_memory(stream, "bench_stream_demo", output_mode="append")
-    n_out = out.count()
-    sec = round(time.time() - t0, 3)
-    return {
-        "input_rows": n_rows,
-        "output_rows": n_out,
-        "wall_sec": sec,
-        "rows_per_sec": round(n_rows / sec, 1) if sec > 0 else None,
-    }
-
-
-def d12_scaling_demo(spark, sf_dir: str) -> dict:
-    """Empirical scaling of d12's LSH pair-generation stage (the part
-    that replaces d05's O(N²/B) blocked all-pairs): time
-    lsh_ann_pairs at sf0.01 and at the bench SF, and fit the
-    exponent e in t ~ rows^e. e < 1.3 is the evidence the LSH path's
-    cost is ~linear in corpus size — the 100 TB asymptotics claim,
-    measured instead of asserted.
-
-    Protocol (VERDICT r08 #5 — the committed exponent drifted
-    1.02→1.16 between rounds because each round's fit was one pass
-    exposed to whatever ambient window it ran in): THREE interleaved
-    cycles over the ascending points in one session (x2 x4 x8 x16,
-    ×3 — the paired-bench single-phase-alternation discipline), a
-    per-cycle fit to expose the spread, and the headline fit from
-    the per-point MIN across cycles (the least-contended runs).
-    """
-    import math
-
-    from llamadb_spark.operators.similarity import lsh_ann_pairs
-    from llamadb_spark.queries.pipeline import (
-        D12_LSH_PLANES,
-        D12_LSH_TABLES,
-        EMBED_NEARDUP_THRESHOLD,
-    )
-
-    from pyspark.sql import functions as F
-
-    bench_emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    n0 = bench_emb.count()
-    d_dim = len(bench_emb.select("embedding").first()[0])
-
-    def scaled(mult: int):
-        """mult× the bench corpus: union of cyclic-SHIFTED copies
-        (copy k rotates every embedding by k positions and offsets
-        vec_id by k·n0). A rotation of a near-isotropic vector is
-        decorrelated from the original, so the corpus grows without
-        planting artificial duplicate cliques — unlike a plain
-        union, which would blow up per-bucket pair counts
-        quadratically and poison the fit."""
-        parts = []
-        for k in range(mult):
-            v = F.col("embedding")
-            if k:
-                v = F.concat(
-                    F.slice(v, k + 1, d_dim - k), F.slice(v, 1, k)
-                )
-            parts.append(
-                bench_emb.select(
-                    (F.col("vec_id") + k * n0).alias("vec_id"),
-                    v.alias("embedding"),
-                    "label",
-                )
-            )
-        out = parts[0]
-        for p_ in parts[1:]:
-            out = out.unionByName(p_)
-        return out
-
-    # FOUR ascending scale points (VERDICT r06 #2: the r06 3-point
-    # fit read 1.06 overall but its 8k→16k segment ran at ~1.3 — a
-    # 16x point + per-segment exponents either pins the tail down or
-    # shows it was the last fixed-overhead knee), 2x/4x/8x/16x the
-    # bench corpus — the 1x and downscaled points are fixed-overhead-
-    # dominated (~2 s per run swamps the signal), so the fit runs UP
-    # from 2x. Fit log t = e·log n + c by least squares, report R²
-    # with the exponent, plus per-segment exponents and the planes
-    # the auto sizing actually chose (verifying it FIRED at every
-    # point). r06's committed measurement for the 3-point form:
-    # exponent 1.063, R² 0.9816 (bench_results.json d12_scaling).
-    points = [
-        ("x2", 2),
-        ("x4", 4),
-        ("x8", 8),
-        ("x16", 16),
-    ]
-    from llamadb_spark.operators.similarity import auto_num_planes
-
-    out: dict = {}
-    # stage the per-point corpora once; the operator's OWN
-    # auto-sizing formula (single source of truth, ADVICE r07) is
-    # recorded so the fit's evidence includes proof the plane count
-    # actually grew with the corpus (7→8→9 across 8x→16x)
-    staged = []
-    for tag, mult in points:
-        emb = scaled(mult)
-        n = emb.count()
-        staged.append((tag, emb, n, auto_num_planes(n, 64)))
-
-    def one_timing(emb):
-        t0 = time.time()
-        # the SCALE configuration (#215): auto plane sizing keeps
-        # expected bucket occupancy constant as n grows, which is
-        # what makes pair-generation ~linear — a FIXED plane
-        # count (d12's small-SF recall config) re-acquires an
-        # n²/2^planes term once buckets fill, and that quadratic
-        # tail is precisely what auto sizing removes at 100 TB.
-        pairs = lsh_ann_pairs(
-            emb,
-            threshold=EMBED_NEARDUP_THRESHOLD,
-            num_planes="auto",
-            target_bucket_rows=64,
-            num_tables=D12_LSH_TABLES,
-        )
-        # count() executes the identical pair-gen plan plus one
-        # scalar agg; n_pairs per point discriminates an engine
-        # slowdown (time grows, pairs don't) from a data effect
-        # (near-threshold pair mass itself growing superlinearly)
-        n_pairs = pairs.count()
-        return time.time() - t0, n_pairs
-
-    def fit(pts):
-        xs = [math.log(n) for n, _ in pts]
-        ys = [math.log(t) for _, t in pts]
-        k = len(pts)
-        mx, my = sum(xs) / k, sum(ys) / k
-        sxx = sum((x - mx) ** 2 for x in xs)
-        sxy = sum((x - mx) * (y - my) for x, y in zip(xs, ys))
-        syy = sum((y - my) ** 2 for y in ys)
-        if sxx <= 0:
-            return None, None, []
-        segs = [
-            round(math.log(t2 / t1) / math.log(n2 / n1), 3)
-            for (n1, t1), (n2, t2) in zip(pts, pts[1:])
-        ]
-        return (
-            round(sxy / sxx, 3),
-            round((sxy * sxy) / (sxx * syy), 4) if syy > 0 else None,
-            segs,
-        )
-
-    cycles = 3
-    timings: dict = {tag: [] for tag, _ in points}
-    pair_counts: dict = {}
-    for _cyc in range(cycles):
-        for tag, emb, n, _planes in staged:
-            sec, n_pairs = one_timing(emb)
-            timings[tag].append(sec)
-            pair_counts[tag] = n_pairs
-    # per-cycle fits: the spread the round-over-round story needs
-    run_exponents, run_segments = [], []
-    for c in range(cycles):
-        e, _r2, segs = fit(
-            [(n, timings[tag][c]) for tag, _emb, n, _pl in staged]
-        )
-        run_exponents.append(e)
-        run_segments.append(segs)
-    # headline fit: per-point MIN across the interleaved cycles
-    pts = []
-    for tag, _emb, n, planes in staged:
-        best = min(timings[tag])
-        out[f"{tag}_rows"] = n
-        out[f"{tag}_sec"] = round(best, 3)
-        out[f"{tag}_planes"] = planes
-        out[f"{tag}_pairs"] = pair_counts[tag]
-        out[f"{tag}_runs"] = [round(t, 3) for t in timings[tag]]
-        pts.append((n, best))
-    out["base_rows"] = n0
-    out["runs"] = cycles
-    out["run_exponents"] = run_exponents
-    out["exponent_spread"] = (
-        round(max(run_exponents) - min(run_exponents), 3)
-        if all(e is not None for e in run_exponents)
-        else None
-    )
-    out["run_segments"] = run_segments
-    exponent, r2, segs = fit(pts)
-    out["exponent"] = exponent
-    out["r_squared"] = r2
-    out["n_points"] = len(pts)
-    out["segment_exponents"] = segs
-    return out
-
-
-def d19_scaling_demo(spark, sf_dir: str) -> dict:
-    """Empirical scaling of the span detector (VERDICT r07 #2 — the
-    d12-style fit for the repo's other heavyweight dedup family).
-    Times substring_span_pairs over 2x/4x/8x/16x the d19 seeded
-    corpus and fits the exponent e in t ~ chars^e; ≤ ~1.15 is the
-    measured evidence the seed-and-chain plan is ~linear in corpus
-    size (its shuffle is the position table, its join is occupancy-
-    capped — this demonstrates no hidden quadratic term survives).
-
-    Copy decorrelation: each copy rotates the alphanumeric alphabet
-    by k via translate() (JVM-side), so cross-copy 40-gram matches
-    vanish while every copy carries the SAME seeded overlap density
-    (one excerpt per 50 docs sharing a ~168-char run with its source
-    — d19's own construction). A plain union would make every doc an
-    exact mult-plicate and grow pair mass ~mult², poisoning the fit
-    exactly as d12's rotation note explains. n_spans per point
-    discriminates engine slowdown from data effects (spans should
-    grow ~mult; cross-copy leakage would show as super-mult growth).
-    Each point is the best of 2 runs (JVM warmth dominates singles).
-    """
-    import math
-
-    from pyspark.sql import functions as F
-
-    from llamadb_spark.operators.spans import substring_span_pairs
-    from llamadb_spark.queries.pipeline import (
-        D19_EXCERPT_FROM,
-        D19_EXCERPT_LEN,
-        D19_EXCERPT_MOD,
-        D19_EXCERPT_REM,
-        D19_MAX_GRAM_OCC,
-        D19_MIN_LEN,
-    )
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
-        "doc_id", "text"
-    )
-    alpha = "abcdefghijklmnopqrstuvwxyz0123456789"
-
-    def scaled(mult: int):
-        parts = []
-        for k in range(mult):
-            rot = alpha[k:] + alpha[:k]
-            c = docs.select(
-                "doc_id", F.translate("text", alpha, rot).alias("text")
-            )
-            exc = c.filter(
-                F.col("doc_id") % D19_EXCERPT_MOD == D19_EXCERPT_REM
-            ).select(
-                (F.col("doc_id") + 1_000_000).alias("doc_id"),
-                F.concat(
-                    F.lit("zqx-"),
-                    F.substring("text", D19_EXCERPT_FROM, D19_EXCERPT_LEN),
-                    F.lit("-xqz"),
-                ).alias("text"),
-            )
-            parts.append(
-                c.unionByName(exc).select(
-                    (F.col("doc_id") + k * 10_000_000).alias("doc_id"),
-                    "text",
-                )
-            )
-        out = parts[0]
-        for p_ in parts[1:]:
-            out = out.unionByName(p_)
-        return out
-
-    # x32 pins the tail (round-8 measurement: the x8→x16 segment read
-    # 1.18 in isolation — the same last-fixed-overhead knee d12's r06
-    # fit had — and the x16→x32 segment came back 0.60 with per-char
-    # cost FALLING 0.315→0.237 µs: overhead amortizing, no quadratic
-    # onset). The overall exponent sits BELOW 1 because the ~3 s
-    # session floor dominates the small points; the per-segment
-    # column is the load-bearing evidence.
-    out: dict = {}
-    pts = []
-    for tag, mult in [("x2", 2), ("x4", 4), ("x8", 8), ("x16", 16),
-                      ("x32", 32)]:
-        corpus = scaled(mult)
-        n_chars = corpus.agg(
-            F.sum(F.length("text")).cast("long")
-        ).collect()[0][0]
-        best = None
-        n_spans = None
-        for _ in range(2):
-            t0 = time.time()
-            n_spans = substring_span_pairs(
-                corpus, min_len=D19_MIN_LEN, max_gram_occ=D19_MAX_GRAM_OCC
-            ).count()
-            sec = time.time() - t0
-            best = sec if best is None else min(best, sec)
-        out[f"{tag}_chars"] = n_chars
-        out[f"{tag}_sec"] = round(best, 3)
-        out[f"{tag}_spans"] = n_spans
-        pts.append((n_chars, best))
-    xs = [math.log(n) for n, _ in pts]
-    ys = [math.log(t) for _, t in pts]
-    k = len(pts)
-    mx, my = sum(xs) / k, sum(ys) / k
-    sxx = sum((x - mx) ** 2 for x in xs)
-    sxy = sum((x - mx) * (y - my) for x, y in zip(xs, ys))
-    syy = sum((y - my) ** 2 for y in ys)
-    if sxx > 0:
-        out["exponent"] = round(sxy / sxx, 3)
-        out["r_squared"] = (
-            round((sxy * sxy) / (sxx * syy), 4) if syy > 0 else None
-        )
-        out["n_points"] = k
-    out["segment_exponents"] = [
-        round(math.log(t2 / t1) / math.log(n2 / n1), 3)
-        for (n1, t1), (n2, t2) in zip(pts, pts[1:])
-    ]
-    return out
-
-
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = float(os.path.basename(sf_dir.rstrip("/")).replace("sf", "") or "0.1")
     spark = get_spark("llamadb-bench")
     spark.sparkContext.setLogLevel("ERROR")
-
     qs = all_queries()
-    # warm the JVM + file listing with one tiny query
-    qs["q09_order_limit"](spark, sf_dir).write.format("noop").mode("overwrite").save()
 
     # EVERY registered key is timed; the headline subset (the list
     # above, frozen since round 3) keeps `value` comparable
     # round-over-round as new keys land.
     #
     # Variance: single-run timings made a 3.9x "regression" (p03, r4)
-    # indistinguishable from noise, so each key now runs REPEATS
-    # times and reports the MEDIAN (queries) + MIN (queries_min —
-    # the noise floor: min is the least-contended run, the number a
-    # plan change must move to be real).
+    # indistinguishable from noise, so each key runs REPEATS times and
+    # reports the MEDIAN (queries) + MIN (queries_min — the noise
+    # floor: min is the least-contended run, the number a plan change
+    # must move to be real). The drift probes run before and after the
+    # sweep, so two runs can be told apart by the box they ran on.
     repeats = max(1, int(os.environ.get("SPARK_GRAFT_BENCH_REPEATS", "3")))
-    timings: dict[str, float] = {}
-    timings_min: dict[str, float] = {}
-    import gc
-
-    for i, name in enumerate(qs):
-        runs = []
-        for _ in range(repeats):
-            t0 = time.time()
-            qs[name](spark, sf_dir).write.format("noop").mode(
-                "overwrite"
-            ).save()
-            runs.append(time.time() - t0)
-        runs.sort()
-        mid = len(runs) // 2
-        med = runs[mid] if len(runs) % 2 else (runs[mid - 1] + runs[mid]) / 2
-        timings[name] = round(med, 3)
-        timings_min[name] = round(runs[0], 3)
-        if i % 10 == 9:
-            # Drop py4j refs to finished queries' DataFrames so the
-            # ContextCleaner can release their localCheckpoint blocks
-            # — 149 queries' worth of pinned checkpoint RDDs otherwise
-            # accumulate in the block manager and tax the tail of the
-            # run (measured ~2x on the checkpoint-heavy dedup keys).
-            gc.collect()
+    # the session's first job pays JVM warm-up (~4 s against ~0.2 s
+    # warm at sf0.01): run the probe once untimed so both readings are
+    # warm and compare
+    spark_probe(spark)
+    probes = {"cpu": [cpu_probe()], "spark": [spark_probe(spark)]}
+    runs = time_keys(spark, qs, sf_dir, list(qs), repeats)
+    probes["cpu"].append(cpu_probe())
+    probes["spark"].append(spark_probe(spark))
+    stats = {n: median_min(r) for n, r in runs.items()}
+    timings = {n: med for n, (med, _) in stats.items()}
+    timings_min = {n: mn for n, (_, mn) in stats.items()}
 
     headline = round(sum(timings[n] for n in HEADLINE if n in timings), 3)
     # VERDICT r06 #9: the banded-oracle keys run their exact
@@ -984,17 +187,9 @@ def main() -> None:
         "sf": sf,
         "all_queries_total": round(sum(timings.values()), 3),
         "n_queries": len(timings),
-        "skew_demo": skew_demo(spark, sf_dir),
-        "line_dedup_hot_demo": line_dedup_hot_demo(spark, sf_dir),
-        "index_deploy_demo": index_deploy_demo(spark, sf_dir),
-        "aqe_skew_demo": aqe_skew_demo(spark, sf_dir),
-        "bucket_demo": bucket_demo(spark, sf_dir),
-        "layout_demo": layout_demo(spark, sf_dir),
-        "bloom_demo": bloom_demo(spark, sf_dir),
-        "stream_demo": stream_demo(spark, sf_dir),
-        "d12_scaling": d12_scaling_demo(spark, sf_dir),
-        "d19_scaling": d19_scaling_demo(spark, sf_dir),
-        "rank_demo": rank_demo(spark, sf_dir),
+        "probe.cpu_s": round(statistics.mean(probes["cpu"]), 3),
+        "probe.spark_s": round(statistics.mean(probes["spark"]), 3),
+        "probes": {k: [round(x, 3) for x in v] for k, v in probes.items()},
     }
     # Sidecar with the identical payload: the driver truncates long
     # stdout tails (BENCH_r03 kept only the last 69 queries), so
@@ -1012,8 +207,7 @@ def main() -> None:
     # all scalar evidence, but drops the two largest redundant blobs
     # (`queries_min`, the per-key `attestation` bool map — both ~8 KB
     # and growing with the registry, both fully present in the
-    # sidecar) and names the sidecar explicitly. ~60% shorter line,
-    # flushed, printed last.
+    # sidecar) and names the sidecar explicitly. Flushed, printed last.
     stdout_line = {
         k: v for k, v in result.items()
         if k not in ("queries_min", "attestation")

@@ -292,35 +292,21 @@ def s02_lsh_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     # exact-verifies every candidate's cosine before emitting);
     # recall vs s01/d05 is asserted in tests/test_similarity.py.
     return similarity.lsh_ann_pairs(_emb(spark, sf_dir), threshold=0.4)
-#: IVF recall bands the banded oracle attests. The synthetic
-#: embeddings are near-isotropic (no cluster structure for the coarse
-#: quantizer to exploit), so per-query recall@5 is modest by
-#: construction; the index is deterministic (hash-sampled seeds,
-#: fixed Lloyd passes), and the measured per-query floor at
-#: sf0.001-0.01 is 0.4 with nprobe=8 — both bands hold with ≥1
-#: neighbor of margin on every query.
-S03_MIN_RECALL = 0.2
-S03_MIN_MEAN_RECALL = 0.5
-S03_NPROBE = 8
-def s03_ivf_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF ANN (coarse cells + nprobe probe) with a driver-attestable
-    banded contract: per query, emit the EXACT top-1 neighbor and its
-    cosine (DuckDB-recomputable via list_cosine_similarity — the s01
-    machinery) plus a boolean claiming IVF recall@k ≥ S03_MIN_RECALL
-    against the exact top-k computed in Spark. The oracle recomputes
-    exact top-1 and claims TRUE, so the hash matches iff the index
-    actually achieves the recall band on every query."""
+def _banded_recall(
+    emb: DataFrame, approx: DataFrame, min_recall: float,
+    min_mean_recall: float,
+) -> DataFrame:
+    """The banded ANN contract shared by s03/s16/s17/s18: per query,
+    the EXACT top-1 neighbor and its cosine (DuckDB-recomputable via
+    list_cosine_similarity, the s01 machinery) plus `recall_ok`
+    (recall@k of `approx` against the exact top-k is at least
+    `min_recall`) and `mean_recall_ok` (the mean over queries is at
+    least `min_mean_recall`). The oracle recomputes the exact top-1 and
+    claims TRUE, so the hash matches iff the index achieves both bands
+    on every query."""
     from pyspark.sql.functions import col
+    from pyspark.sql.window import Window
 
-    emb = _emb(spark, sf_dir)
-    # iters=1: a single Lloyd refinement already clears the recall
-    # band with 2x margin at every SF (measured min-recall 0.40 vs
-    # the 0.2 band, mean 0.77-0.80 vs 0.5, sf0.001/0.01/0.1) — the
-    # second pass bought no recall, only a full extra corpus pass +
-    # collect (attestation-cost trim, VERDICT r06 #4)
-    approx = similarity.ivf_topk(
-        emb, KNN_QUERY_IDS, k=KNN_K, n_cells=16, nprobe=S03_NPROBE, iters=1
-    )
     # the exact twin feeds BOTH the recall join and the top-1
     # projection: stage its |queries|·k rows once instead of running
     # the brute-force scan twice
@@ -340,24 +326,45 @@ def s03_ivf_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
         col("neighbor_id").alias("exact_top1"),
         col("cos").alias("top1_cos"),
     )
-    from pyspark.sql.window import Window
-
-    w_all = Window.partitionBy()
+    n_hit = F.coalesce(col("n_hit"), F.lit(0))
     return top1.join(hits, "query_id", "left").select(
         "query_id",
         "exact_top1",
         "top1_cos",
+        (n_hit >= F.lit(float(min_recall)) * KNN_K).alias("recall_ok"),
         (
-            F.coalesce(col("n_hit"), F.lit(0))
-            >= F.lit(float(S03_MIN_RECALL)) * KNN_K
-        ).alias("recall_ok"),
-        (
-            F.avg(F.coalesce(col("n_hit"), F.lit(0)) / F.lit(float(KNN_K))).over(
-                w_all
-            )
-            >= S03_MIN_MEAN_RECALL
+            F.avg(n_hit / F.lit(float(KNN_K))).over(Window.partitionBy())
+            >= min_mean_recall
         ).alias("mean_recall_ok"),
     )
+#: IVF recall bands the banded oracle attests. The synthetic
+#: embeddings are near-isotropic (no cluster structure for the coarse
+#: quantizer to exploit), so per-query recall@5 is modest by
+#: construction; the index is deterministic (hash-sampled seeds,
+#: fixed Lloyd passes), and the measured per-query floor at
+#: sf0.001-0.01 is 0.4 with nprobe=8 — both bands hold with ≥1
+#: neighbor of margin on every query.
+S03_MIN_RECALL = 0.2
+S03_MIN_MEAN_RECALL = 0.5
+S03_NPROBE = 8
+def s03_ivf_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """IVF ANN (coarse cells + nprobe probe) with a driver-attestable
+    banded contract: per query, emit the EXACT top-1 neighbor and its
+    cosine (DuckDB-recomputable via list_cosine_similarity — the s01
+    machinery) plus a boolean claiming IVF recall@k ≥ S03_MIN_RECALL
+    against the exact top-k computed in Spark. The oracle recomputes
+    exact top-1 and claims TRUE, so the hash matches iff the index
+    actually achieves the recall band on every query."""
+    emb = _emb(spark, sf_dir)
+    # iters=1: a single Lloyd refinement already clears the recall
+    # band with 2x margin at every SF (measured min-recall 0.40 vs
+    # the 0.2 band, mean 0.77-0.80 vs 0.5, sf0.001/0.01/0.1) — the
+    # second pass bought no recall, only a full extra corpus pass +
+    # collect (attestation-cost trim, VERDICT r06 #4)
+    approx = similarity.ivf_topk(
+        emb, KNN_QUERY_IDS, k=KNN_K, n_cells=16, nprobe=S03_NPROBE, iters=1
+    )
+    return _banded_recall(emb, approx, S03_MIN_RECALL, S03_MIN_MEAN_RECALL)
 ORACLE_S03 = f"""
 WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
 q AS (SELECT vec_id AS query_id, v AS q_v FROM e
@@ -1210,47 +1217,13 @@ def s16_pq_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     ints per vector — the 16x index-size reduction that makes
     billion-vector search storable; the oracle recomputes the exact
     side and claims TRUE."""
-    from pyspark.sql.functions import col
-    from pyspark.sql.window import Window
-
     emb = _emb(spark, sf_dir)
     # iters=1 (same move as s03): the second Lloyd pass buys no
     # recall vs the bands — measured with iters=1: mean 0.83-0.95,
     # min 0.60-0.80 across sf0.001/0.01/0.1, still 3x above the
     # 0.2/0.5 bands — and costs a full corpus pass + collect
     approx = similarity.pq_rerank_topk(emb, KNN_QUERY_IDS, k=KNN_K, iters=1)
-    exact = similarity.knn_bruteforce(
-        emb, KNN_QUERY_IDS, k=KNN_K
-    ).localCheckpoint()
-    hits = (
-        approx.join(
-            exact.select("query_id", "neighbor_id"),
-            ["query_id", "neighbor_id"],
-        )
-        .groupBy("query_id")
-        .agg(F.count(F.lit(1)).alias("n_hit"))
-    )
-    top1 = exact.filter(col("rank") == 1).select(
-        "query_id",
-        col("neighbor_id").alias("exact_top1"),
-        col("cos").alias("top1_cos"),
-    )
-    w_all = Window.partitionBy()
-    return top1.join(hits, "query_id", "left").select(
-        "query_id",
-        "exact_top1",
-        "top1_cos",
-        (
-            F.coalesce(col("n_hit"), F.lit(0))
-            >= F.lit(float(S16_MIN_RECALL)) * KNN_K
-        ).alias("recall_ok"),
-        (
-            F.avg(
-                F.coalesce(col("n_hit"), F.lit(0)) / F.lit(float(KNN_K))
-            ).over(w_all)
-            >= S16_MIN_MEAN_RECALL
-        ).alias("mean_recall_ok"),
-    )
+    return _banded_recall(emb, approx, S16_MIN_RECALL, S16_MIN_MEAN_RECALL)
 ORACLE_S16 = f"""
 WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
 q AS (SELECT vec_id AS query_id, v AS q_v FROM e
@@ -1287,64 +1260,13 @@ def s17_ivfpq_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     like s03/s16: exact top-1 + cosine (DuckDB-recomputable) plus
     recall-band booleans the oracle claims TRUE. Measured: recall
     equals s03's at matched probe cost (see band constants)."""
-    from pyspark.sql.functions import col
-    from pyspark.sql.window import Window
-
     emb = _emb(spark, sf_dir)
     approx = similarity.ivfpq_topk(
         emb, KNN_QUERY_IDS, k=KNN_K,
         shortlist=S17_SHORTLIST, n_cells=16, nprobe=S17_NPROBE, iters=1,
     )
-    exact = similarity.knn_bruteforce(
-        emb, KNN_QUERY_IDS, k=KNN_K
-    ).localCheckpoint()
-    hits = (
-        approx.join(
-            exact.select("query_id", "neighbor_id"),
-            ["query_id", "neighbor_id"],
-        )
-        .groupBy("query_id")
-        .agg(F.count(F.lit(1)).alias("n_hit"))
-    )
-    top1 = exact.filter(col("rank") == 1).select(
-        "query_id",
-        col("neighbor_id").alias("exact_top1"),
-        col("cos").alias("top1_cos"),
-    )
-    w_all = Window.partitionBy()
-    return top1.join(hits, "query_id", "left").select(
-        "query_id",
-        "exact_top1",
-        "top1_cos",
-        (
-            F.coalesce(col("n_hit"), F.lit(0))
-            >= F.lit(float(S17_MIN_RECALL)) * KNN_K
-        ).alias("recall_ok"),
-        (
-            F.avg(
-                F.coalesce(col("n_hit"), F.lit(0)) / F.lit(float(KNN_K))
-            ).over(w_all)
-            >= S17_MIN_MEAN_RECALL
-        ).alias("mean_recall_ok"),
-    )
-ORACLE_S17 = f"""
-WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-q AS (SELECT vec_id AS query_id, v AS q_v FROM e
-      WHERE vec_id IN ({", ".join(str(i) for i in KNN_QUERY_IDS)})),
-scored AS (
-  SELECT q.query_id, e.vec_id AS neighbor_id,
-         round(list_cosine_similarity(q.q_v, e.v), 6) AS cos
-  FROM q, e WHERE e.vec_id <> q.query_id
-),
-ranked AS (
-  SELECT *, row_number() OVER (
-    PARTITION BY query_id ORDER BY cos DESC, neighbor_id) AS rnk
-  FROM scored
-)
-SELECT query_id, neighbor_id AS exact_top1, cos AS top1_cos,
-       TRUE AS recall_ok, TRUE AS mean_recall_ok
-FROM ranked WHERE rnk = 1
-"""
+    return _banded_recall(emb, approx, S17_MIN_RECALL, S17_MIN_MEAN_RECALL)
+ORACLE_S17 = ORACLE_S16
 #: s18: same bands as s17 — the persisted index stores the SAME
 #: model the in-memory path trains (deterministic trainers), so the
 #: measured recall is identical by construction (pinned by
@@ -1372,9 +1294,6 @@ def s18_index_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     import os
 
-    from pyspark.sql.functions import col
-    from pyspark.sql.window import Window
-
     from llamadb_spark.operators import ann_index
 
     emb = _emb(spark, sf_dir)
@@ -1396,38 +1315,7 @@ def s18_index_query(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark, path, emb, KNN_QUERY_IDS, k=KNN_K,
         shortlist=S17_SHORTLIST, nprobe=S17_NPROBE, expect=kw,
     )
-    exact = similarity.knn_bruteforce(
-        emb, KNN_QUERY_IDS, k=KNN_K
-    ).localCheckpoint()
-    hits = (
-        approx.join(
-            exact.select("query_id", "neighbor_id"),
-            ["query_id", "neighbor_id"],
-        )
-        .groupBy("query_id")
-        .agg(F.count(F.lit(1)).alias("n_hit"))
-    )
-    top1 = exact.filter(col("rank") == 1).select(
-        "query_id",
-        col("neighbor_id").alias("exact_top1"),
-        col("cos").alias("top1_cos"),
-    )
-    w_all = Window.partitionBy()
-    return top1.join(hits, "query_id", "left").select(
-        "query_id",
-        "exact_top1",
-        "top1_cos",
-        (
-            F.coalesce(col("n_hit"), F.lit(0))
-            >= F.lit(float(S18_MIN_RECALL)) * KNN_K
-        ).alias("recall_ok"),
-        (
-            F.avg(
-                F.coalesce(col("n_hit"), F.lit(0)) / F.lit(float(KNN_K))
-            ).over(w_all)
-            >= S18_MIN_MEAN_RECALL
-        ).alias("mean_recall_ok"),
-    )
+    return _banded_recall(emb, approx, S18_MIN_RECALL, S18_MIN_MEAN_RECALL)
 ORACLE_S18 = ORACLE_S17
 QUERIES = {
     "d01_exact_dedup": d01_exact_dedup,

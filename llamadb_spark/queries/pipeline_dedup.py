@@ -331,8 +331,9 @@ def d12_semantic_dedup_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     very O(N^2) stage this path exists to replace — so the evidence
     is pair recall >= 0.9 vs the exact d05 generator
     (tests/test_dedup.py), the measured pair-generation scaling
-    exponent (bench d12_scaling), and the suite-wide plan audit
-    confirming no CartesianProduct / all-pairs stage.
+    exponent (tools/scale_spot_bench.py at several --scale values),
+    and the suite-wide plan audit confirming no CartesianProduct /
+    all-pairs stage.
     """
     from pyspark.sql.functions import col
 

@@ -130,3 +130,21 @@ def test_one_exactly_once_gate():
         and any(pat.search(c) for c in _code_lines(f))
     )
     assert not hits, f"exactly-once ledger used outside the gate: {hits}"
+
+
+def test_one_timing_loop():
+    """bench.py and every tool time keys through tools/timing.py: the
+    noop sink that executes a timed plan is written nowhere else, so
+    no second warm-up/repeat loop can drift from the first."""
+    repo = os.path.join(os.path.dirname(__file__), "..")
+    files = [os.path.join(repo, "bench.py")] + glob.glob(
+        os.path.join(repo, "tools", "*.py")
+    )
+    pat = re.compile(r"""\.write\.format\(\s*["']noop["']""")
+    hits = sorted(
+        os.path.relpath(f, repo)
+        for f in files
+        if os.path.basename(f) != "timing.py"
+        and any(pat.search(c) for c in _code_lines(f))
+    )
+    assert not hits, f"noop-sink timing loop outside tools/timing.py: {hits}"

@@ -53,24 +53,29 @@ def test_partitioned_write_prunes(spark, sf_dir):
 
 def test_bucketed_join_has_no_shuffle(spark, sf_dir):
     """THE scale assertion: joining two tables bucketed on the join
-    key must not exchange (pre-shuffled storage layout)."""
+    key must not exchange (pre-shuffled storage layout), with and
+    without sorted buckets."""
     orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
     customer = spark.read.parquet(f"{sf_dir}/customer.parquet")
-    spark.sql("DROP TABLE IF EXISTS orders_bkt")
-    spark.sql("DROP TABLE IF EXISTS customer_bkt")
-    write_bucketed_table(orders, "orders_bkt", ["o_custkey"], num_buckets=4)
-    write_bucketed_table(customer, "customer_bkt", ["c_custkey"], num_buckets=4)
-    o = spark.table("orders_bkt")
-    c = spark.table("customer_bkt")
-    joined = o.join(
-        c.hint("merge"), o.o_custkey == c.c_custkey
-    )  # force SMJ so broadcast doesn't mask the bucketing
-    plan = formatted_plan(joined)
-    assert "SortMergeJoin" in plan
-    assert "Exchange" not in plan  # bucketing removed both shuffles
-    assert joined.count() == orders.join(
-        customer, orders.o_custkey == customer.c_custkey
-    ).count()
+    want = orders.join(customer, orders.o_custkey == customer.c_custkey).count()
+    for sort in (False, True):
+        write_bucketed_table(
+            orders, "orders_bkt", ["o_custkey"], num_buckets=4,
+            sort_cols=["o_custkey"] if sort else None,
+        )
+        write_bucketed_table(
+            customer, "customer_bkt", ["c_custkey"], num_buckets=4,
+            sort_cols=["c_custkey"] if sort else None,
+        )
+        o = spark.table("orders_bkt")
+        c = spark.table("customer_bkt")
+        joined = o.join(
+            c.hint("merge"), o.o_custkey == c.c_custkey
+        )  # force SMJ so broadcast doesn't mask the bucketing
+        plan = formatted_plan(joined)
+        assert "SortMergeJoin" in plan
+        assert "Exchange" not in plan  # bucketing removed both shuffles
+        assert joined.count() == want
 
 
 def test_orc_roundtrip_with_pushdown(spark, sf_dir, tmp_path):
@@ -192,15 +197,27 @@ def test_zorder_layout_bounds_both_dimensions(spark, tmp_path):
     )
     write_zorder_layout(grid, dst, "x", "y", num_files=16, bits=8)
 
-    def file_spans(f):
+    def file_bounds(f):
         md = pq.ParquetFile(f).metadata
         names = md.schema.names
-        spans = {}
+        bounds = {}
         for c, name in enumerate(names):
             lo = min(md.row_group(i).column(c).statistics.min for i in range(md.num_row_groups))
             hi = max(md.row_group(i).column(c).statistics.max for i in range(md.num_row_groups))
-            spans[name] = hi - lo
-        return spans
+            bounds[name] = (lo, hi)
+        return bounds
+
+    def file_spans(f):
+        return {k: hi - lo for k, (lo, hi) in file_bounds(f).items()}
+
+    def files_touched(path, dim, lo=100, hi=110):
+        """Files whose footer min/max intersect a ~4% range of `dim`:
+        the files a stats-pruning reader must open."""
+        return sum(
+            1
+            for f in glob.glob(f"{path}/*.parquet")
+            if file_bounds(f)[dim][0] <= hi and file_bounds(f)[dim][1] >= lo
+        )
 
     files = glob.glob(f"{dst}/*.parquet")
     assert len(files) == 16
@@ -223,6 +240,12 @@ def test_zorder_layout_bounds_both_dimensions(spark, tmp_path):
     ).write.mode("overwrite").parquet(lex)
     lex_spans = [file_spans(f) for f in glob.glob(f"{lex}/*.parquet")]
     assert sum(s["y"] for s in lex_spans) / len(lex_spans) > 200
+    # pruning: a range on the SECOND dimension alone opens every lex
+    # file but at most half of the Z-order files (4 of 16 measured),
+    # and Z-order still prunes on the first dimension
+    assert files_touched(lex, "y") == len(lex_spans)
+    assert files_touched(dst, "y") <= 16 // 2
+    assert files_touched(dst, "x") < 16
 
 
 def test_versioned_table_time_travel_and_diff(spark, tmp_path):

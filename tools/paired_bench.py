@@ -1,163 +1,152 @@
-"""Paired A/B bench protocol (VERDICT r07 #4).
+"""Paired A/B timing of a reference commit against the working tree.
 
-Round-over-round headline comparison has twice been polluted by
-~±10% ambient machine drift between runs hours apart (documented in
-BENCH_r07 / the round-7 closing snapshot). This tool kills that
-ambiguity: it checks out a reference commit (the previous round's
-boundary by default) into a git worktree and runs the FULL key sweep
-in six singly-alternating phases — A(ref) B(head) ×3 — within one
-machine-hour, then reports per-key paired ratios computed from the
-MIN of each side (the least-contended run, the number a plan change
-must move to be real). Single-phase alternation matters: a first
-ABBA cut was defeated by an ambient slowdown that arrived mid-run
-and persisted, landing entirely on the B side.
+Timings taken hours apart differ by ~±10% from ambient machine drift
+alone, so a code change is judged against its reference inside one
+run: the reference commit is exported into a temporary tree, and six
+singly-alternating fresh-process phases A(ref) B(head) ×3 time the
+same keys, each key twice per phase (a cold and a warm run). Per key,
+the paired ratio is head/ref of the MIN over each side's runs (the
+least-contended run, the number a plan change must move to be real).
+Single-phase alternation matters: an ABBA cut was defeated by an
+ambient slowdown that arrived mid-run and persisted, landing entirely
+on the B side.
 
-Interpretation contract: the paired ratio column is the load-bearing
-round-over-round evidence; absolute headlines remain reported but
-are not comparable across machine-hours. A key is a real regression
-only if its paired ratio is materially > 1 in THIS protocol.
+A key is a real regression only if its paired ratio is materially
+> 1 in this protocol; absolute seconds are not comparable across
+machine-hours.
 
 Usage:
-    python tools/paired_bench.py [ref_commit] [sf_dir]
-Defaults: ref = previous round boundary (see _default_ref), sf_dir =
-$SPARK_GRAFT_SF_DIR or /root/testdata/sf0.1. Writes
-paired_bench.json at the repo root and prints a sorted summary.
+    python tools/paired_bench.py <ref_commit> [sf_dir [key ...]]
+sf_dir defaults to $SPARK_GRAFT_SF_DIR or /root/testdata/sf0.1; no
+keys means every registered key. Writes paired_bench.json at the
+repo root and prints a summary.
+
+Each phase loads the timing kernel (tools/timing.py) of THIS checkout
+by file path, imports ``llamadb_spark`` from its own tree only, and
+fails if that import resolves anywhere else.
 """
 
 from __future__ import annotations
 
+import io
 import json
 import os
+import shutil
 import statistics
 import subprocess
 import sys
+import tarfile
 import tempfile
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+KERNEL = os.path.join(REPO, "tools", "timing.py")
+RUNS_PER_PHASE = 2
 
 _RUNNER = r"""
-import json, os, sys, time
-tree, sf_dir, out_path = sys.argv[1], sys.argv[2], sys.argv[3]
+import importlib.util, json, os, sys
+tree, kernel, sf_dir, out_path, repeats, *keys = sys.argv[1:]
 sys.path.insert(0, tree)
+import llamadb_spark
+where = os.path.realpath(llamadb_spark.__file__)
+if not where.startswith(os.path.realpath(tree) + os.sep):
+    raise SystemExit(f"phase for {tree} imported llamadb_spark from {where}")
+spec = importlib.util.spec_from_file_location("timing_kernel", kernel)
+timing = importlib.util.module_from_spec(spec)
+spec.loader.exec_module(timing)
 from llamadb_spark.queries import all_queries
 from llamadb_spark.session import get_spark
 spark = get_spark("paired-bench")
 spark.sparkContext.setLogLevel("ERROR")
 qs = all_queries()
-# warm the JVM + file listing exactly like bench.py
-qs["q09_order_limit"](spark, sf_dir).write.format("noop").mode(
-    "overwrite").save()
-timings = {}
-import gc
 # CANONICAL (sorted) key order, NOT registry order: the registry is
-# an evidence-rotation queue that reorders every round, so dict-order
-# sweeps put different keys in the cold early slots on each side and
-# the paired ratios read rotation position, not code (measured in
-# round 9: the freshly-front-rotated r04 cohort all "regressed"
-# 1.6-2.3x while back-rotated keys "won" 0.2-0.6x, both spurious).
-for i, name in enumerate(sorted(qs)):
-    t0 = time.time()
-    qs[name](spark, sf_dir).write.format("noop").mode("overwrite").save()
-    timings[name] = round(time.time() - t0, 3)
-    if i % 10 == 9:
-        gc.collect()
+# an evidence-rotation queue that reorders every round, so registry-
+# order sweeps put different keys in the cold early slots on each
+# side and the ratios read rotation position, not code.
+keys = [k for k in keys if k in qs] if keys else sorted(qs)
+runs = timing.time_keys(spark, qs, sf_dir, keys, int(repeats))
 with open(out_path, "w") as fh:
-    json.dump(timings, fh)
+    json.dump({
+        "llamadb_spark": where,
+        "min": {k: round(min(map(timing.total_s, r)), 3)
+                for k, r in runs.items()},
+    }, fh)
 """
 
 
-def _default_ref() -> str:
-    """The most recent driver round-boundary commit (its message
-    starts with 'round N:'), i.e. the code the previous BENCH ran.
-    HEAD itself may BE a round-boundary commit (the driver commits
-    'round N: end-of-round snapshot' at the boundary), in which case
-    comparing against it would silently pair HEAD vs HEAD and report
-    ~1.0 ratios — so the scan starts at HEAD~1 (ADVICE r08)."""
-    head = subprocess.run(
-        ["git", "-C", REPO, "rev-parse", "HEAD"],
-        capture_output=True, text=True, check=True,
-    ).stdout.strip()
-    out = subprocess.run(
-        ["git", "-C", REPO, "log", "--format=%H %s", "-50", "HEAD~1"],
-        capture_output=True, text=True, check=True,
+def _export(ref: str) -> str:
+    """The tree of ``ref`` in a fresh temporary directory."""
+    tree = tempfile.mkdtemp(prefix=f"paired_ref_{ref[:12]}_")
+    tar = subprocess.run(
+        ["git", "-C", REPO, "archive", ref],
+        capture_output=True, check=True,
     ).stdout
-    for line in out.splitlines():
-        sha, _, subject = line.partition(" ")
-        if subject.startswith("round ") and ":" in subject:
-            if sha == head:  # defensive; HEAD~1 scan should exclude
-                continue
-            return sha
-    raise SystemExit("no round-boundary commit found; pass a ref")
+    with tarfile.open(fileobj=io.BytesIO(tar)) as tf:
+        tf.extractall(tree)
+    return tree
 
 
-def _run_phase(tree: str, sf_dir: str, tag: str) -> dict[str, float]:
+def _run_phase(tree: str, sf_dir: str, keys: list[str], tag: str) -> dict:
     with tempfile.NamedTemporaryFile("w", suffix=".json", delete=False) as f:
         out_path = f.name
-    with tempfile.NamedTemporaryFile(
-        "w", suffix=".py", delete=False
-    ) as f:
-        f.write(_RUNNER)
-        runner = f.name
-    print(f"phase {tag}: sweeping all keys from {tree}", flush=True)
     subprocess.run(
-        [sys.executable, runner, tree, sf_dir, out_path],
+        [sys.executable, "-c", _RUNNER, tree, KERNEL, sf_dir, out_path,
+         str(RUNS_PER_PHASE), *keys],
         check=True,
         cwd=tree,
         env={**os.environ, "PYTHONPATH": tree},
     )
     with open(out_path) as fh:
-        return json.load(fh)
+        res = json.load(fh)
+    os.unlink(out_path)
+    print(f"phase {tag}: llamadb_spark from {res['llamadb_spark']}",
+          flush=True)
+    return res
 
 
 def main() -> int:
     args = sys.argv[1:]
-    ref = args[0] if args else _default_ref()
+    if not args:
+        raise SystemExit(__doc__)
+    ref = subprocess.run(
+        ["git", "-C", REPO, "rev-parse", "--verify", args[0] + "^{commit}"],
+        capture_output=True, text=True, check=True,
+    ).stdout.strip()
     sf_dir = args[1] if len(args) > 1 else os.environ.get(
         "SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"
     )
-    worktree = os.path.join(
-        tempfile.gettempdir(), f"paired_ref_{ref[:12]}"
-    )
-    if not os.path.isdir(worktree):
-        subprocess.run(
-            ["git", "-C", REPO, "worktree", "add", "--detach", worktree, ref],
-            check=True,
-        )
+    keys = args[2:]
+    tree = _export(ref)
     try:
-        # ABABAB: a first ABBA cut showed that an ambient slowdown
-        # arriving mid-run and PERSISTING lands entirely on one side
-        # (A1 fast, B1/B2/A2 slow -> min(A) fast, min(B) slow ->
-        # false regressions on sub-second keys). Three single-phase
-        # alternations make both sides sample every ambient window
-        # at ~1-phase granularity; min over 3 samples/side.
-        runs_a, runs_b = [], []
-        for cycle in range(3):
-            runs_a.append(_run_phase(worktree, sf_dir, f"A{cycle+1}(ref)"))
-            runs_b.append(_run_phase(REPO, sf_dir, f"B{cycle+1}(head)"))
+        phases = []
+        for cycle in range(1, 4):
+            phases.append(("A", _run_phase(tree, sf_dir, keys, f"A{cycle}(ref)")))
+            phases.append(("B", _run_phase(REPO, sf_dir, keys, f"B{cycle}(head)")))
     finally:
-        subprocess.run(
-            ["git", "-C", REPO, "worktree", "remove", "--force", worktree],
-            check=False,
-        )
-    shared = sorted(
-        set(runs_a[0]) & set(runs_b[0])
-    )
+        shutil.rmtree(tree, ignore_errors=True)
+    side = {
+        s: [res["min"] for t, res in phases if t == s] for s in ("A", "B")
+    }
+    shared = sorted(set(side["A"][0]) & set(side["B"][0]))
     per_key = {}
     for k in shared:
-        a = min(r[k] for r in runs_a if k in r)
-        b = min(r[k] for r in runs_b if k in r)
+        a = min(r[k] for r in side["A"])
+        b = min(r[k] for r in side["B"])
         per_key[k] = {
             "ref_min": a,
             "head_min": b,
             "ratio": round(b / a, 3) if a > 0 else None,
         }
     ratios = [v["ratio"] for v in per_key.values() if v["ratio"]]
-    new_keys = sorted(set(runs_b[0]) - set(runs_a[0]))
     result = {
         "ref": ref,
         "sf_dir": sf_dir,
+        "runs_per_phase": RUNS_PER_PHASE,
+        "llamadb_spark": {
+            f"{t}{i // 2 + 1}": res["llamadb_spark"]
+            for i, (t, res) in enumerate(phases)
+        },
         "n_shared_keys": len(shared),
-        "new_keys": new_keys,
+        "new_keys": sorted(set(side["B"][0]) - set(side["A"][0])),
         "median_ratio": round(statistics.median(ratios), 3),
         "mean_ratio": round(statistics.fmean(ratios), 3),
         "per_key": per_key,

@@ -5,7 +5,10 @@ At sf0.1 every key is fixed-overhead dominated and 32 cores never
 beat 8, so the 100 TB story rested on plan shapes alone. This tool
 builds a ×N scaled copy of the inputs the expensive keys actually
 scan and times those keys at two core counts, producing real
-parallelism ratios at a data size where compute dominates.
+parallelism ratios at a data size where compute dominates. Run at
+several --scale values, the same keys give a scaling exponent (t ~
+rows^e) at fixed cores, e.g. d12_semantic_dedup_lsh's LSH pair
+generation or d19_substring_spans' span detector.
 
 Scaling construction (replica i of N, written once to --out-dir):
 - documents: doc_id += i*ID_STRIDE and every whitespace token gets a
@@ -41,7 +44,8 @@ import argparse
 import json
 import os
 import sys
-import time
+
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 ID_STRIDE = 100_000  # max sf0.1 doc_id ~5e3; 8 replicas stay < 1e6
                      # (the d19/p18 eval-twin namespace starts at 1e6)
@@ -147,10 +151,11 @@ def main() -> int:
     ap.add_argument("--stage-only", action="store_true")
     args = ap.parse_args()
 
-    sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+    sys.path.insert(0, REPO)
     os.environ["SPARK_GRAFT_CPUS"] = str(args.cpus)
     import __spark_entry__ as e
     from llamadb_spark.session import get_spark
+    from tools.timing import time_keys, total_s
 
     out_dir = f"{args.out_dir}_x{args.scale}"
     spark = get_spark(f"scale-spot-c{args.cpus}")
@@ -159,22 +164,11 @@ def main() -> int:
     if args.stage_only:
         print(json.dumps({"staged": out_dir}))
         return 0
-    qs = e.queries()
-    # JVM/file-listing warmup, same spirit as bench.py
-    qs["q09_order_limit"](spark, out_dir).write.format("noop").mode(
-        "overwrite"
-    ).save()
+    runs = time_keys(spark, e.queries(), out_dir, args.keys, args.repeats)
     timings = {}
-    for name in args.keys:
-        spark.sparkContext.setJobDescription(f"scale-spot:{name}")
-        runs = []
-        for _ in range(args.repeats):
-            t0 = time.time()
-            qs[name](spark, out_dir).write.format("noop").mode(
-                "overwrite"
-            ).save()
-            runs.append(round(time.time() - t0, 3))
-        timings[name] = {"min": min(runs), "runs": runs}
+    for name, rs in runs.items():
+        secs = [round(total_s(r), 3) for r in rs]
+        timings[name] = {"min": min(secs), "runs": secs}
     print(
         json.dumps(
             {
