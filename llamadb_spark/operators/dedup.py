@@ -496,34 +496,38 @@ def simhash_fingerprints(
 
 #: Edge count at or below which connected components finish on the
 #: driver: the staged edge list is collected once and closed with a
-#: union-find, instead of running one checkpointed Spark round per
-#: label/star iteration. Each distributed round costs fixed
-#: scheduling time (0.5-0.7 s for a star round on 4 cores) however
-#: small the graph, while the local finish is linear in the edges.
-#: Measured on random graphs (n edges over 2n ids), 4 cores, warm,
-#: connected_components_star staging job included, local vs star
+#: union-find, instead of running one checkpointed Spark job per star
+#: round. Each distributed round costs fixed scheduling time
+#: (0.5-0.7 s on 4 cores) however small the graph, while the local
+#: finish is linear in the edges. Measured on random graphs (n edges
+#: over 2n ids), 4 cores, warm, staging job included, local vs star
 #: rounds: 10k edges 0.52-0.59 s vs 6.4-6.5 s; 100k edges 1.3-2.1 s
-#: vs 8.6-11.6 s. The local side grows with the collected rows, so
-#: the constant bounds driver memory and collect time rather than
-#: marking a crossover. Above it the distributed rounds run
-#: unchanged; they remain the corpus-scale path.
+#: vs 8.6-11.6 s. The local side grows with the collected rows, so the
+#: constant bounds driver memory and collect time rather than marking
+#: a crossover. Above it the star rounds run; they remain the
+#: corpus-scale path.
 _LOCAL_MAX_EDGES = 100_000
 
+#: Star rounds a distributed connected-components call may run. A
+#: chain of n nodes settles in about log2(n) rounds plus the round
+#: that confirms the fixed point, so 30 leaves room for chains of
+#: about 2^28 nodes. Reaching it without a fixed point raises rather
+#: than return a partial labelling.
+_MAX_ROUNDS = 30
 
-def _stage_edges(
-    edges: DataFrame, node_nullable: bool
-) -> tuple[DataFrame, DataFrame | None]:
+
+def _stage_edges(edges: DataFrame) -> tuple[DataFrame, DataFrame | None]:
     """Materialize a ``(u, v)`` edge list, counting its rows with an
     Observation inside the same job. Returns ``(staged, components)``:
     when the count is at most ``_LOCAL_MAX_EDGES`` the components are
     finished on the driver (the one collect, bounded by the gate) and
     returned as ``(node, cluster_id = component min)``; otherwise
-    ``components`` is None and the caller runs its distributed rounds
-    on ``staged``.
+    ``components`` is None and the caller runs the star rounds on
+    ``staged``.
 
     The local result has the distributed result's schema: the id type
-    is the union type of ``u`` and ``v`` (as the symmetric view widens
-    it), and ``node_nullable`` gives the caller's node nullability.
+    is the union type of ``u`` and ``v``, and both columns are
+    nullable when either input column is.
     """
     obs = Observation()
     staged = edges.observe(obs, F.count(lit(1)).alias("n")).localCheckpoint()
@@ -546,10 +550,11 @@ def _stage_edges(
             parent[max(ru, rv)] = min(ru, rv)
     nodes = list(parent)
     id_type = staged.unionAll(staged.select("v", "u")).schema[0].dataType
+    nullable = any(f.nullable for f in staged.schema.fields)
     schema = StructType(
         [
-            StructField("node", id_type, node_nullable),
-            StructField("cluster_id", id_type, True),
+            StructField("node", id_type, nullable),
+            StructField("cluster_id", id_type, nullable),
         ]
     )
     # pandas → Arrow keeps the frame a local relation; a list of
@@ -559,10 +564,7 @@ def _stage_edges(
 
 
 def connected_components(
-    pairs: DataFrame,
-    a_col: str = "a_id",
-    b_col: str = "b_id",
-    max_iter: int = 25,
+    pairs: DataFrame, a_col: str = "a_id", b_col: str = "b_id"
 ) -> DataFrame:
     """Connected components over an undirected edge list — the
     transitive-closure step that turns near-dup PAIRS into dedup
@@ -574,88 +576,42 @@ def connected_components(
     bench and test scale — the components finish on the driver
     (``_stage_edges``) and no further job runs.
 
-    Above the gate: iterative min-label propagation. Each round every
-    node takes the min of its own label and its neighbors' labels;
-    converges in O(graph diameter) rounds. Best when near-dup graphs
-    are unions of small cliques (diameter ~2-3) — true of LEXICAL
-    near-dup graphs (jaccard), so d06/d07/p10 use it. Measured
-    SEMANTIC-similarity graphs chain much deeper (diameter ~12 on
-    the sf0.1 embedding graph at cos>=0.4, 12 min-label rounds vs 5
-    star rounds), so the embedding-space apply keys (d08/d12) use
-    connected_components_star — the O(log n) alternating
-    large/small-star algorithm (Kiveris et al., "Connected
-    Components in MapReduce", SoCC'14). Both produce identical
-    component-min labels (asserted in tests). Each round is one
-    shuffled join + groupBy-min, materialized by one checkpoint job
-    that truncates lineage so plans don't nest per iteration; the
-    driver only reads ONE number per round (the change count).
+    Above the gate, ``_star_rounds`` contracts the ``(u > v)`` edge
+    list with alternating large-star/small-star rounds (Kiveris et
+    al., "Connected Components in MapReduce and Beyond", SoCC'14).
+    Path distance shrinks roughly geometrically, so a chain of n nodes
+    settles in ~log2(n) rounds whatever the graph's diameter; each
+    round is one checkpoint job and the driver reads one fingerprint
+    per round.
 
-    Output: (node, cluster_id) for every node appearing in pairs.
+    Output: (node, cluster_id) for every node appearing in pairs; a
+    node seen only in a self-loop is its own singleton component.
+    Node nullability and id type follow the input.
     """
-    # Materialize the pair list FIRST: the union below references
-    # `pairs` twice, and without this the whole upstream
-    # pair-generation pipeline appears in both branches (ReusedExchange
-    # recovers some but not all of it).
-    pairs = pairs.select(col(a_col).alias("u"), col(b_col).alias("v"))
-    node_nullable = any(f.nullable for f in pairs.schema.fields)
-    pairs, local = _stage_edges(pairs, node_nullable)
+    edges, local = _stage_edges(
+        pairs.select(col(a_col).alias("u"), col(b_col).alias("v"))
+    )
     if local is not None:
         return local
-    # sym is a map-only union over the checkpointed pairs — re-deriving
-    # it per round is a narrow scan of cached blocks, so a second
-    # checkpoint here would only add a barrier job (the join below
-    # re-shuffles sym each round either way: shuffles don't persist
-    # across the per-round jobs)
-    sym = pairs.unionAll(pairs.select(col("v").alias("u"), col("u").alias("v")))
-    labels = sym.select("u").distinct().withColumn("label", col("u"))
-    for it in range(max_iter):
-        # One shuffle per round: the previous label rides the union
-        # as `old` (min ignores the nulls from neighbor rows), so
-        # convergence needs no separate labels join. The change count
-        # is an OBSERVED aggregate computed inside the checkpoint job
-        # itself (r10: the former post-hoc filter+count was a second
-        # job per round — pure driver latency on every round of every
-        # CC call, at any scale).
-        nbr = sym.join(
-            labels.select(col("u").alias("v"), "label"), "v"
-        ).select("u", "label", lit(None).cast("long").alias("old"))
-        obs = Observation()
-        new = (
-            labels.select("u", "label", col("label").alias("old"))
-            .unionAll(nbr)
-            .groupBy("u")
-            .agg(F.min("label").alias("label"), F.min("old").alias("old"))
-            .observe(
-                obs,
-                F.sum((col("label") < col("old")).cast("long")).alias("n_changed"),
-            )
-            .localCheckpoint()
-        )
-        labels = new.select("u", "label")
-        if (obs.get["n_changed"] or 0) == 0:
-            break
-    return labels.select(col("u").alias("node"), col("label").alias("cluster_id"))
-
-
-def _star_edges(pairs: DataFrame, a_col: str, b_col: str) -> DataFrame:
-    """The deduplicated directed ``(u > v)`` edge list the star rounds
-    start from (self-loops dropped)."""
-    return (
-        pairs.select(col(a_col).alias("u"), col(b_col).alias("v"))
-        .filter(col("u") != col("v"))
+    stars = _star_rounds(
+        edges.filter(col("u") != col("v"))
         .select(F.greatest("u", "v").alias("u"), F.least("u", "v").alias("v"))
         .distinct()
     )
+    # every star leaf carries its center (the component min); centers
+    # and self-loop-only nodes label themselves
+    nodes = edges.select(col("u").alias("node")).union(edges.select("v")).distinct()
+    return nodes.join(
+        stars.select(col("u").alias("node"), col("v").alias("center")), "node", "left"
+    ).select("node", F.coalesce("center", "node").alias("cluster_id"))
 
 
-def _star_rounds(edges: DataFrame, max_iter: int) -> tuple[DataFrame, int]:
-    """Alternating large-star/small-star rounds (Kiveris et al.,
-    "Connected Components in MapReduce and Beyond", SoCC'14) over a
-    ``_star_edges`` list until the edge set reaches a fixed point.
-    Each round pays one checkpoint job. Returns (star edges
-    u→center, rounds executed). Internal — connected_components_star
-    runs it only above ``_LOCAL_MAX_EDGES``; tests call it directly to
-    keep the distributed rounds covered."""
+def _star_rounds(edges: DataFrame) -> DataFrame:
+    """Alternating large-star/small-star rounds over a deduplicated
+    ``(u > v)`` edge list until the edge set reaches a fixed point.
+    The input and each round pay one checkpoint job. Returns the star
+    edges leaf→center; raises after ``_MAX_ROUNDS`` rounds without a
+    fixed point rather than return a partial labelling."""
 
     def one_round(e: DataFrame) -> DataFrame:
         """One large-star + small-star alternation, declaratively —
@@ -695,75 +651,29 @@ def _star_rounds(edges: DataFrame, max_iter: int) -> tuple[DataFrame, int]:
     # symmetric-view union and joins, so the whole sub-DAG
     # re-evaluates per reference — d08 4.6 → 8.8 s at sf0.1); the
     # per-round localCheckpoint is what makes each round's work run
-    # once. The round's lineage stays 2 joins deep.
-    prev_fp = None
-    rounds = 0
-    while rounds < max_iter:
-        rounds += 1
+    # once. The round's lineage stays 2 joins deep. The input is staged
+    # the same way: round 1 reads it 4 times.
+    def staged(e: DataFrame) -> tuple[DataFrame, tuple]:
         # Fixed-point check: an order-insensitive edge-set fingerprint
         # (count + xor of hashes; xor cannot overflow, unlike a sum
-        # under ANSI arithmetic) — OBSERVED inside the round's own
-        # checkpoint job (r10: the former post-hoc agg+collect was a
-        # separate job per round — pure driver latency at any scale).
+        # under ANSI arithmetic) — OBSERVED inside the checkpoint job
+        # (r10: the former post-hoc agg+collect was a separate job
+        # per round — pure driver latency at any scale).
         obs = Observation()
-        small = (
-            one_round(edges)
-            .observe(
-                obs,
-                F.count(lit(1)).alias("n"),
-                F.expr("bit_xor(xxhash64(u, v))").alias("h"),
-            )
-            .localCheckpoint()
-        )
+        e = e.observe(
+            obs,
+            F.count(lit(1)).alias("n"),
+            F.expr("bit_xor(xxhash64(u, v))").alias("h"),
+        ).localCheckpoint()
         row = obs.get
-        fp = (row["n"], row["h"])
-        edges = small
+        return e, (row["n"], row["h"])
+
+    edges, prev_fp = staged(edges)
+    for _ in range(_MAX_ROUNDS):
+        edges, fp = staged(one_round(edges))
         if fp == prev_fp:
-            break
+            return edges
         prev_fp = fp
-    return edges, rounds
-
-
-def connected_components_star(
-    pairs: DataFrame,
-    a_col: str = "a_id",
-    b_col: str = "b_id",
-    max_iter: int = 30,
-) -> DataFrame:
-    """Connected components via alternating large-star/small-star
-    (Kiveris et al., SoCC'14) — the O(log n)-round algorithm for
-    graphs where CHAINS, not cliques, dominate.
-
-    The deduplicated ``(u > v)`` edge list is staged once with its
-    row count observed in the same job. Up to ``_LOCAL_MAX_EDGES``
-    edges the components finish on the driver (``_stage_edges``), so a
-    pair-sized graph pays one job, not one checkpoint job per round.
-
-    Above the gate, ``_star_rounds`` runs. min-label propagation
-    (connected_components above) needs O(diameter) rounds: perfect
-    for near-dup clique unions (diameter 2-3), quadratically painful
-    for a 10⁶-long chain. The star alternation contracts
-    path-distance roughly geometrically, so a chain of n nodes
-    settles in ~log₂(n) rounds (asserted in tests). Per round it runs
-    two grouped-min joins over the edge list — a constant factor more
-    work per round than min-label, so d06 keeps min-label as its
-    default for clique-union graphs and this is the drop-in
-    replacement when cluster shapes are unknown.
-
-    Output: (node, cluster_id = component min id) for every node in
-    a non-self-loop edge of ``pairs`` — same contract as
-    connected_components.
-    """
-    edges, local = _stage_edges(
-        _star_edges(pairs, a_col, b_col), node_nullable=True
-    )
-    if local is not None:
-        return local
-    edges, _ = _star_rounds(edges, max_iter)
-    centers = edges.select(col("v").alias("node"), col("v").alias("cluster_id"))
-    leaves = edges.select(col("u").alias("node"), col("v").alias("cluster_id"))
-    return (
-        leaves.unionAll(centers)
-        .groupBy("node")
-        .agg(F.min("cluster_id").alias("cluster_id"))
+    raise RuntimeError(
+        f"connected components: no fixed point after {_MAX_ROUNDS} star rounds"
     )

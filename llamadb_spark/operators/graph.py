@@ -1,6 +1,7 @@
 """Graph centrality over near-dup / similarity edge lists.
 
-Connected components (operators/dedup.py) answers "which docs form a
+The connected-components operator
+(operators/dedup.connected_components) answers "which docs form a
 cluster"; PageRank answers "which doc is the cluster's CENTER" — the
 canonical representative a curation pipeline keeps when clusters are
 large and min-id is a poor pick (Page et al., 1999; the fixed-point

@@ -394,6 +394,45 @@ def _parse_recursive(sql: str):
     return name, cols, base_src, step_src, union_all, final
 
 
+def _checkpoint(
+    df: DataFrame, *metrics, names: list[str] | None = None
+) -> tuple[DataFrame, dict]:
+    """localCheckpoint ``df`` with its row count ``n`` and ``metrics``
+    observed in the same job; returns ``(staged, observed metrics)``.
+    The first ``len(names)`` columns (default: all) are staged under
+    ``names``; any further columns are read only by ``metrics``.
+
+    The columns cross the observe node under temporary names: two
+    renames that the optimizer can neither collapse nor strip, so the
+    checkpoint outputs fresh, unqualified attributes. A plain
+    pass-through of a view column (``g.v``) would carry the source
+    relation's unqualified constraints under a qualified attribute;
+    Spark's checkpoint keeps such constraints on an attribute id it
+    no longer outputs, and the next union over the checkpoint fails
+    analysis ("key not found"). Table writes (``_stage``) and
+    ``recursive_sql``'s frontiers both stage through here."""
+    names = names or df.columns
+    tmp = [f"_c{i}" for i in range(len(names))]
+    obs = Observation()
+    staged = (
+        df.toDF(*tmp, *df.columns[len(tmp):])
+        .observe(obs, F.expr("count(1) AS n"), *metrics)
+        .select(*tmp)
+        .toDF(*names)
+        .localCheckpoint()
+    )
+    return staged, obs.get
+
+
+def _observed_rows(obs: Observation) -> int:
+    """The ``n`` row count an Observation recorded. An observed node
+    under a join can be dropped unreported: AQE replaces a LEFT join
+    whose left side ran empty by an empty scan. Such a node saw no
+    rows."""
+    row = obs._jo.getRow()
+    return row.getLong(0) if row.length() else 0
+
+
 def recursive_sql(
     spark: SparkSession, sql: str, max_iter: int = 200
 ) -> DataFrame:
@@ -401,8 +440,9 @@ def recursive_sql(
     step) final-select`` statement — the one SQL construct Spark's
     own parser refuses — via iterative frontier materialization, the
     same fixpoint loop discipline as the connected-components
-    operators (localCheckpoint per round, driver sees one count per
-    round, O(frontier) state).
+    operator's star rounds (one checkpoint per round through
+    ``_checkpoint``, driver sees one count per round, O(frontier)
+    state).
 
     Standard SQL semantics: each iteration the recursive reference
     sees the rows produced by the PREVIOUS iteration (the working
@@ -438,7 +478,7 @@ def recursive_sql(
             base = base.toDF(*cols)
         if not union_all:
             base = base.distinct()
-        acc = base.localCheckpoint()
+        acc, _ = _checkpoint(base)
         frontier = acc
         for _ in range(max_iter):
             frontier.createOrReplaceTempView(name)
@@ -451,14 +491,12 @@ def recursive_sql(
                 # UNION: only rows never produced before extend the
                 # frontier (subtract = distinct set difference)
                 step = step.distinct().subtract(acc)
-            # The empty-frontier convergence probe is an OBSERVED
-            # aggregate inside the checkpoint job itself (r10: the
+            # The empty-frontier convergence probe is the row count
+            # observed inside the checkpoint job itself (r10: the
             # former post-hoc count() was a second job per round —
-            # pure driver latency on every round at any scale; same
-            # discipline as the connected-components operators).
-            obs = Observation()
-            new = step.observe(obs, F.count(F.lit(1)).alias("n")).localCheckpoint()
-            if (obs.get["n"] or 0) == 0:
+            # pure driver latency on every round at any scale).
+            new, observed = _checkpoint(step)
+            if observed["n"] == 0:
                 break
             acc = acc.unionAll(new)
             if not union_all:
@@ -467,7 +505,7 @@ def recursive_sql(
                 # and its union children are each checkpointed
                 # frontiers, so the lazy union is flat (no recompute,
                 # no deep lineage).
-                acc = acc.localCheckpoint()
+                acc, _ = _checkpoint(acc)
             frontier = new
         else:
             raise LlamaError(
@@ -1323,18 +1361,8 @@ class LlamaSession:
         job: the least index of a failed check over all rows, so the
         error raised is the first failed check in declaration order.
         ``matches`` are MERGE's two observed counts (see _merge_df).
-        Raises before the caller swaps anything in.
-
-        The columns cross the observe node under temporary names: two
-        renames that the optimizer can neither collapse nor strip, so
-        the checkpoint outputs fresh, unqualified attributes. A plain
-        pass-through of a view column (``g.v``) would carry the source
-        relation's unqualified constraints under a qualified attribute;
-        Spark's checkpoint keeps such constraints on an attribute id it
-        no longer outputs, and the next union over the table fails
-        analysis ("key not found"). The projections are SQL text: one
-        py4j call each instead of several per Column operation."""
-        names = [c.name for c in spec.columns]
+        Raises before the caller swaps anything in. The checkpoint
+        renames the columns to fresh attributes (``_checkpoint``)."""
         checks = self._row_checks(spec)
         first_failed = (
             "CASE "
@@ -1343,16 +1371,12 @@ class LlamaSession:
             if checks
             else "CAST(NULL AS INT)"
         )
-        obs = Observation()
-        df = (
-            df.selectExpr("*", first_failed)
-            .toDF(*[f"_c{i}" for i in range(len(names))], "_failed")
-            .observe(obs, F.min("_failed").alias("failed"))
-            .drop("_failed")
-            .toDF(*names)
-        )
         try:
-            staged = df.localCheckpoint()
+            staged, observed = _checkpoint(
+                df.selectExpr("*", f"{first_failed} AS _failed"),
+                F.expr("min(_failed) AS failed"),
+                names=[c.name for c in spec.columns],
+            )
         except Exception as exc:  # noqa: BLE001
             # ANSI-mode cast overflow fires during the scan, before
             # the decimal range comparison can run (e.g. -129 into an
@@ -1365,12 +1389,14 @@ class LlamaSession:
                     "value out of range for declared column type"
                 ) from None
             raise
-        if matches is not None and matches[0].get["n"] != matches[1].get["n"]:
+        if matches is not None and _observed_rows(matches[0]) != _observed_rows(
+            matches[1]
+        ):
             raise LlamaError(
                 "MERGE cardinality violation: a target row matches "
                 "more than one source row"
             )
-        failed = obs.get["failed"]
+        failed = observed["failed"]
         if failed is not None:
             raise LlamaError(checks[failed][1])
         return staged

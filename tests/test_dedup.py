@@ -182,57 +182,50 @@ def test_lsh_bucket_cap_drops_megabucket(spark):
 
 
 def test_star_cc_matches_minlabel_and_log_rounds(spark, monkeypatch):
+    """Above the gate a chain of n nodes settles in ~log2(n) star
+    rounds and every node gets its component's min label. The round
+    cap is set to the bound, so needing one more round raises."""
     import math
-    import random
 
-    # the distributed rounds of both algorithms, not the local finish
     monkeypatch.setattr(dedup, "_LOCAL_MAX_EDGES", -1)
-    # chain 0-1-2-...-63: min-label needs O(n) rounds; the star
-    # alternation must settle in ~log2(n) rounds.
     n = 64
+    monkeypatch.setattr(dedup, "_MAX_ROUNDS", int(math.log2(n)) + 2)
     chain = spark.createDataFrame(
         [(i, i + 1) for i in range(n - 1)], ["a_id", "b_id"]
     )
-    edges, rounds = dedup._star_rounds(
-        dedup._star_edges(chain, "a_id", "b_id"), max_iter=30
-    )
-    assert rounds <= int(math.log2(n)) + 2
     got = {
         (r.node, r.cluster_id)
-        for r in dedup.connected_components_star(chain).collect()
+        for r in dedup.connected_components(chain).collect()
     }
     assert got == {(i, 0) for i in range(n)}
 
-    # random graph: star CC must agree with min-label CC exactly
-    rng = random.Random(7)
-    pairs = [(rng.randrange(40), rng.randrange(40)) for _ in range(30)]
-    pairs = [(a, b) for a, b in pairs if a != b]
-    df = spark.createDataFrame(pairs, ["a_id", "b_id"])
-    star = {
-        (r.node, r.cluster_id)
-        for r in dedup.connected_components_star(df).collect()
-    }
-    label = {
-        (r.node, r.cluster_id)
-        for r in dedup.connected_components(df).collect()
-    }
-    assert star == label
+
+def test_cc_round_cap_raises(spark, monkeypatch):
+    """Reaching the round cap without a fixed point is an error, never
+    a partial labelling: one round cannot confirm a fixed point."""
+    monkeypatch.setattr(dedup, "_LOCAL_MAX_EDGES", -1)
+    monkeypatch.setattr(dedup, "_MAX_ROUNDS", 1)
+    chain = spark.createDataFrame([(0, 1), (1, 2), (2, 3)], ["a_id", "b_id"])
+    with pytest.raises(RuntimeError, match="no fixed point"):
+        dedup.connected_components(chain)
 
 
+# The ids keep the names of the cases from when a min-label and a
+# star function both existed; the axis now reads each pair as given
+# and with its a and b columns swapped, which must not change a row.
 @pytest.mark.parametrize(
-    "cc",
-    [dedup.connected_components, dedup.connected_components_star],
-    ids=["minlabel", "star"],
+    "cols", [("a_id", "b_id"), ("b_id", "a_id")], ids=["minlabel", "star"]
 )
 @pytest.mark.parametrize(
     "local_max", [dedup._LOCAL_MAX_EDGES, -1], ids=["local", "distributed"]
 )
 def test_cc_schema_same_on_local_and_distributed_paths(
-    spark, monkeypatch, cc, local_max
+    spark, monkeypatch, cols, local_max
 ):
     """The driver-side finish and the distributed rounds return the
-    same schema: int ids stay int (not widened to long), also for an
-    empty pair list."""
+    same rows and schema: int ids stay int (not widened to long), also
+    for an empty pair list, and a self-loop-only node is a singleton.
+    Which column is a and which is b does not matter."""
     from pyspark.sql.types import IntegerType, StructField, StructType
 
     monkeypatch.setattr(dedup, "_LOCAL_MAX_EDGES", local_max)
@@ -242,13 +235,23 @@ def test_cc_schema_same_on_local_and_distributed_paths(
             StructField("cluster_id", IntegerType(), True),
         ]
     )
-    pairs = spark.createDataFrame([(1, 2), (3, 2), (7, 8)], "a_id int, b_id int")
-    out = cc(pairs)
+    pairs = spark.createDataFrame(
+        [(1, 2), (3, 2), (7, 8), (5, 5)], "a_id int, b_id int"
+    )
+    out = dedup.connected_components(pairs, *cols)
     assert out.schema == expect
-    assert sorted(out.collect()) == [(1, 1), (2, 1), (3, 1), (7, 7), (8, 7)]
-    empty = cc(spark.createDataFrame([], "a_id int, b_id int"))
+    assert sorted(out.collect()) == [(1, 1), (2, 1), (3, 1), (5, 5), (7, 7), (8, 7)]
+    empty = dedup.connected_components(
+        spark.createDataFrame([], "a_id int, b_id int"), *cols
+    )
     assert empty.schema == expect
     assert empty.collect() == []
+    # non-null ids give non-null nodes and labels
+    strict = dedup.connected_components(
+        spark.range(2).selectExpr("id AS a_id", "id + 1 AS b_id"), *cols
+    )
+    assert [f.nullable for f in strict.schema] == [False, False]
+    assert sorted(strict.collect()) == [(0, 0), (1, 0), (2, 0)]
 
 
 def test_small_graph_apply_keys_skip_star_rounds(spark, sf_dir, monkeypatch):
@@ -560,7 +563,7 @@ def test_intra_doc_apply_removes_second_occurrences(spark):
 def test_quality_dedup_reps_policy(spark, sf_dir):
     """d24: the kept member of every cluster has the maximal t28
     logit among its members (doc_id tie-break), and cluster
-    membership matches the min-label CC."""
+    membership matches connected_components."""
     from pyspark.sql.functions import col
 
     from llamadb_spark.operators import dedup, textops

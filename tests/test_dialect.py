@@ -610,6 +610,29 @@ def test_recursive_cte_union_terminates_on_cycle(db):
     assert sorted(r.node for r in rows) == [1, 2, 3, 4]
 
 
+@pytest.mark.parametrize("union", ["UNION", "UNION ALL"])
+@pytest.mark.parametrize(
+    "write",
+    [None, "UPDATE chain SET v = v WHERE u = 1"],
+    ids=["after-insert", "after-update"],
+)
+def test_recursive_cte_over_dialect_table(db, union, write):
+    """The frontiers and the accumulated result stage under fresh
+    attributes, so a UNION over a recursive step that reads a dialect
+    table (a checkpointed view, here with a same-name alias of a
+    view-qualified column) analyses without "key not found"."""
+    db.execute("CREATE TABLE chain (u I64, v I64)")
+    db.execute("INSERT INTO chain VALUES (0, 1), (1, 2), (2, 3)")
+    if write:
+        db.execute(write)
+    rows = db.execute(
+        "WITH RECURSIVE reach(v) AS (SELECT v FROM chain WHERE u = 0 "
+        f"{union} SELECT chain.v AS v FROM reach r JOIN chain ON chain.u = r.v) "
+        "SELECT v FROM reach ORDER BY v"
+    ).collect()
+    assert [r.v for r in rows] == [1, 2, 3]
+
+
 def test_recursive_cte_nonconvergence_guarded(db):
     import pytest
 
@@ -831,6 +854,46 @@ def test_merge_cardinality_violation_raises(db, matched):
     # failed MERGE left the target untouched (rollback contract)
     got = {r.id: r.qty for r in db.execute("SELECT id, qty FROM inv").collect()}
     assert got == {1: 10, 2: 5, 3: 7}
+
+
+@pytest.mark.parametrize(
+    "emptied",
+    [
+        [],
+        ["INSERT INTO inv VALUES (9, 1, 1.0)", "DELETE FROM inv"],
+        ["INSERT INTO inv VALUES (9, 1, 1.0)", "DELETE FROM inv WHERE id = 9"],
+    ],
+    ids=["fresh", "delete-all", "delete-every-row"],
+)
+@pytest.mark.parametrize(
+    "matched", ["UPDATE SET qty = s.qty", "DELETE"], ids=["update", "delete"]
+)
+@pytest.mark.parametrize("source", ["view", "table"])
+def test_merge_with_matched_arm_into_empty_table_inserts(
+    db, spark, emptied, matched, source
+):
+    """A WHEN MATCHED arm over an empty target: AQE can drop the join
+    and with it the target's observed row count, which must then read
+    as 0 rows (no match, no cardinality violation) so every source row
+    inserts. A Spark temp-view source is the shape that drops it."""
+    db.execute("CREATE TABLE inv (id U32, qty I32, price F64)")
+    delta = [(2, 3, 1.5), (4, 9, 8.0)]
+    if source == "view":
+        src = spark.createDataFrame(delta, "id int, qty int, price double")
+        src.createOrReplaceTempView("empty_merge_src")
+    else:
+        db.execute("CREATE TABLE empty_merge_src (id U32, qty I32, price F64)")
+        db.execute("INSERT INTO empty_merge_src VALUES (2, 3, 1.5), (4, 9, 8.0)")
+    for sql in emptied:
+        db.execute(sql)
+    db.execute(
+        f"MERGE INTO inv USING empty_merge_src ON t.id = s.id "
+        f"WHEN MATCHED THEN {matched} "
+        "WHEN NOT MATCHED THEN INSERT (id, qty, price) "
+        "VALUES (s.id, s.qty, s.price)"
+    )
+    got = sorted(tuple(r) for r in db.execute("SELECT * FROM inv").collect())
+    assert got == delta
 
 
 def test_merge_duplicate_source_key_without_match_inserts_both(db):
