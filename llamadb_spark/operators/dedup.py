@@ -9,7 +9,7 @@ occupancy, and AQE's skew-join splitting handles hot buckets.
 from __future__ import annotations
 
 import pandas as pd
-from pyspark.sql import DataFrame, Observation
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.functions import col, lit
 from pyspark.sql.types import StructField, StructType
@@ -20,6 +20,7 @@ from llamadb_spark.functions.text import (
     word_shingle_arrays,
     word_shingles_fast,
 )
+from llamadb_spark.session import stage
 
 
 def exact_dedup(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
@@ -69,7 +70,7 @@ def hashed_shingle_index(
         F.size("shingles").alias("n_sh"),
         F.explode("shingles").alias("shingle"),
     ).select(col(id_col), "n_sh", F.xxhash64("shingle").alias("sh"))
-    return sh.localCheckpoint()
+    return stage(sh)[0]
 
 
 def jaccard_ngram_pairs(
@@ -166,7 +167,7 @@ def containment_pairs(
         F.size("shingles").alias("n_sh"),
         F.explode("shingles").alias("shingle"),
     ).select(col(id_col), "n_sh", F.xxhash64("shingle").alias("sh"))
-    sh = sh.localCheckpoint()
+    sh, _ = stage(sh)
     sh = drop_hot_keys(sh, ["sh"], stop_shingle_df)
     a = sh.select(col(id_col).alias("a_id"), "sh", col("n_sh").alias("n_a")).hint(
         "shuffle_hash"
@@ -238,7 +239,7 @@ def incremental_jaccard_matches(
             F.explode("shingles").alias("shingle"),
         ).select(col(id_col), "n_sh", F.xxhash64("shingle").alias("sh"))
 
-    old = index(corpus).localCheckpoint()
+    old, _ = stage(index(corpus))
     old = drop_hot_keys(old, ["sh"], stop_shingle_df)
     new = index(new_docs)
     # Corpus-index side is corpus-sized — shuffle join, never a
@@ -299,9 +300,7 @@ def shared_ngram_pairs(
     Output: (a_id, b_id, n_shared).
     """
     sh = word_shingles_fast(docs, id_col, text_col, n=n)
-    idx = sh.select(
-        col(id_col), F.xxhash64("shingle").alias("sh")
-    ).localCheckpoint()
+    idx, _ = stage(sh.select(col(id_col), F.xxhash64("shingle").alias("sh")))
     idx = drop_hot_keys(idx, ["sh"], stop_shingle_df)
     a = idx.select(col(id_col).alias("a_id"), "sh").hint("shuffle_hash")
     b = idx.select(col(id_col).alias("b_id"), "sh").hint("shuffle_hash")
@@ -391,9 +390,9 @@ def minhash_lsh_pairs(
     # scale this would be a checkpoint/staged table; locally,
     # localCheckpoint. Size is tiny relative to the corpus: k×8 bytes
     # per doc vs the full text.
-    sig = minhash_signatures(
-        docs, id_col, text_col, num_hashes, index=index
-    ).localCheckpoint()
+    sig, _ = stage(
+        minhash_signatures(docs, id_col, text_col, num_hashes, index=index)
+    )
     # Band rows carry ONLY (id, band_id, bucket) — 8 banded copies of
     # the 256-byte signature through the shuffle would dominate the
     # join payload; sigs rejoin onto the (much smaller) candidate set
@@ -517,8 +516,8 @@ _MAX_ROUNDS = 30
 
 
 def _stage_edges(edges: DataFrame) -> tuple[DataFrame, DataFrame | None]:
-    """Materialize a ``(u, v)`` edge list, counting its rows with an
-    Observation inside the same job. Returns ``(staged, components)``:
+    """Materialize a ``(u, v)`` edge list, counting its rows in the
+    same job (``stage``). Returns ``(staged, components)``:
     when the count is at most ``_LOCAL_MAX_EDGES`` the components are
     finished on the driver (the one collect, bounded by the gate) and
     returned as ``(node, cluster_id = component min)``; otherwise
@@ -529,9 +528,8 @@ def _stage_edges(edges: DataFrame) -> tuple[DataFrame, DataFrame | None]:
     is the union type of ``u`` and ``v``, and both columns are
     nullable when either input column is.
     """
-    obs = Observation()
-    staged = edges.observe(obs, F.count(lit(1)).alias("n")).localCheckpoint()
-    if obs.get["n"] > _LOCAL_MAX_EDGES:
+    staged, observed = stage(edges)
+    if observed["n"] > _LOCAL_MAX_EDGES:
         return staged, None
     parent: dict = {}
 
@@ -650,30 +648,25 @@ def _star_rounds(edges: DataFrame) -> DataFrame:
     # round's output is referenced 3-4x by the second round's
     # symmetric-view union and joins, so the whole sub-DAG
     # re-evaluates per reference — d08 4.6 → 8.8 s at sf0.1); the
-    # per-round localCheckpoint is what makes each round's work run
-    # once. The round's lineage stays 2 joins deep. The input is staged
-    # the same way: round 1 reads it 4 times.
-    def staged(e: DataFrame) -> tuple[DataFrame, tuple]:
-        # Fixed-point check: an order-insensitive edge-set fingerprint
-        # (count + xor of hashes; xor cannot overflow, unlike a sum
-        # under ANSI arithmetic) — OBSERVED inside the checkpoint job
-        # (r10: the former post-hoc agg+collect was a separate job
-        # per round — pure driver latency at any scale).
-        obs = Observation()
-        e = e.observe(
-            obs,
-            F.count(lit(1)).alias("n"),
-            F.expr("bit_xor(xxhash64(u, v))").alias("h"),
-        ).localCheckpoint()
-        row = obs.get
-        return e, (row["n"], row["h"])
-
-    edges, prev_fp = staged(edges)
-    for _ in range(_MAX_ROUNDS):
-        edges, fp = staged(one_round(edges))
+    # per-round stage is what makes each round's work run once. The
+    # round's lineage stays 2 joins deep. The input is staged the same
+    # way: round 1 reads it 4 times.
+    # Fixed-point check: an order-insensitive edge-set fingerprint
+    # (count + xor of hashes; xor cannot overflow, unlike a sum under
+    # ANSI arithmetic) — OBSERVED inside the checkpoint job (r10: the
+    # former post-hoc agg+collect was a separate job per round — pure
+    # driver latency at any scale). ``_h`` is read only by the metric.
+    prev_fp = None
+    for _ in range(_MAX_ROUNDS + 1):
+        edges, fp = stage(
+            edges.select("u", "v", F.xxhash64("u", "v").alias("_h")),
+            F.expr("bit_xor(_h) AS h"),
+            names=["u", "v"],
+        )
         if fp == prev_fp:
             return edges
         prev_fp = fp
+        edges = one_round(edges)
     raise RuntimeError(
         f"connected components: no fixed point after {_MAX_ROUNDS} star rounds"
     )

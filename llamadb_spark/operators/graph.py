@@ -21,6 +21,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.functions import col, lit
 
+from llamadb_spark.session import stage
+
 
 def pagerank(
     pairs: DataFrame,
@@ -43,15 +45,15 @@ def pagerank(
     Output: (node, rank) for every node appearing in ``pairs``,
     rank rounded 6dp.
     """
-    p = pairs.select(col(a_col).alias("u"), col(b_col).alias("v")).localCheckpoint()
+    p, _ = stage(pairs.select(col(a_col).alias("u"), col(b_col).alias("v")))
     edges = p.unionAll(p.select(col("v").alias("u"), col("u").alias("v")))
     deg = edges.groupBy("u").agg(F.count(lit(1)).alias("d"))
     # Degree-annotate once: d never changes across iterations.
-    edges_d = edges.join(deg, "u").localCheckpoint()
+    edges_d, _ = stage(edges.join(deg, "u"))
 
     ranks = deg.select("u", lit(1.0).alias("rank"))
     for _ in range(iters):
-        ranks = (
+        ranks, _ = stage(
             edges_d.join(ranks, "u")
             .groupBy("v")
             .agg(F.sum(col("rank") / col("d")).alias("_in"))
@@ -59,6 +61,5 @@ def pagerank(
                 col("v").alias("u"),
                 (lit(1.0 - damping) + lit(damping) * col("_in")).alias("rank"),
             )
-            .localCheckpoint()
         )
     return ranks.select(col("u").alias("node"), F.round("rank", 6).alias("rank"))

@@ -27,9 +27,11 @@ ranking) at cluster scale.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Observation
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
+
+from llamadb_spark.session import stage
 
 
 def _exclusive_prefix(totals: list) -> list:
@@ -85,19 +87,18 @@ def distributed_row_number(
             spark.conf.get("spark.sql.shuffle.partitions", "32")
         )
     cols = [F.col(c) for c in order_cols]
-    local = (
+    # Staged: BOTH the counts side and the final join consume this
+    # subtree — unstaged, the entire upstream (range repartition +
+    # window + whatever feeds df) executed twice, once for the
+    # broadcast offsets and once for the output (r10; guide §5 —
+    # materialize a reused intermediate).
+    local, _ = stage(
         df.repartitionByRange(num_partitions, *cols)
         .withColumn("_pid", F.spark_partition_id())
         .withColumn(
             "_lr",
             F.row_number().over(Window.partitionBy("_pid").orderBy(*cols)),
         )
-        # Staged: BOTH the counts side and the final join consume
-        # this subtree — unstaged, the entire upstream (range
-        # repartition + window + whatever feeds df) executed twice,
-        # once for the broadcast offsets and once for the output
-        # (r10; guide §5 — materialize a reused intermediate).
-        .localCheckpoint()
     )
     # one row per partition — bounded by cluster config, not data
     counts = local.groupBy("_pid").agg(F.count(F.lit(1)).alias("_cnt"))
@@ -160,8 +161,7 @@ def distributed_cumsum(
             spark.conf.get("spark.sql.shuffle.partitions", "32")
         )
     cols = [F.col(c) if isinstance(c, str) else c for c in order_cols]
-    obs = Observation()
-    local = (
+    windowed = (
         df.repartitionByRange(num_partitions, *cols)
         .withColumn("_pid", F.spark_partition_id())
         .withColumn(
@@ -172,24 +172,25 @@ def distributed_cumsum(
                 .rowsBetween(Window.unboundedPreceding, 0)
             ),
         )
-        # one conditional total per partition, computed by the
-        # checkpoint job (r11; the r10 totals side re-scanned every
-        # checkpointed block — for p15/p19 the upstream is the
-        # quality-scoring pipeline — to produce 32 total rows)
-        .observe(
-            obs,
-            *[
-                F.sum(
-                    F.when(F.col("_pid") == i, F.col(value_col)).otherwise(
-                        F.lit(0)
-                    )
-                ).alias(f"_t{i}")
-                for i in range(num_partitions)
-            ],
-        )
-        .localCheckpoint()
     )
-    row = obs.get
+    # one conditional total per partition, computed by the
+    # checkpoint job (r11; the r10 totals side re-scanned every
+    # checkpointed block — for p15/p19 the upstream is the
+    # quality-scoring pipeline — to produce 32 total rows); the
+    # metrics read the partition id and value through the metric-only
+    # columns _tp/_tv
+    local, row = stage(
+        windowed.select(
+            "*", F.col("_pid").alias("_tp"), F.col(value_col).alias("_tv")
+        ),
+        *[
+            F.sum(
+                F.when(F.col("_tp") == i, F.col("_tv")).otherwise(F.lit(0))
+            ).alias(f"_t{i}")
+            for i in range(num_partitions)
+        ],
+        names=windowed.columns,
+    )
     offs = _exclusive_prefix(
         [row[f"_t{i}"] or 0 for i in range(num_partitions)]
     )

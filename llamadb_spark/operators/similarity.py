@@ -15,6 +15,7 @@ from pyspark.sql.functions import broadcast, col, lit
 
 from llamadb_spark.functions.blocking import drop_hot_keys
 from llamadb_spark.functions.vector import as_double, cosine, cosine_pre, norm2
+from llamadb_spark.session import stage
 
 
 def embed_neardup_pairs(
@@ -529,7 +530,7 @@ def lsh_ann_pairs(
         # matmul bucketing plus a corpus scan) — stage the tiny
         # (id, tbl, bucket) table so the guard and both join sides
         # read it rather than recompute it.
-        banded = banded.localCheckpoint()
+        banded, _ = stage(banded)
     banded = drop_hot_keys(banded, ["tbl", "bucket"], max_bucket_size)
 
     # Corpus-sized both sides — shuffle join, never broadcast (d02 note)

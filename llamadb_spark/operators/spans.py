@@ -61,6 +61,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import col, lit
 from pyspark.sql.window import Window
 
+from llamadb_spark.session import stage
+
 
 def position_grams(
     docs: DataFrame,
@@ -186,7 +188,16 @@ def remove_spans(
         .orderBy("s", "e")
         .rowsBetween(Window.unboundedPreceding, -1)
     )
-    merged = (
+    # Staged (r11, the d04 lesson): THREE consumers read the merged
+    # intervals (gaps, tails, stats) — unstaged, the whole upstream
+    # span DETECTOR (gram explode → occupancy window → self-join →
+    # islands) re-executed once per consumer (d20's r10 plan held 3
+    # copies of the detector subtree, 66 Exchanges, 0 reuse). The
+    # merged-interval table is bounded by span count (≪ corpus), so
+    # materializing it is the cheap side of the trade at any scale.
+    # NOTE: this makes remove_spans EAGER — a Spark job runs at call
+    # time.
+    merged, _ = stage(
         iv.withColumn("prev_max_e", F.max("e").over(run_max))
         .withColumn(
             "new_isl",
@@ -198,16 +209,6 @@ def remove_spans(
         .withColumn("isl", F.sum("new_isl").over(by_start))
         .groupBy("doc_id", "isl")
         .agg(F.min("s").alias("s"), F.max("e").alias("e"))
-        # Staged (r11, the d04 lesson): THREE consumers read the
-        # merged intervals (gaps, tails, stats) — unstaged, the whole
-        # upstream span DETECTOR (gram explode → occupancy window →
-        # self-join → islands) re-executed once per consumer (d20's
-        # r10 plan held 3 copies of the detector subtree, 66
-        # Exchanges, 0 reuse). The merged-interval table is bounded
-        # by span count (≪ corpus), so materializing it is the cheap
-        # side of the trade at any scale. NOTE: this makes
-        # remove_spans EAGER — a Spark job runs at call time.
-        .localCheckpoint()
     )
     # kept gaps: before each merged interval, plus the tail
     by_s = Window.partitionBy("doc_id").orderBy("s")

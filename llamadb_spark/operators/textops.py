@@ -16,6 +16,7 @@ from llamadb_spark.functions.text import (
     stopword_hits,
     tokens,
 )
+from llamadb_spark.session import stage
 
 
 def language_id(
@@ -331,11 +332,7 @@ def tfidf_topk(
     # so the tokenize+explode corpus pass runs once. It holds only
     # query-term hits — |docs| × |query| rows at most — so the
     # materialization is trivially small.
-    tf = (
-        hits.groupBy(id_col, "token")
-        .agg(F.count(lit(1)).alias("tf"))
-        .localCheckpoint()
-    )
+    tf, _ = stage(hits.groupBy(id_col, "token").agg(F.count(lit(1)).alias("tf")))
     df_tab = tf.groupBy("token").agg(F.count(lit(1)).alias("df"))
     n_docs = docs.agg(F.count(lit(1)).alias("n_docs"))
     return (
@@ -392,11 +389,7 @@ def bm25_topk(
         col(id_col), F.explode("_toks").alias("token")
     )
     hits = toks.filter(col("token").isin(query_tokens))
-    tf = (
-        hits.groupBy(id_col, "token")
-        .agg(F.count(lit(1)).alias("tf"))
-        .localCheckpoint()
-    )
+    tf, _ = stage(hits.groupBy(id_col, "token").agg(F.count(lit(1)).alias("tf")))
     df_tab = tf.groupBy("token").agg(F.count(lit(1)).alias("df"))
     n_docs = docs.agg(F.count(lit(1)).alias("n_docs"))
     idf = F.log(
@@ -529,7 +522,7 @@ def bigram_logprob(
     # their exchanges don't canonicalize to a reusable one, so
     # without staging the tokenize+shingle pipeline runs three times
     # (the d02 staging rationale; measured ~3x at sf0.1).
-    bis = bis.localCheckpoint()
+    bis, _ = stage(bis)
     c_ab = bis.groupBy("bigram").agg(F.count(lit(1)).alias("c_ab"))
     c_a = (
         bis.select(F.split(col("bigram"), " ").getItem(0).alias("w1"))

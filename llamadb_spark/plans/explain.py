@@ -82,30 +82,3 @@ def plan_has(df: DataFrame, *needles: str) -> dict[str, bool]:
     helper: BroadcastHashJoin, PushedFilters, WholeStageCodegen...)."""
     p = formatted_plan(df)
     return {n: (n in p) for n in needles}
-
-
-def run_with_observation(df: DataFrame, name: str = "metrics", **metric_exprs):
-    """Runtime query metrics via Spark's Observation API — the
-    lightweight EXPLAIN ANALYZE: named aggregate expressions are
-    computed ON THE ROWS FLOWING THROUGH the plan during the normal
-    action, with zero extra passes (an accumulator-backed observe
-    node, unlike a second .agg() which would re-run the query).
-    At 100 TB that difference is the whole point: row-count /
-    quality-counter instrumentation rides along for free.
-
-    Returns (collected rows, metrics dict). llamadb has no runtime
-    metrics at all (execute/mod.rs yields rows blindly); this is the
-    operability layer a production engine adds.
-
-    Example::
-
-        rows, m = run_with_observation(
-            df, rows=F.count(F.lit(1)), revenue=F.sum("amount")
-        )
-    """
-    from pyspark.sql import Observation
-
-    obs = Observation(name)
-    observed = df.observe(obs, *[v.alias(k) for k, v in metric_exprs.items()])
-    rows = observed.collect()
-    return rows, obs.get

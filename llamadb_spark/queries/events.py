@@ -8,6 +8,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from llamadb_spark.operators import events as ev
+from llamadb_spark.session import stage
 
 
 def _events(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -892,7 +893,7 @@ def e23_weekly_churn(spark: SparkSession, sf_dir: str) -> DataFrame:
     active = ev.select(
         "user_id", F.date_trunc("week", "ts").alias("week")
     ).distinct()
-    active = active.localCheckpoint()  # both join sides + the max scalar
+    active, _ = stage(active)  # both join sides + the max scalar
     nxt = active.select(
         "user_id",
         (F.col("week") - F.expr("INTERVAL 7 DAYS")).alias("week"),

@@ -18,6 +18,7 @@ from pyspark.sql import functions as F
 from llamadb_spark.operators import dedup, multimodal, similarity, textops
 from llamadb_spark.functions import text as text_fns
 from llamadb_spark.functions.text import STOPWORDS
+from llamadb_spark.session import stage
 
 from llamadb_spark.queries.pipeline_common import (
     JACCARD_THRESHOLD,
@@ -310,9 +311,7 @@ def _banded_recall(
     # the exact twin feeds BOTH the recall join and the top-1
     # projection: stage its |queries|·k rows once instead of running
     # the brute-force scan twice
-    exact = similarity.knn_bruteforce(
-        emb, KNN_QUERY_IDS, k=KNN_K
-    ).localCheckpoint()
+    exact, _ = stage(similarity.knn_bruteforce(emb, KNN_QUERY_IDS, k=KNN_K))
     hits = (
         approx.join(
             exact.select("query_id", "neighbor_id"),

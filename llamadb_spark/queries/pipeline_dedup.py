@@ -13,6 +13,7 @@ from pyspark.sql import functions as F
 from llamadb_spark.operators import dedup, multimodal, similarity, textops
 from llamadb_spark.functions import text as text_fns
 from llamadb_spark.functions.text import STOPWORDS
+from llamadb_spark.session import stage
 
 from llamadb_spark.queries.pipeline_common import (
     _docs,
@@ -174,9 +175,11 @@ def d04_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.functions import col
 
     docs = _docs(spark, sf_dir)
-    pairs = dedup.jaccard_ngram_pairs(
-        docs, threshold=JACCARD_THRESHOLD, stop_shingle_df=STOP_SHINGLE_DF
-    ).select("a_id", "b_id", "jaccard").localCheckpoint()
+    pairs, _ = stage(
+        dedup.jaccard_ngram_pairs(
+            docs, threshold=JACCARD_THRESHOLD, stop_shingle_df=STOP_SHINGLE_DF
+        ).select("a_id", "b_id", "jaccard")
+    )
     # Only docs that appear in a pair need a fingerprint: semi-join
     # the corpus down to pair members BEFORE the 64-vote aggregation
     # (guide §1.2 — don't compute what's thrown away; pair members
@@ -186,10 +189,10 @@ def d04_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     member_ids = pairs.select(
         F.explode(F.array(col("a_id"), col("b_id"))).alias("doc_id")
     ).distinct()
-    fp = (
-        dedup.simhash_fingerprints(docs.join(member_ids, "doc_id", "left_semi"))
-        .select("doc_id", "simhash")
-        .localCheckpoint()
+    fp, _ = stage(
+        dedup.simhash_fingerprints(
+            docs.join(member_ids, "doc_id", "left_semi")
+        ).select("doc_id", "simhash")
     )
     ham = F.bit_count(col("fp_a").bitwiseXOR(col("fp_b")))
     return (
@@ -533,7 +536,7 @@ def g03_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
         threshold=JACCARD_THRESHOLD,
         stop_shingle_df=STOP_SHINGLE_DF,
     ).select("a_id", "b_id")
-    pairs = pairs.localCheckpoint()  # 4 consumers below
+    pairs, _ = stage(pairs)  # 4 consumers below
     wedges = (
         pairs.select(col("a_id").alias("a"), col("b_id").alias("b"))
         .join(
@@ -829,9 +832,7 @@ def d18_minhash_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select("a_id", "b_id", "n_inter", "jaccard")
     # referenced by both join sides — stage the n_docs signature rows
     # once instead of re-running the shingle+minhash pipeline twice
-    sigs = dedup.minhash_signatures(
-        docs, num_hashes=32, index=idx
-    ).localCheckpoint()
+    sigs, _ = stage(dedup.minhash_signatures(docs, num_hashes=32, index=idx))
     est = (
         F.size(
             F.filter(

@@ -13,6 +13,7 @@ from pyspark.sql import functions as F
 from llamadb_spark.operators import dedup, multimodal, similarity, textops
 from llamadb_spark.functions import text as text_fns
 from llamadb_spark.functions.text import STOPWORDS
+from llamadb_spark.session import stage
 
 from llamadb_spark.queries.pipeline_common import (
     _docs,
@@ -982,7 +983,7 @@ def p19_pipeline_manifest(
         .filter(col("node") != col("cluster_id"))
         .select(col("node").alias("doc_id"))
     )
-    surv2 = surv1.join(losers, "doc_id", "left_anti").localCheckpoint()
+    surv2, _ = stage(surv1.join(losers, "doc_id", "left_anti"))
 
     # Stage 3 — span detection ONCE over survivors + eval excerpts
     # (the d19 eval twins, built from the ORIGINAL corpus: the eval
@@ -997,11 +998,13 @@ def p19_pipeline_manifest(
             F.lit("-xqz"),
         ).alias("text"),
     )
-    spans = substring_span_pairs(
-        surv2.select("doc_id", "text").unionByName(evals),
-        min_len=D19_MIN_LEN,
-        max_gram_occ=D19_MAX_GRAM_OCC,
-    ).localCheckpoint()  # detector output staged ONCE, consumed twice
+    spans, _ = stage(  # detector output staged ONCE, consumed twice
+        substring_span_pairs(
+            surv2.select("doc_id", "text").unionByName(evals),
+            min_len=D19_MIN_LEN,
+            max_gram_occ=D19_MAX_GRAM_OCC,
+        )
+    )
     tt = spans.filter(col("b_id") < 1_000_000).select(
         "b_id", "b_start", "run_len"
     )  # train↔train: cut the HIGHER id (d20 policy)
@@ -1013,14 +1016,13 @@ def p19_pipeline_manifest(
         "run_len",
     )  # train↔eval: cut the TRAIN side (p18 policy)
     cleaned = remove_spans(surv2, tt.unionByName(te))
-    surv3 = (
+    surv3, _ = stage(
         surv2.join(cleaned.select("doc_id", "clean_text"), "doc_id", "left")
         .select(
             "doc_id",
             "source",
             F.coalesce(col("clean_text"), col("text")).alias("text"),
         )
-        .localCheckpoint()
     )
 
     # Stage 4 — model-based quality filter on the CLEANED text

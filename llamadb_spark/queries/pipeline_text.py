@@ -14,6 +14,7 @@ from pyspark.sql import functions as F
 from llamadb_spark.operators import dedup, multimodal, similarity, textops
 from llamadb_spark.functions import text as text_fns
 from llamadb_spark.functions.text import STOPWORDS
+from llamadb_spark.session import stage
 
 from llamadb_spark.queries.pipeline_common import (
     _docs,
@@ -715,7 +716,7 @@ def t21_source_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(col("token") != "")
         .distinct()
     )
-    tok = tok.localCheckpoint()  # two consumers: sizes + the self-join
+    tok, _ = stage(tok)  # two consumers: sizes + the self-join
     sizes = tok.groupBy("source").agg(F.count(F.lit(1)).alias("n_tok"))
     a = tok.select(col("source").alias("src_a"), "token")
     b = tok.select(col("source").alias("src_b"), "token")
@@ -788,11 +789,13 @@ def t22_source_divergence(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("source", F.explode(text_fns.tokens(col("text"))).alias("token"))
         .filter(col("token") != "")
     )
-    tok = tok.localCheckpoint()  # consumers: per-source counts + vocab
+    # consumers: per-source counts + vocab; the staging job's observed
+    # row count is the corpus token total
+    tok, observed = stage(tok)
     c_st = tok.groupBy("source", "token").agg(F.count(F.lit(1)).alias("c_st"))
     n_s = tok.groupBy("source").agg(F.count(F.lit(1)).alias("n_s"))
     c_t = tok.groupBy("token").agg(F.count(F.lit(1)).alias("c_t"))
-    n_total = tok.count()
+    n_total = observed["n"]
 
     # every (source, vocab token) cell: p may be 0 where a source
     # lacks a corpus token (its KL(P||M) term is 0); q is always > 0

@@ -18,7 +18,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
@@ -118,3 +118,41 @@ def empty_frame(spark: SparkSession, schema: StructType) -> DataFrame:
         .where(F.lit(False))
         .select(*[F.lit(None).cast(f.dataType).alias(f.name) for f in schema.fields])
     )
+
+
+def stage(
+    df: DataFrame, *metrics, names: list[str] | None = None
+) -> tuple[DataFrame, dict]:
+    """Materialize ``df`` with one ``localCheckpoint`` job: the one way
+    the package stages an intermediate.
+
+    Returns ``(staged, observed)``: ``observed`` holds the row count
+    ``n`` and every aggregate in ``metrics``, computed by the same job
+    (an Observation, no second pass). The first ``len(names)`` columns
+    (default: all) are staged under ``names``; any further columns are
+    read only by ``metrics``, which is how a metric reads a value of
+    the staged rows (e.g. ``bit_xor(_h)`` over an extra ``_h`` hash
+    column).
+
+    The columns cross the observe node under temporary names: two
+    renames that the optimizer can neither collapse nor strip, so the
+    checkpoint outputs fresh, unqualified attributes. A plain
+    pass-through of a view column (``g.v``) would carry the source
+    relation's unqualified constraints under a qualified attribute;
+    Spark's checkpoint keeps such constraints on an attribute id it
+    no longer outputs, and the next union over the checkpoint fails
+    analysis ("key not found").
+
+    The blocks are executor-local (not durable): losing an executor
+    loses the staged rows."""
+    names = names or df.columns
+    tmp = [f"_c{i}" for i in range(len(names))]
+    obs = Observation()
+    staged = (
+        df.toDF(*tmp, *df.columns[len(tmp):])
+        .observe(obs, F.expr("count(1) AS n"), *metrics)
+        .select(*tmp)
+        .toDF(*names)
+        .localCheckpoint()
+    )
+    return staged, obs.get

@@ -21,6 +21,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
 
+from llamadb_spark.session import stage
+
 
 def read_csv(
     spark: SparkSession, path: str, schema: StructType | str, header: bool = True
@@ -76,9 +78,9 @@ def read_json_quarantine(
 
     One scan serves both sides: Spark refuses to evaluate a query
     that references ONLY the corrupt-record capture column
-    (QUERY_ONLY_CORRUPT_RECORD_COLUMN), so the raw read is cached and
-    both filters carve it — which is also the efficient shape (one
-    pass populates both outputs).
+    (QUERY_ONLY_CORRUPT_RECORD_COLUMN), so the raw read is staged
+    (one eager job) and both filters carve it — which is also the
+    efficient shape (one pass populates both outputs).
     """
     from pyspark.sql import functions as F
 
@@ -93,12 +95,11 @@ def read_json_quarantine(
     schema_with_capture = StructType(list(schema.fields)).add(
         "_corrupt_record", "string"
     )
-    raw = (
+    raw, _ = stage(
         spark.read.schema(schema_with_capture)
         .option("mode", "PERMISSIVE")
         .option("columnNameOfCorruptRecord", "_corrupt_record")
         .json(path)
-        .cache()
     )
     clean = raw.filter(F.col("_corrupt_record").isNull()).drop("_corrupt_record")
     bad = raw.filter(F.col("_corrupt_record").isNotNull()).select(

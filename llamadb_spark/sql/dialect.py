@@ -24,7 +24,7 @@ from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from llamadb_spark.session import empty_frame
+from llamadb_spark.session import empty_frame, stage
 
 
 class LlamaError(Exception):
@@ -394,36 +394,6 @@ def _parse_recursive(sql: str):
     return name, cols, base_src, step_src, union_all, final
 
 
-def _checkpoint(
-    df: DataFrame, *metrics, names: list[str] | None = None
-) -> tuple[DataFrame, dict]:
-    """localCheckpoint ``df`` with its row count ``n`` and ``metrics``
-    observed in the same job; returns ``(staged, observed metrics)``.
-    The first ``len(names)`` columns (default: all) are staged under
-    ``names``; any further columns are read only by ``metrics``.
-
-    The columns cross the observe node under temporary names: two
-    renames that the optimizer can neither collapse nor strip, so the
-    checkpoint outputs fresh, unqualified attributes. A plain
-    pass-through of a view column (``g.v``) would carry the source
-    relation's unqualified constraints under a qualified attribute;
-    Spark's checkpoint keeps such constraints on an attribute id it
-    no longer outputs, and the next union over the checkpoint fails
-    analysis ("key not found"). Table writes (``_stage``) and
-    ``recursive_sql``'s frontiers both stage through here."""
-    names = names or df.columns
-    tmp = [f"_c{i}" for i in range(len(names))]
-    obs = Observation()
-    staged = (
-        df.toDF(*tmp, *df.columns[len(tmp):])
-        .observe(obs, F.expr("count(1) AS n"), *metrics)
-        .select(*tmp)
-        .toDF(*names)
-        .localCheckpoint()
-    )
-    return staged, obs.get
-
-
 def _observed_rows(obs: Observation) -> int:
     """The ``n`` row count an Observation recorded. An observed node
     under a join can be dropped unreported: AQE replaces a LEFT join
@@ -441,7 +411,7 @@ def recursive_sql(
     own parser refuses — via iterative frontier materialization, the
     same fixpoint loop discipline as the connected-components
     operator's star rounds (one checkpoint per round through
-    ``_checkpoint``, driver sees one count per round, O(frontier)
+    ``stage``, driver sees one count per round, O(frontier)
     state).
 
     Standard SQL semantics: each iteration the recursive reference
@@ -478,7 +448,7 @@ def recursive_sql(
             base = base.toDF(*cols)
         if not union_all:
             base = base.distinct()
-        acc, _ = _checkpoint(base)
+        acc, _ = stage(base)
         frontier = acc
         for _ in range(max_iter):
             frontier.createOrReplaceTempView(name)
@@ -495,7 +465,7 @@ def recursive_sql(
             # observed inside the checkpoint job itself (r10: the
             # former post-hoc count() was a second job per round —
             # pure driver latency on every round at any scale).
-            new, observed = _checkpoint(step)
+            new, observed = stage(step)
             if observed["n"] == 0:
                 break
             acc = acc.unionAll(new)
@@ -505,7 +475,7 @@ def recursive_sql(
                 # and its union children are each checkpointed
                 # frontiers, so the lazy union is flat (no recompute,
                 # no deep lineage).
-                acc, _ = _checkpoint(acc)
+                acc, _ = stage(acc)
             frontier = new
         else:
             raise LlamaError(
@@ -1362,7 +1332,7 @@ class LlamaSession:
         error raised is the first failed check in declaration order.
         ``matches`` are MERGE's two observed counts (see _merge_df).
         Raises before the caller swaps anything in. The checkpoint
-        renames the columns to fresh attributes (``_checkpoint``)."""
+        renames the columns to fresh attributes (``session.stage``)."""
         checks = self._row_checks(spec)
         first_failed = (
             "CASE "
@@ -1372,7 +1342,7 @@ class LlamaSession:
             else "CAST(NULL AS INT)"
         )
         try:
-            staged, observed = _checkpoint(
+            staged, observed = stage(
                 df.selectExpr("*", f"{first_failed} AS _failed"),
                 F.expr("min(_failed) AS failed"),
                 names=[c.name for c in spec.columns],

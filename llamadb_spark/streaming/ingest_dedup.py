@@ -20,6 +20,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 
+from llamadb_spark.session import stage
 from llamadb_spark.sources import versioned
 from llamadb_spark.streaming.ivm import gated_drain, read_log
 
@@ -47,9 +48,9 @@ def ingest_dedup_stream(
         corpus = base(corpus_path)
         if corpus is None:
             corpus = batch_df.limit(0)
-        matches = incremental_jaccard_matches(
-            batch_df, corpus, threshold=threshold
-        ).localCheckpoint()
+        matches, _ = stage(
+            incremental_jaccard_matches(batch_df, corpus, threshold=threshold)
+        )
         accepted = batch_df.join(
             matches.select("doc_id"), "doc_id", "left_anti"
         )

@@ -28,6 +28,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.functions import col
 
+from llamadb_spark.session import stage
 from llamadb_spark.sources import versioned
 from llamadb_spark.streaming.ivm import gated_drain, read_log, stamp_params
 
@@ -83,9 +84,7 @@ def ingest_embed_dedup_stream(
     )
 
     def step(batch_df: DataFrame, base) -> list[DataFrame]:
-        batch = _with_buckets(
-            batch_df, num_planes, num_tables
-        ).localCheckpoint()
+        batch, _ = stage(_with_buckets(batch_df, num_planes, num_tables))
         corpus = base(corpus_path)
         if corpus is None:
             corpus = batch.limit(0)
@@ -105,7 +104,7 @@ def ingest_embed_dedup_stream(
             .select("vec_id", "match_id")
             .distinct()
         )
-        matches = (
+        matches, _ = stage(
             cand.join(
                 batch.select(
                     "vec_id", as_double(col("embedding")).alias("b_v")
@@ -122,7 +121,6 @@ def ingest_embed_dedup_stream(
             .withColumn("cos", F.round(cosine(col("b_v"), col("c_v")), 6))
             .filter(col("cos") >= threshold)
             .select("vec_id", "match_id", "cos")
-            .localCheckpoint()
         )
         dup_ids = matches.select("vec_id").distinct()
         accepted = batch.join(dup_ids, "vec_id", "left_anti")

@@ -31,7 +31,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import col
 from pyspark.sql.types import LongType, StructField, StructType
 
-from llamadb_spark.session import empty_frame
+from llamadb_spark.session import empty_frame, stage
 from llamadb_spark.sources import versioned
 from llamadb_spark.streaming.ivm import gated_drain
 
@@ -93,9 +93,8 @@ def ingest_line_dedup_stream(
             (col("doc_id") == col("keep_doc"))
             & (col("line_no") == col("keep_line_no")),
         )
-        cleaned = (
-            marked.groupBy("doc_id")
-            .agg(
+        cleaned, _ = stage(
+            marked.groupBy("doc_id").agg(
                 F.count(F.lit(1)).alias("n_lines"),
                 F.sum(
                     (~F.coalesce(col("is_first"), F.lit(False))).cast(
@@ -119,7 +118,6 @@ def ingest_line_dedup_stream(
                     "\n",
                 ).alias("clean_text"),
             )
-            .localCheckpoint()
         )
         prev = base(corpus_path)
         corpus = cleaned if prev is None else prev.unionByName(cleaned)

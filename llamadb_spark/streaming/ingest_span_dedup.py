@@ -33,6 +33,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import col, lit
 from pyspark.sql.window import Window
 
+from llamadb_spark.session import stage
 from llamadb_spark.sources import versioned
 from llamadb_spark.streaming.ivm import gated_drain, read_log, stamp_params
 
@@ -87,9 +88,9 @@ def ingest_span_dedup_stream(
     )
 
     def step(batch_df: DataFrame, base) -> list[DataFrame]:
-        batch = _with_gram_hashes(
-            batch_df.select("doc_id", "text"), min_len
-        ).localCheckpoint()
+        batch, _ = stage(
+            _with_gram_hashes(batch_df.select("doc_id", "text"), min_len)
+        )
         corpus = base(corpus_path)
         if corpus is None:
             corpus = batch.limit(0)
@@ -155,12 +156,12 @@ def ingest_span_dedup_stream(
             )
             .filter(col("dup_permille") >= dup_permille_gate)
         )
-        matches = (
-            gated.join(spans.select("doc_id", "match_id").distinct(), "doc_id")
-            .select(
+        matches, _ = stage(
+            gated.join(
+                spans.select("doc_id", "match_id").distinct(), "doc_id"
+            ).select(
                 "doc_id", "match_id", "dup_chars", "doc_len", "dup_permille"
             )
-            .localCheckpoint()
         )
         dup_ids = matches.select("doc_id").distinct()
         accepted = batch.join(dup_ids, "doc_id", "left_anti")

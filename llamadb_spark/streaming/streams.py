@@ -14,6 +14,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.functions import col, lit
 
+from llamadb_spark.session import stage
+
+
 def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """File-source stream over the events table. In production this
     is a Kafka/file-drop source; the parquet file source has the
@@ -403,7 +406,9 @@ def purchases_without_recent_views_stream(
 
 def _await_drained(q, timeout_s: int) -> None:
     """Wait until a finite availableNow query has consumed its
-    source, then stop it.
+    source, then stop it. Raises ``TimeoutError`` (after stopping the
+    query) if it has neither terminated nor drained within
+    ``timeout_s``.
 
     Plain availableNow queries self-terminate; but a stateful
     operator with PROCESSING-TIME timers (applyInPandasWithState +
@@ -437,17 +442,18 @@ def _await_drained(q, timeout_s: int) -> None:
 
     deadline = _time.time() + timeout_s
     empty_seen, last_bid = 0, -1
-    while q.isActive and _time.time() < deadline:
+    while q.isActive and empty_seen < 2:
+        if _time.time() >= deadline:
+            q.stop()
+            raise TimeoutError(
+                f"{q.name}: stream not drained within {timeout_s} s"
+            )
         lp = q.lastProgress
         if lp is not None and lp.get("batchId", -1) != last_bid:
             last_bid = lp.get("batchId", -1)
-            if lp.get("numInputRows", 0) == 0:
-                empty_seen += 1
-                if empty_seen >= 2:
-                    break
-            else:
-                empty_seen = 0
-        q.awaitTermination(0.15)
+            empty_seen = empty_seen + 1 if lp.get("numInputRows", 0) == 0 else 0
+        if empty_seen < 2:
+            q.awaitTermination(0.15)
     if q.isActive:
         q.stop()
 
@@ -666,7 +672,11 @@ def topk_users_stream_foreachbatch(
             )
         else:
             merged = batch_df
-        merged.cache().createOrReplaceTempView(state_tbl)
+        # staged: the rank below and the next batch both read it, and
+        # the next batch's state plan starts from these blocks instead
+        # of nesting this one
+        merged, _ = stage(merged)
+        merged.createOrReplaceTempView(state_tbl)
         w = Window.partitionBy("event_type").orderBy(
             col("total_value").desc(), col("user_id")
         )
@@ -684,7 +694,11 @@ def topk_users_stream_foreachbatch(
         .start()
     )
     try:
-        q.awaitTermination(timeout_s)
+        # no stateful timers — availableNow terminates on its own
+        if not q.awaitTermination(timeout_s):
+            raise TimeoutError(
+                f"{name}: stream not drained within {timeout_s} s"
+            )
     finally:
         if q.isActive:
             q.stop()

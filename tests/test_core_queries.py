@@ -91,24 +91,33 @@ def test_q23_cube_single_pass(spark, sf_dir):
     assert total[0].n_rows == sum(r.n_rows for r in leaves)
 
 
-def test_run_with_observation_rides_the_plan(spark, sf_dir):
-    """Observation metrics must equal the independently computed
-    aggregates WITHOUT a second pass over the data (one job, the
-    metrics ride the same action that materializes the rows)."""
-    import pyspark.sql.functions as F
+def test_stage_metrics_ride_the_checkpoint_job(spark, sf_dir):
+    """Metrics observed by ``stage`` must equal the independently
+    computed aggregates WITHOUT a second pass over the data (one job:
+    the metrics ride the checkpoint job that materializes the rows)."""
+    import uuid
 
-    from llamadb_spark.plans.explain import run_with_observation
+    from llamadb_spark.session import stage
 
     df = (
         spark.read.parquet(f"{sf_dir}/orders.parquet")
         .filter(F.col("o_totalprice") > 1000)
         .select("o_orderkey", "o_totalprice")
     )
-    rows, m = run_with_observation(
-        df,
-        n=F.count(F.lit(1)),
-        total=F.round(F.sum("o_totalprice"), 2),
-    )
+    sc = spark.sparkContext
+    group = f"stage-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        staged, m = stage(
+            df.select("*", F.col("o_totalprice").alias("_p")),
+            F.round(F.sum("_p"), 2).alias("total"),
+            names=df.columns,
+        )
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
+    rows = staged.collect()
+    assert staged.columns == ["o_orderkey", "o_totalprice"]
     assert m["n"] == len(rows)
     assert m["total"] == round(sum(r.o_totalprice for r in rows), 2)
     assert m["n"] > 0

@@ -16,9 +16,6 @@ from __future__ import annotations
 
 import inspect
 import re
-import sys
-
-sys.path.insert(0, "/root/repo")
 
 
 def test_oracles_subset_of_queries():

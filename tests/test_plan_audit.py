@@ -15,10 +15,6 @@ introduce these nodes).
 
 from __future__ import annotations
 
-import sys
-
-sys.path.insert(0, "/root/repo")
-
 import __spark_entry__ as entry_mod
 
 

@@ -13,6 +13,9 @@ Rules:
 - `.rdd` / `sparkContext.parallelize`: forbidden in queries/
   (the DataFrame-first contract); operators may touch the context
   only for broadcast variables.
+- `.localCheckpoint(`, `.checkpoint(`, `.cache()`, `.persist(`: only
+  in session.py (``stage``); `Observation(` only there and at the
+  allowlisted sites below.
 """
 
 from __future__ import annotations
@@ -40,15 +43,10 @@ ROOT = os.path.join(os.path.dirname(__file__), "..", "llamadb_spark")
 #:     IVFADC trainer's twins of (5)/(6)
 #:   pipeline.py: s10's and s15's 1-row query-vector fetches
 #:     (orderBy+limit(1) each)
-#:   plans/explain.py: run_with_observation returns the caller's own
-#:     materialized result — the collect IS the caller's action (the
-#:     observe node rides along); boundedness is the caller's query,
-#:     not a loop this helper introduces
 _COLLECT_ALLOW = {
     "operators/dedup.py": 1,
     "operators/similarity.py": 10,
     "queries/pipeline.py": 2,
-    "plans/explain.py": 1,
     # 1-row max-timestamp scalar for the watermark sentinel staging
     "streaming/streams.py": 1,
     # persisted IVF-PQ index: model load (n_cells + m·n_codes small
@@ -57,6 +55,17 @@ _COLLECT_ALLOW = {
     "operators/ann_index.py": 3,
 }
 
+#: file (repo-relative) -> allowed comment-stripped ``Observation(``
+#: occurrences outside ``session.stage``, each justified:
+#:   sql/dialect.py: MERGE's cardinality check — two counts observed
+#:     on the two sides of the commit's join, UNDER the join (not on a
+#:     checkpoint), read by ``_observed_rows``
+_OBSERVATION_ALLOW = {"sql/dialect.py": 2}
+
+_STAGING = re.compile(
+    r"\.localCheckpoint\(|\.checkpoint\(|\.cache\(\)|\.persist\("
+)
+_OBSERVATION = re.compile(r"\bObservation\(")
 _FORBIDDEN = re.compile(r"\.toPandas\(\)|\.coalesce\(1\)|\.repartition\(1\)")
 _COLLECT = re.compile(r"\.collect\(\)")
 # .rdd.getNumPartitions() is exempt: a metadata-only partition-count
@@ -115,6 +124,27 @@ def test_no_rdd_anywhere_in_package():
         if n:
             hits[rel] = n
     assert not hits, f"RDD usage in the DataFrame-first package: {hits}"
+
+
+def test_one_staging_primitive():
+    """Every materialized intermediate goes through ``session.stage``:
+    no other module checkpoints, caches or persists a frame, and no
+    other module builds an Observation beyond the allowlisted ones, so
+    how an intermediate is staged (and what it reports) is decided in
+    one place."""
+    over = {}
+    for rel, f in _sources():
+        if rel == "session.py":
+            continue
+        code = list(_code_lines(f))
+        staged = sum(len(_STAGING.findall(c)) for c in code)
+        observed = sum(len(_OBSERVATION.findall(c)) for c in code)
+        if staged or observed > _OBSERVATION_ALLOW.get(rel, 0):
+            over[rel] = (staged, observed)
+    assert not over, (
+        "staging outside session.stage (checkpoint/cache/persist, "
+        f"Observation) — use stage(): {over}"
+    )
 
 
 def test_one_exactly_once_gate():

@@ -1262,6 +1262,53 @@ def test_gated_drain_fails_loudly(spark, tmp_path):
         read_log(spark, str(tmp_path / "never_written"))
 
 
+def _slow_events_stream(spark, tmp_path, tag):
+    """A one-batch events stream whose ``value`` passes through a
+    pandas UDF that sleeps 5 s: no drain finishes within 1 s."""
+    import pyspark.sql.functions as F
+
+    stream = _stage_drop(
+        spark, tmp_path, tag, "event_type string, user_id long, value double",
+        [[("view", 1, 1.0), ("buy", 2, 2.0)]],
+    )
+
+    @F.pandas_udf("double")
+    def slow(v):
+        import time
+
+        time.sleep(5)
+        return v
+
+    return stream().withColumn("value", slow("value"))
+
+
+def test_topk_foreachbatch_drain_fails_loudly(spark, tmp_path):
+    """A foreachBatch top-k drain that outlives ``timeout_s`` raises
+    instead of handing back the partial leaderboard."""
+    from llamadb_spark.streaming.streams import topk_users_stream_foreachbatch
+
+    before = {q.id for q in spark.streams.active}
+    with pytest.raises(TimeoutError):
+        topk_users_stream_foreachbatch(
+            _slow_events_stream(spark, tmp_path, "slow_topk"),
+            name="topk_timeout", k=2, timeout_s=1,
+        )
+    assert {q.id for q in spark.streams.active} <= before
+
+
+def test_run_to_memory_drain_fails_loudly(spark, tmp_path):
+    """A memory-sink drain that has neither terminated nor seen its
+    second empty batch by ``timeout_s`` raises instead of returning
+    the rows committed so far."""
+    before = {q.id for q in spark.streams.active}
+    with pytest.raises(TimeoutError):
+        run_to_memory(
+            _slow_events_stream(spark, tmp_path, "slow_mem"),
+            "mem_timeout", output_mode="append", timeout_s=1,
+        )
+    assert {q.id for q in spark.streams.active} <= before
+
+
 def _stage_shuffled_events(
     spark, tmp_path, n_files=3, tag="ooo", cols=None
 ):

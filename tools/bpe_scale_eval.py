@@ -16,10 +16,12 @@ Run: python tools/bpe_scale_eval.py [sizes...]   (default 256 1024 8192 32768)
 
 from __future__ import annotations
 
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 
 def synth_merges(n: int, max_len: int = 12):

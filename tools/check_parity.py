@@ -10,11 +10,14 @@ floats via repr, rows sorted). Usage:
 
 from __future__ import annotations
 
+import os
 import sys
 import time
 
 import duckdb
 import pandas as pd
+
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def value_hash(df: pd.DataFrame) -> str:
@@ -36,7 +39,7 @@ def value_hash(df: pd.DataFrame) -> str:
 
 
 def main() -> int:
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, REPO)
     import __spark_entry__ as e
     from llamadb_spark.session import get_spark
 

@@ -15,7 +15,10 @@ Exit code 1 if any hard hazard (cartesian / row-Python) is found.
 
 from __future__ import annotations
 
+import os
 import sys
+
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def audit_plan(plan: str) -> dict:
@@ -34,7 +37,7 @@ def audit_plan(plan: str) -> dict:
 
 
 def main() -> int:
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, REPO)
     import __spark_entry__ as e
     from llamadb_spark.session import get_spark
 

@@ -11,12 +11,15 @@ Usage: python tools/plan_report.py [sf_dir]
 
 from __future__ import annotations
 
+import os
 import re
 import sys
 
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 
 def main() -> int:
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, REPO)
     import __spark_entry__ as e
     from llamadb_spark.session import get_spark
 
@@ -82,7 +85,7 @@ def main() -> int:
         "for that key cover the post-drain Markov rollup only.",
         "",
     ]
-    with open("/root/repo/PLAN_REPORT.md", "w") as fh:
+    with open(os.path.join(REPO, "PLAN_REPORT.md"), "w") as fh:
         fh.write("\n".join(lines))
     print(f"wrote PLAN_REPORT.md ({len(rows)} keys, {n_cart} cartesian)")
     return 0

@@ -19,9 +19,12 @@ Defaults: 20000 64 16 0.15.
 from __future__ import annotations
 
 import json
+import os
 import sys
 
 import numpy as np
+
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def make_clustered(n: int, d: int, k: int, sigma: float, seed: int = 7):
@@ -35,7 +38,7 @@ def make_clustered(n: int, d: int, k: int, sigma: float, seed: int = 7):
 
 
 def main() -> int:
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, REPO)
     from llamadb_spark.operators.similarity import ivfpq_topk, knn_bruteforce
     from llamadb_spark.session import get_spark
 

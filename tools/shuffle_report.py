@@ -14,7 +14,10 @@ Usage: python tools/shuffle_report.py [sf_dir]
 
 from __future__ import annotations
 
+import os
 import sys
+
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def _metrics(node) -> dict:
@@ -73,7 +76,7 @@ def collect_metrics(plan) -> dict:
 
 
 def main() -> int:
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, REPO)
     import __spark_entry__ as e
     from llamadb_spark.session import get_spark
 
@@ -250,7 +253,7 @@ def main() -> int:
         "(tests/test_source_hygiene.py).",
         "",
     ]
-    with open("/root/repo/SHUFFLE_REPORT.md", "w") as fh:
+    with open(os.path.join(REPO, "SHUFFLE_REPORT.md"), "w") as fh:
         fh.write("\n".join(lines))
     print(
         f"wrote SHUFFLE_REPORT.md ({len(rows)} keys, "
