@@ -948,17 +948,20 @@ GROUP BY a.week
 
 def e24_transition_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """STREAMING twin of e21, driver-attestable: drain the events
-    table through streaming/transitions.py transitions_stream
-    (applyInPandasWithState, one string of state per user) with an
-    availableNow trigger, then aggregate the emitted steps into the
-    same Markov matrix e21 computes in batch. Because the oracle is
-    e21's own SQL, a hash match here IS the stream≡batch proof,
-    recorded by the external driver rather than only by our tests.
+    table through streaming/transitions.py transitions_stream (the
+    event-time reorder skeleton: events held in state until the
+    watermark passes them, then chained in exact event-time order)
+    with an availableNow trigger, then aggregate the emitted steps
+    into the same Markov matrix e21 computes in batch. Because the
+    oracle is e21's own SQL, a hash match here IS the stream≡batch
+    proof, recorded by the external driver rather than only by our
+    tests.
 
     Scale: the stateful operator's memory is active-user-bounded
-    (one string per user, idle-evicted); the aggregation is the
-    type×type-bounded groupBy; the probability normalization windows
-    over the tiny matrix itself.
+    (last event type per user, plus the events inside the watermark
+    horizon; evicted after an event-time idle period); the
+    aggregation is the type×type-bounded groupBy; the probability
+    normalization windows over the tiny matrix itself.
     """
     from pyspark.sql import functions as F
     from pyspark.sql.window import Window
@@ -969,12 +972,8 @@ def e24_transition_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from llamadb_spark.streaming.transitions import transitions_stream
 
-    # round 6: the driver-attested streaming key now runs the
-    # OUT-OF-ORDER-ROBUST path — watermark-buffered state (events
-    # held in array-typed state until watermark passage, processed in
-    # exact event-time order, flushed by event-time timers via the
-    # staged end-of-stream sentinels) — instead of assuming ordered
-    # arrival. Output contract unchanged: hash == batch e21's SQL.
+    # the staged end-of-stream sentinels advance the watermark past
+    # every event, so the event-time timers flush every buffer
     steps = transitions_stream(
         read_events_stream_unordered(spark, sf_dir),
         watermark_delay="7000 days",

@@ -1,33 +1,29 @@
 """Stateful streaming CEP (SURVEY §2 #178, streaming form): the
-applyInPandasWithState twin of operators/events.cep_sequence_matches
+event-time twin of operators/events.cep_sequence_matches
 (A → ¬N → B within T). Windowed aggregation can't express it — the
 match condition couples THREE event types with an ordering/negation
-constraint — so it's the same custom-stateful escape hatch as
+constraint — so it runs on the reorder skeleton (reorder.py), like
 sessionization.
 
-State per user_id: (last_trigger_us, last_negation_us) — two longs
-per ACTIVE user regardless of event volume, evicted by processing
-timeout once a full window passes with no traffic (a trigger older
-than `within` can never match again). Matches are emitted in the
-micro-batch that carries the target event, so results are
-incremental and exactly-once per match under the normal
-checkpointed-sink contract.
+Carry per user_id: (last_trigger_us, last_negation_us), two longs,
+plus the skeleton's buffer of events still ahead of the watermark.
+A user is evicted once the buffer is drained and the watermark has
+passed the last trigger by `within` (such a trigger can never match
+again). Matches are emitted in the micro-batch whose watermark passes
+the target event.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-from typing import Any
-
-import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import (
     LongType,
     StructField,
     StructType,
     TimestampType,
 )
+
+from llamadb_spark.streaming.reorder import reorder_buffered
 
 CEP_SCHEMA = StructType(
     [
@@ -39,24 +35,6 @@ CEP_SCHEMA = StructType(
     ]
 )
 
-#: -1 encodes "never seen" (state tuples can't hold NULLs portably).
-_STATE_SCHEMA = "trig_us long, neg_us long"
-
-
-def _us(ts) -> int:
-    return int(pd.Timestamp(ts).value // 1000)
-
-
-#: carry + out-of-order buffer (see cep_matches_stream).
-_BUF_STATE_SCHEMA = (
-    "trig_us long, neg_us long, buf_eid array<long>, buf_us array<long>, "
-    "buf_type array<string>"
-)
-
-#: end-of-stream watermark sentinel user (output-filtered; an input
-#: filter would be pushed below the EventTimeWatermark node).
-SENTINEL_USER = -1
-
 
 def cep_matches_stream(
     events: DataFrame,
@@ -64,196 +42,46 @@ def cep_matches_stream(
     target: str = "purchase",
     negation: str = "error",
     within_seconds: int = 1800,
-    watermark_delay: str | None = None,
+    *,
+    watermark_delay: str,
     late_counter=None,
 ) -> DataFrame:
-    """Streaming pattern-with-negation matches, keyed on user_id.
-
-    Default (ordered) mode assumes a user's events arrive in
-    event-time order across micro-batches (in-batch rows are sorted
-    here). With ``watermark_delay`` set (round-6 out-of-order fix),
-    events buffer in array-typed state until the watermark passes
-    them and are processed in exact event-time order — any arrival
-    order with disorder ≤ the delay reproduces the batch operator
-    exactly. State stays active-user-bounded: the buffer holds only
-    events inside the watermark horizon, and a user whose trigger
-    aged past `within` is evicted once the buffer drains. Output rows
-    are identical to the batch operator's over the events the stream
-    has seen — asserted stream≡batch in tests/test_streaming.py.
-    """
-    if watermark_delay is not None:
-        return _cep_unordered(
-            events, trigger, target, negation, within_seconds,
-            watermark_delay, late_counter,
-        )
+    """Streaming pattern-with-negation matches, keyed on user_id. For
+    any arrival order with disorder ≤ ``watermark_delay`` the output
+    rows equal the batch operator's over the events the stream has
+    seen — asserted stream≡batch in tests/test_streaming.py. Rows
+    later than the delay are dropped (see reorder_buffered)."""
     within_us = within_seconds * 1_000_000
 
-    def fn(
-        key: Any, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        (user_id,) = key
-        if state.hasTimedOut:
-            if state.exists:
-                state.remove()
-            return
-
-        if state.exists:
-            trig_us, neg_us = state.get
-        else:
-            trig_us, neg_us = -1, -1
-
-        rows = pd.concat(list(pdfs)).sort_values(["ts", "event_id"])
-        out: list[tuple] = []
-        for eid, etype, ts in zip(
-            rows["event_id"], rows["event_type"], rows["ts"]
-        ):
-            t = _us(ts)
-            if etype == target:
-                if (
-                    trig_us >= 0
-                    and t - trig_us <= within_us
-                    and (neg_us < trig_us)  # -1 sentinel = no negation
-                ):
-                    out.append((int(eid), trig_us, t))
+    def advance(carry, ready):
+        # -1 encodes "never seen" (state tuples can't hold NULLs
+        # portably)
+        trig_us, neg_us = carry or (-1, -1)
+        out = []
+        for t, eid, etype in ready:
+            if (
+                etype == target
+                and trig_us >= 0
+                and t - trig_us <= within_us
+                and neg_us < trig_us  # -1 sentinel = no negation
+            ):
+                out.append((eid, trig_us, t, t - trig_us))
             # state transitions AFTER the match check: the batch
             # operator's window frame excludes the current row
             if etype == trigger:
                 trig_us = t
             elif etype == negation:
                 neg_us = t
+        return (trig_us, neg_us), out
 
-        state.update((trig_us, neg_us))
-        state.setTimeoutDuration(within_seconds * 1000)
-        if out:
-            yield pd.DataFrame(
-                {
-                    "user_id": [user_id] * len(out),
-                    "match_id": [o[0] for o in out],
-                    "trigger_ts": [pd.Timestamp(o[1], unit="us") for o in out],
-                    "target_ts": [pd.Timestamp(o[2], unit="us") for o in out],
-                    "gap_us": [o[2] - o[1] for o in out],
-                }
-            )
-
-    events = events.select("user_id", "event_id", "event_type", "ts")
-    return events.groupBy("user_id").applyInPandasWithState(
-        fn,
-        outputStructType=CEP_SCHEMA,
-        stateStructType=_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.ProcessingTimeTimeout,
-    )
-
-
-def _cep_unordered(
-    events: DataFrame,
-    trigger: str,
-    target: str,
-    negation: str,
-    within_seconds: int,
-    watermark_delay: str,
-    late_counter=None,
-) -> DataFrame:
-    """Watermark-buffered CEP (see cep_matches_stream). Incoming rows
-    behind the current watermark are dropped by the function itself —
-    Spark's JVM late filter runs one batch LAGGED (previous batch's
-    watermark, inclusive; measured, see transitions_stream for the
-    corrected round-8 contract), leaving a one-batch window this
-    in-function drop covers — with counts surfaced via the optional
-    ``late_counter`` accumulator."""
-    from pyspark.sql import functions as F
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
-    within_us = within_seconds * 1_000_000
-
-    def fn(key, pdfs, state):
-        (user_id,) = key
-        wm_us = state.getCurrentWatermarkMs() * 1000
-        if state.exists:
-            trig_us, neg_us, b_eid, b_us, b_type = state.get
-        else:
-            trig_us, neg_us, b_eid, b_us, b_type = -1, -1, [], [], []
-
-        merged = list(zip(b_us, b_eid, b_type))
-        if not state.hasTimedOut:
-            n_late = 0
-            for pdf in pdfs:
-                for row in zip(
-                    (_us(t) for t in pdf["ts"]),
-                    (int(e) for e in pdf["event_id"]),
-                    pdf["event_type"],
-                ):
-                    # beyond-bound disorder: trigger/negation state
-                    # may already reflect later events — drop
-                    if row[0] < wm_us:
-                        n_late += 1
-                    else:
-                        merged.append(row)
-            if n_late and late_counter is not None:
-                late_counter.add(n_late)
-        merged.sort()
-        # strict flush to match the strict drop above: a ts == wm row
-        # is held until the watermark strictly passes it, never
-        # processed in the same batch another same-ts row was flushed
-        ready = [r for r in merged if r[0] < wm_us]
-        held = [r for r in merged if r[0] >= wm_us]
-
-        out = []
-        for t, eid, etype in ready:
-            if etype == target:
-                if (
-                    trig_us >= 0
-                    and t - trig_us <= within_us
-                    and (neg_us < trig_us)
-                ):
-                    out.append((int(eid), trig_us, t))
-            if etype == trigger:
-                trig_us = t
-            elif etype == negation:
-                neg_us = t
-
-        if held:
-            state.update(
-                (
-                    trig_us, neg_us,
-                    [r[1] for r in held],
-                    [r[0] for r in held],
-                    [r[2] for r in held],
-                )
-            )
-            state.setTimeoutTimestamp(min(r[0] for r in held) // 1000 + 1)
-        elif trig_us >= 0 and wm_us <= trig_us + within_us:
+    def expire(carry, wm_us):
+        trig_us, _neg_us = carry
+        if trig_us >= 0 and wm_us <= trig_us + within_us:
             # trigger still inside its match window: keep it
-            state.update((trig_us, neg_us, [], [], []))
-            state.setTimeoutTimestamp(
-                max((trig_us + within_us) // 1000,
-                    state.getCurrentWatermarkMs()) + 1
-            )
-        else:
-            # expired trigger (or none) and empty buffer: evict
-            if state.exists:
-                state.remove()
-        if out:
-            yield pd.DataFrame(
-                {
-                    "user_id": [user_id] * len(out),
-                    "match_id": [o[0] for o in out],
-                    "trigger_ts": [pd.Timestamp(o[1], unit="us") for o in out],
-                    "target_ts": [pd.Timestamp(o[2], unit="us") for o in out],
-                    "gap_us": [o[2] - o[1] for o in out],
-                }
-            )
+            return carry, [], trig_us + within_us
+        return None, [], None
 
-    withwm = events.withWatermark("ts", watermark_delay)
-    return (
-        withwm.select("user_id", "event_id", "event_type", "ts")
-        .groupBy("user_id")
-        .applyInPandasWithState(
-            fn,
-            outputStructType=CEP_SCHEMA,
-            stateStructType=_BUF_STATE_SCHEMA,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.EventTimeTimeout,
-        )
-        .filter(F.col("user_id") != SENTINEL_USER)
+    return reorder_buffered(
+        events, ("event_type",), advance, expire, CEP_SCHEMA,
+        "trig_us long, neg_us long", watermark_delay, late_counter,
     )

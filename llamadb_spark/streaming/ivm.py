@@ -47,6 +47,7 @@ from pyspark.sql.types import DoubleType, LongType, StructField, StructType
 
 from llamadb_spark.session import empty_frame
 from llamadb_spark.sources import versioned
+from llamadb_spark.streaming.streams import drain
 
 #: name of the batch-id marker inside a version directory; the
 #: leading underscore makes Spark's parquet reader ignore it (same
@@ -193,15 +194,7 @@ def gated_drain(
     if checkpoint_dir is not None:
         w = w.option("checkpointLocation", checkpoint_dir)
     q = w.queryName(name).trigger(availableNow=True).start()
-    try:
-        # no stateful timers — availableNow terminates on its own
-        if not q.awaitTermination(timeout_s):
-            raise TimeoutError(
-                f"{name}: stream not drained within {timeout_s} s"
-            )
-    finally:
-        if q.isActive:
-            q.stop()
+    drain(q, timeout_s)
 
 
 def read_log(spark: SparkSession, path: str) -> DataFrame:

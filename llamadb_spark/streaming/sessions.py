@@ -1,22 +1,18 @@
 """Stateful streaming sessionization (SURVEY §2 #42, streaming form)
-via applyInPandasWithState — the custom-stateful-operator escape
-hatch when windowed aggregation can't express the semantics
+on the event-time reorder skeleton (reorder.py) — the custom-stateful
+escape hatch when windowed aggregation can't express the semantics
 (gap-based sessions have data-dependent window boundaries).
 
-State per user_id: (session_seq, session_start, last_ts, n_events,
-total_value). A session closes when the gap since last_ts exceeds
-the threshold (emitted on the batch that observes the gap) or when
-the state times out after the stream goes quiet.
+Carry per user_id: (session_seq, session_start, last_ts, n_events,
+total_value), plus the skeleton's buffer of events still ahead of the
+watermark. A session closes when an event arrives more than the gap
+after last_ts, or by event time once the watermark passes
+last_ts + gap (no event can extend it any more).
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-from typing import Any
-
-import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import (
     DoubleType,
     LongType,
@@ -24,6 +20,8 @@ from pyspark.sql.types import (
     StructType,
     TimestampType,
 )
+
+from llamadb_spark.streaming.reorder import reorder_buffered
 
 SESSION_SCHEMA = StructType(
     [
@@ -36,156 +34,35 @@ SESSION_SCHEMA = StructType(
     ]
 )
 
-_STATE_SCHEMA = (
-    "session_seq long, start_us long, last_us long, n_events long, total_value double"
-)
-
-#: carry + the out-of-order buffer (parallel arrays of event_id,
-#: ts_us, value) — event-time-horizon bounded, see sessionize_stream.
-_BUF_STATE_SCHEMA = (
-    "session_seq long, start_us long, last_us long, n_events long, "
-    "total_value double, buf_eid array<long>, buf_us array<long>, "
-    "buf_val array<double>"
-)
-
-#: user_id reserved for the end-of-stream watermark sentinel
-#: (filtered from the OUTPUT — an input filter would be pushed below
-#: the EventTimeWatermark node and defeat the sentinel).
-SENTINEL_USER = -1
-
-
-def _us(ts) -> int:
-    return int(pd.Timestamp(ts).value // 1000)
-
 
 def sessionize_stream(
     events: DataFrame,
     gap_minutes: int = 30,
-    watermark_delay: str | None = None,
-    late_counter=None,
-) -> DataFrame:
-    """Gap-based sessions over a stream keyed by user_id.
-
-    Scale: state is one tuple per active user (not per event).
-    In the default (ordered) mode, timeout eviction removes idle
-    users, so state is bounded by CONCURRENTLY active users. In
-    ``watermark_delay`` mode the bound is weaker — see the
-    unbounded-key note in :func:`_sessionize_unordered`. Arrow-
-    batched like all pandas-with-state operators.
-
-    With ``watermark_delay`` set (round-6 out-of-order fix): events
-    buffer in array-typed state until the watermark passes them, then
-    run through the gap logic in exact event-time order — any arrival
-    order with disorder ≤ the delay yields exactly the batch
-    sessionizer's sessions, and a session is closed by EVENT-TIME
-    once the watermark passes session_end + gap (provably no event
-    can extend it), not by wall-clock idleness. Per-user buffer is
-    bounded by the watermark horizon. Session numbering survives
-    closes (seq persists in state), matching batch numbering.
-    Rows with disorder BEYOND the delay are dropped twice over:
-    Spark's JVM late filter runs with the PREVIOUS batch's watermark
-    (two-watermark semantics, inclusive boundary — measured; see
-    transitions_stream for the corrected round-8 contract), and the
-    operator itself drops rows inside the one-batch gap between that
-    lagged filter and the current watermark, with counts surfaced
-    through the optional ``late_counter`` accumulator.
-    """
-    if watermark_delay is not None:
-        return _sessionize_unordered(
-            events, gap_minutes, watermark_delay, late_counter
-        )
-    gap_us = gap_minutes * 60 * 1_000_000
-
-    def fn(
-        key: Any, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        (user_id,) = key
-        if state.hasTimedOut:
-            if state.exists:
-                seq, start_us, last_us, n, total = state.get
-                state.remove()
-                yield pd.DataFrame(
-                    {
-                        "user_id": [user_id],
-                        "session_seq": [seq],
-                        "session_start": [pd.Timestamp(start_us, unit="us")],
-                        "session_end": [pd.Timestamp(last_us, unit="us")],
-                        "n_events": [n],
-                        "total_value": [total],
-                    }
-                )
-            return
-
-        rows = pd.concat(list(pdfs)).sort_values(["ts", "event_id"])
-        if state.exists:
-            seq, start_us, last_us, n, total = state.get
-        else:
-            seq, start_us, last_us, n, total = 0, None, None, 0, 0.0
-
-        closed: list[tuple] = []
-        for ts, value in zip(rows["ts"], rows["value"]):
-            t = _us(ts)
-            if last_us is None:
-                start_us, last_us, n, total = t, t, 1, float(value)
-            elif t - last_us > gap_us:
-                closed.append((seq, start_us, last_us, n, total))
-                seq, start_us, last_us, n, total = seq + 1, t, t, 1, float(value)
-            else:
-                last_us, n, total = t, n + 1, total + float(value)
-
-        state.update((seq, start_us, last_us, n, total))
-        state.setTimeoutDuration(gap_minutes * 60 * 1000)
-        if closed:
-            yield pd.DataFrame(
-                {
-                    "user_id": [user_id] * len(closed),
-                    "session_seq": [c[0] for c in closed],
-                    "session_start": [pd.Timestamp(c[1], unit="us") for c in closed],
-                    "session_end": [pd.Timestamp(c[2], unit="us") for c in closed],
-                    "n_events": [c[3] for c in closed],
-                    "total_value": [c[4] for c in closed],
-                }
-            )
-
-    return events.groupBy("user_id").applyInPandasWithState(
-        fn,
-        outputStructType=SESSION_SCHEMA,
-        stateStructType=_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.ProcessingTimeTimeout,
-    )
-
-
-def _sessionize_unordered(
-    events: DataFrame,
-    gap_minutes: int,
+    *,
     watermark_delay: str,
     late_counter=None,
 ) -> DataFrame:
-    """Watermark-buffered sessionization (see sessionize_stream).
+    """Gap-based sessions over a stream keyed by user_id. For any
+    arrival order with disorder ≤ ``watermark_delay`` the sessions
+    equal the batch sessionizer's, numbering included (seq persists
+    in the carry across closes); rows later than the delay are
+    dropped (see reorder_buffered).
 
-    State-size tradeoff (documented, deliberate): a user with no
-    buffered events and no open session keeps a minimal carry tuple
-    whose only live field is ``session_seq``, with the timer parked
-    far out and re-armed on each fire. Evicting it would restart
-    that user's numbering at 0 on return, breaking the stream≡batch
-    session_seq contract this operator guarantees. State therefore
-    grows with TOTAL distinct users ever seen (one short tuple each)
-    rather than concurrently-active users — the same O(distinct
-    keys) footprint as any per-key streaming aggregate, and a few
-    dozen bytes/user. If numbering across idle gaps is not needed,
-    use the default ordered mode (timeout-evicting) or persist seq
-    externally and evict here.
+    State-size tradeoff (deliberate): a user with no buffered events
+    and no open session keeps a carry whose only live field is
+    ``session_seq``, with the timer parked far out and re-armed on
+    each fire. Evicting it would restart that user's numbering at 0
+    on return, breaking the stream≡batch session_seq contract. State
+    therefore grows with TOTAL distinct users ever seen (one short
+    tuple each), the same O(distinct keys) footprint as any per-key
+    streaming aggregate.
     """
-    from pyspark.sql import functions as F
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
     gap_us = gap_minutes * 60 * 1_000_000
 
-    def _advance(carry, rows):
-        seq, start_us, last_us, n, total = carry
+    def advance(carry, ready):
+        seq, start_us, last_us, n, total = carry or (0, -1, -1, 0, 0.0)
         closed = []
-        for t, _eid, v in rows:
+        for t, _eid, v in ready:
             if start_us < 0:
                 start_us, last_us, n, total = t, t, 1, float(v)
             elif t - last_us > gap_us:
@@ -195,98 +72,18 @@ def _sessionize_unordered(
                 last_us, n, total = t, n + 1, total + float(v)
         return (seq, start_us, last_us, n, total), closed
 
-    def fn(key, pdfs, state):
-        (user_id,) = key
-        wm_us = state.getCurrentWatermarkMs() * 1000
-        if state.exists:
-            seq, start_us, last_us, n, total, b_eid, b_us, b_val = state.get
-        else:
-            seq, start_us, last_us, n, total = 0, -1, -1, 0, 0.0
-            b_eid, b_us, b_val = [], [], []
+    def expire(carry, wm_us):
+        seq, start_us, last_us, _n, _total = carry
+        if start_us < 0:
+            # no open session: keep seq, park the timer far out
+            return carry, [], wm_us + 48 * gap_us
+        if wm_us < last_us + gap_us:
+            return carry, [], last_us + gap_us
+        return (seq + 1, -1, -1, 0, 0.0), [carry], wm_us + 48 * gap_us
 
-        merged = list(zip(b_us, b_eid, b_val))
-        if not state.hasTimedOut:
-            n_late = 0
-            for pdf in pdfs:
-                for row in zip(
-                    (_us(t) for t in pdf["ts"]),
-                    (int(e) for e in pdf["event_id"]),
-                    (float(v) for v in pdf["value"]),
-                ):
-                    # beyond-bound disorder: the session chain may
-                    # already be flushed past this row — drop it (the
-                    # JVM's lagged late filter leaves a one-batch
-                    # window; see transitions_stream contract)
-                    if row[0] < wm_us:
-                        n_late += 1
-                    else:
-                        merged.append(row)
-            if n_late and late_counter is not None:
-                late_counter.add(n_late)
-        merged.sort()
-        # strict flush: boundary rows (ts == wm) are held until the
-        # watermark strictly passes them, so drop (< wm) and flush
-        # agree — a same-ts later arrival can otherwise enter a
-        # session the carry has already advanced past
-        ready = [r for r in merged if r[0] < wm_us]
-        held = [r for r in merged if r[0] >= wm_us]
-        carry, closed = _advance((seq, start_us, last_us, n, total), ready)
-        seq, start_us, last_us, n, total = carry
-
-        # event-time close: the watermark guarantees no event ≤ wm is
-        # still in flight, so an open session whose gap horizon the
-        # watermark has passed can never be extended again
-        if start_us >= 0 and not held and wm_us >= last_us + gap_us:
-            closed.append((seq, start_us, last_us, n, total))
-            seq, start_us, last_us, n, total = seq + 1, -1, -1, 0, 0.0
-
-        state.update(
-            (
-                seq, start_us, last_us, n, total,
-                [r[1] for r in held],
-                [r[0] for r in held],
-                [r[2] for r in held],
-            )
-        )
-        if held:
-            state.setTimeoutTimestamp(min(r[0] for r in held) // 1000 + 1)
-        elif start_us >= 0:
-            state.setTimeoutTimestamp(
-                max((last_us + gap_us) // 1000, state.getCurrentWatermarkMs())
-                + 1
-            )
-        else:
-            # nothing buffered, no open session: keep seq for batch-
-            # consistent numbering, park the timer far out
-            state.setTimeoutTimestamp(
-                state.getCurrentWatermarkMs() + gap_minutes * 60 * 1000 * 48
-            )
-        if closed:
-            yield pd.DataFrame(
-                {
-                    "user_id": [user_id] * len(closed),
-                    "session_seq": [c[0] for c in closed],
-                    "session_start": [
-                        pd.Timestamp(c[1], unit="us") for c in closed
-                    ],
-                    "session_end": [
-                        pd.Timestamp(c[2], unit="us") for c in closed
-                    ],
-                    "n_events": [c[3] for c in closed],
-                    "total_value": [c[4] for c in closed],
-                }
-            )
-
-    withwm = events.withWatermark("ts", watermark_delay)
-    return (
-        withwm.select("user_id", "event_id", "value", "ts")
-        .groupBy("user_id")
-        .applyInPandasWithState(
-            fn,
-            outputStructType=SESSION_SCHEMA,
-            stateStructType=_BUF_STATE_SCHEMA,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.EventTimeTimeout,
-        )
-        .filter(F.col("user_id") != SENTINEL_USER)
+    return reorder_buffered(
+        events, ("value",), advance, expire, SESSION_SCHEMA,
+        "session_seq long, start_us long, last_us long, n_events long, "
+        "total_value double",
+        watermark_delay, late_counter,
     )

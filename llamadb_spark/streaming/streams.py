@@ -114,20 +114,19 @@ def read_events_stream_unordered(
     spark: SparkSession, sf_dir: str, sentinel_days: int = 8000
 ) -> DataFrame:
     """read_events_stream plus END-OF-STREAM WATERMARK SENTINELS for
-    the watermark-buffered stateful operators (transitions/sessions/
-    cep ``watermark_delay`` mode): two far-future events under the
-    reserved SENTINEL_USER (-1) are staged as extra files after the
-    events file. The first (read in the SAME micro-batch as the data,
-    see files_per_trigger below) advances the global watermark past
-    every real timestamp; the second is the data batch during which
-    the now-expired event-time flush timers actually fire
-    (availableNow runs no trailing no-data batch for timers).
-    Sentinels are built
-    in the RAW file schema (one template row with overridden id/ts
-    columns), so both ts encodings normalize identically to the main
-    file; the operators drop SENTINEL_USER rows on their output side
-    (an input filter would be pushed below the EventTimeWatermark
-    node and starve the watermark).
+    the stateful operators on the event-time reorder skeleton
+    (transitions/sessions/cep, reorder.py): two far-future events
+    under the reserved SENTINEL_USER (-1) are staged as extra files
+    after the events file. The first (read in the SAME micro-batch as
+    the data, see files_per_trigger below) advances the global
+    watermark past every real timestamp; the second is the data batch
+    during which the now-expired event-time flush timers actually
+    fire (availableNow runs no trailing no-data batch for timers).
+    Sentinels are built in the RAW file schema (one template row with
+    overridden id/ts columns), so both ts encodings normalize
+    identically to the main file; the operators drop SENTINEL_USER
+    rows on their output side (an input filter would be pushed below
+    the EventTimeWatermark node and starve the watermark).
     """
     import os
     import shutil
@@ -404,58 +403,21 @@ def purchases_without_recent_views_stream(
     return _purchase_view_interval_join(events, lag, watermark, "left_outer")
 
 
-def _await_drained(q, timeout_s: int) -> None:
-    """Wait until a finite availableNow query has consumed its
-    source, then stop it. Raises ``TimeoutError`` (after stopping the
-    query) if it has neither terminated nor drained within
-    ``timeout_s``.
-
-    Plain availableNow queries self-terminate; but a stateful
-    operator with PROCESSING-TIME timers (applyInPandasWithState +
-    ProcessingTimeTimeout) keeps scheduling empty timer batches
-    forever, so `awaitTermination(timeout)` burns the FULL timeout on
-    every such drain (measured: ~124 s constant regardless of SF).
-    The committed-batch progress feed gives the real signal: a batch
-    with numInputRows == 0 means the source is exhausted and every
-    data batch before it has committed. One such no-data batch is
-    legitimate (watermarked APPEND queries flush final windows in it,
-    then terminate on their own), so only a SECOND distinct empty
-    batch — the signature of a timer loop — forces the stop.
-
-    Measured floor (VERDICT r08 #4, instrumented at sf0.1, 3 runs;
-    r11 cut one batch): the e24 drain is NOT detector-bound — the
-    query self-terminates after exactly 2 micro-batches since r11
-    (data + first sentinel together, then the second sentinel batch
-    in which the timers fire; SPARK-24634's one-batch-lagged
-    watermark needs batch N+1 to observe batch N's watermark before
-    event-time timers fire, which is why a second batch must exist
-    at all). Each batch
-    costs ~1.2-2.0 s of applyInPandasWithState overhead (Python
-    worker + state-store commit round-trips; per-batch
-    triggerExecution 1.2-2.0 s warm, ~5.5 s on the session's first
-    stateful batch), so the warm floor is ~5.5-6.5 s and the
-    7.5-18.2 s bench swing is cold-start + ambient, not a poll or
-    detector artifact. Shuffle-partition count is noise-level
-    (32/8/4 all within ±1 s). The poll below is 0.15 s so detection
-    adds at most ~0.15 s per batch."""
-    import time as _time
-
-    deadline = _time.time() + timeout_s
-    empty_seen, last_bid = 0, -1
-    while q.isActive and empty_seen < 2:
-        if _time.time() >= deadline:
-            q.stop()
+def drain(q, timeout_s: int) -> None:
+    """The one wait for a finite (availableNow) query: block until it
+    terminates, stopping it either way. Raises ``TimeoutError`` if it
+    has not terminated within ``timeout_s``, so a caller never reads a
+    partly drained sink. No operator in the package arms a
+    processing-time timer, so every availableNow query terminates on
+    its own once its source is consumed."""
+    try:
+        if not q.awaitTermination(timeout_s):
             raise TimeoutError(
-                f"{q.name}: stream not drained within {timeout_s} s"
+                f"{q.name or q.id}: stream not drained within {timeout_s} s"
             )
-        lp = q.lastProgress
-        if lp is not None and lp.get("batchId", -1) != last_bid:
-            last_bid = lp.get("batchId", -1)
-            empty_seen = empty_seen + 1 if lp.get("numInputRows", 0) == 0 else 0
-        if empty_seen < 2:
-            q.awaitTermination(0.15)
-    if q.isActive:
-        q.stop()
+    finally:
+        if q.isActive:
+            q.stop()
 
 
 def run_to_memory(
@@ -495,12 +457,9 @@ def run_to_memory(
         # the query captured the conf at start; restore immediately
         if not no_data_batch:
             spark.conf.set(conf_key, prev)
-    try:
-        _await_drained(q, timeout_s)
-    finally:
-        if q.isActive:
-            q.stop()
+    drain(q, timeout_s)
     return spark.table(name)
+
 
 def daily_rollup_stream(events: DataFrame) -> DataFrame:
     """CHAINED stateful operators in one streaming query: hourly
@@ -576,11 +535,7 @@ def run_with_progress(
             .trigger(availableNow=True)
             .start()
         )
-        try:
-            _await_drained(q, timeout_s)
-        finally:
-            if q.isActive:
-                q.stop()
+        drain(q, timeout_s)
         progresses = [p for p in q.recentProgress if p is not None]
     finally:
         if prev_cap is None:
@@ -693,13 +648,5 @@ def topk_users_stream_foreachbatch(
         .trigger(availableNow=True)
         .start()
     )
-    try:
-        # no stateful timers — availableNow terminates on its own
-        if not q.awaitTermination(timeout_s):
-            raise TimeoutError(
-                f"{name}: stream not drained within {timeout_s} s"
-            )
-    finally:
-        if q.isActive:
-            q.stop()
+    drain(q, timeout_s)
     return spark.table(name)

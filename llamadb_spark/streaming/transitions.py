@@ -1,50 +1,27 @@
-"""Streaming event-transition extraction (SURVEY §2 #228's streaming
-twin): the applyInPandasWithState form of queries/events.py
-e21_transition_matrix's lag step — emit one (prev_type, next_type)
-row per consecutive event pair in each user's timeline, incrementally
-across micro-batches.
+"""Streaming event-transition extraction (SURVEY §2 #240, the
+streaming twin of queries/events.py e21_transition_matrix's lag
+step): emit one (prev_type, next_type) row per consecutive event pair
+in each user's timeline, incrementally across micro-batches, on the
+event-time reorder skeleton (reorder.py).
 
 A windowed aggregation can't express this: the pair couples each
 event to the PREVIOUS one across micro-batch boundaries, so the
-operator keeps one string of state per active user (the last event
-type seen) — bounded by active-user cardinality, not event volume,
-and evicted by timeout after an idle period. This is the multi-key
-typed-state shape (string state, per-user keys) that complements
-sessions.py (longs) and cep.py (two longs).
+operator carries, per active user, the last event's type, plus the
+skeleton's buffer of events still ahead of the watermark. A user is
+evicted once the watermark has advanced IDLE_TIMEOUT_MS since the
+operator last folded one of their events; a later event starts a
+fresh chain.
 
 The downstream Markov aggregation (counts + row-normalized
-probabilities) is an ordinary batch/streaming groupBy over the
-emitted steps; queries/events.py e24_transition_stream drains this
-stream and aggregates, giving a full value-hash oracle against the
-batch e21 SQL (stream ≡ batch, driver-attested).
-
-Ordering (round-6 fix of the VERDICT r05 robustness gap): with
-``watermark_delay`` set, the operator no longer assumes cross-batch
-event-time order. Incoming events are BUFFERED in array-typed state
-until the watermark passes them, then processed in exact event-time
-order — any arrival order whose disorder is bounded by the delay
-produces the same output as the batch operator (events later than
-the delay are dropped by Spark's standard watermark filter, like any
-watermarked stateful op). Buffer size per user is bounded by that
-user's events inside the watermark horizon (delay x rate), NOT by
-stream volume. End-of-stream flush rides the event-time timer: the
-drain helper appends a far-future sentinel event that advances the
-global watermark past every buffered row (see
-tests/test_streaming.py _stage_shuffled_events). With ``watermark_delay=None``
-the legacy contract applies: a user's events must arrive in
-event-time order across micro-batches (in-batch rows are sorted
-here).
+probabilities) is an ordinary groupBy over the emitted steps;
+queries/events.py e24_transition_stream drains this stream and
+aggregates, giving a full value-hash oracle against the batch e21
+SQL (stream ≡ batch, driver-attested).
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-from typing import Any
-
-import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import (
     LongType,
     StringType,
@@ -52,6 +29,8 @@ from pyspark.sql.types import (
     StructType,
     TimestampType,
 )
+
+from llamadb_spark.streaming.reorder import reorder_buffered
 
 TRANSITIONS_SCHEMA = StructType(
     [
@@ -62,239 +41,43 @@ TRANSITIONS_SCHEMA = StructType(
     ]
 )
 
-_STATE_SCHEMA = "last_type string"
-
-#: carry (last event type; '' = none yet) + the out-of-order buffer:
-#: parallel arrays of (event_id, ts_us, event_type), event-time
-#: horizon bounded.
-_BUF_STATE_SCHEMA = (
-    "last_type string, buf_eid array<long>, buf_us array<long>, "
-    "buf_type array<string>"
-)
-
-#: Idle eviction: a user silent this long is dropped from the state
-#: store; their next event simply starts a fresh chain (exactly the
-#: cold-start semantics of the batch lag's first row).
+#: Idle eviction, in event time: a user is dropped from the state
+#: store once the watermark has advanced this far since the operator
+#: last folded one of their events. Counting from the fold, not from
+#: the event's own time, keeps the chain of a user whose buffered
+#: events were flushed late.
 IDLE_TIMEOUT_MS = 6 * 3600 * 1000
-
-#: user_id reserved for the drain sentinel that advances the global
-#: watermark at end-of-stream; filtered out after the watermark node.
-SENTINEL_USER = -1
-
-
-def _us(ts) -> int:
-    return int(pd.Timestamp(ts).value // 1000)
 
 
 def transitions_stream(
-    events: DataFrame,
-    watermark_delay: str | None = None,
-    late_counter=None,
+    events: DataFrame, watermark_delay: str, late_counter=None
 ) -> DataFrame:
-    """Per-user consecutive event-type pairs, keyed on user_id.
+    """Per-user consecutive event-type pairs, keyed on user_id. Each
+    event that HAS a predecessor emits one row: the row set of the
+    batch operator's lag-over-(ts, event_id) step, for any arrival
+    order with disorder ≤ ``watermark_delay``. Rows later than the
+    delay are dropped (see reorder_buffered)."""
+    idle_us = IDLE_TIMEOUT_MS * 1000
 
-    State per user: the last event type (one string), plus — in
-    watermarked mode — the event-time-bounded reorder buffer. Each
-    micro-batch emits one row per event that HAS a predecessor — the
-    exact row set of the batch operator's lag-over-(ts, event_id)
-    step, for any arrival order with disorder ≤ watermark_delay.
+    def advance(carry, ready):
+        # '' = no predecessor yet; -1 = idle deadline not yet armed
+        last_type, idle_at_us = carry or ("", -1)
+        out = []
+        for t, _eid, etype in ready:
+            if last_type:
+                out.append((last_type, etype, t))
+            last_type, idle_at_us = etype, -1
+        return (last_type, idle_at_us), out
 
-    Late-drop contract (round-7 finding CORRECTED in round 8,
-    measured — probe in tests/test_streaming.py boundary test):
-    Spark's JVM late filter DOES run for applyInPandasWithState, but
-    with the two-watermark semantics of SPARK-24634: in batch N it
-    drops rows with ts <= the PREVIOUS batch's watermark (inclusive
-    boundary, counted in numRowsDroppedByWatermark), while
-    ``getCurrentWatermarkMs`` inside the function reports the
-    CURRENT (eviction) watermark — one batch ahead. Round 7 staged
-    its late rows in the first batch after the bulk, when the lagged
-    filter was still at 0, and concluded the filter never fires;
-    wrong in general. The one-batch gap is real, though: a row
-    behind the eviction watermark but ahead of the lagged filter IS
-    handed to the function, and splicing it into the chain after
-    later events were emitted would break stream≡batch — so the
-    operator still drops in-function (ts strictly behind the current
-    watermark), counted by ``late_counter``; total late drops =
-    numRowsDroppedByWatermark (JVM, lagged horizon) + late_counter
-    (this one-batch window). The flush boundary is strict to match
-    the drop boundary: a buffered row AT the watermark is held until
-    the watermark strictly passes it. Under today's inclusive lagged
-    JVM filter a conflicting same-ts later arrival is impossible
-    anyway (it would be JVM-dropped); strict flush keeps the
-    operator's own contract airtight without leaning on that
-    undocumented JVM boundary.
-    """
-    if watermark_delay is None:
-        return _transitions_ordered(events)
+    def expire(carry, wm_us):
+        last_type, idle_at_us = carry
+        if idle_at_us < 0:
+            idle_at_us = wm_us + idle_us
+        elif wm_us >= idle_at_us:
+            return None, [], None
+        return (last_type, idle_at_us), [], idle_at_us
 
-    def fn(
-        key: Any, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        (user_id,) = key
-        wm_us = state.getCurrentWatermarkMs() * 1000
-
-        if state.hasTimedOut:
-            last_type, b_eid, b_us, b_type = state.get
-            rows = sorted(zip(b_us, b_eid, b_type))
-            out = _chain(last_type, rows)
-            if rows:
-                # flush timer: emit everything, keep the chain alive
-                # on an idle (event-time) horizon
-                state.update((rows[-1][2], [], [], []))
-                state.setTimeoutTimestamp(
-                    state.getCurrentWatermarkMs() + IDLE_TIMEOUT_MS
-                )
-            else:
-                # idle timer: cold-start semantics, like the batch
-                # lag's first row after a long gap
-                state.remove()
-            yield from _emit(user_id, out)
-            return
-
-        if state.exists:
-            last_type, b_eid, b_us, b_type = state.get
-        else:
-            last_type, b_eid, b_us, b_type = "", [], [], []
-
-        merged = list(zip(b_us, b_eid, b_type))
-        n_late = 0
-        for pdf in pdfs:
-            for row in zip(
-                (_us(t) for t in pdf["ts"]),
-                (int(e) for e in pdf["event_id"]),
-                pdf["event_type"],
-            ):
-                # drop rows behind the watermark (see docstring): the
-                # chain may already have advanced past them
-                if row[0] < wm_us:
-                    n_late += 1
-                else:
-                    merged.append(row)
-        if n_late and late_counter is not None:
-            late_counter.add(n_late)
-        merged.sort()
-        # flush STRICTLY behind the watermark only, so the flush
-        # boundary agrees with the drop boundary above: a row at
-        # ts == wm is held (never dropped, never emitted) until the
-        # watermark strictly passes it — otherwise a same-ts arrival
-        # in a later batch would splice into the chain AFTER rows it
-        # precedes by (ts, event_id) order
-        ready = [r for r in merged if r[0] < wm_us]
-        held = [r for r in merged if r[0] >= wm_us]
-        out = _chain(last_type, ready)
-        new_last = ready[-1][2] if ready else last_type
-        state.update(
-            (
-                new_last,
-                [r[1] for r in held],
-                [r[0] for r in held],
-                [r[2] for r in held],
-            )
-        )
-        if held:
-            # fire as soon as the watermark passes the newest
-            # buffered event
-            state.setTimeoutTimestamp(held[-1][0] // 1000 + 1)
-        else:
-            state.setTimeoutTimestamp(
-                max(state.getCurrentWatermarkMs(), 0) + IDLE_TIMEOUT_MS
-            )
-        yield from _emit(user_id, out)
-
-    # NOTE: sentinels are filtered on the OUTPUT side, not the input:
-    # an input filter on user_id is pushed by Catalyst below the
-    # EventTimeWatermark node (it doesn't reference the event-time
-    # column), and then sentinel rows never reach the watermark
-    # tracker — the whole point of the sentinel. The sentinel user
-    # costs one extra state key; its own emitted rows are dropped
-    # here.
-    withwm = events.withWatermark("ts", watermark_delay)
-    return (
-        withwm.select("user_id", "event_id", "event_type", "ts")
-        .groupBy("user_id")
-        .applyInPandasWithState(
-            fn,
-            outputStructType=TRANSITIONS_SCHEMA,
-            stateStructType=_BUF_STATE_SCHEMA,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.EventTimeTimeout,
-        )
-        .filter(F.col("user_id") != SENTINEL_USER)
-    )
-
-
-def _chain(last_type: str, rows: list) -> tuple[list, list, list]:
-    """Run the lag chain over (us, eid, type) rows sorted by event
-    time; '' means no predecessor yet."""
-    prev_out: list[str] = []
-    next_out: list[str] = []
-    ts_out: list = []
-    for t_us, _eid, etype in rows:
-        if last_type:
-            prev_out.append(last_type)
-            next_out.append(etype)
-            ts_out.append(pd.Timestamp(t_us, unit="us"))
-        last_type = etype
-    return prev_out, next_out, ts_out
-
-
-def _emit(user_id, out):
-    prev_out, next_out, ts_out = out
-    if prev_out:
-        yield pd.DataFrame(
-            {
-                "user_id": [user_id] * len(prev_out),
-                "prev_type": prev_out,
-                "next_type": next_out,
-                "ts": ts_out,
-            }
-        )
-
-
-def _transitions_ordered(events: DataFrame) -> DataFrame:
-    """Legacy ordered-arrival form (processing-time idle eviction);
-    correct only when each user's events arrive in event-time order
-    across micro-batches."""
-
-    def fn(
-        key: Any, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        (user_id,) = key
-        if state.hasTimedOut:
-            if state.exists:
-                state.remove()
-            return
-
-        last_type = state.get[0] if state.exists else None
-
-        rows = pd.concat(list(pdfs)).sort_values(["ts", "event_id"])
-        prev_out: list[str] = []
-        next_out: list[str] = []
-        ts_out: list = []
-        for etype, ts in zip(rows["event_type"], rows["ts"]):
-            if last_type is not None:
-                prev_out.append(last_type)
-                next_out.append(etype)
-                ts_out.append(ts)
-            last_type = etype
-
-        state.update((last_type,))
-        state.setTimeoutDuration(IDLE_TIMEOUT_MS)
-        if prev_out:
-            yield pd.DataFrame(
-                {
-                    "user_id": [user_id] * len(prev_out),
-                    "prev_type": prev_out,
-                    "next_type": next_out,
-                    "ts": ts_out,
-                }
-            )
-
-    events = events.select("user_id", "event_id", "event_type", "ts")
-    return events.groupBy("user_id").applyInPandasWithState(
-        fn,
-        outputStructType=TRANSITIONS_SCHEMA,
-        stateStructType=_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.ProcessingTimeTimeout,
+    return reorder_buffered(
+        events, ("event_type",), advance, expire, TRANSITIONS_SCHEMA,
+        "last_type string, idle_at_us long", watermark_delay, late_counter,
     )

@@ -16,6 +16,9 @@ Rules:
 - `.localCheckpoint(`, `.checkpoint(`, `.cache()`, `.persist(`: only
   in session.py (``stage``); `Observation(` only there and at the
   allowlisted sites below.
+- `applyInPandasWithState(`: once, in streaming/reorder.py;
+  `awaitTermination(`: once, in streaming/streams.py (``drain``);
+  `ProcessingTimeTimeout`: nowhere, not even in a docstring.
 """
 
 from __future__ import annotations
@@ -178,3 +181,25 @@ def test_one_timing_loop():
         and any(pat.search(c) for c in _code_lines(f))
     )
     assert not hits, f"noop-sink timing loop outside tools/timing.py: {hits}"
+
+
+def test_one_reorder_skeleton():
+    """The stateful event operators run on streaming/reorder.py's one
+    event-time skeleton: ``applyInPandasWithState`` is called only
+    there, no processing-time timer exists anywhere (the reason a
+    finite drain could loop forever), and every finite drain waits
+    through the one wait in ``streams.drain``."""
+    calls, awaits, processing_time = {}, {}, []
+    for rel, f in _sources():
+        code = list(_code_lines(f))
+        n = sum(c.count("applyInPandasWithState(") for c in code)
+        if n:
+            calls[rel] = n
+        n = sum(c.count("awaitTermination(") for c in code)
+        if n:
+            awaits[rel] = n
+        if "ProcessingTimeTimeout" in open(f, encoding="utf-8").read():
+            processing_time.append(rel)
+    assert calls == {"streaming/reorder.py": 1}, calls
+    assert awaits == {"streaming/streams.py": 1}, awaits
+    assert not processing_time, processing_time

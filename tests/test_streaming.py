@@ -28,15 +28,18 @@ def test_stream_matches_batch(spark, sf_dir):
 
 
 def test_stateful_sessionize_closes_sessions(spark, sf_dir):
-    """applyInPandasWithState sessionization: closed sessions emitted
-    by the stream must match the batch sessionizer for every session
-    except each user's last (which stays open in state until
-    timeout)."""
+    """Stateful sessionization over the events file stream: every
+    session the batch sessionizer finds is emitted, each user's last
+    one included — the sentinel-advanced watermark closes it by event
+    time."""
     from llamadb_spark.operators.events import sessionize
     from llamadb_spark.streaming.sessions import sessionize_stream
-    from llamadb_spark.streaming.streams import read_events_stream
+    from llamadb_spark.streaming.streams import read_events_stream_unordered
 
-    stream = sessionize_stream(read_events_stream(spark, sf_dir), gap_minutes=30)
+    stream = sessionize_stream(
+        read_events_stream_unordered(spark, sf_dir), gap_minutes=30,
+        watermark_delay="7000 days",
+    )
     got = run_to_memory(stream, "sessions_test", output_mode="append")
     batch = sessionize(_events(spark, sf_dir), gap_minutes=30)
 
@@ -44,14 +47,9 @@ def test_stateful_sessionize_closes_sessions(spark, sf_dir):
         (r.user_id, r.session_seq): (r.n_events, round(r.total_value, 6))
         for r in got.collect()
     }
-    # batch sessions, minus each user's final (still-open) session
-    batch_all = {}
-    last_seq = {}
-    for r in batch.collect():
-        batch_all[(r.user_id, r.session_seq)] = (r.n_events, round(r.total_value, 6))
-        last_seq[r.user_id] = max(last_seq.get(r.user_id, -1), r.session_seq)
     expected = {
-        k: v for k, v in batch_all.items() if k[1] != last_seq[k[0]]
+        (r.user_id, r.session_seq): (r.n_events, round(r.total_value, 6))
+        for r in batch.collect()
     }
     assert got_rows == expected
     assert len(got_rows) > 0
@@ -345,10 +343,16 @@ def test_cep_stream_matches_batch(spark, sf_dir):
     set over the full file stream must equal the batch operator's."""
     from llamadb_spark.operators.events import cep_sequence_matches
     from llamadb_spark.streaming.cep import cep_matches_stream
-    from llamadb_spark.streaming.streams import read_events_stream, run_to_memory
+    from llamadb_spark.streaming.streams import (
+        read_events_stream_unordered,
+        run_to_memory,
+    )
 
     got = run_to_memory(
-        cep_matches_stream(read_events_stream(spark, sf_dir)),
+        cep_matches_stream(
+            read_events_stream_unordered(spark, sf_dir),
+            watermark_delay="7000 days",
+        ),
         "cep_stream_test",
         output_mode="append",
     )
@@ -364,8 +368,8 @@ def test_cep_stream_matches_batch(spark, sf_dir):
 
 
 def test_transition_stream_matches_batch(spark, sf_dir):
-    """Stateful streaming transition extraction (one string of typed
-    state per user key): the per-pair step counts over the full file
+    """Stateful streaming transition extraction (last event type per
+    user key): the per-pair step counts over the full file
     stream must equal the batch e21 lag operator's counts, and the
     e24 query key (stream drain + Markov aggregation) must reproduce
     e21's full matrix row for row."""
@@ -374,13 +378,16 @@ def test_transition_stream_matches_batch(spark, sf_dir):
         e24_transition_stream,
     )
     from llamadb_spark.streaming.streams import (
-        read_events_stream,
+        read_events_stream_unordered,
         run_to_memory,
     )
     from llamadb_spark.streaming.transitions import transitions_stream
 
     steps = run_to_memory(
-        transitions_stream(read_events_stream(spark, sf_dir)),
+        transitions_stream(
+            read_events_stream_unordered(spark, sf_dir),
+            watermark_delay="7000 days",
+        ),
         "transitions_steps_test",
         output_mode="append",
     )
@@ -1297,9 +1304,8 @@ def test_topk_foreachbatch_drain_fails_loudly(spark, tmp_path):
 
 
 def test_run_to_memory_drain_fails_loudly(spark, tmp_path):
-    """A memory-sink drain that has neither terminated nor seen its
-    second empty batch by ``timeout_s`` raises instead of returning
-    the rows committed so far."""
+    """A memory-sink drain that has not terminated by ``timeout_s``
+    raises instead of returning the rows committed so far."""
     before = {q.id for q in spark.streams.active}
     with pytest.raises(TimeoutError):
         run_to_memory(
@@ -1849,35 +1855,37 @@ def test_ingest_span_dedup_gates_on_duplicated_mass(spark, tmp_path):
     assert committed_batches(matches_path) == {0: 0, 1: 1, 2: 2}
 
 
-def test_transitions_watermark_boundary_contract(spark, tmp_path):
-    """ADVICE r07 (medium) + round-8 measured correction of the
-    round-7 'no JVM filter' finding. Staging: batch 0 plants
-    A(ts=T0, id=2) plus a wm-driver at T0+1h (delay 1h, so the
-    eviction watermark lands exactly on T0); batch 1 runs the
-    operator for the user while wm == T0 (E at T0+30min) — the old
-    inclusive flush emitted A here, the strict flush holds it;
-    batch 2 delivers B(ts=T0, id=1), same timestamp as A, lower
-    event_id.
+@pytest.mark.parametrize("op", ["transitions", "cep", "sessions"])
+def test_watermark_boundary_contract(spark, tmp_path, op):
+    """The late-drop contract of the reorder skeleton
+    (streaming/reorder.py), for each operator on it. Staging: batch 0
+    plants A(view, ts=T0, id=2) plus a wm-driver at T0+1h (delay 1h,
+    so the eviction watermark lands exactly on T0); batch 1 runs the
+    operator for the user while wm == T0 (E, a purchase at T0+20min)
+    — an inclusive flush would emit A here, the strict flush holds
+    it; batch 2 delivers B(error, ts=T0, id=1), same timestamp as A,
+    lower event_id. B would change every operator's output: one more
+    transition, a negation that kills the view → purchase match, a
+    third event in the session.
 
     Measured semantics this test pins (Spark 4.1.2):
     - The JVM late filter DOES run for applyInPandasWithState, with
       the PREVIOUS batch's watermark and an INCLUSIVE boundary:
       B (ts == lagged wm) never reaches the function and is counted
-      in numRowsDroppedByWatermark. The round-7 claim that the
-      filter never fires was an artifact of one-batch staging.
+      in numRowsDroppedByWatermark.
     - Rows at the CURRENT watermark are admitted and held, never
       dropped in-function (late accumulator stays 0).
-    - Output equals the batch lag over the JVM-surviving rows
-      {A, E}, in (ts, event_id) order — under the old inclusive
-      flush plus today's JVM filter this also held, but only by the
-      undocumented complement of the two inclusive boundaries; the
-      strict flush asserts it from the operator's own contract."""
+    - Output equals the batch operator over the JVM-surviving rows
+      {A, E}, in (ts, event_id) order — asserted from the operator's
+      own strict flush, not from the complement of two inclusive
+      boundaries."""
     import datetime as dt
     import os
     import shutil
 
     import pyspark.sql.functions as F
     from pyspark.sql.types import (
+        DoubleType,
         LongType,
         StringType,
         StructField,
@@ -1886,6 +1894,9 @@ def test_transitions_watermark_boundary_contract(spark, tmp_path):
     )
     from pyspark.sql.window import Window
 
+    from llamadb_spark.operators.events import cep_sequence_matches, sessionize
+    from llamadb_spark.streaming.cep import cep_matches_stream
+    from llamadb_spark.streaming.sessions import sessionize_stream
     from llamadb_spark.streaming.streams import run_with_progress
     from llamadb_spark.streaming.transitions import transitions_stream
 
@@ -1894,6 +1905,7 @@ def test_transitions_watermark_boundary_contract(spark, tmp_path):
             StructField("user_id", LongType()),
             StructField("event_id", LongType()),
             StructField("event_type", StringType()),
+            StructField("value", DoubleType()),
             StructField("ts", TimestampType()),
         ]
     )
@@ -1901,14 +1913,17 @@ def test_transitions_watermark_boundary_contract(spark, tmp_path):
     h = dt.timedelta(hours=1)
     batches = [
         # wm after this batch: (T0+1h) - 1h = T0 exactly
-        [(7, 2, "a", t0), (-1, -10, "x", t0 + h)],
+        [(7, 2, "view", 1.0, t0), (-1, -10, "x", 0.0, t0 + h)],
         # runs fn for user 7 while wm == T0; A(ts == wm) must be HELD
-        [(7, 5, "e", t0 + dt.timedelta(minutes=30)), (-1, -11, "x", t0 + h)],
+        [
+            (7, 5, "purchase", 2.0, t0 + dt.timedelta(minutes=20)),
+            (-1, -11, "x", 0.0, t0 + h),
+        ],
         # boundary arrival: ts == the LAGGED watermark -> JVM-dropped
-        [(7, 1, "b", t0), (-1, -12, "x", t0 + h)],
+        [(7, 1, "error", 4.0, t0), (-1, -12, "x", 0.0, t0 + h)],
         # far-future sentinels: advance wm, then fire flush timers
-        [(-1, -13, "x", t0 + dt.timedelta(days=9000))],
-        [(-1, -14, "x", t0 + dt.timedelta(days=9001))],
+        [(-1, -13, "x", 0.0, t0 + dt.timedelta(days=9000))],
+        [(-1, -14, "x", 0.0, t0 + dt.timedelta(days=9001))],
     ]
     drop = tmp_path / "wmb_drop"
     drop.mkdir()
@@ -1926,37 +1941,147 @@ def test_transitions_watermark_boundary_contract(spark, tmp_path):
         .parquet(str(drop))
     )
     late_acc = spark.sparkContext.accumulator(0)
-    steps = transitions_stream(
-        stream, watermark_delay="1 hour", late_counter=late_acc
-    )
+    kw = {"watermark_delay": "1 hour", "late_counter": late_acc}
+
+    def batch_transitions(df):
+        w = Window.partitionBy("user_id").orderBy("ts", "event_id")
+        return df.select(
+            "user_id",
+            F.lag("event_type").over(w).alias("prev_type"),
+            F.col("event_type").alias("next_type"),
+            "ts",
+        ).filter(F.col("prev_type").isNotNull())
+
+    stream_op, batch_op = {
+        "transitions": (transitions_stream, batch_transitions),
+        "cep": (cep_matches_stream, cep_sequence_matches),
+        "sessions": (
+            lambda df, **kw: sessionize_stream(df, gap_minutes=30, **kw),
+            lambda df: sessionize(df, gap_minutes=30),
+        ),
+    }[op]
     out, metrics = run_with_progress(
-        steps, "wmb_boundary", output_mode="append"
+        stream_op(stream, **kw), f"wmb_boundary_{op}", output_mode="append"
     )
-    got = {
-        (r.user_id, r.prev_type, r.next_type, r.ts) for r in out.collect()
-    }
+    got = {tuple(r) for r in out.collect()}
     # B was swallowed by the JVM's lagged inclusive filter before the
     # function ever saw it — the surviving rows are A and E
     surviving = spark.createDataFrame(
         [r for b in batches for r in b if r[0] == 7 and r[1] != 1], schema
     )
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     want = {
-        (r.user_id, r.prev_type, r.next_type, r.ts)
-        for r in surviving.select(
-            "user_id",
-            F.lag("event_type").over(w).alias("prev_type"),
-            F.col("event_type").alias("next_type"),
-            "ts",
-        )
-        .filter(F.col("prev_type").isNotNull())
-        .collect()
+        tuple(r) for r in batch_op(surviving).select(*out.columns).collect()
     }
     assert got == want
+    assert want
     # the JVM counted B; the in-function path dropped nothing (rows
     # at the CURRENT watermark are held, not dropped)
     assert metrics["rows_dropped_late"] == 1
     assert late_acc.value == 0
+
+
+def test_transitions_idle_eviction_counts_from_the_last_fold(spark, tmp_path):
+    """A user's chain survives an event-time gap longer than
+    IDLE_TIMEOUT_MS when the watermark reaches that gap only after the
+    earlier event was folded: idleness is counted from the fold, so
+    the later event still pairs with the earlier one, as in the batch
+    lag. User 7's A (T0) is flushed in batch 2 at wm = T0+7h; B
+    (T0+7.5h) arrives in batch 3, when the watermark has passed
+    A + 6 h but not the fold + 6 h."""
+    import datetime as dt
+
+    from llamadb_spark.streaming.streams import run_to_memory
+    from llamadb_spark.streaming.transitions import (
+        IDLE_TIMEOUT_MS,
+        transitions_stream,
+    )
+
+    t0 = dt.datetime(2024, 1, 1)
+    h = dt.timedelta(hours=1)
+    assert dt.timedelta(milliseconds=IDLE_TIMEOUT_MS) < 7 * h
+    stream = _stage_drop(
+        spark, tmp_path, "idle",
+        "user_id long, event_id long, event_type string, ts timestamp",
+        [
+            [(7, 1, "a", t0), (8, 10, "x", t0)],
+            # user 8 drives the watermark to T0+7h (delay 1h)
+            [(8, 11, "x", t0 + 8 * h)],
+            # user 7's flush timer fires: A folded at wm = T0+7h
+            [(8, 12, "x", t0 + 8 * h)],
+            [(7, 2, "b", t0 + 7.5 * h), (8, 13, "x", t0 + 8 * h)],
+            [(-1, -1, "x", t0 + dt.timedelta(days=9000))],
+            [(-1, -2, "x", t0 + dt.timedelta(days=9001))],
+        ],
+    )
+    out = run_to_memory(
+        transitions_stream(stream(), watermark_delay="1 hour"),
+        "idle_fold", output_mode="append",
+    )
+    got = {
+        (r.prev_type, r.next_type) for r in out.collect() if r.user_id == 7
+    }
+    assert got == {("a", "b")}
+
+
+@pytest.mark.parametrize("op", ["transitions", "cep", "sessions"])
+def test_stateful_function_loads_without_the_package(
+    spark, tmp_path, monkeypatch, op
+):
+    """cloudpickle ships the function each stateful operator hands to
+    applyInPandasWithState to the Python workers. It must load where
+    this package cannot be imported (working directory outside the
+    tree, no PYTHONPATH), as on a worker the package was never
+    installed on: anything it reaches by module reference fails there
+    with ModuleNotFoundError."""
+    import os
+    import subprocess
+    import sys
+
+    import pyspark.sql.functions as F
+    from pyspark import cloudpickle
+    from pyspark.sql.group import GroupedData
+
+    from llamadb_spark.streaming.cep import cep_matches_stream
+    from llamadb_spark.streaming.sessions import sessionize_stream
+    from llamadb_spark.streaming.transitions import transitions_stream
+
+    handed = []
+    real = GroupedData.applyInPandasWithState
+
+    def capture(self, func, *args, **kwargs):
+        handed.append(func)
+        return real(self, func, *args, **kwargs)
+
+    monkeypatch.setattr(GroupedData, "applyInPandasWithState", capture)
+    events = spark.readStream.format("rate").load().select(
+        F.col("value").alias("user_id"),
+        F.col("value").alias("event_id"),
+        F.lit("view").alias("event_type"),
+        F.col("value").cast("double").alias("value"),
+        F.col("timestamp").alias("ts"),
+    )
+    operator = {
+        "transitions": transitions_stream,
+        "cep": cep_matches_stream,
+        "sessions": sessionize_stream,
+    }[op]
+    operator(events, watermark_delay="1 hour")
+    (fn,) = handed
+
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    loaded = subprocess.run(
+        [
+            sys.executable, "-c",
+            "import pickle, sys; "
+            "assert callable(pickle.loads(sys.stdin.buffer.read()))",
+        ],
+        input=cloudpickle.dumps(fn),
+        cwd=tmp_path,
+        env=env,
+        capture_output=True,
+        timeout=120,
+    )
+    assert loaded.returncode == 0, loaded.stderr.decode()[-2000:]
 
 
 def test_param_stamp_restampable_until_first_commit(spark, tmp_path):
@@ -2094,7 +2219,7 @@ def test_unordered_drain_is_two_microbatches(spark, sf_dir):
     no trailing no-data batch (run_to_memory(no_data_batch=False)).
     Each extra batch is a full applyInPandasWithState round."""
     from llamadb_spark.streaming.streams import (
-        _await_drained,
+        drain,
         read_events_stream_unordered,
     )
     from llamadb_spark.streaming.transitions import transitions_stream
@@ -2116,11 +2241,7 @@ def test_unordered_drain_is_two_microbatches(spark, sf_dir):
         )
     finally:
         spark.conf.set(conf_key, prev)
-    try:
-        _await_drained(q, 120)
-    finally:
-        if q.isActive:
-            q.stop()
+    drain(q, 120)
     batch_ids = {p["batchId"] for p in q.recentProgress}
     assert batch_ids == {0, 1}, f"expected 2 micro-batches, got {sorted(batch_ids)}"
     # and the drain produced output (timers actually fired in batch 1)
