@@ -470,7 +470,8 @@ LIMIT 20
 # aggregate the oracle computes, only if BOTH merge arms fired.
 #
 # Scale: the merge source is an n_regions-row aggregate; the rewrite
-# is one LEFT join + one LEFT ANTI join on a 5-row table.
+# is one FULL join that reads it once, and the committed 5-row table
+# is one partition (sized to its bytes).
 # ---------------------------------------------------------------------------
 def q67_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     from llamadb_spark.session import register_views

@@ -17,6 +17,7 @@ reference's storage layer does.
 
 from __future__ import annotations
 
+import math
 import re
 from dataclasses import dataclass, field
 
@@ -396,9 +397,9 @@ def _parse_recursive(sql: str):
 
 def _observed_rows(obs: Observation) -> int:
     """The ``n`` row count an Observation recorded. An observed node
-    under a join can be dropped unreported: AQE replaces a LEFT join
-    whose left side ran empty by an empty scan. Such a node saw no
-    rows."""
+    under a join can be dropped unreported: AQE drops a join side that
+    ran empty (a LEFT join becomes an empty scan, a FULL join its other
+    side). Such a node saw no rows."""
     row = obs._jo.getRow()
     return row.getLong(0) if row.length() else 0
 
@@ -616,7 +617,10 @@ class LlamaSession:
     #: INSERTs append a checkpointed DELTA segment instead of
     #: re-materializing the whole table (ADVICE r10: N small INSERTs
     #: were O(n²) total I/O); after this many segments the next
-    #: insert compacts to one materialization.
+    #: insert compacts to one materialization. Every segment, and
+    #: every compaction or DML commit, is sized from its observed
+    #: row count: ceil(rows x row width / maxPartitionBytes)
+    #: partitions (_stage), so a 100-row segment is one partition.
     _MAX_SEGMENTS = 8
 
     def __init__(self, spark: SparkSession, durable: bool | None = None):
@@ -1009,12 +1013,12 @@ class LlamaSession:
         if not spec.indexes:
             return
         _, colname = spec.indexes[0]
-        path = tempfile.mkdtemp(prefix=f"llamadb_idx_{name}_")
         df = self._data[name]
         if df.isEmpty():
             # repartitionByRange needs sampleable rows; an empty
             # table stays a (schema-typed) empty in-memory relation
             return
+        path = tempfile.mkdtemp(prefix=f"llamadb_idx_{name}_")
         write_range_layout(df, path, [colname], num_files=4)
         reloaded = self.spark.read.schema(spec.schema).parquet(path)
         self._data[name] = reloaded
@@ -1164,15 +1168,23 @@ class LlamaSession:
         - NOT MATCHED: source rows with no target match are projected
           through the INSERT clause and appended.
 
-        Rewrite shape: one LEFT join (target survivors/updates) + one
-        LEFT ANTI join (inserts), unioned and committed through the
-        same validation/constraint/rollback path as every write.
+        Rewrite shape: ONE join of the target (tagged ``_t_present``)
+        and the source (tagged ``_s_matched``): a FULL join when a
+        WHEN NOT MATCHED arm exists, else a LEFT join. One select then
+        builds every column: an updated or passed-through target row,
+        or a source row with no target match projected through the
+        INSERT arm (cast the way ``_align`` casts an INSERT; the arm
+        resolves names against the source alone). The source is
+        scanned once, and the result commits through the same
+        validation/constraint/rollback path as every write.
 
         Returns ``(name, rows, matches)``. With a WHEN MATCHED clause,
         ``matches`` holds two Observations that the commit's staging
-        job fills: target rows entering the LEFT join and LEFT-join
-        output rows. They differ exactly when some target row matches
-        more than one source row. It is None for an insert-only MERGE.
+        job fills: target rows entering the join and target rows
+        leaving it (``count(_t_present)``). They differ exactly when
+        some target row matches more than one source row. It is None
+        for an insert-only MERGE, where such a target row is passed
+        through once.
         """
         m = _MERGE_RE.match(sql)
         if not m:
@@ -1197,26 +1209,14 @@ class LlamaSession:
                 "MERGE needs at least one WHEN [NOT] MATCHED clause"
             )
 
-        s = src.withColumn("_s_matched", F.lit(True)).alias("s")
-        on = F.expr(cond)
-
-        # cardinality check: >1 source match for one target row is
-        # nondeterministic — standard MERGE raises, so do we. Only a
-        # WHEN MATCHED clause can act on a match, so insert-only
-        # MERGE is exempt (standard/Delta semantics) and observes
-        # nothing.
-        matches = None
-        if matched_action is not None:
-            matches = (Observation(), Observation())
-            n_rows = F.count(F.lit(1)).alias("n")
-            target = self._data[name].observe(matches[0], n_rows)
-            joined = target.alias("t").join(s, on, "left").observe(matches[1], n_rows)
-        matched = F.col("_s_matched").isNotNull()
-        if matched_action and matched_action.upper().startswith("UPDATE"):
+        updates = bool(matched_action) and matched_action.upper().startswith(
+            "UPDATE"
+        )
+        assigns: dict[str, str] = {}
+        if updates:
             set_src = re.sub(
                 r"^UPDATE\s+SET\s+", "", matched_action, flags=re.IGNORECASE
             )
-            assigns: dict[str, str] = {}
             for item in _split_top_level(set_src):
                 if "=" not in item:
                     raise LlamaError(
@@ -1229,27 +1229,7 @@ class LlamaSession:
                 if cname in assigns:
                     raise LlamaError(f"column assigned twice: {cname}")
                 assigns[cname] = _requote_idents(expr_src.strip())
-            survivors = joined.select(
-                *[
-                    (
-                        F.when(matched, F.expr(assigns[c.name]))
-                        .otherwise(F.col(f"t.{c.name}"))
-                        .cast(c.spark_type)
-                        .alias(c.name)
-                        if c.name in assigns
-                        else F.col(f"t.{c.name}").alias(c.name)
-                    )
-                    for c in spec.columns
-                ]
-            )
-        elif matched_action:  # DELETE
-            survivors = joined.filter(~matched).select(
-                *[F.col(f"t.{c.name}").alias(c.name) for c in spec.columns]
-            )
-        else:
-            survivors = self._data[name]
-
-        out = survivors
+        inserts: dict[str, str] = {}
         if insert_vals_src is not None:
             cols = (
                 [_unquote(c.strip()) for c in insert_cols_src.split(",")]
@@ -1265,20 +1245,76 @@ class LlamaSession:
                     f"INSERT arity mismatch: {len(cols)} columns, "
                     f"{len(vals)} values"
                 )
-            unmatched_src = src.alias("s").join(
-                self._data[name].alias("t"), on, "left_anti"
+            for c, v in zip(cols, vals):
+                if c in inserts:
+                    raise LlamaError(f"column assigned twice: {c}")
+                inserts[c] = _requote_idents(v.strip())
+
+        # cardinality check: >1 source match for one target row is
+        # nondeterministic — standard MERGE raises, so do we. Only a
+        # WHEN MATCHED clause can act on a match, so insert-only
+        # MERGE is exempt (standard/Delta semantics) and observes
+        # nothing; its target rows carry a row id instead, so a row
+        # the join repeats once per match is kept once.
+        target = self._data[name].withColumn(
+            "_t_present",
+            F.lit(True) if matched_action else F.monotonically_increasing_id(),
+        )
+        matches = None
+        if matched_action is not None:
+            matches = (Observation(), Observation())
+            target = target.observe(matches[0], F.count(F.lit(1)).alias("n"))
+        joined = target.alias("t").join(
+            src.withColumn("_s_matched", F.lit(True)).alias("s"),
+            F.expr(cond),
+            "full" if inserts else "left",
+        )
+        if matches is not None:
+            joined = joined.observe(
+                matches[1], F.count("_t_present").alias("n")
             )
-            inserts = self._align(
-                unmatched_src.select(
-                    *[
-                        F.expr(_requote_idents(v.strip())).alias(c)
-                        for c, v in zip(cols, vals)
-                    ]
-                ),
-                spec,
-                cols,
-            )
-            out = out.unionByName(inserts)
+        else:
+            joined = joined.withColumn(
+                "_row",
+                F.coalesce("_t_present", -1 - F.monotonically_increasing_id()),
+            ).dropDuplicates(["_row"])
+        inserted = F.col("_t_present").isNull()
+        matched = ~inserted & F.col("_s_matched").isNotNull()
+        if matched_action and not updates:  # WHEN MATCHED THEN DELETE
+            joined = joined.filter(~matched)
+        # Target values first, under hidden names: the INSERT arm then
+        # resolves an unqualified name against the source alone.
+        kept = joined.select(
+            *[
+                (
+                    F.when(matched, F.expr(assigns[c.name]))
+                    .otherwise(F.col(f"t.{c.name}"))
+                    .cast(c.spark_type)
+                    if c.name in assigns
+                    else F.col(f"t.{c.name}")
+                ).alias(f"_t{i}")
+                for i, c in enumerate(spec.columns)
+            ],
+            "_t_present",
+            "s.*",
+        )
+        out = kept.select(
+            *[
+                (
+                    F.when(
+                        inserted,
+                        (
+                            F.expr(inserts[c.name])
+                            if c.name in inserts
+                            else F.lit(None)
+                        ).cast(c.spark_type),
+                    ).otherwise(F.col(f"_t{i}"))
+                    if inserts
+                    else F.col(f"_t{i}")
+                ).alias(c.name)
+                for i, c in enumerate(spec.columns)
+            ]
+        )
         return name, out, matches
 
     def _commit(
@@ -1288,8 +1324,9 @@ class LlamaSession:
         matches: tuple[Observation, Observation] | None = None,
     ) -> None:
         # ONE materialization per DML statement: the new table
-        # contents are localCheckpointed, and that same job observes
-        # the row checks and MERGE's match counts (_stage). Only
+        # contents are localCheckpointed and sized to their bytes, and
+        # that same job observes the row checks and, for a MERGE, the
+        # target rows entering and leaving its one join (_stage). Only
         # UNIQUE / FOREIGN KEY then read the materialized blocks, and
         # only on tables that declare them. Materializing truncates
         # the plan: a table DataFrame carrying its full statement
@@ -1332,7 +1369,8 @@ class LlamaSession:
         error raised is the first failed check in declaration order.
         ``matches`` are MERGE's two observed counts (see _merge_df).
         Raises before the caller swaps anything in. The checkpoint
-        renames the columns to fresh attributes (``session.stage``)."""
+        renames the columns to fresh attributes (``session.stage``),
+        and the staged rows come back coalesced to their byte size."""
         checks = self._row_checks(spec)
         first_failed = (
             "CASE "
@@ -1369,7 +1407,18 @@ class LlamaSession:
         failed = observed["failed"]
         if failed is not None:
             raise LlamaError(checks[failed][1])
-        return staged
+        # Read the rows the way Spark reads a file of their size: one
+        # partition per maxPartitionBytes of Spark's row-width estimate.
+        # Without this a table keeps its input's layout (4 partitions
+        # per VALUES insert, 200 after an AQE-off MERGE) and every read
+        # schedules a task per near-empty partition.
+        row_bytes = staged._jdf.schema().defaultSize()
+        split_bytes = (
+            self.spark._jsparkSession.sessionState().conf().filesMaxPartitionBytes()
+        )
+        return staged.coalesce(
+            max(1, math.ceil(observed["n"] * row_bytes / split_bytes))
+        )
 
     def _align(self, src: DataFrame, spec: TableSpec, cols: list[str]) -> DataFrame:
         return src.selectExpr(

@@ -10,11 +10,38 @@ the batch result exactly).
 
 from __future__ import annotations
 
+import atexit
+import os
+import shutil
+import tempfile
+import threading
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.functions import col, lit
 
 from llamadb_spark.session import stage
+
+#: (events file, its mtime and size, mode, sentinel_days) -> drop dir.
+_DROP_DIRS: dict[tuple, str] = {}
+_DROP_LOCK = threading.Lock()
+
+
+def _drop_dir(src: str, mode: str, sentinel_days: int | None, fill) -> str:
+    """The drop directory a file stream over ``src`` reads: made and
+    filled (``fill(drop_dir)``) once per process for each version of
+    the file, mode and ``sentinel_days``, and removed at interpreter
+    exit. The stream only lists and reads the directory, so every
+    stream over the same file shares it."""
+    st = os.stat(src)
+    key = (os.path.realpath(src), st.st_mtime_ns, st.st_size, mode, sentinel_days)
+    with _DROP_LOCK:
+        if key not in _DROP_DIRS:
+            drop_dir = tempfile.mkdtemp(prefix=f"llamadb_events_{mode}_")
+            atexit.register(shutil.rmtree, drop_dir, True)
+            fill(drop_dir)
+            _DROP_DIRS[key] = drop_dir
+        return _DROP_DIRS[key]
 
 
 def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -24,7 +51,7 @@ def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     FileStreamSource requires a directory (a drop-dir of arriving
     files); the test fixture is a single parquet file, so stage a
-    temp dir with a symlink to it.
+    temp dir with a symlink to it (one per file, ``_drop_dir``).
 
     The stream schema must be declared up front (no inference on a
     file stream), and the dataset's ts encoding has two variants
@@ -32,14 +59,13 @@ def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     schema from a one-off batch read of the same file (footer-only,
     no data scan) and normalize ts exactly like queries/events.py.
     """
-    import os
-    import tempfile
-
     from pyspark.sql.types import LongType, TimestampNTZType
 
-    drop_dir = tempfile.mkdtemp(prefix="llamadb_events_stream_")
-    os.symlink(f"{sf_dir}/events.parquet", f"{drop_dir}/events-00000.parquet")
-    schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
+    src = f"{sf_dir}/events.parquet"
+    drop_dir = _drop_dir(
+        src, "stream", None, lambda d: os.symlink(src, f"{d}/events-00000.parquet")
+    )
+    schema = spark.read.parquet(src).schema
     raw = (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1)
@@ -63,8 +89,6 @@ def _stage_sentinels_pyarrow(
     lacks ts statistics. Field overrides mirror the Spark path
     exactly: user_id/event_id = -1, event_type = 'sentinel', ts =
     max + (sentinel_days + j) days in the file's own encoding."""
-    import os
-
     try:
         import pyarrow as pa
         import pyarrow.parquet as pq
@@ -128,15 +152,9 @@ def read_events_stream_unordered(
     rows on their output side (an input filter would be pushed below
     the EventTimeWatermark node and starve the watermark).
     """
-    import os
-    import shutil
-    import tempfile
-
     from pyspark.sql.types import LongType, TimestampNTZType
 
-    drop_dir = tempfile.mkdtemp(prefix="llamadb_events_ooostream_")
     src = f"{sf_dir}/events.parquet"
-    os.symlink(src, f"{drop_dir}/events-00000.parquet")
     batch = spark.read.parquet(src)
     # r11: TWO files per trigger, so the FIRST sentinel rides in the
     # data batch. Batch 1 (events + sentinel-0) buffers everything
@@ -151,17 +169,19 @@ def read_events_stream_unordered(
     files_per_trigger = 2
     schema = batch.schema
     ts_type = schema["ts"].dataType
-    base_mtime = os.path.getmtime(src)
-    # r11: the sentinels are staged WITHOUT Spark jobs. max(ts) comes
-    # from the parquet FOOTER statistics (guide §6 — at corpus scale
-    # the old batch.agg(max) was a full column scan; footers are
-    # O(row groups)), and the two one-row sentinel files are written
-    # directly with pyarrow from a one-row template batch. Falls back
-    # to the original Spark path when any footer lacks ts statistics.
-    staged_fast = _stage_sentinels_pyarrow(
-        src, drop_dir, sentinel_days, base_mtime
-    )
-    if not staged_fast:
+
+    def fill(drop_dir: str) -> None:
+        os.symlink(src, f"{drop_dir}/events-00000.parquet")
+        base_mtime = os.path.getmtime(src)
+        # The sentinels are staged WITHOUT Spark jobs. max(ts) comes
+        # from the parquet FOOTER statistics (at corpus scale a
+        # batch.agg(max) is a full column scan; footers are O(row
+        # groups)), and the two one-row sentinel files are written
+        # directly with pyarrow from a one-row template batch. Falls
+        # back to the Spark path below when any footer lacks ts
+        # statistics.
+        if _stage_sentinels_pyarrow(src, drop_dir, sentinel_days, base_mtime):
+            return
         # raw-encoding far-future timestamps (nanos-as-long vs ts)
         mx = batch.agg(F.max("ts").alias("m")).collect()[0]["m"]
         for j in range(2):
@@ -183,14 +203,16 @@ def read_events_stream_unordered(
                     for f in schema.fields
                 ]
             )
-            staged = tempfile.mkdtemp(prefix="llamadb_sentinel_")
-            sentinel.write.mode("overwrite").parquet(staged)
-            part = next(
-                f for f in os.listdir(staged) if f.endswith(".parquet")
-            )
             dst = f"{drop_dir}/events-9999{j}-sentinel.parquet"
-            shutil.copyfile(os.path.join(staged, part), dst)
+            with tempfile.TemporaryDirectory(prefix="llamadb_sentinel_") as staged:
+                sentinel.write.mode("overwrite").parquet(staged)
+                part = next(
+                    f for f in os.listdir(staged) if f.endswith(".parquet")
+                )
+                shutil.copyfile(os.path.join(staged, part), dst)
             os.utime(dst, (base_mtime + 1 + j, base_mtime + 1 + j))
+
+    drop_dir = _drop_dir(src, "ooostream", sentinel_days, fill)
     raw = (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", files_per_trigger)

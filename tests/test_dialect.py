@@ -969,10 +969,10 @@ def test_merge_insert_only_multi_match_ok(db):
         "WHEN NOT MATCHED THEN INSERT (id, qty, price) "
         "VALUES (s.id, s.qty, s.price)"
     )
-    got = {
-        r.id: r.qty for r in db.execute("SELECT id, qty FROM inv").collect()
-    }
-    assert got == {1: 10, 2: 5, 3: 7, 4: 9}
+    got = sorted(
+        (r.id, r.qty) for r in db.execute("SELECT id, qty FROM inv").collect()
+    )
+    assert got == [(1, 10), (2, 5), (3, 7), (4, 9)]  # id 2 passes through once
 
 
 def test_connect_entry_point_no_module_shadow(spark):
@@ -1080,25 +1080,103 @@ def test_writes_run_one_spark_job(db, spark):
     assert rows == [(2, "u"), (3, "u")]
 
 
-#: Spark jobs of an upsert MERGE into a 3-row table: the commit job's
-#: query stages under AQE (the pre-pass it replaced ran 10 more).
-MERGE_JOBS = 3
+#: Spark jobs of an upsert MERGE into a 3-row table: the one commit
+#: job. Its one join of one-partition tables is planned without a
+#: shuffle stage of its own (the LEFT + LEFT ANTI shape it replaced
+#: ran 3; the cardinality pre-pass before that, 10 more).
+MERGE_JOBS = 1
+
+_UPSERT = (
+    "MERGE INTO inv USING {src} ON t.id = s.id "
+    "WHEN MATCHED THEN UPDATE SET qty = t.qty + s.qty "
+    "WHEN NOT MATCHED THEN INSERT (id, qty, price) "
+    "VALUES (s.id, s.qty, s.price)"
+)
 
 
 def test_merge_job_count_pinned(db, spark):
     """MERGE's cardinality check is two observed counts in the commit
-    job, not a join+groupBy pre-pass of its own."""
+    job, not a join+groupBy pre-pass of its own, and the commit reads
+    its source once: one join, no second (anti) join for the inserts."""
     _merge_db(db)
-    n = _spark_jobs(
-        spark,
-        lambda: db.execute(
-            "MERGE INTO inv USING delta ON t.id = s.id "
-            "WHEN MATCHED THEN UPDATE SET qty = t.qty + s.qty "
-            "WHEN NOT MATCHED THEN INSERT (id, qty, price) "
-            "VALUES (s.id, s.qty, s.price)"
-        ),
-    )
+    n = _spark_jobs(spark, lambda: db.execute(_UPSERT.format(src="delta")))
     assert n == MERGE_JOBS
+    spark.range(2, 5).selectExpr(
+        "CAST(id AS INT) AS id", "CAST(id * 2 AS INT) AS qty", "1.0D AS price"
+    ).createOrReplaceTempView("merge_range_src")
+    _, rows, _ = db._merge_df(_UPSERT.format(src="merge_range_src"))
+    plan = rows._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("Range (") == 1, plan
+
+
+def test_merge_insert_arm_resolves_against_the_source(db):
+    """Unqualified names in the INSERT arm are source columns, even
+    where the target has a column of the same name."""
+    _merge_db(db)
+    db.execute(
+        "MERGE INTO inv USING delta ON t.id = s.id "
+        "WHEN MATCHED THEN UPDATE SET qty = t.qty + s.qty "
+        "WHEN NOT MATCHED THEN INSERT (id, qty, price) VALUES (id, qty * 2, price)"
+    )
+    got = sorted(tuple(r) for r in db.execute("SELECT * FROM inv").collect())
+    assert got == [(1, 10, 2.5), (2, 8, 1.0), (3, 7, 4.0), (4, 18, 8.0)]
+
+
+def _partitions(db, name: str) -> int:
+    return db.table(name).rdd.getNumPartitions()
+
+
+def test_dialect_tables_sized_to_their_bytes(db, spark):
+    """A committed table has one partition per maxPartitionBytes of its
+    rows, whatever its input's layout: 800 rows are one partition
+    after compaction and after an UPDATE, a DELETE and a MERGE (each
+    100-row VALUES insert is parallelized over the session's cores)."""
+    db.execute("CREATE TABLE acct (id U32, owner STRING, balance F64)")
+    for b in range(8):  # the 8th INSERT compacts the delta segments
+        rows = range(b * 100, b * 100 + 100)
+        vals = ", ".join(f"({i}, 'u{i % 7}', {i}.5)" for i in rows)
+        db.execute(f"INSERT INTO acct VALUES {vals}")
+    assert db._segments["acct"] == 1  # compacted
+    assert _partitions(db, "acct") == 1
+    spark.createDataFrame(
+        [(5, 1.0), (9_000, 2.0)], "id int, amount double"
+    ).createOrReplaceTempView("acct_deposits")
+    for sql in (
+        "UPDATE acct SET balance = balance + 1 WHERE id < 400",
+        "DELETE FROM acct WHERE id >= 700",
+        "MERGE INTO acct USING acct_deposits ON t.id = s.id "
+        "WHEN MATCHED THEN UPDATE SET balance = t.balance + s.amount "
+        "WHEN NOT MATCHED THEN INSERT (id, owner, balance) "
+        "VALUES (s.id, 'merged', s.amount)",
+    ):
+        db.execute(sql)
+        assert _partitions(db, "acct") == 1, sql
+    assert db.execute("SELECT count(*) AS n FROM acct").collect()[0].n == 701
+
+
+@pytest.fixture()
+def small_splits(spark):
+    """spark.sql.files.maxPartitionBytes at 4 KB; restored afterwards."""
+    key = "spark.sql.files.maxPartitionBytes"
+    saved = spark.conf.get(key)
+    spark.conf.set(key, "4k")
+    yield
+    spark.conf.set(key, saved)
+
+
+def test_dialect_table_size_follows_max_partition_bytes(db, spark, small_splits):
+    """The split size is the session's maxPartitionBytes: 800 rows of
+    Spark's 36-byte width estimate (U32 is a BIGINT: 8, STRING 20,
+    DOUBLE 8) are 28 800 bytes, 8 partitions of 4 KB, coalesced from
+    the 16 the INSERT...SELECT reads."""
+    spark.range(0, 800, 1, 16).createOrReplaceTempView("acct_src")
+    db.execute("CREATE TABLE acct (id U32, owner STRING, balance F64)")
+    db.execute(
+        "INSERT INTO acct SELECT id, concat('u', id % 7), id + 0.5 FROM acct_src"
+    )
+    assert _partitions(db, "acct") == 8
+    rows = db.execute("SELECT count(*) AS n, sum(id) AS s FROM acct").collect()[0]
+    assert (rows.n, rows.s) == (800, sum(range(800)))
 
 
 def _plan(db, name: str) -> str:
@@ -1159,6 +1237,15 @@ def test_checks_raise_without_aqe_and_at_200_partitions(db, vanilla_conf):
     for matched in ("UPDATE SET qty = s.qty", "DELETE"):
         test_merge_cardinality_violation_raises(LlamaSession(db.spark), matched)
     test_merge_duplicate_source_key_without_match_inserts_both(LlamaSession(db.spark))
+
+
+def test_merge_commit_is_one_partition_at_200_shuffle_partitions(db, vanilla_conf):
+    """Without AQE nothing coalesces the MERGE join's output partitions;
+    the committed table is still sized to its 4 rows."""
+    _merge_db(db)
+    db.execute(_UPSERT.format(src="delta"))
+    assert _partitions(db, "inv") == 1
+    assert db.execute("SELECT count(*) AS n FROM inv").collect()[0].n == 4
 
 
 def test_merge_after_insert_select_from_constrained_table(db):

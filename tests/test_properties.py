@@ -440,6 +440,16 @@ def test_merge_upsert_matches_reference_model(spark, target, source):
 
 
 _ID = st.integers(0, 4)
+#: MERGE arms per op: the WHEN MATCHED action (None: insert-only) and
+#: whether a WHEN NOT MATCHED INSERT arm follows. The two shapes with
+#: both arms run a FULL join, the two matched-only ones a LEFT join.
+_MERGE_ARMS = {
+    "merge-update": ("UPDATE SET v = s.v", True),
+    "merge-delete": ("DELETE", True),
+    "merge-insert": (None, True),
+    "merge-update-only": ("UPDATE SET v = s.v", False),
+    "merge-delete-only": ("DELETE", False),
+}
 _STATEMENT = st.one_of(
     st.tuples(
         st.just("insert"), st.lists(st.tuples(_ID, _ID), min_size=1, max_size=3)
@@ -447,8 +457,9 @@ _STATEMENT = st.one_of(
     st.tuples(st.just("update"), _ID, _ID),
     st.tuples(st.just("delete"), st.none() | _ID),
     st.tuples(
-        st.sampled_from(["merge-update", "merge-delete"]),
+        st.sampled_from(sorted(_MERGE_ARMS)),
         st.dictionaries(_ID, _ID, min_size=1, max_size=3),
+        st.booleans(),
     ),
     st.tuples(st.just("reach"), _ID),
 )
@@ -465,12 +476,22 @@ def _reach(rows, start):
 
 @example(statements=[("merge-update", {1: 2}), ("merge-delete", {1: 3})])
 @example(statements=[("insert", [(0, 1), (1, 2)]), ("reach", 0)])
+@example(
+    statements=[
+        ("insert", [(0, 1), (1, 2), (1, 3)]),
+        ("merge-insert", {1: 4, 2: 0}, False),
+        ("merge-update-only", {0: 1, 2: 3}, True),
+        ("merge-delete-only", {1: 0, 2: 2}, True),
+        ("merge-update", {0: 0, 3: 4}, True),
+    ]
+)
 @given(statements=st.lists(_STATEMENT, min_size=1, max_size=6))
 @_SPARK_SETTINGS
 def test_dialect_statement_sequence_matches_model(spark, statements):
     """Statement-sequence fuzz over one (u, v) edge table: INSERT,
-    UPDATE, DELETE (with or without WHERE), MERGE with an UPDATE or a
-    DELETE arm plus an INSERT arm, and a recursive UNION reachability
+    UPDATE, DELETE (with or without WHERE), MERGE (an UPDATE or a
+    DELETE arm, an INSERT arm, or both; its ON optionally gated by the
+    non-equi term ``s.v >= 2``), and a recursive UNION reachability
     read. Every read and the final table must equal a plain-Python
     model of the same statements."""
     from llamadb_spark.sql import LlamaSession
@@ -496,18 +517,29 @@ def test_dialect_statement_sequence_matches_model(spark, statements):
             spark.createDataFrame(
                 sorted(arg.items()), "u long, v long"
             ).createOrReplaceTempView(f"{name}_src")
-            action = "UPDATE SET v = s.v" if op == "merge-update" else "DELETE"
+            action, insert = _MERGE_ARMS[op]
+            gated = bool(rest and rest[0])
             db.execute(
-                f"MERGE INTO {name} USING {name}_src ON t.u = s.u "
-                f"WHEN MATCHED THEN {action} "
-                "WHEN NOT MATCHED THEN INSERT (u, v) VALUES (s.u, s.v)"
+                f"MERGE INTO {name} USING {name}_src ON t.u = s.u"
+                + (" AND s.v >= 2" if gated else "")
+                + (f" WHEN MATCHED THEN {action}" if action else "")
+                + (
+                    " WHEN NOT MATCHED THEN INSERT (u, v) VALUES (s.u, s.v)"
+                    if insert
+                    else ""
+                )
             )
+            # source rows the ON condition admits, by key
+            hits = {k: sv for k, sv in arg.items() if not gated or sv >= 2}
             old = {u for u, _ in model}
-            if op == "merge-update":
-                model = [(u, arg.get(u, v)) for u, v in model]
-            else:
-                model = [(u, v) for u, v in model if u not in arg]
-            model += [(u, v) for u, v in arg.items() if u not in old]
+            if action == "DELETE":
+                model = [(u, v) for u, v in model if u not in hits]
+            elif action:
+                model = [(u, hits.get(u, v)) for u, v in model]
+            if insert:
+                model += [
+                    (k, sv) for k, sv in arg.items() if k not in old or k not in hits
+                ]
         else:
             got = db.execute(
                 f"WITH RECURSIVE reach(v) AS (SELECT v FROM {name} WHERE u = {arg} "

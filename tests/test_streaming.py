@@ -2246,3 +2246,30 @@ def test_unordered_drain_is_two_microbatches(spark, sf_dir):
     assert batch_ids == {0, 1}, f"expected 2 micro-batches, got {sorted(batch_ids)}"
     # and the drain produced output (timers actually fired in batch 1)
     assert spark.table("drain_batch_probe").count() > 0
+
+
+def test_event_stream_drop_dirs_are_shared(spark, sf_dir, tmp_path, monkeypatch):
+    """Building e24's stream twice stages one drop directory, not one
+    per build, and the second drain over it returns the same matrix.
+    The ordered stream shares its own directory the same way."""
+    import tempfile
+
+    from llamadb_spark.queries.events import e24_transition_stream
+    from llamadb_spark.streaming import streams
+
+    monkeypatch.setenv("TMPDIR", str(tmp_path))
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    monkeypatch.setattr(streams, "_DROP_DIRS", {}, raising=False)
+
+    def drops():
+        return sorted(p.name for p in tmp_path.glob("llamadb_events_*"))
+
+    runs = [
+        sorted(tuple(r) for r in e24_transition_stream(spark, sf_dir).collect())
+        for _ in range(2)
+    ]
+    assert runs[0] == runs[1] and runs[0]
+    assert len(drops()) == 1, drops()
+    for _ in range(2):
+        read_events_stream(spark, sf_dir)
+    assert len(drops()) == 2, drops()
