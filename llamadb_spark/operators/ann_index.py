@@ -50,6 +50,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import col
 
 from llamadb_spark.functions.vector import as_double
+from llamadb_spark.session import read_parquet
 
 _MANIFEST = "_manifest"
 
@@ -263,7 +264,7 @@ def load_ivfpq_model(spark: SparkSession, path: str):
     version = current_index_version(spark, path)
     vdir = _vdir(path, version)
     params = _read_json_row(spark, os.path.join(vdir, "params"))
-    rows = spark.read.parquet(os.path.join(vdir, "model")).collect()
+    rows = read_parquet(spark, os.path.join(vdir, "model")).collect()
     cents = np.zeros((params["n_cells"], params["dim"]))
     ds = params["dim"] // params["n_subspaces"]
     books = np.zeros((params["n_subspaces"], params["n_codes"], ds))
@@ -307,8 +308,8 @@ def ivfpq_query_index(
                 f"ivfpq index at {path} was built with different "
                 f"params (expected, stored): {diff}"
             )
-    index = spark.read.parquet(
-        os.path.join(_vdir(path, params["version"]), "codes")
+    index = read_parquet(
+        spark, os.path.join(_vdir(path, params["version"]), "codes")
     )
     return _ivfpq_query(
         index, cents, books, emb, query_ids,

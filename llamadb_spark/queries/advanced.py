@@ -20,9 +20,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.functions import broadcast, col, lit
 
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+from llamadb_spark.session import read_table
 
 
 # ---------------------------------------------------------------------------
@@ -38,9 +36,9 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 # fan-out-heavy fact table.
 # ---------------------------------------------------------------------------
 def q39_semi_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    customer = _t(spark, sf_dir, "customer")
+    customer = read_table(spark, sf_dir, "customer")
     urgent = (
-        _t(spark, sf_dir, "orders")
+        read_table(spark, sf_dir, "orders")
         .filter(col("o_orderpriority") == "1-URGENT")
         .select("o_custkey")
     )
@@ -69,8 +67,8 @@ WHERE EXISTS (SELECT 1 FROM orders
 # 5 segments. sum(CASE WHEN) is codegen'd; no second scan.
 # ---------------------------------------------------------------------------
 def q40_conditional_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders = _t(spark, sf_dir, "orders")
-    customer = _t(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment")
+    orders = read_table(spark, sf_dir, "orders")
+    customer = read_table(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment")
     urgent = col("o_orderpriority") == "1-URGENT"
     return (
         orders.join(broadcast(customer), orders.o_custkey == customer.c_custkey)
@@ -114,7 +112,7 @@ GROUP BY c_mktsegment
 # fold accumulates in f64 from the first element.
 # ---------------------------------------------------------------------------
 def q41_array_hof(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = _t(spark, sf_dir, "embeddings")
+    emb = read_table(spark, sf_dir, "embeddings")
     as_double = F.transform(col("embedding"), lambda x: x.cast("double"))
     return (
         emb.select(
@@ -176,7 +174,7 @@ WHERE total_revenue = (SELECT max(total_revenue) FROM revenue)
 
 def q42_cte_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     for t in ("lineitem", "supplier"):
-        _t(spark, sf_dir, t).createOrReplaceTempView(t)
+        read_table(spark, sf_dir, t).createOrReplaceTempView(t)
     return spark.sql(_Q42_SQL)
 
 
@@ -196,10 +194,10 @@ ORACLE_Q42 = _Q42_SQL
 # broadcast; the min-join is an equi-join on (l_partkey, price).
 # ---------------------------------------------------------------------------
 def q43_min_cost_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem").select(
+    li = read_table(spark, sf_dir, "lineitem").select(
         "l_partkey", "l_suppkey", "l_extendedprice"
     )
-    part = _t(spark, sf_dir, "part").filter(col("p_size") <= 5).select(
+    part = read_table(spark, sf_dir, "part").filter(col("p_size") <= 5).select(
         "p_partkey", "p_name"
     )
     min_price = li.groupBy("l_partkey").agg(
@@ -238,17 +236,17 @@ WHERE p_size <= 5
 # to 6 absorbs summation-order jitter.
 # ---------------------------------------------------------------------------
 def q44_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem").select(
+    li = read_table(spark, sf_dir, "lineitem").select(
         "l_orderkey", (col("l_extendedprice") * (1 - col("l_discount"))).alias("rev")
     )
-    orders = _t(spark, sf_dir, "orders").select(
+    orders = read_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey", F.year("o_orderdate").alias("o_year")
     )
     cust_nation = (
-        _t(spark, sf_dir, "customer")
+        read_table(spark, sf_dir, "customer")
         .select("c_custkey", "c_nationkey")
         .join(
-            broadcast(_t(spark, sf_dir, "nation")),
+            broadcast(read_table(spark, sf_dir, "nation")),
             col("c_nationkey") == col("n_nationkey"),
         )
         .select("c_custkey", "n_name")
@@ -296,7 +294,7 @@ ORDER BY o_year
 # ---------------------------------------------------------------------------
 def q45_unpivot(spark: SparkSession, sf_dir: str) -> DataFrame:
     wide = (
-        _t(spark, sf_dir, "orders")
+        read_table(spark, sf_dir, "orders")
         .groupBy("o_orderpriority")
         .agg(
             F.count(lit(1)).cast("double").alias("n_orders"),
@@ -347,7 +345,7 @@ def q46_scd2_intervals(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     w = Window.partitionBy("o_custkey").orderBy("o_orderdate", "o_orderkey")
     return (
-        _t(spark, sf_dir, "orders")
+        read_table(spark, sf_dir, "orders")
         .select(
             "o_custkey",
             "o_orderkey",
@@ -386,7 +384,7 @@ def q47_window_dist(spark: SparkSession, sf_dir: str) -> DataFrame:
         col("s_acctbal").desc(), col("s_suppkey")
     )
     wf = w.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-    return _t(spark, sf_dir, "supplier").select(
+    return read_table(spark, sf_dir, "supplier").select(
         "s_suppkey",
         "s_nationkey",
         F.round("s_acctbal", 2).alias("acctbal"),
@@ -421,7 +419,7 @@ WINDOW w AS (PARTITION BY s_nationkey ORDER BY s_acctbal DESC, s_suppkey)
 # metadata bits carried by the Expand, zero extra cost.
 # ---------------------------------------------------------------------------
 def q48_grouping_id(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders = _t(spark, sf_dir, "orders").select(
+    orders = read_table(spark, sf_dir, "orders").select(
         "o_orderstatus", "o_orderpriority", "o_totalprice"
     )
     return (
@@ -456,7 +454,7 @@ GROUP BY CUBE(o_orderstatus, o_orderpriority)
 # ---------------------------------------------------------------------------
 def q49_pagination(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
-        _t(spark, sf_dir, "orders")
+        read_table(spark, sf_dir, "orders")
         .select("o_orderkey", "o_custkey", F.round("o_totalprice", 2).alias("price"))
         .orderBy(col("price").desc(), col("o_orderkey"))
         .offset(40)
@@ -480,9 +478,9 @@ LIMIT 20 OFFSET 40
 # (their left-join count is NULL).
 # ---------------------------------------------------------------------------
 def q50_nulls_order(spark: SparkSession, sf_dir: str) -> DataFrame:
-    cust = _t(spark, sf_dir, "customer").select("c_custkey", "c_name")
+    cust = read_table(spark, sf_dir, "customer").select("c_custkey", "c_name")
     urgent = (
-        _t(spark, sf_dir, "orders")
+        read_table(spark, sf_dir, "orders")
         .filter(col("o_orderpriority") == "1-URGENT")
         .groupBy("o_custkey")
         .agg(F.count(lit(1)).alias("n_urgent"))
@@ -518,7 +516,7 @@ LIMIT 30
 # ---------------------------------------------------------------------------
 def q51_string_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs = (
-        _t(spark, sf_dir, "customer")
+        read_table(spark, sf_dir, "customer")
         .select("c_nationkey", "c_mktsegment")
         .distinct()
     )
@@ -554,7 +552,7 @@ HIST_WIDTH = 25_000
 
 
 def q52_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = _t(spark, sf_dir, "orders")
+    o = read_table(spark, sf_dir, "orders")
     bucket = F.floor(col("o_totalprice") / HIST_WIDTH).cast("long")
     return (
         o.groupBy(bucket.alias("bucket"))
@@ -602,7 +600,7 @@ ORDER BY bucket
 def q53_mode_disc(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.window import Window
 
-    li = _t(spark, sf_dir, "lineitem")
+    li = read_table(spark, sf_dir, "lineitem")
     counts = li.groupBy("l_returnflag", "l_quantity").agg(
         F.count(lit(1)).alias("_n")
     )
@@ -661,7 +659,7 @@ LATERAL (SELECT c_name, c_acctbal FROM customer
 
 def q54_lateral_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     for t in ("nation", "customer"):
-        _t(spark, sf_dir, t).createOrReplaceTempView(t)
+        read_table(spark, sf_dir, t).createOrReplaceTempView(t)
     return spark.sql(_Q54_SQL)
 
 

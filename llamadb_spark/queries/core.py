@@ -23,11 +23,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.functions import broadcast, col, lit
 
-from llamadb_spark.session import load_tables
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+from llamadb_spark.session import load_tables, read_table
 
 
 # ---------------------------------------------------------------------------
@@ -35,7 +31,7 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 # (llamadb: scan -> if -> yield, queryplan/mod.rs; ops ast.rs:7-23)
 # ---------------------------------------------------------------------------
 def q02_filter_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem")
+    li = read_table(spark, sf_dir, "lineitem")
     return li.filter(
         ((col("l_quantity") > 45) | (col("l_quantity") < 2))
         & (col("l_discount") < 0.05)
@@ -57,7 +53,7 @@ WHERE (l_quantity > 45 OR l_quantity < 2)
 # shuffle on the (low-cardinality) grouping key.
 # ---------------------------------------------------------------------------
 def q01_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem")
+    li = read_table(spark, sf_dir, "lineitem")
     return (
         li.filter(col("l_shipdate") <= lit("1998-09-02"))
         .groupBy("l_returnflag", "l_linestatus")
@@ -103,8 +99,8 @@ GROUP BY l_returnflag, l_linestatus
 # as crossJoin + filter — Catalyst rewrites to an equi hash join.
 # ---------------------------------------------------------------------------
 def q03_cross_join_where(spark: SparkSession, sf_dir: str) -> DataFrame:
-    nation = _t(spark, sf_dir, "nation")
-    region = _t(spark, sf_dir, "region")
+    nation = read_table(spark, sf_dir, "nation")
+    region = read_table(spark, sf_dir, "region")
     return (
         nation.crossJoin(broadcast(region))
         .filter(col("n_regionkey") == col("r_regionkey"))
@@ -123,8 +119,8 @@ SELECT n_name, r_name FROM nation, region WHERE n_regionkey = r_regionkey
 # picks sort-merge; the hint stays correct for the dim-sized case).
 # ---------------------------------------------------------------------------
 def q04_inner_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders = _t(spark, sf_dir, "orders")
-    customer = _t(spark, sf_dir, "customer").filter(col("c_mktsegment") == "BUILDING")
+    orders = read_table(spark, sf_dir, "orders")
+    customer = read_table(spark, sf_dir, "customer").filter(col("c_mktsegment") == "BUILDING")
     return orders.join(broadcast(customer), col("o_custkey") == col("c_custkey")).select(
         "o_orderkey", "o_totalprice", "c_name"
     )
@@ -143,8 +139,8 @@ WHERE c_mktsegment = 'BUILDING'
 # n_big_orders = 0.
 # ---------------------------------------------------------------------------
 def q05_left_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    customer = _t(spark, sf_dir, "customer")
-    big = _t(spark, sf_dir, "orders").filter(col("o_totalprice") > 300000)
+    customer = read_table(spark, sf_dir, "customer")
+    big = read_table(spark, sf_dir, "orders").filter(col("o_totalprice") > 300000)
     return (
         customer.join(big, col("c_custkey") == col("o_custkey"), "left")
         .groupBy("c_custkey", "c_name")
@@ -168,8 +164,8 @@ GROUP BY c_custkey, c_name
 # literal correlated-subquery form to prove semantic parity.
 # ---------------------------------------------------------------------------
 def q06_correlated_subquery(spark: SparkSession, sf_dir: str) -> DataFrame:
-    customer = _t(spark, sf_dir, "customer")
-    nation = _t(spark, sf_dir, "nation")
+    customer = read_table(spark, sf_dir, "customer")
+    nation = read_table(spark, sf_dir, "nation")
     return (
         customer.groupBy("c_nationkey")
         .agg(
@@ -200,7 +196,7 @@ GROUP BY c_nationkey
 # driver — works identically on a cluster).
 # ---------------------------------------------------------------------------
 def q07_scalar_subquery(spark: SparkSession, sf_dir: str) -> DataFrame:
-    part = _t(spark, sf_dir, "part")
+    part = read_table(spark, sf_dir, "part")
     avg_price = part.agg(F.avg("p_retailprice").alias("_avg_price"))
     return (
         part.crossJoin(broadcast(avg_price))
@@ -220,7 +216,7 @@ WHERE p_retailprice > (SELECT avg(p_retailprice) FROM part)
 # 12: HAVING (ast.rs:82) — post-aggregation filter.
 # ---------------------------------------------------------------------------
 def q08_group_having(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders = _t(spark, sf_dir, "orders")
+    orders = read_table(spark, sf_dir, "orders")
     return (
         orders.groupBy("o_custkey")
         .agg(
@@ -246,7 +242,7 @@ HAVING count(*) > 12
 # top-k).
 # ---------------------------------------------------------------------------
 def q09_order_limit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders = _t(spark, sf_dir, "orders")
+    orders = read_table(spark, sf_dir, "orders")
     return (
         orders.select("o_orderkey", "o_custkey", "o_totalprice")
         .orderBy(col("o_totalprice").desc(), col("o_orderkey"))
@@ -264,7 +260,7 @@ FROM orders ORDER BY o_totalprice DESC, o_orderkey LIMIT 25
 # 15: DISTINCT — hash-distinct (shuffle on the full row key).
 # ---------------------------------------------------------------------------
 def q10_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
-    customer = _t(spark, sf_dir, "customer")
+    customer = read_table(spark, sf_dir, "customer")
     return customer.select("c_mktsegment", "c_nationkey").distinct()
 
 
@@ -279,7 +275,7 @@ SELECT DISTINCT c_mktsegment, c_nationkey FROM customer
 # whole-stage codegen (no UDFs).
 # ---------------------------------------------------------------------------
 def q11_expressions(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem")
+    li = read_table(spark, sf_dir, "lineitem")
     return li.filter(col("l_orderkey") < 100).select(
         "l_orderkey",
         "l_linenumber",
@@ -307,9 +303,9 @@ FROM lineitem WHERE l_orderkey < 100
 # rewrite Catalyst itself uses for IN-subqueries).
 # ---------------------------------------------------------------------------
 def q12_in_subquery(spark: SparkSession, sf_dir: str) -> DataFrame:
-    customer = _t(spark, sf_dir, "customer")
+    customer = read_table(spark, sf_dir, "customer")
     asia_nations = (
-        _t(spark, sf_dir, "nation").filter(col("n_regionkey") == 2).select("n_nationkey")
+        read_table(spark, sf_dir, "nation").filter(col("n_regionkey") == 2).select("n_nationkey")
     )
     return customer.join(
         broadcast(asia_nations), col("c_nationkey") == col("n_nationkey"), "left_semi"
@@ -327,8 +323,8 @@ WHERE c_nationkey IN (SELECT n_nationkey FROM nation WHERE n_regionkey = 2)
 # 20: EXISTS (correlated) — LEFT SEMI join on the correlation key.
 # ---------------------------------------------------------------------------
 def q13_exists(spark: SparkSession, sf_dir: str) -> DataFrame:
-    supplier = _t(spark, sf_dir, "supplier")
-    hot = _t(spark, sf_dir, "lineitem").filter(col("l_quantity") > 49.5).select("l_suppkey")
+    supplier = read_table(spark, sf_dir, "supplier")
+    hot = read_table(spark, sf_dir, "lineitem").filter(col("l_quantity") > 49.5).select("l_suppkey")
     return supplier.join(hot, col("s_suppkey") == col("l_suppkey"), "left_semi").select(
         "s_suppkey", "s_name", "s_acctbal"
     )
@@ -345,7 +341,7 @@ WHERE EXISTS (SELECT 1 FROM lineitem WHERE l_suppkey = s_suppkey AND l_quantity 
 # 21: CASE expression (Usage.md roadmap) — F.when chain, codegen'd.
 # ---------------------------------------------------------------------------
 def q14_case_expr(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders = _t(spark, sf_dir, "orders")
+    orders = read_table(spark, sf_dir, "orders")
     price_class = (
         F.when(col("o_totalprice") > 300000, "large")
         .when(col("o_totalprice") > 150000, "medium")
@@ -374,7 +370,7 @@ GROUP BY 1, 2
 # (aggregate.rs:70-114 Min/Max via ColumnValue compare).
 # ---------------------------------------------------------------------------
 def q15_agg_minmax(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem")
+    li = read_table(spark, sf_dir, "lineitem")
     return li.groupBy("l_returnflag").agg(
         F.min("l_quantity").alias("min_qty"),
         F.max("l_quantity").alias("max_qty"),
@@ -404,14 +400,14 @@ GROUP BY l_returnflag
 # scale). FROM-subquery (#18) is the filtered orders relation.
 # ---------------------------------------------------------------------------
 def q16_revenue_by_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
-    region = _t(spark, sf_dir, "region").filter(col("r_name") == "ASIA")
-    nation = _t(spark, sf_dir, "nation")
-    customer = _t(spark, sf_dir, "customer")
-    supplier = _t(spark, sf_dir, "supplier")
-    orders = _t(spark, sf_dir, "orders").filter(
+    region = read_table(spark, sf_dir, "region").filter(col("r_name") == "ASIA")
+    nation = read_table(spark, sf_dir, "nation")
+    customer = read_table(spark, sf_dir, "customer")
+    supplier = read_table(spark, sf_dir, "supplier")
+    orders = read_table(spark, sf_dir, "orders").filter(
         (col("o_orderdate") >= lit("1996-01-01")) & (col("o_orderdate") < lit("1998-01-01"))
     )
-    lineitem = _t(spark, sf_dir, "lineitem")
+    lineitem = read_table(spark, sf_dir, "lineitem")
 
     asia_nation = nation.join(
         broadcast(region), col("n_regionkey") == col("r_regionkey")
@@ -460,8 +456,8 @@ GROUP BY n_name
 # 22: UNION ALL.
 # ---------------------------------------------------------------------------
 def q17_union_all(spark: SparkSession, sf_dir: str) -> DataFrame:
-    customer = _t(spark, sf_dir, "customer")
-    supplier = _t(spark, sf_dir, "supplier")
+    customer = read_table(spark, sf_dir, "customer")
+    supplier = read_table(spark, sf_dir, "supplier")
     c = customer.filter(col("c_acctbal") > 9900).select(
         col("c_name").alias("name"), lit("customer").alias("kind"),
         col("c_acctbal").alias("acctbal"),
@@ -489,7 +485,7 @@ FROM supplier WHERE s_acctbal > 9000
 def q18_window_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.window import Window
 
-    orders = _t(spark, sf_dir, "orders")
+    orders = read_table(spark, sf_dir, "orders")
     w = Window.partitionBy("o_custkey").orderBy(
         col("o_totalprice").desc(), col("o_orderkey")
     )
@@ -522,8 +518,8 @@ WHERE rn <= 3
 # included via the outer join).
 # ---------------------------------------------------------------------------
 def q21_order_count_dist(spark: SparkSession, sf_dir: str) -> DataFrame:
-    customer = _t(spark, sf_dir, "customer").select("c_custkey")
-    orders = _t(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
+    customer = read_table(spark, sf_dir, "customer").select("c_custkey")
+    orders = read_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
     per_cust = (
         customer.join(orders, col("c_custkey") == col("o_custkey"), "left")
         .groupBy("c_custkey")
@@ -551,9 +547,9 @@ GROUP BY order_count
 # priority filter is pushed to the orders parquet scan.
 # ---------------------------------------------------------------------------
 def q22_anti_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    customer = _t(spark, sf_dir, "customer")
+    customer = read_table(spark, sf_dir, "customer")
     urgent = (
-        _t(spark, sf_dir, "orders")
+        read_table(spark, sf_dir, "orders")
         .filter(col("o_orderpriority") == "1-URGENT")
         .select("o_custkey")
     )
@@ -589,7 +585,7 @@ GROUP BY c_nationkey
 # map-side, so the input is scanned once (vs 4 unioned GROUP BYs).
 # ---------------------------------------------------------------------------
 def q23_cube(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem")
+    li = read_table(spark, sf_dir, "lineitem")
     return (
         li.filter(col("l_shipdate") <= lit("1998-09-02"))
         .cube("l_returnflag", "l_linestatus")
@@ -619,10 +615,10 @@ GROUP BY CUBE (l_returnflag, l_linestatus)
 # both sides before the shuffle.
 # ---------------------------------------------------------------------------
 def q24_corr_agg_subquery(spark: SparkSession, sf_dir: str) -> DataFrame:
-    part = _t(spark, sf_dir, "part").filter(col("p_brand") == "Brand#1").select(
+    part = read_table(spark, sf_dir, "part").filter(col("p_brand") == "Brand#1").select(
         "p_partkey"
     )
-    li = _t(spark, sf_dir, "lineitem").select(
+    li = read_table(spark, sf_dir, "lineitem").select(
         "l_partkey", "l_quantity", "l_extendedprice"
     )
     branded = li.join(broadcast(part), col("l_partkey") == col("p_partkey")).select(
@@ -660,12 +656,12 @@ WHERE p_brand = 'Brand#1'
 # ---------------------------------------------------------------------------
 def q25_set_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
     cn = (
-        _t(spark, sf_dir, "customer")
+        read_table(spark, sf_dir, "customer")
         .filter(col("c_acctbal") > 9000)
         .select(col("c_nationkey").alias("nationkey"))
     )
     sn = (
-        _t(spark, sf_dir, "supplier")
+        read_table(spark, sf_dir, "supplier")
         .filter(col("s_acctbal") > 9000)
         .select(col("s_nationkey").alias("nationkey"))
     )
@@ -699,7 +695,7 @@ SELECT 'customer_only' AS side, nationkey FROM (
 def q26_window_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.window import Window
 
-    orders = _t(spark, sf_dir, "orders")
+    orders = read_table(spark, sf_dir, "orders")
     w = Window.partitionBy("o_custkey").orderBy(col("o_totalprice"), col("o_orderkey"))
     wb = Window.partitionBy("o_custkey").orderBy(F.floor(col("o_totalprice") / 50000))
     return orders.select(
@@ -731,7 +727,7 @@ WINDOW w AS (PARTITION BY o_custkey ORDER BY o_totalprice, o_orderkey)
 # calendar keys still gets map-side partial agg.
 # ---------------------------------------------------------------------------
 def q27_date_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders = _t(spark, sf_dir, "orders")
+    orders = read_table(spark, sf_dir, "orders")
     return (
         orders.select(
             F.year("o_orderdate").cast("long").alias("o_year"),
@@ -766,7 +762,7 @@ GROUP BY 1, 2, 3, 4
 # the scan's projection.
 # ---------------------------------------------------------------------------
 def q28_string_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    part = _t(spark, sf_dir, "part").filter(col("p_partkey") <= 500)
+    part = read_table(spark, sf_dir, "part").filter(col("p_partkey") <= 500)
     return part.select(
         "p_partkey",
         F.upper("p_name").alias("name_upper"),
@@ -799,7 +795,7 @@ FROM part WHERE p_partkey <= 500
 # instead of 3 unioned GROUP BYs.
 # ---------------------------------------------------------------------------
 def q29_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _t(spark, sf_dir, "orders").createOrReplaceTempView("llamadb_orders_gs")
+    read_table(spark, sf_dir, "orders").createOrReplaceTempView("llamadb_orders_gs")
     return spark.sql(
         """
         SELECT o_orderstatus, o_orderpriority,
@@ -828,9 +824,9 @@ GROUP BY GROUPING SETS ((o_orderstatus, o_orderpriority), (o_orderstatus), ())
 # end-to-end.
 # ---------------------------------------------------------------------------
 def q30_null_handling(spark: SparkSession, sf_dir: str) -> DataFrame:
-    customer = _t(spark, sf_dir, "customer")
+    customer = read_table(spark, sf_dir, "customer")
     spent = (
-        _t(spark, sf_dir, "orders")
+        read_table(spark, sf_dir, "orders")
         .filter(col("o_totalprice") > 300000)
         .groupBy("o_custkey")
         .agg(F.sum("o_totalprice").alias("spent"))

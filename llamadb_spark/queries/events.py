@@ -8,7 +8,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from llamadb_spark.operators import events as ev
-from llamadb_spark.session import stage
+from llamadb_spark.session import read_table, stage
 
 
 def _events(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -28,7 +28,7 @@ def _events(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.types import LongType, TimestampNTZType
 
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    df = spark.read.parquet(f"{sf_dir}/events.parquet")
+    df = read_table(spark, sf_dir, "events")
     ts_type = df.schema["ts"].dataType
     if isinstance(ts_type, LongType):
         df = df.withColumn("ts", F.expr("timestamp_micros(ts div 1000)"))
@@ -162,7 +162,7 @@ def e07_stream_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Batch form of the stream-static dimension join (streaming twin
     covered by the stream≡batch test): events enriched with the
     customer segment, rolled up per (segment, event_type)."""
-    dim = spark.read.parquet(f"{sf_dir}/customer.parquet").select(
+    dim = read_table(spark, sf_dir, "customer").select(
         "c_custkey", "c_mktsegment"
     )
     return ev.enrich_events(_events(spark, sf_dir), dim)

@@ -11,10 +11,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import broadcast, col, lit
 
 from llamadb_spark.operators.asof import asof_join
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+from llamadb_spark.session import read_table
 
 
 # ---------------------------------------------------------------------------
@@ -22,10 +19,10 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 # grouping sets; one shuffle, partial aggregation per set).
 # ---------------------------------------------------------------------------
 def q19_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders = _t(spark, sf_dir, "orders").select(
+    orders = read_table(spark, sf_dir, "orders").select(
         "o_orderkey", F.year("o_orderdate").cast("int").alias("o_year"), "o_orderpriority"
     )
-    li = _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_extendedprice", "l_discount")
+    li = read_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_extendedprice", "l_discount")
     return (
         orders.join(li, col("o_orderkey") == col("l_orderkey"))
         .rollup("o_year", "o_orderpriority")
@@ -54,8 +51,8 @@ GROUP BY ROLLUP(o_year, o_orderpriority)
 # keep it one pass; without them Spark needs a distinct-scan first).
 # ---------------------------------------------------------------------------
 def q20_pivot(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders = _t(spark, sf_dir, "orders").select("o_custkey", "o_orderstatus")
-    customer = _t(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment")
+    orders = read_table(spark, sf_dir, "orders").select("o_custkey", "o_orderstatus")
+    customer = read_table(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment")
     return (
         orders.join(broadcast(customer), col("o_custkey") == col("c_custkey"))
         .groupBy("c_mktsegment")
@@ -274,7 +271,7 @@ def a02_approx_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     percentile inside the exact inter-quantile envelope ±5 rank
     points. Both sketches are deterministic for fixed data, so the
     booleans are stable across runs at a given SF."""
-    ev = _t(spark, sf_dir, "events")
+    ev = read_table(spark, sf_dir, "events")
     # TWO separate aggregations joined on the 5-row group key, not
     # one: mixing countDistinct (Expand rewrite) with the
     # TypedImperativeAggregate percentiles in a single agg forces a
@@ -330,7 +327,7 @@ GROUP BY event_type
 def r01_range_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     from llamadb_spark.operators.range_join import range_join
 
-    li = _t(spark, sf_dir, "lineitem").select("l_extendedprice")
+    li = read_table(spark, sf_dir, "lineitem").select("l_extendedprice")
     bands = spark.range(21).select(
         col("id").alias("band_id"),
         (lit(900.0) + col("id") * 5000.0).alias("lo"),
@@ -364,7 +361,7 @@ GROUP BY band_id
 # exact answers where group sizes allow, sketches where they don't.
 # ---------------------------------------------------------------------------
 def q31_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem")
+    li = read_table(spark, sf_dir, "lineitem")
     return li.groupBy("l_returnflag").agg(
         F.round(F.median("l_quantity"), 6).alias("med_qty"),
         F.round(F.percentile("l_extendedprice", 0.25), 6).alias("p25_price"),
@@ -392,7 +389,7 @@ GROUP BY l_returnflag
 # round absorbs partial-merge vs serial summation ULP drift.
 # ---------------------------------------------------------------------------
 def q32_stats_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem")
+    li = read_table(spark, sf_dir, "lineitem")
     # `+ 0.0` normalizes IEEE negative zero (round can yield -0.0,
     # whose repr differs between engines even though the value ties)
     return li.groupBy("l_returnflag").agg(
@@ -438,7 +435,7 @@ GROUP BY l_returnflag
 # group-by path); no incremental aggregate state exists there.
 # ---------------------------------------------------------------------------
 def a06_sketch_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _t(spark, sf_dir, "events").select(
+    ev = read_table(spark, sf_dir, "events").select(
         "event_type", F.to_date("ts").alias("day"), "user_id"
     )
     daily = ev.groupBy("event_type", "day").agg(
@@ -499,7 +496,7 @@ def a07_twap(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from pyspark.sql.window import Window
 
-    ev = _t(spark, sf_dir, "events").select(
+    ev = read_table(spark, sf_dir, "events").select(
         "event_type",
         F.date_trunc("day", col("ts")).alias("day"),
         "ts",

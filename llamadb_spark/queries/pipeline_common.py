@@ -14,6 +14,7 @@ from pyspark.sql import functions as F
 from llamadb_spark.operators import dedup, multimodal, similarity, textops
 from llamadb_spark.functions import text as text_fns
 from llamadb_spark.functions.text import STOPWORDS
+from llamadb_spark.session import read_table
 
 
 def _rebalance(spark: SparkSession, df: DataFrame) -> DataFrame:
@@ -35,9 +36,9 @@ def _rebalance(spark: SparkSession, df: DataFrame) -> DataFrame:
         return df.repartition(target)
     return df
 def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _rebalance(spark, spark.read.parquet(f"{sf_dir}/documents.parquet"))
+    return _rebalance(spark, read_table(spark, sf_dir, "documents"))
 def _emb(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _rebalance(spark, spark.read.parquet(f"{sf_dir}/embeddings.parquet"))
+    return _rebalance(spark, read_table(spark, sf_dir, "embeddings"))
 JACCARD_THRESHOLD = 0.12
 #: Stop-shingle cap for the oracled jaccard family (d02 and the
 #: cluster/split queries built on it). Passed EXPLICITLY so the

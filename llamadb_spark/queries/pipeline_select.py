@@ -13,7 +13,7 @@ from pyspark.sql import functions as F
 from llamadb_spark.operators import dedup, multimodal, similarity, textops
 from llamadb_spark.functions import text as text_fns
 from llamadb_spark.functions.text import STOPWORDS
-from llamadb_spark.session import stage
+from llamadb_spark.session import read_table, stage
 
 from llamadb_spark.queries.pipeline_common import (
     _docs,
@@ -235,8 +235,8 @@ def p08_dq_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from pyspark.sql.functions import broadcast, col, lit
 
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
-    cust = spark.read.parquet(f"{sf_dir}/customer.parquet").select("c_custkey")
+    orders = read_table(spark, sf_dir, "orders")
+    cust = read_table(spark, sf_dir, "customer").select("c_custkey")
     one_pass = orders.agg(
         (F.count(lit(1)) - F.countDistinct("o_orderkey")).alias(
             "pk_duplicate_orderkeys"

@@ -20,9 +20,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.functions import col, lit
 
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+from llamadb_spark.session import read_table
 
 
 # ---------------------------------------------------------------------------
@@ -37,7 +35,7 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 # reuses the exchange rather than re-partitioning.
 # ---------------------------------------------------------------------------
 def q33_full_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders = _t(spark, sf_dir, "orders")
+    orders = read_table(spark, sf_dir, "orders")
     fulfilled = (
         orders.filter(col("o_orderstatus") == "F")
         .groupBy("o_custkey")
@@ -83,7 +81,7 @@ USING (o_custkey)
 # token asc, so ties can't flip rows between engines.
 # ---------------------------------------------------------------------------
 def q34_explode_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _t(spark, sf_dir, "documents")
+    docs = read_table(spark, sf_dir, "documents")
     return (
         docs.select(F.explode(F.split(col("text"), " ")).alias("token"))
         .filter(col("token") != "")
@@ -116,7 +114,7 @@ LIMIT 20
 # schema-on-read form that works on raw logs.
 # ---------------------------------------------------------------------------
 def q35_json_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _t(spark, sf_dir, "events")
+    ev = read_table(spark, sf_dir, "events")
     k = F.get_json_object(col("props"), "$.k").cast("long")
     return (
         ev.select(col("event_type"), k.alias("k"))
@@ -154,7 +152,7 @@ GROUP BY event_type
 # show text as the only column read.
 # ---------------------------------------------------------------------------
 def q36_regexp_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _t(spark, sf_dir, "documents")
+    docs = read_table(spark, sf_dir, "documents")
     return (
         docs.select(
             F.regexp_extract(col("text"), r"stream ([a-z]+)", 1).alias("next_word")
@@ -193,7 +191,7 @@ LIMIT 15
 # averages downstream as sum/count.
 # ---------------------------------------------------------------------------
 def q37_decimal_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders = _t(spark, sf_dir, "orders")
+    orders = read_table(spark, sf_dir, "orders")
     p = col("o_totalprice").cast("decimal(18,2)")
     return (
         orders.select(col("o_orderpriority"), p.alias("p"))

@@ -22,9 +22,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.functions import broadcast, col, lit
 
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+from llamadb_spark.session import read_table
 
 
 # ---------------------------------------------------------------------------
@@ -38,10 +36,10 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 # side is projected to 3 columns before the shuffle.
 # ---------------------------------------------------------------------------
 def q55_right_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders = _t(spark, sf_dir, "orders").select(
+    orders = read_table(spark, sf_dir, "orders").select(
         "o_custkey", "o_orderkey", "o_totalprice"
     )
-    customer = _t(spark, sf_dir, "customer")
+    customer = read_table(spark, sf_dir, "customer")
     return orders.join(
         customer, orders.o_custkey == customer.c_custkey, "right"
     ).select("c_custkey", "c_name", "o_orderkey", "o_totalprice")
@@ -67,7 +65,7 @@ FROM orders RIGHT JOIN customer ON o_custkey = c_custkey
 def q56_qualify_latest(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.window import Window
 
-    orders = _t(spark, sf_dir, "orders")
+    orders = read_table(spark, sf_dir, "orders")
     w = Window.partitionBy("o_custkey").orderBy(
         col("o_orderdate").desc(), col("o_orderkey").desc()
     )
@@ -113,7 +111,7 @@ ORDER BY t.tier
 
 
 def q57_values_inline(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _t(spark, sf_dir, "orders").createOrReplaceTempView("orders")
+    read_table(spark, sf_dir, "orders").createOrReplaceTempView("orders")
     return spark.sql(_Q57_SQL)
 
 
@@ -130,7 +128,7 @@ ORACLE_Q57 = _Q57_SQL
 # date math is codegen'd integer arithmetic on the DATE's day count.
 # ---------------------------------------------------------------------------
 def q58_date_arith(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders = _t(spark, sf_dir, "orders")
+    orders = read_table(spark, sf_dir, "orders")
     bucket = F.floor(
         F.datediff(col("o_orderdate"), F.to_date(lit("1994-01-01"))) / 30
     ).cast("bigint")
@@ -169,7 +167,7 @@ GROUP BY 1
 # scan); one shuffle on the group key.
 # ---------------------------------------------------------------------------
 def q59_multi_pivot(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders = _t(spark, sf_dir, "orders")
+    orders = read_table(spark, sf_dir, "orders")
     year = F.year(col("o_orderdate")).alias("order_year")
     pivoted = (
         orders.groupBy(year)
@@ -215,7 +213,7 @@ GROUP BY 1
 def q60_rows_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.window import Window
 
-    orders = _t(spark, sf_dir, "orders")
+    orders = read_table(spark, sf_dir, "orders")
     daily = orders.groupBy("o_orderdate").agg(
         F.sum("o_totalprice").alias("day_rev")
     )
@@ -267,7 +265,7 @@ GROUP BY m
 def q61_recursive_cte(spark: SparkSession, sf_dir: str) -> DataFrame:
     from llamadb_spark.sql.dialect import recursive_sql
 
-    _t(spark, sf_dir, "orders").createOrReplaceTempView("orders")
+    read_table(spark, sf_dir, "orders").createOrReplaceTempView("orders")
     return recursive_sql(spark, _Q61_SQL)
 
 
@@ -284,12 +282,12 @@ ORACLE_Q61 = _Q61_SQL
 # ---------------------------------------------------------------------------
 def q62_set_ops_all(spark: SparkSession, sf_dir: str) -> DataFrame:
     cn = (
-        _t(spark, sf_dir, "customer")
+        read_table(spark, sf_dir, "customer")
         .filter(col("c_acctbal") > 8000)
         .select(col("c_nationkey").alias("nationkey"))
     )
     sn = (
-        _t(spark, sf_dir, "supplier")
+        read_table(spark, sf_dir, "supplier")
         .filter(col("s_acctbal") > 8000)
         .select(col("s_nationkey").alias("nationkey"))
     )
@@ -337,7 +335,7 @@ GROUP BY ALL
 
 
 def q63_group_by_all(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _t(spark, sf_dir, "orders").createOrReplaceTempView("orders")
+    read_table(spark, sf_dir, "orders").createOrReplaceTempView("orders")
     return spark.sql(_Q63_SQL)
 
 
@@ -364,7 +362,7 @@ GROUP BY c_mktsegment
 
 def q64_exists_projection(spark: SparkSession, sf_dir: str) -> DataFrame:
     for t in ("customer", "orders"):
-        _t(spark, sf_dir, t).createOrReplaceTempView(t)
+        read_table(spark, sf_dir, t).createOrReplaceTempView(t)
     return spark.sql(_Q64_SQL)
 
 
@@ -433,7 +431,7 @@ def q66_sort_key(spark: SparkSession, sf_dir: str) -> DataFrame:
         string_key,
     )
 
-    od = _t(spark, sf_dir, "orders").select(
+    od = read_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey", "o_orderpriority"
     )
     k = sort_key(
@@ -525,7 +523,7 @@ def q68_ignore_nulls_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import functions as F
     from pyspark.sql.window import Window
 
-    li = _t(spark, sf_dir, "lineitem").filter(
+    li = read_table(spark, sf_dir, "lineitem").filter(
         F.col("l_orderkey") % 50 == 0
     )
     v = F.expr("nullif(l_returnflag, 'N')")

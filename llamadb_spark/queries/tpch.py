@@ -22,9 +22,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.functions import broadcast, col, lit
 
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+from llamadb_spark.session import read_table
 
 
 _CUT = "1998-01-01"
@@ -33,14 +31,14 @@ _CUT = "1998-01-01"
 # --- Q3: shipping priority — top unshipped-revenue orders ----------------
 def h03_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     cust = (
-        _t(spark, sf_dir, "customer")
+        read_table(spark, sf_dir, "customer")
         .filter(col("c_mktsegment") == "BUILDING")
         .select("c_custkey")
     )
-    orders = _t(spark, sf_dir, "orders").filter(
+    orders = read_table(spark, sf_dir, "orders").filter(
         col("o_orderdate") < lit(_CUT).cast("timestamp")
     )
-    li = _t(spark, sf_dir, "lineitem").filter(
+    li = read_table(spark, sf_dir, "lineitem").filter(
         col("l_shipdate") > lit(_CUT).cast("timestamp")
     )
     return (
@@ -76,8 +74,8 @@ LIMIT 10
 
 # --- Q4: order priority checking (EXISTS over late-shipped lines) --------
 def h04_priority_checking(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders = _t(spark, sf_dir, "orders")
-    li = _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_shipdate")
+    orders = read_table(spark, sf_dir, "orders")
+    li = read_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_shipdate")
     late = orders.join(
         li,
         (orders.o_orderkey == li.l_orderkey)
@@ -104,7 +102,7 @@ ORDER BY o_orderpriority
 
 # --- Q6: revenue-change forecast (pure pushdown filter + agg) ------------
 def h06_revenue_forecast(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem")
+    li = read_table(spark, sf_dir, "lineitem")
     return (
         li.filter(
             (col("l_shipdate") >= lit("1996-01-01").cast("timestamp"))
@@ -135,24 +133,24 @@ WHERE l_shipdate >= TIMESTAMP '1996-01-01'
 
 # --- Q7: volume shipping between two nations -----------------------------
 def h07_volume_shipping(spark: SparkSession, sf_dir: str) -> DataFrame:
-    nation = _t(spark, sf_dir, "nation").select("n_nationkey", "n_name")
+    nation = read_table(spark, sf_dir, "nation").select("n_nationkey", "n_name")
     supp = (
-        _t(spark, sf_dir, "supplier")
+        read_table(spark, sf_dir, "supplier")
         .join(broadcast(nation), col("s_nationkey") == col("n_nationkey"))
         .select("s_suppkey", col("n_name").alias("supp_nation"))
     )
     cust = (
-        _t(spark, sf_dir, "customer")
+        read_table(spark, sf_dir, "customer")
         .join(broadcast(nation), col("c_nationkey") == col("n_nationkey"))
         .select("c_custkey", col("n_name").alias("cust_nation"))
     )
-    li = _t(spark, sf_dir, "lineitem").select(
+    li = read_table(spark, sf_dir, "lineitem").select(
         "l_orderkey",
         "l_suppkey",
         F.year("l_shipdate").alias("l_year"),
         (col("l_extendedprice") * (1 - col("l_discount"))).alias("volume"),
     )
-    orders = _t(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
+    orders = read_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
     pair = (
         (col("supp_nation") == "NATION_1") & (col("cust_nation") == "NATION_2")
     ) | ((col("supp_nation") == "NATION_2") & (col("cust_nation") == "NATION_1"))
@@ -186,13 +184,13 @@ ORDER BY 1, 2, 3
 
 # --- Q10: returned-item reporting (top-20 lossy customers) ---------------
 def h10_returned_items(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem").filter(col("l_returnflag") == "R")
-    orders = _t(spark, sf_dir, "orders").filter(
+    li = read_table(spark, sf_dir, "lineitem").filter(col("l_returnflag") == "R")
+    orders = read_table(spark, sf_dir, "orders").filter(
         (col("o_orderdate") >= lit("1997-01-01").cast("timestamp"))
         & (col("o_orderdate") < lit("1998-01-01").cast("timestamp"))
     )
-    cust = _t(spark, sf_dir, "customer")
-    nation = _t(spark, sf_dir, "nation")
+    cust = read_table(spark, sf_dir, "customer")
+    nation = read_table(spark, sf_dir, "nation")
     return (
         li.join(orders, li.l_orderkey == orders.o_orderkey)
         .join(broadcast(cust), orders.o_custkey == cust.c_custkey)
@@ -228,11 +226,11 @@ LIMIT 20
 
 # --- Q14: promotion effect (conditional revenue ratio) -------------------
 def h14_promo_effect(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem").filter(
+    li = read_table(spark, sf_dir, "lineitem").filter(
         (col("l_shipdate") >= lit("1997-01-01").cast("timestamp"))
         & (col("l_shipdate") < lit("1997-07-01").cast("timestamp"))
     )
-    part = _t(spark, sf_dir, "part").select("p_partkey", "p_type")
+    part = read_table(spark, sf_dir, "part").select("p_partkey", "p_type")
     rev = col("l_extendedprice") * (1 - col("l_discount"))
     return li.join(broadcast(part), li.l_partkey == part.p_partkey).agg(
         F.round(
@@ -265,14 +263,14 @@ def h16_supplier_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: the exclusion list is tiny → broadcast anti join before
     counting; count(DISTINCT supplier) per group is one Expand pass."""
-    li = _t(spark, sf_dir, "lineitem").select("l_partkey", "l_suppkey")
+    li = read_table(spark, sf_dir, "lineitem").select("l_partkey", "l_suppkey")
     part = (
-        _t(spark, sf_dir, "part")
+        read_table(spark, sf_dir, "part")
         .filter(col("p_size") <= 10)
         .select("p_partkey", "p_brand", "p_size")
     )
     distressed = (
-        _t(spark, sf_dir, "supplier")
+        read_table(spark, sf_dir, "supplier")
         .filter(col("s_acctbal") < 0)
         .select(col("s_suppkey").alias("l_suppkey"))
     )
@@ -307,16 +305,16 @@ def h18_large_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: the heavy work is one map-side-combined sum per orderkey;
     the HAVING survivors are few → broadcast semi join on orders,
     then dims broadcast for the report columns."""
-    li = _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_quantity")
+    li = read_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_quantity")
     big = (
         li.groupBy("l_orderkey")
         .agg(F.round(F.sum("l_quantity"), 2).alias("sum_qty"))
         .filter(col("sum_qty") > H18_QTY)
     )
-    orders = _t(spark, sf_dir, "orders").select(
+    orders = read_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey", "o_orderdate", "o_totalprice"
     )
-    cust = _t(spark, sf_dir, "customer").select("c_custkey", "c_name")
+    cust = read_table(spark, sf_dir, "customer").select("c_custkey", "c_name")
     return (
         orders.join(broadcast(big), orders.o_orderkey == big.l_orderkey)
         .join(broadcast(cust), orders.o_custkey == cust.c_custkey)
@@ -356,20 +354,20 @@ def h05_local_supplier_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
     folded into the join — no post-filter, Catalyst prunes
     non-matching nations before the shuffle."""
     region = (
-        _t(spark, sf_dir, "region").filter(col("r_name") == "ASIA").select("r_regionkey")
+        read_table(spark, sf_dir, "region").filter(col("r_name") == "ASIA").select("r_regionkey")
     )
-    nation = _t(spark, sf_dir, "nation").join(
+    nation = read_table(spark, sf_dir, "nation").join(
         broadcast(region), col("n_regionkey") == col("r_regionkey")
     ).select("n_nationkey", "n_name")
-    supp = _t(spark, sf_dir, "supplier").join(
+    supp = read_table(spark, sf_dir, "supplier").join(
         broadcast(nation), col("s_nationkey") == col("n_nationkey")
     ).select("s_suppkey", "s_nationkey", "n_name")
-    orders = _t(spark, sf_dir, "orders").filter(
+    orders = read_table(spark, sf_dir, "orders").filter(
         (col("o_orderdate") >= lit("1996-01-01").cast("timestamp"))
         & (col("o_orderdate") < lit("1997-01-01").cast("timestamp"))
     ).select("o_orderkey", "o_custkey")
-    cust = _t(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
-    li = _t(spark, sf_dir, "lineitem").select(
+    cust = read_table(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
+    li = read_table(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_suppkey", "l_extendedprice", "l_discount"
     )
     return (
@@ -414,14 +412,14 @@ def h09_product_type_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
     cost). Name filter keeps the mid-query dimension filter that Q9
     pushes into the part scan."""
     part = (
-        _t(spark, sf_dir, "part")
+        read_table(spark, sf_dir, "part")
         .filter(col("p_name").like("%red%"))
         .select("p_partkey", "p_retailprice")
     )
-    supp = _t(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
-    nation = _t(spark, sf_dir, "nation").select("n_nationkey", "n_name")
-    orders = _t(spark, sf_dir, "orders").select("o_orderkey", "o_orderdate")
-    li = _t(spark, sf_dir, "lineitem")
+    supp = read_table(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
+    nation = read_table(spark, sf_dir, "nation").select("n_nationkey", "n_name")
+    orders = read_table(spark, sf_dir, "orders").select("o_orderkey", "o_orderdate")
+    li = read_table(spark, sf_dir, "lineitem")
     amount = col("l_extendedprice") * (1 - col("l_discount")) - lit(0.5) * col(
         "p_retailprice"
     ) * col("l_quantity")
@@ -461,7 +459,7 @@ def h11_important_stock(spark: SparkSession, sf_dir: str) -> DataFrame:
     signature shape survives — a grouped aggregate filtered against a
     scalar fraction of the GLOBAL total (correlated HAVING over a
     one-row subquery, broadcast to the filter)."""
-    li = _t(spark, sf_dir, "lineitem").select(
+    li = read_table(spark, sf_dir, "lineitem").select(
         "l_suppkey", (col("l_extendedprice") * col("l_quantity")).alias("_v")
     )
     sv = li.groupBy("l_suppkey").agg(F.sum("_v").alias("val"))
@@ -492,8 +490,8 @@ def h12_ship_priority_class(spark: SparkSession, sf_dir: str) -> DataFrame:
     the mode dimension becomes a late/ontime shipping class (shipped
     more than 30 days after ordering) and the payload keeps Q12's
     high/low-priority conditional counts."""
-    orders = _t(spark, sf_dir, "orders").select("o_orderkey", "o_orderdate", "o_orderpriority")
-    li = _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_shipdate")
+    orders = read_table(spark, sf_dir, "orders").select("o_orderkey", "o_orderdate", "o_orderpriority")
+    li = read_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_shipdate")
     high = col("o_orderpriority").isin("1-URGENT", "2-HIGH")
     return (
         li.join(orders, li.l_orderkey == orders.o_orderkey)
@@ -533,8 +531,8 @@ def h19_discounted_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     legs are pushed to the part scan as a single range filter
     (p_size ≤ 25 covers all three legs); the qty×brand disjunction
     evaluates post-join — the same split the reference plan makes."""
-    part = _t(spark, sf_dir, "part").select("p_partkey", "p_brand", "p_size")
-    li = _t(spark, sf_dir, "lineitem").select(
+    part = read_table(spark, sf_dir, "part").select("p_partkey", "p_brand", "p_size")
+    li = read_table(spark, sf_dir, "lineitem").select(
         "l_partkey", "l_quantity", "l_extendedprice", "l_discount"
     )
     leg = lambda brand, size_hi, q_lo, q_hi: (  # noqa: E731
@@ -576,11 +574,11 @@ def h20_potential_promotion(spark: SparkSession, sf_dir: str) -> DataFrame:
     parts in the window — same shape: supplier semi-join against a
     grouped-HAVING subquery over lineitem×part."""
     part = (
-        _t(spark, sf_dir, "part")
+        read_table(spark, sf_dir, "part")
         .filter(col("p_name").like("small%"))
         .select("p_partkey")
     )
-    li = _t(spark, sf_dir, "lineitem").filter(
+    li = read_table(spark, sf_dir, "lineitem").filter(
         (col("l_shipdate") >= lit("1996-01-01").cast("timestamp"))
         & (col("l_shipdate") < lit("1997-01-01").cast("timestamp"))
     )
@@ -591,7 +589,7 @@ def h20_potential_promotion(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(col("qty") > 400)
         .select("l_suppkey")
     )
-    supp = _t(spark, sf_dir, "supplier")
+    supp = read_table(spark, sf_dir, "supplier")
     return (
         supp.join(broadcast(qualified), supp.s_suppkey == qualified.l_suppkey, "left_semi")
         .select("s_name", "s_acctbal")
@@ -625,7 +623,7 @@ def h21_waiting_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     two corpus passes over lineitem total, no correlated re-scans per
     row; the oracle keeps the textbook EXISTS form, so the parity
     check proves the rewrite."""
-    li = _t(spark, sf_dir, "lineitem").select(
+    li = read_table(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_suppkey", "l_returnflag"
     )
     per_order = li.groupBy("l_orderkey").agg(
@@ -635,11 +633,11 @@ def h21_waiting_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("nret"),
     )
     orders = (
-        _t(spark, sf_dir, "orders")
+        read_table(spark, sf_dir, "orders")
         .filter(col("o_orderstatus") == "F")
         .select("o_orderkey")
     )
-    supp = _t(spark, sf_dir, "supplier").select("s_suppkey", "s_name")
+    supp = read_table(spark, sf_dir, "supplier").select("s_suppkey", "s_name")
     # Every qualifying l1 ROW counts (a supplier with two returned
     # lines in one order waits twice in the oracle's join) — no
     # row-collapsing distinct here.

@@ -16,11 +16,19 @@ Scale notes (100 TB design):
 
 from __future__ import annotations
 
+import glob
 import os
+import weakref
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import StructType
+from pyspark.sql.types import (
+    ArrayType,
+    DataType,
+    MapType,
+    StructField,
+    StructType,
+)
 
 TABLES = (
     "region",
@@ -84,6 +92,107 @@ def get_spark(app_name: str = "llamadb_spark", cpus: int | None = None) -> Spark
     return builder.getOrCreate()
 
 
+#: The confs that change what Spark infers from a parquet footer: a
+#: schema remembered under one setting is not the one inferred under
+#: another.
+_INFER_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+)
+
+#: SparkContext -> {absolute path: (stamp, schema)}. Held per context,
+#: not per session object: foreachBatch hands every micro-batch a
+#: fresh session over a cloned one, and a commit made there must be
+#: remembered for the reads that follow the drain.
+_SCHEMAS: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
+
+
+def _stamp(spark: SparkSession, *paths: str) -> list[tuple | None]:
+    """What a remembered schema of each path is valid for: the path's
+    inode, mtime and size, and the session's inference confs. ``None``
+    for a path that ``os.stat`` cannot see."""
+    confs = tuple(spark.conf.get(k, None) for k in _INFER_CONFS)
+    out = []
+    for p in paths:
+        try:
+            st = os.stat(p)
+        except OSError:
+            out.append(None)
+            continue
+        out.append((st.st_ino, st.st_mtime_ns, st.st_size, confs))
+    return out
+
+
+def _nullable(dt: DataType) -> DataType:
+    """``dt`` as a file source reads it back: every field, array
+    element and map value nullable."""
+    if isinstance(dt, StructType):
+        return StructType(
+            [
+                StructField(f.name, _nullable(f.dataType), True, f.metadata)
+                for f in dt.fields
+            ]
+        )
+    if isinstance(dt, ArrayType):
+        return ArrayType(_nullable(dt.elementType), True)
+    if isinstance(dt, MapType):
+        return MapType(_nullable(dt.keyType), _nullable(dt.valueType), True)
+    return dt
+
+
+def _remember(spark: SparkSession, path: str, schema: StructType) -> None:
+    (stamp,) = _stamp(spark, path)
+    if stamp is not None:
+        memo = _SCHEMAS.setdefault(spark.sparkContext, {})
+        memo[os.path.abspath(path)] = (stamp, _nullable(schema))
+
+
+def read_parquet(spark: SparkSession, *paths: str) -> DataFrame:
+    """Read parquet ``paths`` without Spark's schema-inference job when
+    the schema is already known: the one parquet reader of the package.
+
+    A path written by ``write_parquet``, or read here before, is read
+    under the schema remembered for it, while its inode, mtime, size
+    and the session's inference confs are unchanged (Spark forces a
+    user schema nullable exactly as it does an inferred one, so the
+    two read back equal). Several paths are read under one schema only
+    if every path remembers that same schema; otherwise Spark infers
+    (one job), and a single path remembers the result. A path that
+    ``os.stat`` cannot see is inferred on every read."""
+    memo = _SCHEMAS.get(spark.sparkContext, {})
+    known = []
+    for p, stamp in zip(paths, _stamp(spark, *paths)):
+        entry = memo.get(os.path.abspath(p))
+        hit = stamp is not None and entry is not None and entry[0] == stamp
+        known.append(entry[1] if hit else None)
+    if known[0] is not None and all(s == known[0] for s in known):
+        return spark.read.schema(known[0]).parquet(*paths)
+    df = spark.read.parquet(*paths)
+    if len(paths) == 1:
+        _remember(spark, paths[0], df.schema)
+    return df
+
+
+def write_parquet(df: DataFrame, path: str, mode: str) -> None:
+    """``df.write.mode(mode).parquet(path)``, remembering ``df.schema``
+    for ``read_parquet``. An append remembers it only when the
+    directory held no parquet file before: otherwise the files may
+    disagree and the next read infers."""
+    fresh = mode != "append" or not glob.glob(
+        os.path.join(glob.escape(path), "*.parquet")
+    )
+    df.write.mode(mode).parquet(path)
+    if fresh:
+        _remember(df.sparkSession, path, df.schema)
+
+
+def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """Table ``name`` of an sf directory (``<sf_dir>/<name>.parquet``)."""
+    return read_parquet(spark, f"{sf_dir}/{name}.parquet")
+
+
 def load_tables(
     spark: SparkSession, sf_dir: str = DEFAULT_SF_DIR, names: tuple[str, ...] = TABLES
 ) -> dict[str, DataFrame]:
@@ -92,7 +201,7 @@ def load_tables(
     Columnar scans with pushdown; callers select only needed columns
     so ``ReadSchema`` stays pruned (checked in tests/bench).
     """
-    return {name: spark.read.parquet(f"{sf_dir}/{name}.parquet") for name in names}
+    return {name: read_table(spark, sf_dir, name) for name in names}
 
 
 def register_views(

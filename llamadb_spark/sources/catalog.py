@@ -21,7 +21,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
 
-from llamadb_spark.session import stage
+from llamadb_spark.session import read_parquet, stage
 
 
 def read_csv(
@@ -127,7 +127,7 @@ def compact_parquet(
     import os
     from urllib.parse import urlparse
 
-    df = spark.read.parquet(src_path)
+    df = read_parquet(spark, src_path)
     paths = [urlparse(p).path for p in df.inputFiles()]
     total = sum(os.path.getsize(p) for p in paths if os.path.exists(p)) or 1
     n_files = max(1, math.ceil(total / (target_mb * 1024 * 1024)))

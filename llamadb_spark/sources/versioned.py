@@ -19,10 +19,18 @@ write; time travel and diff read only the two snapshots involved.
 from __future__ import annotations
 
 import os
+import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.functions import col
+
+from llamadb_spark.session import read_parquet, write_parquet
+
+#: name of the micro-batch id marker inside a version directory; the
+#: leading underscore makes Spark's parquet reader ignore it (same
+#: convention as _SUCCESS).
+BATCH_MARKER = "_ivm_batch"
 
 
 def _manifest(path: str) -> str:
@@ -50,11 +58,27 @@ def latest_version(path: str) -> int | None:
         return None
 
 
-def write_version(df: DataFrame, path: str) -> int:
-    """Commit a new immutable snapshot; returns its version number."""
+def write_version(
+    df: DataFrame, path: str, batch_id: int | None = None
+) -> int:
+    """Commit a new immutable snapshot; returns its version number.
+
+    An orphan ``v=N`` directory (a crash after the write, before the
+    manifest flip) was never visible to a reader and is cleared. With
+    ``batch_id``, the micro-batch id is stamped inside the directory
+    before the flip, so {snapshot + batch id} is one atomic commit
+    (the exactly-once ledger of streaming/ivm.py). The marker goes in
+    first and the snapshot is appended beside it, so the schema that
+    ``write_parquet`` remembers stays valid for the directory."""
     cur = latest_version(path)
     nxt = 0 if cur is None else cur + 1
-    df.write.mode("errorifexists").parquet(os.path.join(path, f"v={nxt}"))
+    vdir = os.path.join(path, f"v={nxt}")
+    shutil.rmtree(vdir, ignore_errors=True)
+    os.makedirs(vdir)
+    if batch_id is not None:
+        with open(os.path.join(vdir, BATCH_MARKER), "w") as fh:
+            fh.write(str(batch_id))
+    write_parquet(df, vdir, "append")
     tmp = _manifest(path) + ".tmp"
     with open(tmp, "w") as fh:
         fh.write(str(nxt))
@@ -70,7 +94,7 @@ def read_version(
     v = latest_version(path) if version is None else version
     if v is None:
         raise FileNotFoundError(f"no committed version at {path}")
-    return spark.read.parquet(os.path.join(path, f"v={v}"))
+    return read_parquet(spark, os.path.join(path, f"v={v}"))
 
 
 def version_diff(
@@ -231,15 +255,13 @@ def vacuum(path: str, keep_last: int = 10) -> list[int]:
     orphaned uncommitted directories (crash debris above the
     manifest) are left for the next commit's own cleanup.
     """
-    import shutil
-
     if keep_last < 1:
         raise ValueError(f"keep_last must be >= 1, got {keep_last}")
     vs = versions(path)
     doomed = vs[:-keep_last] if len(vs) > keep_last else []
     # Preserve streaming replay ledgers before deleting snapshots: an
     # IVM/ingest sink stamps its micro-batch id INSIDE the version
-    # directory (streaming/ivm.py _BATCH_MARKER); deleting the
+    # directory (BATCH_MARKER, see write_version); deleting the
     # directory must not forget that the batch committed, or a
     # checkpoint-loss replay would re-apply it (double-counting
     # deltas). Markers of doomed versions are appended to an
@@ -248,7 +270,7 @@ def vacuum(path: str, keep_last: int = 10) -> list[int]:
     # in-directory markers.
     ledger_lines = []
     for v in doomed:
-        marker = os.path.join(path, f"v={v}", "_ivm_batch")
+        marker = os.path.join(path, f"v={v}", BATCH_MARKER)
         try:
             with open(marker) as fh:
                 ledger_lines.append(f"{int(fh.read().strip())} {v}\n")

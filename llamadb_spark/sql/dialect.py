@@ -17,8 +17,11 @@ reference's storage layer does.
 
 from __future__ import annotations
 
+import atexit
 import math
 import re
+import shutil
+import tempfile
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, Observation, SparkSession
@@ -647,6 +650,18 @@ class LlamaSession:
                 == "true"
             )
         self.durable = durable
+        self._commit_root: str | None = None
+
+    def _commit_dir(self, prefix: str) -> str:
+        """A fresh directory for one parquet commit. Every commit of
+        the session lands under one root directory, removed at
+        interpreter exit: a replaced table's files cannot be removed
+        at once, since a lazy frame returned earlier may still scan
+        them."""
+        if self._commit_root is None:
+            self._commit_root = tempfile.mkdtemp(prefix="llamadb_commits_")
+            atexit.register(shutil.rmtree, self._commit_root, True)
+        return tempfile.mkdtemp(prefix=prefix, dir=self._commit_root)
 
     # -- statement dispatch ------------------------------------------------
     def execute(self, sql: str) -> DataFrame | None:
@@ -1005,8 +1020,6 @@ class LlamaSession:
     def _materialize(self, name: str) -> None:
         """Persist an indexed table clustered on its (first) index
         column and repoint reads at the parquet scan."""
-        import tempfile
-
         from llamadb_spark.sources.catalog import write_range_layout
 
         spec = self.tables[name]
@@ -1018,7 +1031,7 @@ class LlamaSession:
             # repartitionByRange needs sampleable rows; an empty
             # table stays a (schema-typed) empty in-memory relation
             return
-        path = tempfile.mkdtemp(prefix=f"llamadb_idx_{name}_")
+        path = self._commit_dir(f"llamadb_idx_{name}_")
         write_range_layout(df, path, [colname], num_files=4)
         reloaded = self.spark.read.schema(spec.schema).parquet(path)
         self._data[name] = reloaded
@@ -1340,9 +1353,7 @@ class LlamaSession:
             # opt-in durable spill (r11): parquet write-back + re-read
             # so the table survives executor loss (indexed tables are
             # already parquet-backed via _materialize).
-            import tempfile
-
-            path = tempfile.mkdtemp(prefix=f"llamadb_tbl_{name}_")
+            path = self._commit_dir(f"llamadb_tbl_{name}_")
             df.write.mode("overwrite").parquet(path)
             df = self.spark.read.schema(self.tables[name].schema).parquet(
                 path

@@ -9,20 +9,41 @@ batch×batch) with the foreachBatch sink discipline of the IVM sink:
 the corpus lives as a versioned table, one version per micro-batch,
 committed exactly once through streaming/ivm.gated_drain.
 
-Per-batch cost: O(batch · avg-postings) probe + corpus append —
-independent of corpus-pair count, the property that makes continuous
-ingest dedup viable at 100 TB. State lives in the corpus table, not
-the stream (no watermark state; restarts resume from the last
-committed corpus version).
+Per-batch cost: the probe join itself is one-sided (batch shingles
+against the corpus index, never corpus×corpus), but the index is not
+persisted. Each batch re-shingles the WHOLE corpus to build it, and
+commits the whole corpus again as its next snapshot, so a batch costs
+O(corpus), not O(batch), and the bytes written grow with the batch
+count (a 2-batch drain writes 1.49× its final bytes; every further
+batch rewrites everything before it once more). A persisted corpus
+index with append-only corpus segments would make it O(batch ·
+avg-postings). The first batch, over an empty corpus, probes
+nothing. State lives in the corpus table, not the stream (no
+watermark state; restarts resume from the last committed corpus
+version).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
+from pyspark.sql.types import DoubleType, LongType, StructField, StructType
 
-from llamadb_spark.session import stage
+from llamadb_spark.session import empty_frame, stage
 from llamadb_spark.sources import versioned
 from llamadb_spark.streaming.ivm import gated_drain, read_log
+
+
+def _matches_schema(batch_df: DataFrame) -> StructType:
+    """incremental_jaccard_matches' output over ``batch_df``."""
+    id_type = batch_df.schema["doc_id"].dataType
+    return StructType(
+        [
+            StructField("doc_id", id_type),
+            StructField("match_id", id_type),
+            StructField("n_inter", LongType()),
+            StructField("jaccard", DoubleType()),
+        ]
+    )
 
 
 def ingest_dedup_stream(
@@ -44,10 +65,13 @@ def ingest_dedup_stream(
     """
     from llamadb_spark.operators.dedup import incremental_jaccard_matches
 
+    spark = doc_stream.sparkSession
+
     def step(batch_df: DataFrame, base) -> list[DataFrame]:
         corpus = base(corpus_path)
         if corpus is None:
-            corpus = batch_df.limit(0)
+            # nothing to probe: batch×batch pairs are never matched
+            return [empty_frame(spark, _matches_schema(batch_df)), batch_df]
         matches, _ = stage(
             incremental_jaccard_matches(batch_df, corpus, threshold=threshold)
         )
@@ -60,7 +84,6 @@ def ingest_dedup_stream(
         doc_stream, [matches_path, corpus_path], step,
         name=name, timeout_s=timeout_s,
     )
-    spark = doc_stream.sparkSession
     return (
         versioned.read_version(spark, corpus_path),
         read_log(spark, matches_path),

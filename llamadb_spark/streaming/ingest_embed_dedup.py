@@ -27,8 +27,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.functions import col
+from pyspark.sql.types import DoubleType, StructField, StructType
 
-from llamadb_spark.session import stage
+from llamadb_spark.session import empty_frame, stage
 from llamadb_spark.sources import versioned
 from llamadb_spark.streaming.ivm import gated_drain, read_log, stamp_params
 
@@ -50,6 +51,18 @@ def _with_buckets(
     udf = _hyperplane_bucket_udf(num_planes, num_tables)
     return batch.withColumn(
         "buckets", udf(as_double(col("embedding")))
+    )
+
+
+def _matches_schema(batch_df: DataFrame) -> StructType:
+    """The cosine probe's match rows over ``batch_df``."""
+    id_type = batch_df.schema["vec_id"].dataType
+    return StructType(
+        [
+            StructField("vec_id", id_type),
+            StructField("match_id", id_type),
+            StructField("cos", DoubleType()),
+        ]
     )
 
 
@@ -82,12 +95,14 @@ def ingest_embed_dedup_stream(
             "plane_seed": LSH_PLANE_SEED,
         },
     )
+    spark = vec_stream.sparkSession
 
     def step(batch_df: DataFrame, base) -> list[DataFrame]:
         batch, _ = stage(_with_buckets(batch_df, num_planes, num_tables))
         corpus = base(corpus_path)
         if corpus is None:
-            corpus = batch.limit(0)
+            # nothing to probe: batch×batch pairs are never matched
+            return [empty_frame(spark, _matches_schema(batch_df)), batch]
         c_banded = drop_hot_keys(
             _banded(corpus, num_planes, num_tables),
             ["tbl", "bucket"],
@@ -130,7 +145,6 @@ def ingest_embed_dedup_stream(
         vec_stream, [matches_path, corpus_path], step,
         name=name, timeout_s=timeout_s,
     )
-    spark = vec_stream.sparkSession
     return (
         versioned.read_version(spark, corpus_path),
         read_log(spark, matches_path),

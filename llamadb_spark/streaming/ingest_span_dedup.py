@@ -31,9 +31,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.functions import col, lit
+from pyspark.sql.types import LongType, StructField, StructType
 from pyspark.sql.window import Window
 
-from llamadb_spark.session import stage
+from llamadb_spark.session import empty_frame, stage
 from llamadb_spark.sources import versioned
 from llamadb_spark.streaming.ivm import gated_drain, read_log, stamp_params
 
@@ -63,6 +64,20 @@ def _postings(docs: DataFrame, id_alias: str, pos_alias: str) -> DataFrame:
     )
 
 
+def _matches_schema(batch_df: DataFrame) -> StructType:
+    """The span probe's match rows over ``batch_df``."""
+    id_type = batch_df.schema["doc_id"].dataType
+    return StructType(
+        [
+            StructField("doc_id", id_type),
+            StructField("match_id", id_type),
+            StructField("dup_chars", LongType()),
+            StructField("doc_len", LongType()),
+            StructField("dup_permille", LongType()),
+        ]
+    )
+
+
 def ingest_span_dedup_stream(
     doc_stream: DataFrame,
     corpus_path: str,
@@ -86,6 +101,7 @@ def ingest_span_dedup_stream(
     stamp_params(
         corpus_path, "span", {"min_len": min_len, "gram_hash": "xxhash64"}
     )
+    spark = doc_stream.sparkSession
 
     def step(batch_df: DataFrame, base) -> list[DataFrame]:
         batch, _ = stage(
@@ -93,7 +109,8 @@ def ingest_span_dedup_stream(
         )
         corpus = base(corpus_path)
         if corpus is None:
-            corpus = batch.limit(0)
+            # nothing to probe: batch×batch pairs are never matched
+            return [empty_frame(spark, _matches_schema(batch_df)), batch]
         c_post = drop_hot_keys(
             _postings(corpus, "match_id", "c_pos"), ["h"], max_gram_occ
         )
@@ -171,7 +188,6 @@ def ingest_span_dedup_stream(
         doc_stream, [matches_path, corpus_path], step,
         name=name, timeout_s=timeout_s,
     )
-    spark = doc_stream.sparkSession
     return (
         versioned.read_version(spark, corpus_path),
         read_log(spark, matches_path),

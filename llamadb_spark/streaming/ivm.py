@@ -38,21 +38,15 @@ from __future__ import annotations
 
 import json
 import os
-import shutil
 import warnings
 from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import DoubleType, LongType, StructField, StructType
 
-from llamadb_spark.session import empty_frame
+from llamadb_spark.session import empty_frame, read_parquet
 from llamadb_spark.sources import versioned
 from llamadb_spark.streaming.streams import drain
-
-#: name of the batch-id marker inside a version directory; the
-#: leading underscore makes Spark's parquet reader ignore it (same
-#: convention as _SUCCESS).
-_BATCH_MARKER = "_ivm_batch"
 
 
 def committed_batches(mv_path: str) -> dict[int, int]:
@@ -96,33 +90,13 @@ def committed_batches(mv_path: str) -> dict[int, int]:
                         f"{ledger}:{lineno}: {line.strip()!r}"
                     )
     for v in versioned.versions(mv_path):
-        marker = os.path.join(mv_path, f"v={v}", _BATCH_MARKER)
+        marker = os.path.join(mv_path, f"v={v}", versioned.BATCH_MARKER)
         try:
             with open(marker) as fh:
                 out[int(fh.read().strip())] = v
         except (OSError, ValueError):
             continue
     return out
-
-
-def _commit_version(df: DataFrame, mv_path: str, batch_id: int) -> int:
-    """write_version with the batch id stamped inside the version
-    directory BEFORE the manifest flip — one atomic commit unit."""
-    cur = versioned.latest_version(mv_path)
-    nxt = 0 if cur is None else cur + 1
-    vdir = os.path.join(mv_path, f"v={nxt}")
-    if os.path.isdir(vdir):
-        # orphan from a crash after the parquet write but before the
-        # manifest flip: never visible to any reader, safe to clear
-        shutil.rmtree(vdir)
-    df.write.mode("overwrite").parquet(vdir)
-    with open(os.path.join(vdir, _BATCH_MARKER), "w") as fh:
-        fh.write(str(batch_id))
-    tmp = os.path.join(mv_path, "_latest.tmp")
-    with open(tmp, "w") as fh:
-        fh.write(str(nxt))
-    os.replace(tmp, os.path.join(mv_path, "_latest"))
-    return nxt
 
 
 def _gate(
@@ -158,7 +132,7 @@ def _gate(
 
         frames = dict(zip(tables, step(batch_df, base), strict=True))
         for t in todo:
-            _commit_version(frames[t], t, batch_id)
+            versioned.write_version(frames[t], t, batch_id=batch_id)
 
     return run_batch
 
@@ -199,11 +173,12 @@ def gated_drain(
 
 def read_log(spark: SparkSession, path: str) -> DataFrame:
     """Every committed version of a table that stores one batch's rows
-    per version (a matches log), as one parquet read."""
+    per version (a matches log), as one parquet read under one
+    schema."""
     vs = versioned.versions(path)
     if not vs:
         raise RuntimeError(f"no committed batches at {path}")
-    return spark.read.parquet(*[os.path.join(path, f"v={v}") for v in vs])
+    return read_parquet(spark, *[os.path.join(path, f"v={v}") for v in vs])
 
 
 def stamp_params(corpus_path: str, kind: str, params: dict) -> None:

@@ -20,7 +20,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.functions import col, lit
 
-from llamadb_spark.session import stage
+from llamadb_spark.session import read_parquet, stage
 
 #: (events file, its mtime and size, mode, sentinel_days) -> drop dir.
 _DROP_DIRS: dict[tuple, str] = {}
@@ -65,7 +65,7 @@ def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     drop_dir = _drop_dir(
         src, "stream", None, lambda d: os.symlink(src, f"{d}/events-00000.parquet")
     )
-    schema = spark.read.parquet(src).schema
+    schema = read_parquet(spark, src).schema
     raw = (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1)
@@ -155,7 +155,7 @@ def read_events_stream_unordered(
     from pyspark.sql.types import LongType, TimestampNTZType
 
     src = f"{sf_dir}/events.parquet"
-    batch = spark.read.parquet(src)
+    batch = read_parquet(spark, src)
     # r11: TWO files per trigger, so the FIRST sentinel rides in the
     # data batch. Batch 1 (events + sentinel-0) buffers everything
     # (the SPARK-24634 lagged watermark is still unset during batch

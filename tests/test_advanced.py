@@ -8,6 +8,7 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 
 from llamadb_spark.queries import advanced
+from llamadb_spark.session import read_table
 
 
 def plan(df) -> str:
@@ -51,9 +52,7 @@ def test_q42_cte_single_winner_has_max_revenue(spark, sf_dir):
     rows = advanced.q42_cte_top_supplier(spark, sf_dir).collect()
     assert len(rows) >= 1
     # winner's revenue equals the global per-supplier max
-    from llamadb_spark.queries.advanced import _t
-
-    li = _t(spark, sf_dir, "lineitem")
+    li = read_table(spark, sf_dir, "lineitem")
     mx = (
         li.groupBy("l_suppkey")
         .agg(F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))).alias("r"))
@@ -168,7 +167,7 @@ def test_q49_pagination_is_page_three(spark, sf_dir):
     import pyspark.sql.functions as F
 
     top60 = (
-        advanced._t(spark, sf_dir, "orders")
+        read_table(spark, sf_dir, "orders")
         .select("o_orderkey", F.round("o_totalprice", 2).alias("price"))
         .orderBy(F.col("price").desc(), F.col("o_orderkey"))
         .limit(60)
@@ -200,7 +199,7 @@ def test_q51_string_agg_sorted_members(spark, sf_dir):
 
 def test_q52_histogram_covers_all_orders(spark, sf_dir):
     rows = advanced.q52_histogram(spark, sf_dir).collect()
-    n = advanced._t(spark, sf_dir, "orders").count()
+    n = read_table(spark, sf_dir, "orders").count()
     assert sum(r.n_orders for r in rows) == n
     for r in rows:
         assert r.bucket_start <= r.lo <= r.hi < r.bucket_start + 25_000

@@ -1044,6 +1044,55 @@ def test_durable_commit_parquet_backed(spark):
     assert db.execute("SELECT count(*) AS n FROM dur_t").collect()[0].n == 3
 
 
+def test_commit_directories_share_one_root_removed_at_exit(tmp_path):
+    """Parquet-backed commits (a durable table, an indexed table) each
+    write a fresh directory, all under the session's one root, which
+    the interpreter removes at exit: 5 INSERTs into each leave one
+    directory in the temp dir while the process lives, none after."""
+    import json
+    import os
+    import subprocess
+    import sys
+    import textwrap
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    script = textwrap.dedent(
+        f"""
+        import json, os, sys
+        sys.path.insert(0, {repo!r})
+        from llamadb_spark.session import get_spark
+        from llamadb_spark.sql import LlamaSession
+
+        db = LlamaSession(get_spark("commit-root", cpus=1), durable=True)
+        db.execute("CREATE TABLE du (k U32 PRIMARY KEY, v STRING)")
+        db.execute("CREATE TABLE ix (k U32 PRIMARY KEY, v STRING)")
+        db.execute("CREATE INDEX ix_k ON ix (k)")
+        for i in range(5):
+            for t in ("du", "ix"):
+                db.execute(f"INSERT INTO {{t}} VALUES ({{i}}, 'x')")
+        assert db.execute("SELECT count(*) AS n FROM ix").collect()[0].n == 5
+        tmp = {str(tmp_path)!r}
+        live = [d for d in os.listdir(tmp) if d.startswith("llamadb_")]
+        print("LIVE", json.dumps({{d: len(os.listdir(os.path.join(tmp, d)))
+                                  for d in live}}))
+        """
+    )
+    env = dict(os.environ, TMPDIR=str(tmp_path))
+    out = subprocess.run(
+        [sys.executable, "-c", script], env=env, capture_output=True,
+        text=True, timeout=300,
+    )
+    assert out.returncode == 0, out.stderr[-2000:]
+    (live,) = [
+        json.loads(line[5:])
+        for line in out.stdout.splitlines()
+        if line.startswith("LIVE ")
+    ]
+    # one root holding the 10 commit directories
+    assert list(live.values()) == [10], live
+    assert not [d for d in os.listdir(tmp_path) if d.startswith("llamadb_")]
+
+
 # -- one Spark job per write -------------------------------------------
 
 

@@ -16,6 +16,7 @@ Rules:
 - `.localCheckpoint(`, `.checkpoint(`, `.cache()`, `.persist(`: only
   in session.py (``stage``); `Observation(` only there and at the
   allowlisted sites below.
+- `.read.parquet(`: only in session.py (``read_parquet``).
 - `applyInPandasWithState(`: once, in streaming/reorder.py;
   `awaitTermination(`: once, in streaming/streams.py (``drain``);
   `ProcessingTimeTimeout`: nowhere, not even in a docstring.
@@ -153,9 +154,10 @@ def test_one_staging_primitive():
 def test_one_exactly_once_gate():
     """Every versioned foreachBatch sink commits through
     streaming/ivm.py's gate (``gated_drain``): the batch-id ledger read
-    and the stamped commit are called nowhere else, so no second
-    replay rule can drift from the first."""
-    pat = re.compile(r"\bcommitted_batches\(|\b_commit_version\(")
+    and the stamped commit (``write_version`` with a ``batch_id``) are
+    called nowhere else, so no second replay rule can drift from the
+    first."""
+    pat = re.compile(r"\bcommitted_batches\(|\bwrite_version\(.*\bbatch_id=")
     hits = sorted(
         rel
         for rel, f in _sources()
@@ -163,6 +165,21 @@ def test_one_exactly_once_gate():
         and any(pat.search(c) for c in _code_lines(f))
     )
     assert not hits, f"exactly-once ledger used outside the gate: {hits}"
+
+
+def test_one_parquet_reader():
+    """Every parquet read in the package goes through
+    ``session.read_parquet``, which never asks Spark to infer a schema
+    it has already seen: no other module reads parquet without handing
+    the reader a ``.schema(...)``."""
+    pat = re.compile(r"\.read\.parquet\(")
+    hits = sorted(
+        rel
+        for rel, f in _sources()
+        if rel != "session.py"
+        and pat.search(re.sub(r"\s+", "", "".join(_code_lines(f))))
+    )
+    assert not hits, f"schema-less parquet read, use read_parquet: {hits}"
 
 
 def test_one_timing_loop():

@@ -629,3 +629,111 @@ def test_write_parquet_tuned_codec_and_file_bound(spark, tmp_path):
     back = spark.read.parquet(dst)
     assert back.count() == 10_000
     assert back.agg({"id": "sum"}).collect()[0][0] == sum(range(10_000))
+
+
+# -- one parquet reader -------------------------------------------------
+
+
+def _jobs(spark, fn):
+    """(fn(), Spark jobs fn ran), counted through a job group."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"parquet-jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_read_parquet_infers_a_path_once(spark, tmp_path):
+    """The first read of a path runs Spark's schema-inference job; the
+    second reads under the remembered schema and runs none."""
+    from llamadb_spark.session import read_parquet
+
+    path = str(tmp_path / "t")
+    spark.range(5).selectExpr("id", "cast(id AS string) AS s").write.parquet(
+        path
+    )
+    first, n_first = _jobs(spark, lambda: read_parquet(spark, path))
+    second, n_second = _jobs(spark, lambda: read_parquet(spark, path))
+    assert (n_first, n_second) == (1, 0)
+    assert second.schema == first.schema
+    assert sorted(second.collect()) == sorted(first.collect())
+
+
+def test_write_parquet_reads_back_without_inference(spark, tmp_path):
+    """A path written by write_parquet reads with no job, under the
+    schema Spark would infer: every field, array element and map value
+    nullable, as a file source reads any schema."""
+    from pyspark.sql import functions as F
+
+    from llamadb_spark.session import read_parquet, write_parquet
+
+    df = spark.range(3).select(
+        "id",
+        F.array(F.col("id"), F.lit(7)).alias("a"),
+        F.create_map(F.lit("k"), F.col("id")).alias("m"),
+        F.struct(F.col("id").alias("x")).alias("st"),
+    )
+    assert not df.schema["id"].nullable
+    path = str(tmp_path / "w")
+    write_parquet(df, path, "overwrite")
+    back, jobs = _jobs(spark, lambda: read_parquet(spark, path))
+    assert jobs == 0
+    assert back.schema == spark.read.parquet(path).schema
+    assert sorted(back.collect()) == sorted(df.collect())
+
+
+def test_read_parquet_sees_an_overwrite(spark, tmp_path):
+    """Overwriting a path with another schema, outside write_parquet,
+    changes what the path's stat records, so the next read returns the
+    new schema instead of the remembered one."""
+    from pyspark.sql.types import StringType
+
+    from llamadb_spark.session import read_parquet, write_parquet
+
+    path = str(tmp_path / "o")
+    write_parquet(spark.range(3), path, "overwrite")
+    assert read_parquet(spark, path).columns == ["id"]
+    spark.range(3).selectExpr("cast(id AS string) AS name").write.mode(
+        "overwrite"
+    ).parquet(path)
+    back = read_parquet(spark, path)
+    assert back.columns == ["name"]
+    assert back.schema["name"].dataType == StringType()
+
+
+def test_read_parquet_reinfers_when_nanos_as_long_flips(spark, tmp_path):
+    """A schema remembered under one ``nanosAsLong`` setting is not
+    reused under the other: TIMESTAMP(NANOS) reads as a long while the
+    conf is on, and once it is off the path is inferred again, which
+    rejects the type instead of reading it as the remembered long."""
+    import datetime as dt
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    import pytest
+    from pyspark.sql.types import LongType
+
+    from llamadb_spark.session import read_parquet
+
+    path = str(tmp_path / "nanos.parquet")
+    pq.write_table(
+        pa.table(
+            {"ts": pa.array([dt.datetime(2024, 1, 1)], pa.timestamp("ns"))}
+        ),
+        path,
+    )
+    key = "spark.sql.legacy.parquet.nanosAsLong"
+    saved = spark.conf.get(key)
+    try:
+        spark.conf.set(key, "true")
+        assert read_parquet(spark, path).schema["ts"].dataType == LongType()
+        spark.conf.set(key, "false")
+        with pytest.raises(Exception, match="PARQUET_TYPE_ILLEGAL"):
+            read_parquet(spark, path)
+    finally:
+        spark.conf.set(key, saved)

@@ -711,8 +711,10 @@ def _jobs_between_markers(spark, fn):
     return out, marker() - before - 1
 
 
-#: Spark jobs of the two-batch ingest_dedup drain below
-INGEST_DEDUP_DRAIN_JOBS = 18
+#: Spark jobs of the two-batch ingest_dedup drain below: batch 0
+#: meets an empty corpus and probes nothing, and no read of a version
+#: this process committed runs Spark's schema-inference job
+INGEST_DEDUP_DRAIN_JOBS = 12
 
 
 def test_ingest_dedup_stream_gates_cross_batch_duplicates(spark, tmp_path):
@@ -761,7 +763,7 @@ def test_ingest_dedup_stream_gates_cross_batch_duplicates(spark, tmp_path):
             threshold=0.5,
         ),
     )
-    # the drain plus its final reads (one parquet read per table)
+    # the drain plus its final reads (under remembered schemas)
     assert jobs == INGEST_DEDUP_DRAIN_JOBS
     kept = sorted(r.doc_id for r in corpus.collect())
     assert kept == [1, 2, 4]  # doc 3 gated as a near-dup of doc 1
@@ -778,6 +780,7 @@ def test_ivm_first_base_is_an_empty_local_relation(
     """The first MV version is built over an empty LocalRelation, not
     a Python-RDD scan (``createDataFrame([])``), which schedules one
     empty task per default partition on every read."""
+    from llamadb_spark.sources import versioned
     from llamadb_spark.streaming import ivm
 
     log_path = str(tmp_path / "log")
@@ -785,13 +788,13 @@ def test_ivm_first_base_is_an_empty_local_relation(
         [(1, "insert", None, ("a", 1.0))], _CHANGELOG_SCHEMA
     ).write.parquet(log_path)
     committed = []
-    real_commit = ivm._commit_version
+    real_commit = versioned.write_version
 
-    def capture(df, path, batch_id):
+    def capture(df, path, batch_id=None):
         committed.append(df)
         return real_commit(df, path, batch_id)
 
-    monkeypatch.setattr(ivm, "_commit_version", capture)
+    monkeypatch.setattr(versioned, "write_version", capture)
     ivm.apply_changelog_batch(
         spark, spark.read.parquet(log_path), 0, str(tmp_path / "mv"),
         "grp", "val",
@@ -1172,6 +1175,7 @@ def test_gate_crash_after_first_commit_replays_exactly_once(
     must skip batch 0, recompute batch 1 against the pre-batch bases,
     commit only the missing tables, and leave every table equal to an
     uncrashed run's with exactly one version per batch."""
+    from llamadb_spark.sources import versioned
     from llamadb_spark.sources.versioned import read_version, versions
     from llamadb_spark.streaming import ivm
 
@@ -1191,16 +1195,16 @@ def test_gate_crash_after_first_commit_replays_exactly_once(
     check(drain(stream(), tmp_path / "clean"))
     want = snapshot(clean)
 
-    real_commit = ivm._commit_version
+    real_commit = versioned.write_version
 
-    def crash_after_commit(df, path, batch_id):
+    def crash_after_commit(df, path, batch_id=None):
         v = real_commit(df, path, batch_id)
         if batch_id == 1:
             raise RuntimeError("injected crash after a commit")
         return v
 
     tables = tables_at(tmp_path / "crashed")
-    monkeypatch.setattr(ivm, "_commit_version", crash_after_commit)
+    monkeypatch.setattr(versioned, "write_version", crash_after_commit)
     with pytest.raises(Exception, match="injected crash"):
         drain(stream(), tmp_path / "crashed")
     monkeypatch.undo()
@@ -1214,6 +1218,33 @@ def test_gate_crash_after_first_commit_replays_exactly_once(
         assert versions(t) == [0, 1]
         assert ivm.committed_batches(t) == {0: 0, 1: 1}
     assert snapshot(tables) == want
+
+
+@pytest.mark.parametrize(
+    "kind", ["ingest_dedup", "ingest_span_dedup", "ingest_embed_dedup"]
+)
+def test_first_batch_logs_the_probe_schema_without_a_probe(
+    spark, tmp_path, kind
+):
+    """Batch 0 meets an empty corpus and probes nothing: its matches
+    version is an empty frame of the probe's declared schema. That
+    schema must be the one batch 1's real probe writes, so the log of
+    both versions reads under one remembered schema, with no Spark
+    job."""
+    from llamadb_spark.sources.versioned import read_version
+    from llamadb_spark.streaming.ivm import read_log
+
+    schema, batches, drain, tables_at, _ = _gated_case(kind)
+    stream = _stage_drop(spark, tmp_path, "first", schema, batches[:2])
+    drain(stream(), tmp_path)
+    matches, _corpus = tables_at(tmp_path)
+    v0, v1 = (read_version(spark, matches, v) for v in (0, 1))
+    assert v0.count() == 0 and v1.count() > 0
+    assert v0.schema == v1.schema
+    log, jobs = _jobs_between_markers(spark, lambda: read_log(spark, matches))
+    assert jobs == 0
+    assert log.schema == v1.schema
+    assert log.count() == v1.count()
 
 
 @pytest.mark.parametrize("kind", _INGEST_KINDS)
