@@ -22,7 +22,11 @@ from pyspark.sql.functions import col, lit
 
 
 def drop_hot_keys(
-    df: DataFrame, key_cols: list[str], cap: int | None
+    df: DataFrame,
+    key_cols: list[str],
+    cap: int | None,
+    *,
+    entities: int | None = None,
 ) -> DataFrame:
     """Drop all rows whose blocking key occurs more than ``cap`` times.
 
@@ -38,10 +42,26 @@ def drop_hot_keys(
     expensive to recompute, since both this guard and the self-join
     consume it.
 
+    ``entities`` is the caller's bound on any key's rows: the number
+    of entities (documents, signatures, vectors) in ``df`` when each
+    contributes a key at most once (a doc's distinct shingle hashes,
+    one ``(band, bucket)`` per signature per band, one
+    ``(tbl, bucket)`` per vector per table), read from the job that
+    staged ``df``. At or below ``cap`` no key can exceed the cap, so
+    the guard is the identity and neither its aggregate nor its
+    broadcast is planned; above it the guard runs as if no bound were
+    given. For hashed keys the once-per-entity argument holds up to
+    64-bit collisions: two distinct shingles of one doc sharing a
+    hash count once, as in the join itself (odds over n distinct
+    shingles ≈ n²/2⁶⁵, see operators/dedup.hashed_shingle_index).
+    Leave ``entities`` out where a key can repeat within an entity
+    (a gram hash posted once per position) or no staging job counts
+    the entities.
+
     ``cap=None`` disables the guard (exact semantics at any size —
     caller's responsibility).
     """
-    if cap is None:
+    if cap is None or (entities is not None and entities <= cap):
         return df
     hot = (
         df.groupBy(*key_cols)

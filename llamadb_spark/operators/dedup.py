@@ -18,7 +18,6 @@ from llamadb_spark.functions.blocking import drop_hot_keys
 from llamadb_spark.functions.text import (
     distinct_tokens,
     word_shingle_arrays,
-    word_shingles_fast,
 )
 from llamadb_spark.session import stage
 
@@ -37,11 +36,26 @@ def exact_dedup(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text")
     )
 
 
-def hashed_shingle_index(
-    docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"
+def _shingle_hashes(
+    docs: DataFrame, id_col: str, text_col: str, n: int = 3
 ) -> DataFrame:
+    """(id, n_sh, sh, _pos): one row per distinct word n-gram of each
+    doc, hashed, with its position in the doc's shingle array (0 on
+    exactly one row of every doc that has a shingle). Not staged."""
+    arr = word_shingle_arrays(docs, id_col, text_col, n)
+    return arr.select(
+        col(id_col),
+        F.size("shingles").alias("n_sh"),
+        F.posexplode("shingles").alias("_pos", "shingle"),
+    ).select(col(id_col), "n_sh", F.xxhash64("shingle").alias("sh"), "_pos")
+
+
+def hashed_shingle_index(
+    docs: DataFrame, id_col: str = "doc_id", text_col: str = "text", n: int = 3
+) -> tuple[DataFrame, int]:
     """The staged inverted shingle index every shingle-based dedup
-    path consumes: (id, n_sh, sh) with sh = xxhash64(word 3-gram).
+    path consumes: (id, n_sh, sh) with sh = xxhash64(word n-gram),
+    returned with the number of docs it indexes.
 
     Shingle strings are ~20 bytes; 64-bit-hashing them before any
     self-join shrinks shuffle payloads (collision odds over n
@@ -52,6 +66,12 @@ def hashed_shingle_index(
     the materialized column because the session excludes
     InferFiltersFromGenerate (see session.py — that rule would
     re-inline the array construction below this projection).
+
+    The doc count is a second metric of the staging job
+    (``count_if(_pos = 0)``: docs with at least one shingle). Every
+    doc posts each distinct shingle hash once, so no hash can occur in
+    more rows than that; it is the entity bound the hot-shingle guard
+    uses to skip itself (functions/blocking.drop_hot_keys).
 
     Returned LOCALCHECKPOINTED: the hot-key occupancy aggregate, the
     self-join sides, and (for callers like d03/d18) the MinHash
@@ -64,13 +84,12 @@ def hashed_shingle_index(
     pair machinery and a sketch (d03, d18) build the index once and
     pass it to both — one barrier, one shingle pass.
     """
-    arr = word_shingle_arrays(docs, id_col, text_col)
-    sh = arr.select(
-        col(id_col),
-        F.size("shingles").alias("n_sh"),
-        F.explode("shingles").alias("shingle"),
-    ).select(col(id_col), "n_sh", F.xxhash64("shingle").alias("sh"))
-    return stage(sh)[0]
+    idx, seen = stage(
+        _shingle_hashes(docs, id_col, text_col, n),
+        F.expr("count_if(_pos = 0) AS docs"),
+        names=[id_col, "n_sh", "sh"],
+    )
+    return idx, seen["docs"]
 
 
 def jaccard_ngram_pairs(
@@ -79,7 +98,7 @@ def jaccard_ngram_pairs(
     text_col: str = "text",
     threshold: float = 0.5,
     stop_shingle_df: int | None = 10_000,
-    index: DataFrame | None = None,
+    index: tuple[DataFrame, int] | None = None,
 ) -> DataFrame:
     """EXACT n-gram (word 3-gram) Jaccard near-dup pairs via an
     inverted shingle index — the scalable exact algorithm:
@@ -98,12 +117,11 @@ def jaccard_ngram_pairs(
     (functions/blocking.py). Set sizes (n_sh) stay FULL-set, so when
     no shingle exceeds the cap the result is bit-exact Jaccard; when
     the cap fires, intersections lose only stop-shingles (jaccard is
-    under-, never over-estimated). ``None`` disables.
+    under-, never over-estimated). ``None`` disables. ``index`` is a
+    shared ``hashed_shingle_index`` result.
     """
-    sh = index if index is not None else hashed_shingle_index(
-        docs, id_col, text_col
-    )
-    sh = drop_hot_keys(sh, ["sh"], stop_shingle_df)
+    sh, n_docs = index or hashed_shingle_index(docs, id_col, text_col)
+    sh = drop_hot_keys(sh, ["sh"], stop_shingle_df, entities=n_docs)
 
     # Never broadcast a side of this join: both sides are the full
     # exploded shingle index (corpus-sized, not dim-sized) — at scale
@@ -161,14 +179,8 @@ def containment_pairs(
 
     Output: (inner_id, outer_id, n_inter, containment).
     """
-    arr = word_shingle_arrays(docs, id_col, text_col)
-    sh = arr.select(
-        col(id_col),
-        F.size("shingles").alias("n_sh"),
-        F.explode("shingles").alias("shingle"),
-    ).select(col(id_col), "n_sh", F.xxhash64("shingle").alias("sh"))
-    sh, _ = stage(sh)
-    sh = drop_hot_keys(sh, ["sh"], stop_shingle_df)
+    sh, n_docs = hashed_shingle_index(docs, id_col, text_col)
+    sh = drop_hot_keys(sh, ["sh"], stop_shingle_df, entities=n_docs)
     a = sh.select(col(id_col).alias("a_id"), "sh", col("n_sh").alias("n_a")).hint(
         "shuffle_hash"
     )
@@ -231,17 +243,9 @@ def incremental_jaccard_matches(
     """
     from pyspark.sql.window import Window
 
-    def index(docs: DataFrame) -> DataFrame:
-        arr = word_shingle_arrays(docs, id_col, text_col)
-        return arr.select(
-            col(id_col),
-            F.size("shingles").alias("n_sh"),
-            F.explode("shingles").alias("shingle"),
-        ).select(col(id_col), "n_sh", F.xxhash64("shingle").alias("sh"))
-
-    old, _ = stage(index(corpus))
-    old = drop_hot_keys(old, ["sh"], stop_shingle_df)
-    new = index(new_docs)
+    old, n_docs = hashed_shingle_index(corpus, id_col, text_col)
+    old = drop_hot_keys(old, ["sh"], stop_shingle_df, entities=n_docs)
+    new = _shingle_hashes(new_docs, id_col, text_col)
     # Corpus-index side is corpus-sized — shuffle join, never a
     # forced broadcast (the batch side may be small enough that AQE
     # broadcasts IT, which is the right direction).
@@ -299,9 +303,8 @@ def shared_ngram_pairs(
 
     Output: (a_id, b_id, n_shared).
     """
-    sh = word_shingles_fast(docs, id_col, text_col, n=n)
-    idx, _ = stage(sh.select(col(id_col), F.xxhash64("shingle").alias("sh")))
-    idx = drop_hot_keys(idx, ["sh"], stop_shingle_df)
+    idx, n_docs = hashed_shingle_index(docs, id_col, text_col, n=n)
+    idx = drop_hot_keys(idx, ["sh"], stop_shingle_df, entities=n_docs)
     a = idx.select(col(id_col).alias("a_id"), "sh").hint("shuffle_hash")
     b = idx.select(col(id_col).alias("b_id"), "sh").hint("shuffle_hash")
     return (
@@ -318,7 +321,7 @@ def minhash_signatures(
     id_col: str = "doc_id",
     text_col: str = "text",
     num_hashes: int = 32,
-    index: DataFrame | None = None,
+    index: tuple[DataFrame, int] | None = None,
 ) -> DataFrame:
     """MinHash signatures over word 3-gram shingles.
 
@@ -334,9 +337,7 @@ def minhash_signatures(
 
     Output: (id, sig array<bigint> length k).
     """
-    sh = index if index is not None else hashed_shingle_index(
-        docs, id_col, text_col
-    )
+    sh, _ = index or hashed_shingle_index(docs, id_col, text_col)
     # Both k-wide expression lists are SQL strings parsed server-side
     # (one round trip each) instead of 2k python Column constructions
     # — identical parsed expressions, ~0.5 s less driver time per
@@ -360,7 +361,7 @@ def minhash_lsh_pairs(
     bands: int = 8,
     threshold: float = 0.5,
     max_bucket_size: int | None = 10_000,
-    index: DataFrame | None = None,
+    index: tuple[DataFrame, int] | None = None,
 ) -> DataFrame:
     """MinHash + LSH near-dup candidates, verified with estimated
     Jaccard from full-signature agreement.
@@ -390,7 +391,7 @@ def minhash_lsh_pairs(
     # scale this would be a checkpoint/staged table; locally,
     # localCheckpoint. Size is tiny relative to the corpus: k×8 bytes
     # per doc vs the full text.
-    sig, _ = stage(
+    sig, seen = stage(
         minhash_signatures(docs, id_col, text_col, num_hashes, index=index)
     )
     # Band rows carry ONLY (id, band_id, bucket) — 8 banded copies of
@@ -413,7 +414,11 @@ def minhash_lsh_pairs(
         col(id_col),
         F.explode(F.expr(f"array({band_arr})")).alias("band"),
     ).select(col(id_col), "band.band_id", "band.bucket")
-    banded = drop_hot_keys(banded, ["band_id", "bucket"], max_bucket_size)
+    # one (band_id, bucket) per signature per band: no bucket holds
+    # more rows than there are signatures
+    banded = drop_hot_keys(
+        banded, ["band_id", "bucket"], max_bucket_size, entities=seen["n"]
+    )
 
     # Corpus-sized on both sides — never broadcastable (see d02 note);
     # shuffle_hash also lets the second shuffle reuse the first.

@@ -114,7 +114,7 @@ def embed_neardup_pairs(
         )
     )
 
-    def _pairs(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def _pairs(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         x, y = key
         ids = pdf["_id"].to_numpy()
         mat = _to_mat(pdf["_v"])
@@ -529,9 +529,16 @@ def lsh_ann_pairs(
         # The occupancy guard adds a reference to `banded` (the
         # matmul bucketing plus a corpus scan) — stage the tiny
         # (id, tbl, bucket) table so the guard and both join sides
-        # read it rather than recompute it.
-        banded, _ = stage(banded)
-    banded = drop_hot_keys(banded, ["tbl", "bucket"], max_bucket_size)
+        # read it rather than recompute it. Every bucketed vector
+        # posts exactly one (tbl, bucket) per table, so the staged
+        # row count over num_tables bounds every bucket's occupancy.
+        banded, seen = stage(banded)
+        banded = drop_hot_keys(
+            banded,
+            ["tbl", "bucket"],
+            max_bucket_size,
+            entities=seen["n"] // num_tables,
+        )
 
     # Corpus-sized both sides — shuffle join, never broadcast (d02 note)
     a = banded.select(col("_id").alias("a_id"), "tbl", "bucket").hint("shuffle_hash")

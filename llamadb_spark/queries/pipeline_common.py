@@ -30,6 +30,12 @@ def _rebalance(spark: SparkSession, df: DataFrame) -> DataFrame:
     index. The one round-robin exchange of the raw rows is orders of
     magnitude cheaper than serializing the transform; when the scan
     already has enough splits (the 100 TB case) this is a no-op.
+
+    Use it only where per-row CPU work (shingling, the LSH matmul)
+    comes before the first shuffle. Where that map side is cheap, the
+    exchange spreads no work and costs a shuffle job of its own:
+    the exact cosine of d05 and d08 reads ``embeddings`` as scanned,
+    because only a hash and a B-way explode precede its block shuffle.
     """
     target = spark.sparkContext.defaultParallelism
     if df.rdd.getNumPartitions() < target:

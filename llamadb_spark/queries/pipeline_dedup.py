@@ -13,7 +13,7 @@ from pyspark.sql import functions as F
 from llamadb_spark.operators import dedup, multimodal, similarity, textops
 from llamadb_spark.functions import text as text_fns
 from llamadb_spark.functions.text import STOPWORDS
-from llamadb_spark.session import stage
+from llamadb_spark.session import read_table, stage
 
 from llamadb_spark.queries.pipeline_common import (
     _docs,
@@ -218,8 +218,10 @@ FROM pairs
 """
 EMBED_NEARDUP_THRESHOLD = 0.4
 def d05_embed_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
+    # the exact cosine reads the table as scanned (see d08)
     return similarity.embed_neardup_pairs(
-        _emb(spark, sf_dir), threshold=EMBED_NEARDUP_THRESHOLD
+        read_table(spark, sf_dir, "embeddings"),
+        threshold=EMBED_NEARDUP_THRESHOLD,
     )
 ORACLE_D05 = f"""
 WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings)
@@ -253,10 +255,17 @@ def d08_semantic_dedup_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     duplicate-heavy corpus), so no broadcast hint: AQE picks
     broadcast vs shuffle for the LEFT ANTI join at runtime from the
     drop list's actual size.
+
+    Both reads of ``embeddings`` (the blocked cosine and the survivors
+    aggregate) take the table as scanned, without
+    ``pipeline_common._rebalance``: before the cosine's first shuffle
+    the map side is only a hash and a B-way explode, and the cosine
+    itself runs after its own block shuffle, so a round-robin exchange
+    in front of either would be a shuffle that spreads no work.
     """
     from pyspark.sql.functions import col
 
-    emb = _emb(spark, sf_dir)
+    emb = read_table(spark, sf_dir, "embeddings")
     pairs = similarity.semantic_dedup_pairs(
         emb, threshold=EMBED_NEARDUP_THRESHOLD, exact=True
     ).select("a_id", "b_id")

@@ -103,6 +103,8 @@ def ingest_embed_dedup_stream(
         if corpus is None:
             # nothing to probe: batch×batch pairs are never matched
             return [empty_frame(spark, _matches_schema(batch_df)), batch]
+        # no entity bound: the corpus is read from its committed
+        # version, and no job of this batch counts its vectors
         c_banded = drop_hot_keys(
             _banded(corpus, num_planes, num_tables),
             ["tbl", "bucket"],

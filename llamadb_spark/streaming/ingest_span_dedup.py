@@ -111,6 +111,8 @@ def ingest_span_dedup_stream(
         if corpus is None:
             # nothing to probe: batch×batch pairs are never matched
             return [empty_frame(spark, _matches_schema(batch_df)), batch]
+        # no entity bound: a doc posts a gram hash once per position,
+        # so a repeated run puts one hash in many rows of one doc
         c_post = drop_hot_keys(
             _postings(corpus, "match_id", "c_pos"), ["h"], max_gram_occ
         )

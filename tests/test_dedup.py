@@ -140,6 +140,19 @@ def test_d08_semantic_dedup_keeps_representatives(spark, sf_dir):
     assert all(r.avg_norm > 0 for r in out.collect())
 
 
+def test_d08_runs_without_a_user_warning(spark, sf_dir):
+    """The blocked cosine's grouped-map function is annotated in full,
+    so applyInPandas infers its eval type without a warning."""
+    import warnings
+
+    from llamadb_spark.queries.pipeline import d08_semantic_dedup_apply
+
+    with warnings.catch_warnings(record=True) as seen:
+        warnings.simplefilter("always")
+        d08_semantic_dedup_apply(spark, sf_dir).collect()
+    assert not [w for w in seen if issubclass(w.category, UserWarning)]
+
+
 def test_stop_shingle_cap_bounds_candidates(spark):
     # A boilerplate sentence shared by EVERY doc would make each doc
     # pair a candidate (O(n²)); with the hot shingle dropped, only
@@ -179,6 +192,123 @@ def test_lsh_bucket_cap_drops_megabucket(spark):
         dedup.minhash_lsh_pairs(docs, threshold=0.1, max_bucket_size=None).count()
         == 30 * 29 // 2
     )
+
+
+#: Entities (docs or vectors) of each guard case below. Every entity
+#: carries the hot key, so a cap of D - 1 (the cap of 5 of
+#: ``test_stop_shingle_cap_bounds_candidates``) must drop it and a cap
+#: of D must not.
+_GUARD_D = 6
+_BOILER = "all rights reserved by the example corporation of earth"
+
+
+def _boiler_docs(spark, ids):
+    """Docs sharing ``_BOILER``, with unique filler, plus a twin pair
+    (ids 100 and 101) that also carries it."""
+    twin = f"{_BOILER} twin document body identical text here"
+    return _docs_df(
+        spark,
+        [(i, f"{_BOILER} unique{i}a word{i}b tail{i}c") for i in ids]
+        + [(100, twin), (101, twin)],
+    )
+
+
+def _guard_case(spark, op: str):
+    """(module whose ``drop_hot_keys`` the operator calls, cap -> the
+    operator's rows) for one gated guard call site, over ``_GUARD_D``
+    entities."""
+    from llamadb_spark.operators import similarity
+
+    d = _GUARD_D
+    if op == "lsh_ann":
+        emb = spark.createDataFrame(
+            [(i, [1.0, 0.5, 0.25]) for i in range(d)],
+            "vec_id long, embedding array<float>",
+        )
+        return similarity, lambda cap: similarity.lsh_ann_pairs(
+            emb, threshold=0.3, num_planes=2, num_tables=4,
+            max_bucket_size=cap,
+        )
+    if op == "minhash":
+        clique = _docs_df(
+            spark, [(i, "same text body repeated for the whole clique")
+                    for i in range(d)],
+        )
+        return dedup, lambda cap: dedup.minhash_lsh_pairs(
+            clique, threshold=0.1, max_bucket_size=cap
+        )
+    if op == "incremental":
+        corpus = _boiler_docs(spark, range(d - 2))
+        batch = _docs_df(
+            spark,
+            [(200, f"{_BOILER} twin document body identical text here"),
+             (201, f"{_BOILER} fresh filler words only")],
+        )
+        return dedup, lambda cap: dedup.incremental_jaccard_matches(
+            batch, corpus, threshold=0.1, stop_shingle_df=cap
+        )
+    docs = _boiler_docs(spark, range(d - 2))
+    if op == "jaccard":
+        return dedup, lambda cap: dedup.jaccard_ngram_pairs(
+            docs, threshold=0.1, stop_shingle_df=cap
+        )
+    if op == "containment":
+        return dedup, lambda cap: dedup.containment_pairs(
+            docs, threshold=0.1, stop_shingle_df=cap
+        )
+    assert op == "shared_ngram"
+    return dedup, lambda cap: dedup.shared_ngram_pairs(
+        docs, n=3, stop_shingle_df=cap
+    )
+
+
+def _always_guarded(monkeypatch, module) -> None:
+    """Make ``module``'s guard ignore the entity bound (the guard as it
+    ran before the bound existed)."""
+    from llamadb_spark.functions.blocking import drop_hot_keys
+
+    monkeypatch.setattr(
+        module,
+        "drop_hot_keys",
+        lambda df, keys, cap, entities=None: drop_hot_keys(df, keys, cap),
+    )
+
+
+@pytest.mark.parametrize(
+    "op",
+    ["jaccard", "containment", "shared_ngram", "incremental", "minhash",
+     "lsh_ann"],
+)
+def test_hot_key_guard_fires_below_the_entity_count(spark, monkeypatch, op):
+    """A gated guard gives the always-guarded rows on both sides of the
+    entity count D: below D it really drops the hot key (its rows
+    differ from the unguarded ones), at D nothing is dropped."""
+    module, run = _guard_case(spark, op)
+
+    def rows(cap):
+        return sorted(tuple(r) for r in run(cap).collect())
+
+    caps = (_GUARD_D - 1, _GUARD_D)
+    gated = {cap: rows(cap) for cap in caps}
+    unguarded = rows(None)
+    _always_guarded(monkeypatch, module)
+    for cap in caps:
+        assert gated[cap] == rows(cap), cap
+        assert (gated[cap] != unguarded) == (cap < _GUARD_D), cap
+
+
+def test_shingle_index_counts_its_docs(spark):
+    """The index's doc count comes from its staging job: docs with at
+    least one shingle, each counted once however many it has."""
+    docs = _docs_df(
+        spark,
+        [(1, "one two three four five"), (2, "too short"),
+         (3, "a b c a b c a b c"), (4, "")],
+    )
+    idx, n_docs = dedup.hashed_shingle_index(docs)
+    assert n_docs == 2
+    assert idx.columns == ["doc_id", "n_sh", "sh"]
+    assert idx.count() == 3 + 3  # distinct shingles of docs 1 and 3
 
 
 def test_star_cc_matches_minlabel_and_log_rounds(spark, monkeypatch):

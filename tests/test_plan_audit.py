@@ -50,6 +50,13 @@ def test_no_cartesian_or_row_python_anywhere(spark, sf_dir):
 #:   - capped candidate or hot-key lists: df-threshold hot-shingle
 #:     lists, LSH occupancy caps, fixed query sets
 #:     (d03/d11/s01/s02/s03/p02, t09 query terms)
+#: The count is of every ResolvedHint, so the pair generators' join
+#: strategy hints count too: the self-join's two ``shuffle_hash``
+#: sides are what d02's plan holds at test scale. Their hot-key guard
+#: (functions/blocking.drop_hot_keys) is planned only once the staged
+#: entity count (docs, signatures, vectors) exceeds its cap, and then
+#: adds its broadcast back, once per join side (d13: once); the
+#: budgets below are what the plans hold with the guard skipped.
 #: Keys NOT listed must carry ZERO hints — in particular the
 #: drop-list / cluster-map / vocabulary joins (d07, d08, p10, and
 #: t15's df table), whose size is data-dependent: there AQE picks
@@ -68,19 +75,16 @@ _ALLOWED_HINTS = {
     "h14_promo_effect": 1, "h16_supplier_counts": 2,
     "h18_large_orders": 2, "h19_discounted_revenue": 1,
     "h20_potential_promotion": 2, "h21_waiting_suppliers": 1,
-    "d02_jaccard_ngram": 4,
-    # banded recall attestation: d02's exact pair plan (4) + the LSH
-    # candidate plan's own capped-bucket hints (4)
-    "d03_minhash_lsh": 8,
-    "d04_simhash": 4,  # the d02 exact-pair plan's hints
-    "d13_incremental_dedup": 1,  # drop_hot_keys' tiny hot-key list
-    "d14_containment_pairs": 4,  # same shape as d02
-    "g01_pagerank": 4,  # pair generation is the d02 plan
-    "g02_degree_histogram": 4, "t19_token_yield": 4,  # same
+    "d02_jaccard_ngram": 2,
+    # banded recall attestation: d02's exact pair plan (2) + the LSH
+    # candidate plan's own self-join hints (2)
+    "d03_minhash_lsh": 4,
+    "d14_containment_pairs": 2,  # same shape as d02
+    "g02_degree_histogram": 2,  # pair generation is the d02 plan
     "e18_bot_users": 1,  # 1-row mean+3sigma scalar
     "t20_quality_deciles": 1,  # 9-value cut-point array scalar
-    "d09_shared_longrun": 4, "d11_editdist_pairs": 4,
-    "s01_knn_bruteforce": 1, "s02_lsh_ann": 4,
+    "d09_shared_longrun": 2, "d11_editdist_pairs": 2,
+    "s01_knn_bruteforce": 1, "s02_lsh_ann": 2,
     # IVF probe set + the exact-twin knn's query broadcast + recall
     # join: all bounded by |KNN_QUERY_IDS| (8) x nprobe
     "s03_ivf_ann": 3,
@@ -105,10 +109,10 @@ _ALLOWED_HINTS = {
     "s12_cluster_balance": 1,  # 1-row total scalar
     "p13_winsorize": 1,  # per-language clip-bounds table, n_langs rows
     "s13_filtered_knn": 1,  # caller-bounded query set (|KNN_QUERY_IDS|)
-    "d16_threshold_sweep": 4,  # the d02 pair-generation plan's hints
+    "d16_threshold_sweep": 2,  # the d02 pair-generation plan's hints
     "t24_quality_bands": 1,  # 1-row corpus-total scalar (t14's plan)
     "s14_silhouette": 1,  # packed centroid table, |labels| rows
-    "d17_pair_provenance": 4,  # the d02 pair-generation plan's hints
+    "d17_pair_provenance": 2,  # the d02 pair-generation plan's hints
     "e23_weekly_churn": 1,  # 1-row max-week scalar
     # partition-count-bounded offsets table + two 1-row scalars
     "e20_user_concentration": 3,
@@ -118,7 +122,7 @@ _ALLOWED_HINTS = {
     # subtree nests the first two, so the analyzed plan counts 4)
     "p17_alpha_mixture": 4,
     # the d03 minhash pair-generation plan's hints
-    "d18_minhash_calibration": 4,
+    "d18_minhash_calibration": 2,
     # PQ: per-query ADC lookup tables (|queries|·m rows) + the
     # rerank's caller-bounded query-vector broadcast
     "s16_pq_ann": 2,

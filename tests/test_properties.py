@@ -97,6 +97,42 @@ def test_jaccard_matches_python_reference(spark, texts):
 
 
 @given(
+    texts=st.lists(
+        st.lists(st.sampled_from("ab"), min_size=0, max_size=8).map(" ".join),
+        min_size=1,
+        max_size=6,
+    )
+)
+@example(texts=["a a a b", "a a a", "b a a a"])
+@settings(_SPARK_SETTINGS, max_examples=3)
+def test_bounded_guard_matches_always_guarded(spark, texts):
+    """Around the index's doc count D (caps D - 1, D, D + 1) the guard
+    that skips itself at caps of at least D gives the rows of the guard
+    that always runs. Two-letter texts make shingles that every doc
+    shares, so a cap of D - 1 often drops one. D is the count the
+    index observes (docs with a shingle: ``test_shingle_index_counts_
+    its_docs``)."""
+    from llamadb_spark.functions.blocking import drop_hot_keys
+
+    docs = spark.createDataFrame(list(enumerate(texts)), "doc_id long, text string")
+    d = sum(len(t.split()) >= 3 for t in texts)
+
+    def rows(cap):
+        out = jaccard_ngram_pairs(docs, threshold=0.0, stop_shingle_df=cap)
+        return sorted(tuple(r) for r in out.collect())
+
+    gated = {cap: rows(cap) for cap in (d - 1, d, d + 1)}
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(
+            dedup,
+            "drop_hot_keys",
+            lambda df, keys, cap, entities=None: drop_hot_keys(df, keys, cap),
+        )
+        for cap, got in gated.items():
+            assert got == rows(cap), (cap, d)
+
+
+@given(
     points=st.lists(st.integers(0, 40), min_size=1, max_size=10),
     intervals=st.lists(
         st.tuples(st.integers(0, 40), st.integers(0, 15)), min_size=0, max_size=8

@@ -17,6 +17,8 @@ Rules:
   in session.py (``stage``); `Observation(` only there and at the
   allowlisted sites below.
 - `.read.parquet(`: only in session.py (``read_parquet``).
+- `drop_hot_keys(`: every call passes its ``entities=`` bound or has
+  a comment right above it saying why it cannot.
 - `applyInPandasWithState(`: once, in streaming/reorder.py;
   `awaitTermination(`: once, in streaming/streams.py (``drain``);
   `ProcessingTimeTimeout`: nowhere, not even in a docstring.
@@ -149,6 +151,41 @@ def test_one_staging_primitive():
         "staging outside session.stage (checkpoint/cache/persist, "
         f"Observation) — use stage(): {over}"
     )
+
+
+def _call_args(code: list[str], i: int, start: int) -> str:
+    """The argument text of the call whose ``(`` is at ``code[i][start]``,
+    across lines, up to the matching ``)``."""
+    depth, out = 0, []
+    for line in [code[i][start:]] + code[i + 1:]:
+        for ch in line:
+            depth += {"(": 1, ")": -1}.get(ch, 0)
+            out.append(ch)
+            if depth == 0:
+                return "".join(out)
+    raise AssertionError("unbalanced call")
+
+
+def test_hot_key_guards_are_bounded():
+    """Every ``drop_hot_keys`` call passes its ``entities=`` bound (the
+    entity count that lets the guard skip itself when no key can pass
+    the cap) or carries a comment right above it saying why it has
+    none, so a guard that plans a shuffle and a broadcast the staged
+    data rules out is a deliberate choice."""
+    pat = re.compile(r"\bdrop_hot_keys\(")
+    bare = []
+    for rel, f in _sources():
+        raw = open(f, encoding="utf-8").read().splitlines()
+        code = [line.split("#")[0] for line in raw]
+        for i, line in enumerate(code):
+            m = pat.search(line)
+            if not m or line.lstrip().startswith("def "):
+                continue
+            if "entities=" in _call_args(code, i, m.end() - 1):
+                continue
+            if i == 0 or not raw[i - 1].lstrip().startswith("#"):
+                bare.append(f"{rel}:{i + 1}")
+    assert not bare, f"hot-key guard with neither a bound nor a reason: {bare}"
 
 
 def test_one_exactly_once_gate():

@@ -7,6 +7,7 @@ from __future__ import annotations
 import uuid
 
 import pyspark.sql.functions as F
+import pytest
 
 from llamadb_spark.session import stage
 
@@ -80,3 +81,26 @@ def test_t22_build_reads_the_staged_row_count(spark, sf_dir):
     df, jobs = _build_jobs(spark, lambda: t22_source_divergence(spark, sf_dir))
     assert jobs == T22_BUILD_JOBS
     assert df.count() > 0
+
+
+#: Spark jobs of one call of each perfbench ``dedup_pipeline`` key at
+#: test scale: its build (eager barriers) plus a noop write of the
+#: result, with the tables' schemas already known. d02 plans no
+#: hot-shingle guard (the index's observed doc count is below the
+#: cap) and d08 reads ``embeddings`` without a rebalance shuffle.
+DEDUP_CALL_JOBS = {"d02_jaccard_ngram": 5, "d08_semantic_dedup_apply": 6}
+
+
+@pytest.mark.parametrize("key", sorted(DEDUP_CALL_JOBS))
+def test_dedup_call_jobs(spark, sf_dir, key):
+    from llamadb_spark.queries import all_queries
+    from llamadb_spark.session import read_table
+
+    for table in ("documents", "embeddings"):
+        read_table(spark, sf_dir, table)
+    build = all_queries()[key]
+    _, jobs = _build_jobs(
+        spark,
+        lambda: build(spark, sf_dir).write.format("noop").mode("overwrite").save(),
+    )
+    assert jobs == DEDUP_CALL_JOBS[key]
