@@ -49,6 +49,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.functions import col
 
+from llamadb_spark.functions.matrix import vector_matrix
 from llamadb_spark.functions.vector import as_double
 from llamadb_spark.session import read_parquet
 
@@ -118,15 +119,10 @@ def _encode_codes(
         b = bc_b.value
         m_, _kk, ds = b.shape
         for batch in batches:
-            x = np.array(
-                [np.asarray(r, dtype=np.float64) for r in batch["_v"]]
-            )
-            xn = x / np.maximum(
-                np.linalg.norm(x, axis=1, keepdims=True), 1e-12
-            )
+            xn = vector_matrix(batch["_v"], unit=True)
             cell = np.argmax(xn @ c.T, axis=1)
             tgt = (xn - c[cell]) if residual else xn
-            codes = np.empty((len(x), m_), dtype=np.int64)
+            codes = np.empty((len(xn), m_), dtype=np.int64)
             for j in range(m_):
                 xs = tgt[:, j * ds : (j + 1) * ds]
                 d2 = -2.0 * (xs @ b[j].T) + (b[j] ** 2).sum(axis=1)[None, :]

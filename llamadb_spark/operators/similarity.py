@@ -14,6 +14,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import broadcast, col, lit
 
 from llamadb_spark.functions.blocking import drop_hot_keys
+from llamadb_spark.functions.matrix import vector_matrix
 from llamadb_spark.functions.vector import as_double, cosine, cosine_pre, norm2
 from llamadb_spark.session import stage
 
@@ -30,14 +31,18 @@ def embed_neardup_pairs(
     """All vector pairs with cosine ≥ threshold (exact).
 
     Default strategy "blocked": block-pair partitioned all-pairs.
-    Each vector gets a deterministic hash block b ∈ [0, B); it is
-    replicated to the B groups {(min(b,o), max(b,o)) : o ∈ [0, B)}
-    and each group computes its cross-block (or intra-block, when
-    x == y) cosine matmul in one Arrow-batched applyInPandas task.
-    Every pair lands in exactly one group, so the result is exact.
+    Each vector gets a deterministic hash block b ∈ [0, B) and is
+    replicated to the B block pairs {(min(b,o), max(b,o)) : o ∈ [0, B)},
+    hash-partitioned by block pair. One mapInArrow call per partition
+    reads its Arrow batches once into one L2-normalised float64 matrix
+    and runs a cross-block (or intra-block, when x == y) cosine matmul
+    per block pair it holds. Every pair lands in exactly one block
+    pair, so the result is exact. AQE decides how many block pairs
+    share a task (at bench scale it coalesces all B(B+1)/2 into one);
+    the task pays one Arrow round trip for all of them.
     No driver-side corpus materialization anywhere: the shuffle moves
-    N·B vector copies and each task holds ≤ 2N/B vectors — pick B so
-    a group fits executor memory (B ~ N·d·16/exec_mem). Exact
+    N·B vector copies and a block pair holds ≤ 2N/B vectors — pick B
+    so a partition fits executor memory (B ~ N·d·16/exec_mem). Exact
     all-pairs is inherently O(N²) compute; at 100 TB the approximate
     LSH path (lsh_ann_pairs) is the default pair generator and this
     operator is its exact-verify twin on bounded candidate sets.
@@ -54,10 +59,7 @@ def embed_neardup_pairs(
 
     import numpy as np
     import pandas as pd
-
-    def _to_mat(series) -> "np.ndarray":
-        m = np.array([np.asarray(t, dtype=np.float64) for t in series])
-        return m / np.maximum(np.linalg.norm(m, axis=1, keepdims=True), 1e-12)
+    import pyarrow as pa
 
     if strategy == "broadcast":
         rows = (
@@ -71,14 +73,14 @@ def embed_neardup_pairs(
                 "use strategy='blocked' for larger corpora"
             )
         c_ids = np.array([r._id for r in rows], dtype=np.int64)
-        c_mat = _to_mat([r._v for r in rows])
+        c_mat = vector_matrix([r._v for r in rows], unit=True)
         bc = emb.sparkSession.sparkContext.broadcast((c_ids, c_mat))
 
         def _block(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
             ids, mat = bc.value
             for batch in batches:
                 b_ids = batch["_id"].to_numpy()
-                b_mat = _to_mat(batch["_v"])
+                b_mat = vector_matrix(batch["_v"], unit=True)
                 sims = np.round(b_mat @ mat.T, 6)
                 keep = (sims >= threshold) & (b_ids[:, None] < ids[None, :])
                 ai, cj = np.nonzero(keep)
@@ -93,7 +95,7 @@ def embed_neardup_pairs(
     if strategy != "blocked":
         raise ValueError(f"unknown strategy {strategy!r}")
 
-    grouped = (
+    copies = (
         emb.select(
             col(id_col).alias("_id"),
             col(vec_col).alias("_v"),
@@ -114,32 +116,37 @@ def embed_neardup_pairs(
         )
     )
 
-    def _pairs(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        x, y = key
-        ids = pdf["_id"].to_numpy()
-        mat = _to_mat(pdf["_v"])
-        if x == y:
-            sims = np.round(mat @ mat.T, 6)
-            keep = (sims >= threshold) & (ids[:, None] < ids[None, :])
+    def _pairs(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        batches = [b for b in batches if b.num_rows]
+        if not batches:
+            return
+        part = pa.Table.from_batches(batches)
+        ids = part["_id"].to_numpy().astype(np.int64, copy=False)
+        blk = part["_blk"].to_numpy()
+        mat = vector_matrix(part["_v"], unit=True)
+        key = part["_gx"].to_numpy() * num_blocks + part["_gy"].to_numpy()
+        order = np.argsort(key, kind="stable")
+        out = []
+        for rows in np.split(order, np.flatnonzero(np.diff(key[order])) + 1):
+            x, y = divmod(int(key[rows[0]]), num_blocks)
+            left = blk[rows] == x
+            ra, rb = (rows, rows) if x == y else (rows[left], rows[~left])
+            ia, ib, ma = ids[ra], ids[rb], mat[ra]
+            sims = np.round(ma @ (ma if x == y else mat[rb]).T, 6)
+            keep = sims >= threshold
+            if x == y:
+                keep &= ia[:, None] < ib[None, :]
             ai, bj = np.nonzero(keep)
-            a, b, c = ids[ai], ids[bj], sims[ai, bj]
-        else:
-            left = pdf["_blk"].to_numpy() == x
-            ia, ib = ids[left], ids[~left]
-            sims = np.round(mat[left] @ mat[~left].T, 6)
-            ai, bj = np.nonzero(sims >= threshold)
-            a = np.minimum(ia[ai], ib[bj])
-            b = np.maximum(ia[ai], ib[bj])
-            c = sims[ai, bj]
-        return pd.DataFrame(
-            {
-                "a_id": a.astype(np.int64),
-                "b_id": b.astype(np.int64),
-                "cos": c.astype(np.float64),
-            }
-        )
+            a, b = np.minimum(ia[ai], ib[bj]), np.maximum(ia[ai], ib[bj])
+            out.append((a, b, sims[ai, bj]))
+        a, b, c = (np.concatenate(cols) for cols in zip(*out))
+        if len(a):
+            yield pa.RecordBatch.from_arrays(
+                [pa.array(a), pa.array(b), pa.array(c)],
+                names=["a_id", "b_id", "cos"],
+            )
 
-    return grouped.groupBy("_gx", "_gy").applyInPandas(
+    return copies.repartition("_gx", "_gy").mapInArrow(
         _pairs, "a_id long, b_id long, cos double"
     )
 
@@ -214,10 +221,9 @@ def ivf_train_centroids(
         .limit(n_cells)
         .collect()
     )
-    cents = np.array([np.asarray(r._v, dtype=np.float64) for r in seeds])
-    # clamp: a zero-norm seed/vector must not poison the matrix with
-    # NaNs (it normalizes to the zero vector and lands in cell 0)
-    cents /= np.maximum(np.linalg.norm(cents, axis=1, keepdims=True), 1e-12)
+    # a zero-norm seed/vector normalizes to the zero vector (lands in
+    # cell 0) instead of poisoning the matrix with NaNs
+    cents = vector_matrix([r._v for r in seeds], unit=True)
 
     for _ in range(iters):
         bc = spark.sparkContext.broadcast(cents)
@@ -225,10 +231,7 @@ def ivf_train_centroids(
         def _assign(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
             c = bc.value
             for batch in batches:
-                m = np.array(
-                    [np.asarray(x, dtype=np.float64) for x in batch["_v"]]
-                )
-                m_n = m / np.maximum(np.linalg.norm(m, axis=1, keepdims=True), 1e-12)
+                m_n = vector_matrix(batch["_v"], unit=True)
                 cell = np.argmax(m_n @ c.T, axis=1)
                 yield pd.DataFrame({"cell": cell, "_v": batch["_v"]})
 
@@ -286,8 +289,7 @@ def ivf_cluster_sizes(
     def _assign(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         c = bc.value
         for batch in batches:
-            m = np.array([np.asarray(x, dtype=np.float64) for x in batch["_v"]])
-            m_n = m / np.maximum(np.linalg.norm(m, axis=1, keepdims=True), 1e-12)
+            m_n = vector_matrix(batch["_v"], unit=True)
             yield pd.DataFrame({"cell": np.argmax(m_n @ c.T, axis=1)})
 
     assigned = v.mapInPandas(_assign, "cell int")
@@ -343,8 +345,7 @@ def ivf_topk(
     def _assign(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         c = bc.value
         for batch in batches:
-            m = np.array([np.asarray(x, dtype=np.float64) for x in batch["_v"]])
-            m_n = m / np.maximum(np.linalg.norm(m, axis=1, keepdims=True), 1e-12)
+            m_n = vector_matrix(batch["_v"], unit=True)
             cell = np.argmax(m_n @ c.T, axis=1)
             yield pd.DataFrame(
                 {"neighbor_id": batch["_id"], "cell": cell, "c_v": batch["_v"]}
@@ -357,8 +358,7 @@ def ivf_topk(
     def _probe(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         c = bc.value
         for batch in batches:
-            m = np.array([np.asarray(x, dtype=np.float64) for x in batch["_v"]])
-            m_n = m / np.maximum(np.linalg.norm(m, axis=1, keepdims=True), 1e-12)
+            m_n = vector_matrix(batch["_v"], unit=True)
             order = np.argsort(-(m_n @ c.T), axis=1)[:, :nprobe]
             n = len(batch)
             yield pd.DataFrame(
@@ -412,7 +412,7 @@ def _hyperplane_bucket_udf(num_planes: int, num_tables: int):
 
     @pandas_udf("array<int>")
     def buckets(vecs: pd.Series) -> pd.Series:
-        M = np.stack(vecs.to_numpy())  # (n, d) float64
+        M = vector_matrix(vecs)
         d = M.shape[1]
         planes = np.random.RandomState(LSH_PLANE_SEED).standard_normal(
             (num_tables * num_planes, d)
@@ -684,8 +684,7 @@ def mmr_rerank(
     rows = scored.collect()  # bounded: ≤ pool rows by construction
     ids = np.array([r._id for r in rows], dtype=np.int64)
     rel = np.array([r._rel for r in rows], dtype=np.float64)
-    mat = np.array([np.asarray(r._v, dtype=np.float64) for r in rows])
-    mat = mat / np.maximum(np.linalg.norm(mat, axis=1, keepdims=True), 1e-12)
+    mat = vector_matrix([r._v for r in rows], unit=True)
 
     selected: list[int] = []
     remaining = list(range(len(ids)))
@@ -949,8 +948,7 @@ def pq_train_codebooks(
         .limit(n_codes)
         .collect()
     )
-    mat = np.array([np.asarray(r._v, dtype=np.float64) for r in seeds])
-    mat /= np.maximum(np.linalg.norm(mat, axis=1, keepdims=True), 1e-12)
+    mat = vector_matrix([r._v for r in seeds], unit=True)
     d = mat.shape[1]
     d_sub = d // n_subspaces
     assert d_sub * n_subspaces == d, "dim must divide n_subspaces"
@@ -966,12 +964,7 @@ def pq_train_codebooks(
             b = bc.value
             m, k, ds = b.shape
             for batch in batches:
-                x = np.array(
-                    [np.asarray(r, dtype=np.float64) for r in batch["_v"]]
-                )
-                x /= np.maximum(
-                    np.linalg.norm(x, axis=1, keepdims=True), 1e-12
-                )
+                x = vector_matrix(batch["_v"], unit=True)
                 out = {"sub": [], "code": [], "vec": []}
                 for j in range(m):
                     xs = x[:, j * ds : (j + 1) * ds]
@@ -1029,8 +1022,7 @@ def pq_encode(
         b = bc.value
         m, k, ds = b.shape
         for batch in batches:
-            x = np.array([np.asarray(r, dtype=np.float64) for r in batch["_v"]])
-            x /= np.maximum(np.linalg.norm(x, axis=1, keepdims=True), 1e-12)
+            x = vector_matrix(batch["_v"], unit=True)
             codes = np.empty((len(x), m), dtype=np.int64)
             for j in range(m):
                 xs = x[:, j * ds : (j + 1) * ds]
@@ -1150,10 +1142,8 @@ def _pq_train_residual_codebooks(
     bc_c = spark.sparkContext.broadcast(cents)
     v = emb.select(col(id_col).alias("_id"), as_double(col(vec_col)).alias("_v"))
 
-    def _resid(x: "np.ndarray", c: "np.ndarray") -> "np.ndarray":
-        xn = x / np.maximum(np.linalg.norm(x, axis=1, keepdims=True), 1e-12)
-        cell = np.argmax(xn @ c.T, axis=1)
-        return xn - c[cell]
+    def _resid(xn: "np.ndarray", c: "np.ndarray") -> "np.ndarray":
+        return xn - c[np.argmax(xn @ c.T, axis=1)]
 
     seeds = (
         v.withColumn("_h", F.xxhash64(col("_id")))
@@ -1161,8 +1151,7 @@ def _pq_train_residual_codebooks(
         .limit(n_codes)
         .collect()
     )
-    mat = np.array([np.asarray(r._v, dtype=np.float64) for r in seeds])
-    res = _resid(mat, cents)
+    res = _resid(vector_matrix([r._v for r in seeds], unit=True), cents)
     d = res.shape[1]
     d_sub = d // n_subspaces
     assert d_sub * n_subspaces == d, "dim must divide n_subspaces"
@@ -1178,10 +1167,7 @@ def _pq_train_residual_codebooks(
             c = bc_c.value
             m, _k, ds = b.shape
             for batch in batches:
-                x = np.array(
-                    [np.asarray(r, dtype=np.float64) for r in batch["_v"]]
-                )
-                r_ = _resid(x, c)
+                r_ = _resid(vector_matrix(batch["_v"], unit=True), c)
                 out = {"sub": [], "code": [], "vec": []}
                 for j in range(m):
                     xs = r_[:, j * ds : (j + 1) * ds]
@@ -1282,7 +1268,6 @@ def ivfpq_topk(
 
     import numpy as np
     import pandas as pd
-    from pyspark.sql.window import Window
 
     spark = emb.sparkSession
     cents = ivf_train_centroids(
@@ -1307,11 +1292,10 @@ def ivfpq_topk(
         b = bc_b.value
         m_, _kk, ds = b.shape
         for batch in batches:
-            x = np.array([np.asarray(r, dtype=np.float64) for r in batch["_v"]])
-            xn = x / np.maximum(np.linalg.norm(x, axis=1, keepdims=True), 1e-12)
+            xn = vector_matrix(batch["_v"], unit=True)
             cell = np.argmax(xn @ c.T, axis=1)
             tgt = (xn - c[cell]) if residual else xn
-            codes = np.empty((len(x), m_), dtype=np.int64)
+            codes = np.empty((len(xn), m_), dtype=np.int64)
             for j in range(m_):
                 xs = tgt[:, j * ds : (j + 1) * ds]
                 d2 = -2.0 * (xs @ b[j].T) + (b[j] ** 2).sum(axis=1)[None, :]

@@ -834,3 +834,107 @@ def test_bpe_arrow_vocab_encode_8k_merges(spark):
         toks = _chain_encode_py(w, merges)
         want = ("".join(f"|{t}~" for t in toks), len(toks))
         assert got[w] == want, (w, got[w], want)
+
+
+#: Small integer coordinates: exact in float32, so the reference and
+#: the operator see the same vectors, and (denominators of at most
+#: 36) no rounded cosine can sit on a 6-dp half-way point, where one
+#: ulp of matmul order could round it either way.
+_VECTORS = st.integers(1, 4).flatmap(
+    lambda d: st.lists(
+        st.lists(st.integers(-3, 3), min_size=d, max_size=d),
+        min_size=2,
+        max_size=12,
+    )
+)
+
+
+@given(
+    vecs=_VECTORS,
+    dup=st.booleans(),
+    zero=st.booleans(),
+    pick=st.integers(0, 10_000),
+    drawn_threshold=st.none() | st.floats(-1.0, 1.0),
+    num_blocks=st.sampled_from([1, 2, 8]),
+    partitions=st.sampled_from([None, 50]),
+)
+@example(
+    vecs=[[1, 0], [1, 1], [2, 2], [3, -1]], dup=True, zero=True, pick=1,
+    drawn_threshold=None, num_blocks=8, partitions=50,
+)
+@settings(_SPARK_SETTINGS, max_examples=10)
+def test_blocked_cosine_matches_numpy_reference(
+    spark, vecs, dup, zero, pick, drawn_threshold, num_blocks, partitions
+):
+    """The exact blocked cosine against numpy brute force: every pair
+    a < b with round(cos, 6) >= threshold, each once. ``dup`` adds a
+    copy of the first vector, ``zero`` a zero vector (the 1e-12 norm
+    clamp makes its cosine 0); without a drawn threshold it is the
+    rounded cosine of one drawn pair, which must be kept. ``partitions``
+    = 50 (coalescing off) gives more shuffle partitions than the
+    B(B+1)/2 block pairs, so most partitions are empty."""
+    import numpy as np
+
+    from llamadb_spark.operators.similarity import embed_neardup_pairs
+
+    if dup:
+        vecs = vecs + [vecs[0]]
+    if zero:
+        vecs = vecs + [[0] * len(vecs[0])]
+    n = len(vecs)
+    m = np.array(vecs, dtype=np.float64)
+    u = m / np.maximum(np.linalg.norm(m, axis=1, keepdims=True), 1e-12)
+    cos = np.round(u @ u.T, 6)
+    i, j = pick % n, (pick // n) % (n - 1)
+    j += j >= i
+    threshold = float(cos[i, j]) if drawn_threshold is None else drawn_threshold
+    expect = {
+        (a, b): float(cos[a, b])
+        for a in range(n)
+        for b in range(a + 1, n)
+        if cos[a, b] >= threshold
+    }
+    assert drawn_threshold is not None or (min(i, j), max(i, j)) in expect
+
+    emb = spark.createDataFrame(
+        [(k, [float(x) for x in v]) for k, v in enumerate(vecs)],
+        "vec_id long, embedding array<float>",
+    )
+    confs = {}
+    if partitions:
+        confs = {
+            "spark.sql.shuffle.partitions": str(partitions),
+            "spark.sql.adaptive.coalescePartitions.enabled": "false",
+        }
+    saved = {k: spark.conf.get(k) for k in confs}
+    for k, v in confs.items():
+        spark.conf.set(k, v)
+    try:
+        rows = embed_neardup_pairs(
+            emb, threshold=threshold, num_blocks=num_blocks
+        ).collect()
+    finally:
+        for k, v in saved.items():
+            spark.conf.set(k, v)
+    got = {(r.a_id, r.b_id): r.cos for r in rows}
+    assert len(got) == len(rows), "a pair emitted twice"
+    assert got == expect
+
+
+@pytest.mark.parametrize("form", ["arrow", "pandas", "list"])
+@pytest.mark.parametrize(
+    "rows", [[[1.0, 2.0], [3.0]], [[1.0, 2.0], None]], ids=["ragged", "null"]
+)
+def test_vector_matrix_rejects_ragged_and_null_rows(form, rows):
+    import pandas as pd
+    import pyarrow as pa
+
+    from llamadb_spark.functions.matrix import vector_matrix
+
+    vectors = {
+        "arrow": lambda: pa.array(rows, pa.list_(pa.float32())),
+        "pandas": lambda: pd.Series(rows, dtype=object),
+        "list": lambda: rows,
+    }[form]()
+    with pytest.raises(ValueError, match="ragged|null"):
+        vector_matrix(vectors)

@@ -69,6 +69,47 @@ def test_broadcast_fast_path_caps_driver_collect(spark, sf_dir):
         ).collect()
 
 
+def test_blocked_kernel_loads_without_the_package(
+    spark, sf_dir, tmp_path, monkeypatch
+):
+    """The function the blocked strategy hands to mapInArrow, with
+    the vector_matrix helper it calls, must load where this package
+    cannot be imported (working directory outside the tree, no
+    PYTHONPATH), as on a worker the package was never installed on."""
+    import os
+    import subprocess
+    import sys
+
+    from pyspark import cloudpickle
+
+    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    handed = []
+    real = type(emb).mapInArrow
+
+    def capture(self, func, *args, **kwargs):
+        handed.append(func)
+        return real(self, func, *args, **kwargs)
+
+    monkeypatch.setattr(type(emb), "mapInArrow", capture)
+    similarity.embed_neardup_pairs(emb)
+    (fn,) = handed
+
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    loaded = subprocess.run(
+        [
+            sys.executable, "-c",
+            "import pickle, sys; "
+            "assert callable(pickle.loads(sys.stdin.buffer.read()))",
+        ],
+        input=cloudpickle.dumps(fn),
+        cwd=tmp_path,
+        env=env,
+        capture_output=True,
+        timeout=120,
+    )
+    assert loaded.returncode == 0, loaded.stderr.decode()[-2000:]
+
+
 def test_ivf_recall_vs_bruteforce(spark, sf_dir):
     from llamadb_spark.operators.similarity import ivf_topk, knn_bruteforce
     from llamadb_spark.queries.pipeline import KNN_K, KNN_QUERY_IDS
